@@ -916,7 +916,7 @@ def q_kg_vertex_degrees(spark, sf_dir):
 def q_kg_entity_salience(spark, sf_dir):
     """Served entity-salience frame (VERDICT r4 #5): PageRank over the
     extracted triple graph joined with vertex degrees, top-k via
-    splits.global_rank (plan-asserted: no SinglePartition exchange).
+    orderBy(...).limit (plan-asserted: no SinglePartition exchange).
 
     NOT in queries(): the driver's 50-row oracle report is full and
     all-SQL-gated, and an iterative fixpoint has no DuckDB oracle — this

@@ -266,6 +266,112 @@ class TestConnectedComponentsSkew:
         assert set(cc.values()) == {"N000"}
 
 
+class TestConnectedComponentsSkewDistributed(TestConnectedComponentsSkew):
+    """The star and 64-chain cases again on the distributed loop (a bound
+    of 0 rows sends every graph past the driver path)."""
+
+    @pytest.fixture(autouse=True)
+    def _distributed(self, monkeypatch):
+        from xwikire_spark.pipeline import graph
+
+        monkeypatch.setattr(graph, "DRIVER_LOOP_MAX_ROWS", 0)
+
+
+class TestConnectedComponentsPaths:
+    """The driver path against the distributed loop and a union-find."""
+
+    @staticmethod
+    def _union_find_min(ids, edges):
+        parent = {v: v for v in ids}
+
+        def find(v):
+            while parent[v] != v:
+                v = parent[v]
+            return v
+
+        for a, b in edges:
+            if a in parent and b in parent:
+                ra, rb = find(a), find(b)
+                parent[max(ra, rb)] = min(ra, rb)
+        return {v: find(v) for v in ids}
+
+    def _both_paths(self, spark, monkeypatch, vertices, edges):
+        """connected_components on the driver path, then on the
+        distributed loop (bound forced to 0)."""
+        from xwikire_spark.pipeline import graph
+        from xwikire_spark.pipeline.canonicalize import connected_components
+
+        got = []
+        for bound in (graph.DRIVER_LOOP_MAX_ROWS, 0):
+            monkeypatch.setattr(graph, "DRIVER_LOOP_MAX_ROWS", bound)
+            got.append({r.id: r.component for r in
+                        connected_components(vertices, edges).collect()})
+        return got
+
+    def test_non_ascii_ids_match_across_paths(self, spark, monkeypatch):
+        """Min-label order is Spark's UTF-8 binary order; the driver path
+        sorts in code-point order, which must agree on every label. The
+        edge to an id outside the vertex frame is ignored."""
+        ids = ["Zürich", "zebra", "Åland", "ärger", "東京", "Ωmega",
+               "abc", "Abc", "ß", "straße", "😀x", "e\u0301"]
+        pairs = [("zebra", "東京"), ("東京", "Ωmega"), ("Åland", "ärger"),
+                 ("ärger", "ß"), ("straße", "😀x"), ("😀x", "Zürich"),
+                 ("abc", "outside")]
+        vertices = spark.createDataFrame(pd.DataFrame({"id": ids}))
+        edges = spark.createDataFrame(
+            pd.DataFrame(pairs, columns=["src", "dst"]))
+        driver, distributed = self._both_paths(
+            spark, monkeypatch, vertices, edges)
+        assert driver == distributed == self._union_find_min(ids, pairs)
+
+    def test_numeric_ids_match_across_paths(self, spark, monkeypatch):
+        ids = [900, 5, 77, -3, 12, 40_000_000_000, 8]
+        pairs = [(900, 77), (77, -3), (12, 40_000_000_000), (8, 8)]
+        vertices = spark.createDataFrame([(i,) for i in ids], "id bigint")
+        edges = spark.createDataFrame(pairs, "src bigint, dst bigint")
+        driver, distributed = self._both_paths(
+            spark, monkeypatch, vertices, edges)
+        assert driver == distributed == self._union_find_min(ids, pairs)
+
+    def test_long_chains_finish_on_driver_path(self, spark):
+        """480 ids in 64-id chains at the default max_iter: the
+        distributed loop's plan-size estimate blows up on this shape
+        (LogicalRDD statistics multiplied every round), the driver path
+        must finish in seconds."""
+        import threading
+
+        from xwikire_spark.pipeline.canonicalize import connected_components
+
+        rng = random.Random(7)
+        ids = [f"b{i:03d}" for i in range(480)]
+        order = ids[:]
+        rng.shuffle(order)
+        pairs = [(a, b) for k in range(0, 480, 64)
+                 for a, b in zip(order[k:k + 64], order[k + 1:k + 64])]
+        vertices = spark.createDataFrame(pd.DataFrame({"id": ids}))
+        edges = spark.createDataFrame(
+            pd.DataFrame(pairs, columns=["src", "dst"]))
+        box = {}
+
+        def run():
+            try:
+                box["got"] = {r.id: r.component for r in
+                              connected_components(vertices, edges).collect()}
+            except Exception as exc:  # re-raised on the test thread
+                box["err"] = exc
+
+        # a daemon thread: a hung planner must fail the test, not the run
+        worker = threading.Thread(target=run, daemon=True)
+        worker.start()
+        worker.join(timeout=120)
+        assert not worker.is_alive(), "connected_components still running"
+        if "err" in box:
+            raise box["err"]
+        got = box["got"]
+        assert got == self._union_find_min(ids, pairs)
+        assert len(set(got.values())) == 8
+
+
 class TestSessionFold:
     """Pure fold-logic tests for the stateful sessionizer (late data and
     sequence continuity — the cases the streaming harness can't easily
@@ -673,6 +779,19 @@ class TestScrubPII:
         assert got[3]["text"] == "two urls <URL> <URL> one mail <EMAIL>"
         # @handle has no domain dot; "http://" alone never matches
         assert (got[4]["n_urls"], got[4]["n_emails"]) == (0, 0)
+
+    def test_input_column_named_like_the_intermediate(self, spark):
+        """An input column called ``__s1`` passes through untouched; the
+        intermediate struct takes a name no input column uses."""
+        from xwikire_spark.operators.textstats import scrub_pii
+
+        df = self._df(spark).withColumn("__s1", F.col("doc_id") * 10)
+        got = {r["doc_id"]: r for r in scrub_pii(df).collect()}
+        assert scrub_pii(df).columns == [
+            "doc_id", "__s1", "n_urls", "n_emails", "text"]
+        assert [got[i]["__s1"] for i in (1, 2, 3, 4)] == [10, 20, 30, 40]
+        assert got[1]["text"] == "see <URL> and mail <EMAIL> now"
+        assert (got[3]["n_urls"], got[3]["n_emails"]) == (2, 1)
 
     def test_plan_is_single_projection(self, spark):
         from xwikire_spark.operators.textstats import scrub_pii

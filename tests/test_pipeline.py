@@ -299,6 +299,24 @@ class TestCanonicalization:
 
 
 class TestManifests:
+    def test_first_run_reads_empty_manifest(self, spark, tmp_path):
+        """No ``_manifests`` yet: the existence check goes through the
+        Hadoop FileSystem and yields an empty frame of the manifest
+        schema instead of a caught PATH_NOT_FOUND read."""
+        from xwikire_spark.pipeline.manifests import (
+            MANIFEST_SCHEMA,
+            read_manifest,
+        )
+
+        out = str(tmp_path / "fresh")
+        got = read_manifest(spark, out)
+        assert got.count() == 0
+        assert got.schema == spark.createDataFrame([], MANIFEST_SCHEMA).schema
+        spark.createDataFrame([(3, 1, 2, 5, 7, 9)], MANIFEST_SCHEMA)\
+            .write.parquet(str(tmp_path / "fresh" / "_manifests"))
+        assert [tuple(r) for r in read_manifest(spark, out).collect()] \
+            == [(3, 1, 2, 5, 7, 9)]
+
     def test_resume_skips_done_buckets(self, spark, corpus, tmp_path):
         _, _, transcripts, alias_df, pred_df = corpus
         out = str(tmp_path / "kg")
@@ -570,19 +588,20 @@ class TestPageRank:
     ]
     VERTS = list("abcdefg")
 
-    def _numpy_ranks(self, damping=0.85, n_iter=10, ids=None):
+    def _numpy_ranks(self, damping=0.85, n_iter=10, ids=None, edges=None):
         import numpy as np
 
         ids = ids if ids is not None else self.VERTS
+        edges = edges if edges is not None else self.EDGES
         idx = {v: i for i, v in enumerate(ids)}
         n = len(ids)
         out = [0] * n
-        for s, _ in self.EDGES:
+        for s, _ in edges:
             out[idx[s]] += 1
         r = np.ones(n)
         for _ in range(n_iter):
             msg = np.zeros(n)
-            for s, d in self.EDGES:
+            for s, d in edges:
                 msg[idx[d]] += r[idx[s]] / out[idx[s]]
             dang = sum(r[i] for i in range(n) if out[i] == 0)
             r = (1 - damping) + damping * (msg + dang / n)
@@ -664,6 +683,43 @@ class TestPageRank:
         with _pytest.raises(ValueError, match="superset"):
             pagerank(e, vertices=v)
 
+    def test_multigraph_matches_per_edge_rows(self, spark):
+        """Parallel edges (cnt > 1 after the weighted-edge collapse)
+        against a reference that sums one term per edge ROW."""
+        import pandas as pd
+
+        from xwikire_spark.pipeline.graph import pagerank
+
+        multi = self.EDGES + [("a", "b")] * 3 + [("c", "f")] * 2 \
+            + [("e", "a")]
+        e = spark.createDataFrame(pd.DataFrame(multi, columns=["src", "dst"]))
+        v = spark.createDataFrame(pd.DataFrame({"id": self.VERTS}))
+        got = {r["id"]: r["rank"] for r in pagerank(e, vertices=v).collect()}
+        want = self._numpy_ranks(edges=multi)
+        assert set(got) == set(want)
+        for k in want:
+            assert abs(got[k] - want[k]) < 1e-9, (k, got[k], want[k])
+
+    def test_vertex_check_runs_before_any_checkpoint(self, spark, monkeypatch):
+        """The ValueError for an incomplete vertices frame comes before
+        the distinct-edge aggregate is materialized."""
+        import pandas as pd
+        import pytest as _pytest
+
+        from xwikire_spark.pipeline.graph import pagerank
+
+        e = spark.createDataFrame(
+            pd.DataFrame(self.EDGES, columns=["src", "dst"])
+        )
+        v = spark.createDataFrame(pd.DataFrame({"id": list("abcde")}))
+
+        def no_checkpoint(self, *a, **k):
+            raise AssertionError("checkpoint before the vertex check")
+
+        monkeypatch.setattr(type(e), "localCheckpoint", no_checkpoint)
+        with _pytest.raises(ValueError, match="superset"):
+            pagerank(e, vertices=v)
+
     def test_uniform_on_cycle_and_derived_vertices(self, spark):
         import pandas as pd
 
@@ -675,6 +731,17 @@ class TestPageRank:
         # vertices derived from edges; symmetric cycle -> all ranks 1.0
         assert set(got) == {"x", "y", "z"}
         assert all(abs(r - 1.0) < 1e-12 for r in got.values())
+
+
+class TestPageRankDistributed(TestPageRank):
+    """Every TestPageRank case again on the distributed loop: a bound of
+    0 rows sends every graph past the driver path."""
+
+    @pytest.fixture(autouse=True)
+    def _distributed(self, monkeypatch):
+        from xwikire_spark.pipeline import graph
+
+        monkeypatch.setattr(graph, "DRIVER_LOOP_MAX_ROWS", 0)
 
 
 class TestIncrementalCanonicalize:

@@ -133,6 +133,12 @@ def scrub_pii(
     """
     col = F.col(text_col)
     others = [c for c in docs.columns if c != text_col]
+    # the intermediate struct column must not shadow an input column
+    # (Spark resolves names case-insensitively by default)
+    taken = {c.lower() for c in docs.columns}
+    tmp = "__s1"
+    while tmp in taken:
+        tmp = "_" + tmp
     s1 = docs.select(
         *others,
         F.explode(
@@ -144,16 +150,16 @@ def scrub_pii(
                     ),
                 )
             )
-        ).alias("__s1"),
+        ).alias(tmp),
     )
     return s1.select(
         *others,
-        F.col("__s1.nu").alias("n_urls"),
-        F.regexp_count(F.col("__s1.u"), F.lit(EMAIL_PATTERN)).alias(
+        F.col(f"{tmp}.nu").alias("n_urls"),
+        F.regexp_count(F.col(f"{tmp}.u"), F.lit(EMAIL_PATTERN)).alias(
             "n_emails"
         ),
         F.regexp_replace(
-            F.col("__s1.u"), EMAIL_PATTERN, email_token
+            F.col(f"{tmp}.u"), EMAIL_PATTERN, email_token
         ).alias(text_col),
     )
 

@@ -21,7 +21,10 @@ Scale notes:
   per (vertex, salt) partial mins, then per vertex — the classic two-phase
   skew-safe aggregation; AQE skew-join handles residual join skew;
 - each round's result is localCheckpoint()ed to cut the lineage chain
-  (iterative plans otherwise grow exponentially).
+  (iterative plans otherwise grow exponentially);
+- a graph of at most ``graph.DRIVER_LOOP_MAX_ROWS`` vertices + edges is
+  collected once and labelled on the driver in numpy instead: there the
+  rounds cost Spark's per-job floor, not data.
 """
 
 from __future__ import annotations
@@ -69,20 +72,49 @@ def connected_components(
     vertices: DataFrame, edges: DataFrame, max_iter: int = 25
 ) -> DataFrame:
     """vertices(id) x edges(src,dst) -> (id, component) with component =
-    min id reachable. Deterministic; stops when no label changes.
+    min id reachable. Deterministic; stops when no label changes. Edges
+    with an endpoint outside ``vertices`` are ignored.
 
-    Each round does (a) neighbor-min propagation and (b) pointer jumping
-    (component := label(component), i.e. path halving). (a) alone is
-    O(diameter) — a 64-node chain would need 63 rounds; (b) halves label
-    chains each round, giving the O(log n) bound (verified by the chain
-    test in tests/test_operators.py)."""
+    Size-adaptive: ``vertices`` and ``edges`` are checkpointed once, each
+    job observing its row count (the loop below would otherwise recompute
+    an upstream such as ``collision_edges`` every round). When the two
+    counts sum to at most ``graph.DRIVER_LOOP_MAX_ROWS`` both are collected
+    with Arrow and the labels are computed on the driver in numpy
+    (``_components_numpy``): exact ids, the same answer as the loop below,
+    always run to convergence. Above the bound the distributed loop runs.
+
+    Each round of the distributed loop does (a) neighbor-min propagation
+    and (b) pointer jumping (component := label(component), i.e. path
+    halving). (a) alone is O(diameter) — a 64-node chain would need 63
+    rounds; (b) halves label chains each round, giving the O(log n) bound
+    (verified by the chain test in tests/test_operators.py)."""
+    from pyspark.sql import Observation
+
+    from xwikire_spark.pipeline import graph
+
+    vobs, eobs = Observation(), Observation()
+    vertices = (
+        vertices.select("id")
+        .observe(vobs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    # a null endpoint never matches a vertex in the joins below: dropping
+    # such edges here changes no label and keeps them out of the count
+    edges = (
+        edges.select("src", "dst")
+        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .observe(eobs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    n_rows = (dict(vobs.get).get("n") or 0) + (dict(eobs.get).get("n") or 0)
+    if n_rows <= graph.DRIVER_LOOP_MAX_ROWS:
+        return _components_numpy(vertices, edges)
+
     # symmetrize once: each undirected edge contributes both directions
-    sym = edges.select("src", "dst").unionByName(
+    sym = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    labels = vertices.select(
-        F.col("id"), F.col("id").alias("component")
-    ).localCheckpoint()
+    labels = vertices.select(F.col("id"), F.col("id").alias("component"))
 
     for _ in range(max_iter):
         # (a) neighbor labels: join edge.src -> label(src), propose to dst.
@@ -93,7 +125,11 @@ def connected_components(
             .select(
                 F.col("dst").alias("id"),
                 F.col("component"),
-                (F.crc32(F.col("src")) % N_SALTS).alias("salt"),
+                # cast: crc32 takes binary, and a numeric id has no
+                # implicit cast to it (same salts for string ids)
+                (F.crc32(F.col("src").cast("string")) % N_SALTS).alias(
+                    "salt"
+                ),
             )
             .groupBy("id", "salt")
             .agg(F.min("component").alias("component"))
@@ -121,8 +157,6 @@ def connected_components(
         # ONE Spark job per iteration (was: checkpoint job + a separate
         # count job joining new vs old labels). Labels only decrease, so
         # component != prev identifies every change.
-        from pyspark.sql import Observation
-
         obs = Observation()
         jumped = (
             stepped.join(parent, "new_component", "left")
@@ -145,6 +179,60 @@ def connected_components(
         if not (dict(obs.get).get("changed") or 0):
             break
     return labels
+
+
+def _components_numpy(vertices: DataFrame, edges: DataFrame) -> DataFrame:
+    """Min-id connected components on the driver, over the collected
+    ``vertices(id)`` and non-null ``edges(src, dst)``. The distinct ids
+    are sorted, so a smaller index is a smaller id: numpy sorts strings
+    in code-point order, which is Spark's UTF-8 binary order. Labels are
+    indices, lowered across every edge in both directions and then
+    pointer-jumped (``labels[labels]``) until nothing changes — at the
+    fixed point every vertex holds the smallest index of its component.
+    One row per distinct id; a null vertex id keeps a null component,
+    as in the distributed loop."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import StructField, StructType
+
+    vcol = vertices.toArrow().column("id")
+    et = edges.toArrow()
+    ids = np.unique(pc.drop_null(vcol).to_numpy(zero_copy_only=False))
+    n = len(ids)
+
+    def index(col: str):
+        x = et.column(col).to_numpy(zero_copy_only=False)
+        pos = np.searchsorted(ids, x)
+        hit = pos < n
+        hit[hit] = ids[pos[hit]] == x[hit]
+        return pos, hit
+
+    (s, s_in), (d, d_in) = index("src"), index("dst")
+    keep = s_in & d_in
+    s, d = s[keep], d[keep]
+    labels = np.arange(n)
+    while True:
+        prev = labels.copy()
+        np.minimum.at(labels, d, labels[s])
+        np.minimum.at(labels, s, labels[d])
+        labels = labels[labels]
+        if np.array_equal(labels, prev):
+            break
+    n_null = vcol.null_count
+    ids_out = pa.concat_arrays(
+        [pa.array(ids, type=vcol.type), pa.nulls(n_null, vcol.type)]
+    )
+    comp_out = pa.concat_arrays(
+        [pa.array(ids[labels], type=vcol.type), pa.nulls(n_null, vcol.type)]
+    )
+    id_type = vertices.schema["id"].dataType
+    return vertices.sparkSession.createDataFrame(
+        pa.table({"id": ids_out, "component": comp_out}),
+        StructType(
+            [StructField("id", id_type), StructField("component", id_type)]
+        ),
+    )
 
 
 def canonical_entity_map(alias_dict: DataFrame) -> DataFrame:

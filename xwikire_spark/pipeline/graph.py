@@ -18,6 +18,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# Fixed-point loops (``pagerank`` here, ``canonicalize.connected_components``)
+# run on the driver in numpy when the collapsed graph they iterate over has
+# at most this many rows: its distinct edges, plus its vertices where those
+# are collected too. Both read the row counts from observe()s on checkpoint
+# jobs they run anyway, so choosing a path costs no extra job. A million
+# rows of two ids and a weight is tens of MB on the driver; above it the
+# distributed loops run.
+DRIVER_LOOP_MAX_ROWS = 1_000_000
+
 
 def vertex_table(triples: DataFrame) -> DataFrame:
     """One row per entity: out_degree (triples as subject), in_degree
@@ -105,20 +114,24 @@ def entity_salience(
     conv_mentions), salience_rank 1..top_k descending by rank (entity_id
     tiebreak — a total order, so ranks are deterministic).
 
-    Plan shape: the ranking is ``splits.global_rank`` (range-repartition +
-    per-partition row_number + broadcast triangular count offsets) — NO
-    Exchange SinglePartition anywhere, unlike ``row_number() OVER (ORDER
-    BY rank DESC)`` which funnels the whole vertex table through one task.
-    The rank⋈degree join keys on entity_id (both sides already aggregated
-    per entity — small next to the edge table); iterative cost lives in
-    ``pagerank`` (see its per-iteration shape notes)."""
-    from xwikire_spark.operators.splits import global_rank
+    Plan shape: the top-k is ``orderBy(rank desc, entity_id).limit(top_k)``
+    — a TakeOrderedAndProject: each partition keeps its own k best rows
+    and only those k-per-partition rows meet, so there is NO Exchange
+    SinglePartition over the vertex table (``row_number() OVER (ORDER BY
+    rank DESC)`` would funnel every vertex through one task). The <= k
+    rows are collected, numbered 1..k on the driver and returned as a
+    local frame. ``splits.global_rank`` ranked ALL vertices first and
+    cost 14 Spark jobs against this plan's 4 on the same joined frame.
+    ``F.round`` stays a Spark expression: Python's ``round`` rounds half
+    to even, Spark's half up. The rank⋈degree join keys on entity_id
+    (both sides already aggregated per entity — small next to the edge
+    table); iterative cost lives in ``pagerank`` (see its notes)."""
+    from pyspark.sql.types import LongType, StructField, StructType
 
-    # Materialize the triple frame ONCE: it is read by pagerank's init,
-    # vertex_table's three aggregates, and both global_rank passes — an
-    # expensive upstream (the live extraction pipeline) would otherwise
-    # re-run per branch (measured 6x at sf0.01). Same pattern as the
-    # per-iteration checkpoints inside pagerank.
+    # Materialize the triple frame ONCE: it is read by pagerank's init
+    # and vertex_table's aggregate — an expensive upstream (the live
+    # extraction pipeline) would otherwise re-run per branch (measured 6x
+    # at sf0.01).
     #
     # r7: checkpoint ONLY the three columns every consumer needs (guide
     # §2.3 project-before-materialize). The full-width checkpoint forced
@@ -130,22 +143,25 @@ def entity_salience(
         F.col("subj").alias("src"), F.col("obj").alias("dst")
     )
     ranks = pagerank(e, damping=damping, n_iter=n_iter)
-    joined = ranks.withColumnRenamed("id", "entity_id").join(
-        vertex_table(triples), "entity_id"
+    top = (
+        ranks.withColumnRenamed("id", "entity_id")
+        .join(vertex_table(triples), "entity_id")
+        .orderBy(F.col("rank").desc(), F.col("entity_id"))
+        .limit(top_k)
+        .select(
+            "entity_id",
+            F.round("rank", 9).alias("rank"),
+            "out_degree",
+            "in_degree",
+            "conv_mentions",
+        )
     )
-    ranked = global_rank(
-        joined,
-        [F.col("rank").desc(), F.col("entity_id")],
-        rank_col="salience_rank",
+    schema = StructType(
+        [StructField("salience_rank", LongType(), False)]
+        + top.schema.fields
     )
-    return ranked.where(F.col("salience_rank") <= top_k).select(
-        "salience_rank",
-        "entity_id",
-        F.round("rank", 9).alias("rank"),
-        "out_degree",
-        "in_degree",
-        "conv_mentions",
-    )
+    rows = [(i, *r) for i, r in enumerate(top.collect(), start=1)]
+    return triples.sparkSession.createDataFrame(rows, schema)
 
 
 def pagerank(
@@ -165,16 +181,27 @@ def pagerank(
     ranks-sum-to-N invariant silently breaks (contributions to a dst not
     in vertices drop in the left join, and an out-of-vertex src absorbs
     shares without redistributing) — so the frame is validated up front
-    and missing endpoints raise ValueError (one extra count job before
-    the loop; negligible next to n_iter iterations).
+    and missing endpoints raise ValueError. The check is one count job
+    over the raw edges, run BEFORE any checkpoint, so a bad call pays for
+    nothing else.
 
-    Plan shape per iteration (the 100 TB view):
-    - contributions = weighted-distinct edges ⋈ ranks on src (parallel
-      multi-edges are collapsed to one row with a multiplicity before
-      the loop — iteration cost scales with DISTINCT pairs, not
-      mentions), partial-sum map-side, one hash-aggregate shuffle keyed
-      by dst — hot entities (high in-degree) are handled by the partial
-      aggregate, not a skewed join, because sum is associative;
+    Size-adaptive: the init step collapses parallel multi-edges into
+    weighted distinct edges ``(src, dst, cnt)`` and checkpoints them,
+    observing their row count on that same job. When the distinct edges
+    (plus the supplied vertices, if any) number at most
+    ``DRIVER_LOOP_MAX_ROWS``, they are collected once with Arrow and the
+    power iteration runs on the driver in numpy (``_pagerank_numpy``):
+    the same expressions in the same order, so the result matches the
+    distributed loop to the last few ulps. On graphs that small the
+    distributed loop's cost is Spark's per-job floor, not data. Above the
+    bound the distributed loop runs.
+
+    Plan shape per iteration of the distributed loop (the 100 TB view):
+    - contributions = weighted-distinct edges ⋈ ranks on src (iteration
+      cost scales with DISTINCT pairs, not mentions), partial-sum
+      map-side, one hash-aggregate shuffle keyed by dst — hot entities
+      (high in-degree) are handled by the partial aggregate, not a
+      skewed join, because sum is associative;
     - the dangling-mass scalar rides the iteration's OWN checkpoint job
       via ``observe()`` (the connected_components trick): each iteration
       observes sum(rank where no out-edges) over the ranks it just
@@ -189,17 +216,25 @@ def pagerank(
     10-20 iterations give per-vertex error < damping^n — the standard
     production choice.
     """
-    e = edges.select("src", "dst")
     from pyspark.sql import Observation
 
-    # r7 init merge: ONE aggregate derives the endpoint vertex set AND
-    # out-degrees (the old init ran a separate endpoints-distinct, an
-    # out-degree aggregate and a vertex left-join, checkpointed the
-    # vertex frame, then a THIRD checkpoint just to observe the initial
-    # dangling mass). The vertex count and the dangling-vertex count both
-    # ride this single checkpoint job via observe(); since initial ranks
-    # are all 1.0, dang0 = n_dangling * 1.0 exactly — same value the old
-    # ranks-frame observation produced.
+    e = edges.select("src", "dst")
+    if vertices is not None:
+        endpoints = e.select(F.col("src").alias("id")).unionByName(
+            e.select(F.col("dst").alias("id"))
+        )
+        missing = (
+            endpoints.join(vertices.select("id"), "id", "left_anti")
+            .distinct()
+            .count()
+        )
+        if missing:
+            raise ValueError(
+                f"pagerank: {missing} edge endpoint(s) absent from the"
+                " supplied vertices frame; vertices must be a superset of"
+                " edge endpoints or rank mass leaks every iteration"
+            )
+
     # r7 weighted-edge collapse FIRST (guide §2.3
     # aggregate-before-iterate): parallel (src, dst) multi-edges fold
     # into one row carrying their multiplicity, so (a) every loop
@@ -209,11 +244,25 @@ def pagerank(
     # that shape), and (b) the degree/vertex aggregate below runs over
     # the collapsed frame — ONE full-data pass in init instead of two.
     # out_deg = sum(cnt) still counts multi-edges exactly (integer sum).
+    # The distinct-edge count rides the same checkpoint job and picks
+    # the driver or the distributed loop.
+    eobs = Observation()
     ewc = (
         e.groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("cnt"))
+        .observe(eobs, F.count(F.lit(1)).alias("n_edges"))
         .localCheckpoint()
     )
+    budget = DRIVER_LOOP_MAX_ROWS - (dict(eobs.get).get("n_edges") or 0)
+    if budget >= 0:
+        ranks = _pagerank_numpy(ewc, vertices, damping, n_iter, budget)
+        if ranks is not None:
+            return ranks
+
+    # r7 init merge: ONE aggregate derives the endpoint vertex set AND
+    # out-degrees. The vertex count and the dangling-vertex count both
+    # ride this single checkpoint job via observe(); since initial ranks
+    # are all 1.0, dang0 = n_dangling * 1.0 exactly.
     deg_all = (
         ewc.select(F.col("src").alias("id"), F.col("cnt").alias("c"))
         .unionByName(
@@ -223,15 +272,6 @@ def pagerank(
         .agg(F.sum("c").alias("out_deg"))
     )
     if vertices is not None:
-        missing = deg_all.select("id").join(
-            vertices.select("id"), "id", "left_anti"
-        ).count()
-        if missing:
-            raise ValueError(
-                f"pagerank: {missing} edge endpoint(s) absent from the"
-                " supplied vertices frame; vertices must be a superset of"
-                " edge endpoints or rank mass leaks every iteration"
-            )
         deg_all = vertices.select("id").join(deg_all, "id", "left")
     vobs = Observation()
     dv = (
@@ -324,3 +364,52 @@ def pagerank(
         # consumed by the NEXT iteration; riding the checkpoint job
         dang = dict(obs.get).get("dang") or 0.0
     return ranks.select("id", "rank")
+
+
+def _pagerank_numpy(
+    ewc: DataFrame,
+    vertices: DataFrame | None,
+    damping: float,
+    n_iter: int,
+    budget: int,
+) -> DataFrame | None:
+    """The power iteration of ``pagerank`` on the driver, over the
+    collected weighted edges ``ewc(src, dst, cnt)``. Returns None when a
+    supplied ``vertices`` frame holds more than ``budget`` rows: the
+    caller then runs the distributed loop. Every expression mirrors one
+    Spark column of the distributed loop, in the same order."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    et = ewc.toArrow()
+    src = et.column("src").to_numpy(zero_copy_only=False)
+    dst = et.column("dst").to_numpy(zero_copy_only=False)
+    cnt = et.column("cnt").to_numpy().astype(np.float64)
+    if vertices is None:
+        ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+        s, d = inv[: len(src)], inv[len(src):]
+        id_type = ewc.schema["src"].dataType
+    else:
+        vt = vertices.select("id").limit(budget + 1).toArrow()
+        if vt.num_rows > budget:
+            return None
+        # validated superset: every endpoint has an exact match in ids
+        ids = np.unique(vt.column("id").to_numpy(zero_copy_only=False))
+        s, d = np.searchsorted(ids, src), np.searchsorted(ids, dst)
+        id_type = vertices.schema["id"].dataType
+    n = len(ids)
+    out_deg = np.bincount(s, weights=cnt, minlength=n)
+    dangling = out_deg == 0
+    r = np.ones(n)
+    dang = float(dangling.sum())
+    for _ in range(n_iter if n else 0):
+        msg = np.bincount(d, weights=r[s] / out_deg[s] * cnt, minlength=n)
+        r = (1.0 - damping) + damping * (msg + dang / n)
+        dang = float(r[dangling].sum())
+    schema = StructType(
+        [StructField("id", id_type), StructField("rank", DoubleType())]
+    )
+    return ewc.sparkSession.createDataFrame(
+        pd.DataFrame({"id": ids, "rank": r}), schema
+    )

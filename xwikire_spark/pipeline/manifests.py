@@ -62,12 +62,23 @@ def _manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, "_manifests")
 
 
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Existence through the Hadoop FileSystem of ``path`` (local, HDFS,
+    S3A, ...). Reading a missing path and catching the error would work
+    too, but the JVM prints the PATH_NOT_FOUND stack trace to stderr on
+    every first run."""
+    jvm = spark.sparkContext._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    return jpath.getFileSystem(conf).exists(jpath)
+
+
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The manifest rows written so far — empty on a first run."""
     path = _manifest_path(out_dir)
-    try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
-    except Exception:
+    if not _path_exists(spark, path):
         return spark.createDataFrame([], MANIFEST_SCHEMA)
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
 
 
 def pending_buckets(
