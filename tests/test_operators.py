@@ -371,6 +371,29 @@ class TestConnectedComponentsPaths:
         assert got == self._union_find_min(ids, pairs)
         assert len(set(got.values())) == 8
 
+    def test_max_iter_cut_warns_on_distributed_loop(self, spark, monkeypatch):
+        """max_iter limits only the distributed loop: cut at one round, a
+        64-chain is unconverged there and says so; the driver path runs
+        to convergence at the same max_iter without a warning."""
+        import warnings
+
+        from xwikire_spark.pipeline import graph
+        from xwikire_spark.pipeline.canonicalize import connected_components
+
+        ids = [f"N{i:03d}" for i in range(64)]
+        vertices = spark.createDataFrame(pd.DataFrame({"id": ids}))
+        edges = spark.createDataFrame(pd.DataFrame({
+            "src": ids[:-1], "dst": ids[1:]}))
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", RuntimeWarning)
+            cc = {r.component for r in connected_components(
+                vertices, edges, max_iter=1).collect()}
+        assert cc == {"N000"}
+        monkeypatch.setattr(graph, "DRIVER_LOOP_MAX_ROWS", 0)
+        with pytest.warns(RuntimeWarning, match="max_iter=1"):
+            cut = connected_components(vertices, edges, max_iter=1)
+        assert len({r.component for r in cut.collect()}) > 1
+
 
 class TestSessionFold:
     """Pure fold-logic tests for the stateful sessionizer (late data and

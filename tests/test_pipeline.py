@@ -744,6 +744,33 @@ class TestPageRankDistributed(TestPageRank):
         monkeypatch.setattr(graph, "DRIVER_LOOP_MAX_ROWS", 0)
 
 
+def test_pagerank_vertices_count_toward_the_bound(spark, monkeypatch):
+    """The bound counts distinct edges plus supplied vertex rows: one
+    below that sum runs the distributed loop, one at it the driver path,
+    and both match the numpy reference."""
+    from xwikire_spark.pipeline import graph
+
+    ref = TestPageRank()
+    e = spark.createDataFrame(pd.DataFrame(ref.EDGES, columns=["src", "dst"]))
+    v = spark.createDataFrame(pd.DataFrame({"id": ref.VERTS}))
+    n_rows = len(set(ref.EDGES)) + len(ref.VERTS)
+    want = ref._numpy_ranks()
+    real = graph._pagerank_numpy
+    for bound, on_driver in ((n_rows - 1, False), (n_rows, True)):
+        calls = []
+        monkeypatch.setattr(graph, "DRIVER_LOOP_MAX_ROWS", bound)
+        monkeypatch.setattr(
+            graph, "_pagerank_numpy",
+            lambda *a, **k: calls.append(a) or real(*a, **k),
+        )
+        got = {r["id"]: r["rank"]
+               for r in graph.pagerank(e, vertices=v).collect()}
+        assert bool(calls) == on_driver, bound
+        assert set(got) == set(want)
+        for k in want:
+            assert abs(got[k] - want[k]) < 1e-9, (bound, k)
+
+
 class TestIncrementalCanonicalize:
     """Incremental canonical-map maintenance (canonicalize.py): folding an
     alias-dict append into a persisted map must equal the batch recompute

@@ -2,6 +2,7 @@
 engineered (one shuffle, pruned scans, single fused Python stage)."""
 
 import pandas as pd
+import pytest
 
 from xwikire_spark.plans.inspection import (
     count_exchanges,
@@ -70,9 +71,10 @@ class TestFlagshipPlans:
         assert single_partition_exchanges(packing) <= 1
 
     def test_entity_salience_no_single_partition_exchange(self, spark):
-        """The bench-headline salience query (VERDICT r4 #5) ranks via
-        global_rank — its plan must contain NO Exchange SinglePartition
-        (a window ORDER BY over all entities would)."""
+        """The bench-headline salience query (VERDICT r4 #5): the served
+        frame holds the <= top_k collected rows, so its own plan is a
+        local scan; the ranking plan under it is checked by
+        test_salience_topk_take_ordered_no_single_partition."""
         import pandas as pd
 
         from xwikire_spark.pipeline.graph import entity_salience
@@ -88,6 +90,33 @@ class TestFlagshipPlans:
             )
         )
         df = entity_salience(triples, n_iter=2, top_k=5)
+        assert single_partition_exchanges(df) == 0
+        assert df.count() == 5
+
+    @pytest.mark.parametrize("distributed", [False, True])
+    def test_salience_topk_take_ordered_no_single_partition(
+        self, spark, monkeypatch, distributed
+    ):
+        """entity_salience's ranking plan over the rank⋈degree join is a
+        TakeOrderedAndProject with NO Exchange SinglePartition (a window
+        ORDER BY over all entities would add one), on both PageRank
+        paths."""
+        from xwikire_spark.pipeline import graph
+        from xwikire_spark.plans.inspection import (
+            single_partition_exchanges,
+        )
+
+        if distributed:
+            monkeypatch.setattr(graph, "DRIVER_LOOP_MAX_ROWS", 0)
+        triples = spark.createDataFrame(
+            pd.DataFrame(
+                [(f"e{i % 7}", "p", f"e{(i + 1) % 7}", f"c{i % 3}")
+                 for i in range(30)],
+                columns=["subj", "pred", "obj", "conv_id"],
+            )
+        )
+        df = graph._salience_topk(triples, 0.85, 2, 5)
+        assert "TakeOrderedAndProject" in physical_plan(df), physical_plan(df)
         assert single_partition_exchanges(df) == 0
         assert df.count() == 5
 

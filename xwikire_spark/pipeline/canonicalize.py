@@ -80,8 +80,11 @@ def connected_components(
     an upstream such as ``collision_edges`` every round). When the two
     counts sum to at most ``graph.DRIVER_LOOP_MAX_ROWS`` both are collected
     with Arrow and the labels are computed on the driver in numpy
-    (``_components_numpy``): exact ids, the same answer as the loop below,
-    always run to convergence. Above the bound the distributed loop runs.
+    (``_components_numpy``): exact ids, always run to convergence. Above
+    the bound the distributed loop runs; ``max_iter`` limits only that
+    loop. The two paths give the same labels whenever the loop converges
+    within ``max_iter`` rounds; a loop that stops at ``max_iter`` with
+    labels still changing returns them unconverged and warns.
 
     Each round of the distributed loop does (a) neighbor-min propagation
     and (b) pointer jumping (component := label(component), i.e. path
@@ -178,40 +181,39 @@ def connected_components(
         labels = jumped.drop("prev")
         if not (dict(obs.get).get("changed") or 0):
             break
+    else:
+        import warnings
+
+        warnings.warn(
+            f"connected_components: labels still changing after "
+            f"max_iter={max_iter} rounds; returning unconverged components",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     return labels
 
 
 def _components_numpy(vertices: DataFrame, edges: DataFrame) -> DataFrame:
     """Min-id connected components on the driver, over the collected
     ``vertices(id)`` and non-null ``edges(src, dst)``. The distinct ids
-    are sorted, so a smaller index is a smaller id: numpy sorts strings
-    in code-point order, which is Spark's UTF-8 binary order. Labels are
-    indices, lowered across every edge in both directions and then
-    pointer-jumped (``labels[labels]``) until nothing changes — at the
-    fixed point every vertex holds the smallest index of its component.
-    One row per distinct id; a null vertex id keeps a null component,
-    as in the distributed loop."""
+    are sorted (``graph.dense_ids``), so a smaller index is a smaller id.
+    Labels are indices, lowered across every edge in both directions and
+    then pointer-jumped (``labels[labels]``) until nothing changes — at
+    the fixed point every vertex holds the smallest index of its
+    component. One row per distinct id; a null vertex id keeps a null
+    component, as in the distributed loop."""
     import numpy as np
     import pyarrow as pa
-    import pyarrow.compute as pc
     from pyspark.sql.types import StructField, StructType
+
+    from xwikire_spark.pipeline.graph import dense_ids
 
     vcol = vertices.toArrow().column("id")
     et = edges.toArrow()
-    ids = np.unique(pc.drop_null(vcol).to_numpy(zero_copy_only=False))
-    n = len(ids)
-
-    def index(col: str):
-        x = et.column(col).to_numpy(zero_copy_only=False)
-        pos = np.searchsorted(ids, x)
-        hit = pos < n
-        hit[hit] = ids[pos[hit]] == x[hit]
-        return pos, hit
-
-    (s, s_in), (d, d_in) = index("src"), index("dst")
-    keep = s_in & d_in
+    ids, (s, d) = dense_ids(vcol, et.column("src"), et.column("dst"))
+    keep = (s >= 0) & (d >= 0)
     s, d = s[keep], d[keep]
-    labels = np.arange(n)
+    labels = np.arange(len(ids))
     while True:
         prev = labels.copy()
         np.minimum.at(labels, d, labels[s])
@@ -219,16 +221,13 @@ def _components_numpy(vertices: DataFrame, edges: DataFrame) -> DataFrame:
         labels = labels[labels]
         if np.array_equal(labels, prev):
             break
-    n_null = vcol.null_count
-    ids_out = pa.concat_arrays(
-        [pa.array(ids, type=vcol.type), pa.nulls(n_null, vcol.type)]
-    )
-    comp_out = pa.concat_arrays(
-        [pa.array(ids[labels], type=vcol.type), pa.nulls(n_null, vcol.type)]
-    )
+    nulls = pa.nulls(vcol.null_count, ids.type)
     id_type = vertices.schema["id"].dataType
     return vertices.sparkSession.createDataFrame(
-        pa.table({"id": ids_out, "component": comp_out}),
+        pa.table({
+            "id": pa.concat_arrays([ids, nulls]),
+            "component": pa.concat_arrays([ids.take(labels), nulls]),
+        }),
         StructType(
             [StructField("id", id_type), StructField("component", id_type)]
         ),

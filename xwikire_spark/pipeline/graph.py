@@ -20,11 +20,16 @@ from pyspark.sql import functions as F
 
 # Fixed-point loops (``pagerank`` here, ``canonicalize.connected_components``)
 # run on the driver in numpy when the collapsed graph they iterate over has
-# at most this many rows: its distinct edges, plus its vertices where those
-# are collected too. Both read the row counts from observe()s on checkpoint
-# jobs they run anyway, so choosing a path costs no extra job. A million
-# rows of two ids and a weight is tens of MB on the driver; above it the
-# distributed loops run.
+# at most this many rows: its distinct edges, plus its vertex rows where
+# those are collected too. Both read the row counts from jobs they run
+# anyway, so choosing a path costs no extra job; above the bound the
+# distributed loops run. Measured on a 4-core host (local[4]) with seeded
+# random graphs of 12-character string ids, one run per point: the driver
+# path was faster at every size tried, 1e4 to 3e6 rows (at 1e6: PageRank
+# 5.3 s vs 25.8 s, CC 4.8 s vs 61.0 s), so the bound is set by driver
+# memory, not by a crossover: at 1e6 rows the Python driver grew by 92 MB
+# (PageRank) and 66 MB (CC), at 3e6 by 259 MB and 194 MB
+# (``scripts/driver_loop_bound.py`` repeats the measurement).
 DRIVER_LOOP_MAX_ROWS = 1_000_000
 
 
@@ -114,20 +119,36 @@ def entity_salience(
     conv_mentions), salience_rank 1..top_k descending by rank (entity_id
     tiebreak — a total order, so ranks are deterministic).
 
-    Plan shape: the top-k is ``orderBy(rank desc, entity_id).limit(top_k)``
-    — a TakeOrderedAndProject: each partition keeps its own k best rows
-    and only those k-per-partition rows meet, so there is NO Exchange
-    SinglePartition over the vertex table (``row_number() OVER (ORDER BY
-    rank DESC)`` would funnel every vertex through one task). The <= k
-    rows are collected, numbered 1..k on the driver and returned as a
-    local frame. ``splits.global_rank`` ranked ALL vertices first and
-    cost 14 Spark jobs against this plan's 4 on the same joined frame.
-    ``F.round`` stays a Spark expression: Python's ``round`` rounds half
-    to even, Spark's half up. The rank⋈degree join keys on entity_id
-    (both sides already aggregated per entity — small next to the edge
-    table); iterative cost lives in ``pagerank`` (see its notes)."""
+    The <= k rows of ``_salience_topk`` are collected, numbered 1..k on
+    the driver and returned as a local frame with an explicit schema."""
     from pyspark.sql.types import LongType, StructField, StructType
 
+    top = _salience_topk(triples, damping, n_iter, top_k)
+    schema = StructType(
+        [StructField("salience_rank", LongType(), False)]
+        + top.schema.fields
+    )
+    rows = [(i, *r) for i, r in enumerate(top.collect(), start=1)]
+    return top.sparkSession.createDataFrame(rows, schema)
+
+
+def _salience_topk(
+    triples: DataFrame, damping: float, n_iter: int, top_k: int
+) -> DataFrame:
+    """The top-k salience rows, best first, without their rank numbers:
+    (entity_id, rank, out_degree, in_degree, conv_mentions).
+
+    Plan shape: ``orderBy(rank desc, entity_id).limit(top_k)`` — a
+    TakeOrderedAndProject: each partition keeps its own k best rows and
+    only those k-per-partition rows meet, so there is NO Exchange
+    SinglePartition over the vertex table (``row_number() OVER (ORDER BY
+    rank DESC)`` would funnel every vertex through one task).
+    ``splits.global_rank`` ranked ALL vertices first and cost 14 Spark
+    jobs against this plan's 4 on the same joined frame. ``F.round``
+    stays a Spark expression: Python's ``round`` rounds half to even,
+    Spark's half up. The rank⋈degree join keys on entity_id (both sides
+    already aggregated per entity — small next to the edge table);
+    iterative cost lives in ``pagerank`` (see its notes)."""
     # Materialize the triple frame ONCE: it is read by pagerank's init
     # and vertex_table's aggregate — an expensive upstream (the live
     # extraction pipeline) would otherwise re-run per branch (measured 6x
@@ -143,7 +164,7 @@ def entity_salience(
         F.col("subj").alias("src"), F.col("obj").alias("dst")
     )
     ranks = pagerank(e, damping=damping, n_iter=n_iter)
-    top = (
+    return (
         ranks.withColumnRenamed("id", "entity_id")
         .join(vertex_table(triples), "entity_id")
         .orderBy(F.col("rank").desc(), F.col("entity_id"))
@@ -156,12 +177,6 @@ def entity_salience(
             "conv_mentions",
         )
     )
-    schema = StructType(
-        [StructField("salience_rank", LongType(), False)]
-        + top.schema.fields
-    )
-    rows = [(i, *r) for i, r in enumerate(top.collect(), start=1)]
-    return triples.sparkSession.createDataFrame(rows, schema)
 
 
 def pagerank(
@@ -181,15 +196,15 @@ def pagerank(
     ranks-sum-to-N invariant silently breaks (contributions to a dst not
     in vertices drop in the left join, and an out-of-vertex src absorbs
     shares without redistributing) — so the frame is validated up front
-    and missing endpoints raise ValueError. The check is one count job
-    over the raw edges, run BEFORE any checkpoint, so a bad call pays for
-    nothing else.
+    and missing endpoints raise ValueError. The check is one aggregate
+    job over the raw edges and vertices, run BEFORE any checkpoint, so a
+    bad call pays for nothing else; it also counts the vertex rows.
 
     Size-adaptive: the init step collapses parallel multi-edges into
     weighted distinct edges ``(src, dst, cnt)`` and checkpoints them,
     observing their row count on that same job. When the distinct edges
-    (plus the supplied vertices, if any) number at most
-    ``DRIVER_LOOP_MAX_ROWS``, they are collected once with Arrow and the
+    plus the supplied vertex rows, if any, number at most
+    ``DRIVER_LOOP_MAX_ROWS``, both are collected once with Arrow and the
     power iteration runs on the driver in numpy (``_pagerank_numpy``):
     the same expressions in the same order, so the result matches the
     distributed loop to the last few ulps. On graphs that small the
@@ -219,15 +234,35 @@ def pagerank(
     from pyspark.sql import Observation
 
     e = edges.select("src", "dst")
+    n_vertices = 0
     if vertices is not None:
-        endpoints = e.select(F.col("src").alias("id")).unionByName(
-            e.select(F.col("dst").alias("id"))
+        # ONE job, before any checkpoint: per id, whether it is an edge
+        # endpoint (e) and how many vertex rows carry it (v). An endpoint
+        # no vertex row carries is missing; a null endpoint is always
+        # missing, since null never matches in the joins below. The
+        # vertex row count is also the vertices' share of the bound.
+        def tag(df, col, endpoint, vertex):
+            return df.select(
+                F.col(col).alias("id"),
+                F.lit(endpoint).alias("e"),
+                F.lit(vertex).alias("v"),
+            )
+
+        per_id = (
+            tag(e, "src", 1, 0)
+            .unionByName(tag(e, "dst", 1, 0))
+            .unionByName(tag(vertices, "id", 0, 1))
+            .groupBy("id")
+            .agg(F.max("e").alias("e"), F.sum("v").alias("v"))
         )
-        missing = (
-            endpoints.join(vertices.select("id"), "id", "left_anti")
-            .distinct()
-            .count()
+        unmatched = (F.col("e") == 1) & (
+            (F.col("v") == 0) | F.col("id").isNull()
         )
+        stats = per_id.agg(
+            F.count(F.when(unmatched, 1)).alias("missing"),
+            F.sum("v").alias("n_vertices"),
+        ).first()
+        missing, n_vertices = stats["missing"], stats["n_vertices"] or 0
         if missing:
             raise ValueError(
                 f"pagerank: {missing} edge endpoint(s) absent from the"
@@ -244,8 +279,8 @@ def pagerank(
     # that shape), and (b) the degree/vertex aggregate below runs over
     # the collapsed frame — ONE full-data pass in init instead of two.
     # out_deg = sum(cnt) still counts multi-edges exactly (integer sum).
-    # The distinct-edge count rides the same checkpoint job and picks
-    # the driver or the distributed loop.
+    # The distinct-edge count rides the same checkpoint job and, with
+    # the vertex count above, picks the driver or the distributed loop.
     eobs = Observation()
     ewc = (
         e.groupBy("src", "dst")
@@ -253,11 +288,9 @@ def pagerank(
         .observe(eobs, F.count(F.lit(1)).alias("n_edges"))
         .localCheckpoint()
     )
-    budget = DRIVER_LOOP_MAX_ROWS - (dict(eobs.get).get("n_edges") or 0)
-    if budget >= 0:
-        ranks = _pagerank_numpy(ewc, vertices, damping, n_iter, budget)
-        if ranks is not None:
-            return ranks
+    n_edges = dict(eobs.get).get("n_edges") or 0
+    if n_edges + n_vertices <= DRIVER_LOOP_MAX_ROWS:
+        return _pagerank_numpy(ewc, vertices, damping, n_iter)
 
     # r7 init merge: ONE aggregate derives the endpoint vertex set AND
     # out-degrees. The vertex count and the dangling-vertex count both
@@ -371,33 +404,28 @@ def _pagerank_numpy(
     vertices: DataFrame | None,
     damping: float,
     n_iter: int,
-    budget: int,
-) -> DataFrame | None:
+) -> DataFrame:
     """The power iteration of ``pagerank`` on the driver, over the
-    collected weighted edges ``ewc(src, dst, cnt)``. Returns None when a
-    supplied ``vertices`` frame holds more than ``budget`` rows: the
-    caller then runs the distributed loop. Every expression mirrors one
-    Spark column of the distributed loop, in the same order."""
+    collected weighted edges ``ewc(src, dst, cnt)`` and, when supplied,
+    the collected ``vertices``. Every expression mirrors one Spark column
+    of the distributed loop, in the same order. Ids are non-null: an
+    edge with a null endpoint is dropped."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     et = ewc.toArrow()
-    src = et.column("src").to_numpy(zero_copy_only=False)
-    dst = et.column("dst").to_numpy(zero_copy_only=False)
-    cnt = et.column("cnt").to_numpy().astype(np.float64)
+    src, dst = et.column("src"), et.column("dst")
     if vertices is None:
-        ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
-        s, d = inv[: len(src)], inv[len(src):]
+        id_col = pa.chunked_array(src.chunks + dst.chunks, src.type)
         id_type = ewc.schema["src"].dataType
     else:
-        vt = vertices.select("id").limit(budget + 1).toArrow()
-        if vt.num_rows > budget:
-            return None
-        # validated superset: every endpoint has an exact match in ids
-        ids = np.unique(vt.column("id").to_numpy(zero_copy_only=False))
-        s, d = np.searchsorted(ids, src), np.searchsorted(ids, dst)
+        id_col = vertices.select("id").toArrow().column("id")
         id_type = vertices.schema["id"].dataType
+    ids, (s, d) = dense_ids(id_col, src, dst)
+    keep = (s >= 0) & (d >= 0)
+    s, d = s[keep], d[keep]
+    cnt = et.column("cnt").to_numpy()[keep].astype(np.float64)
     n = len(ids)
     out_deg = np.bincount(s, weights=cnt, minlength=n)
     dangling = out_deg == 0
@@ -411,5 +439,24 @@ def _pagerank_numpy(
         [StructField("id", id_type), StructField("rank", DoubleType())]
     )
     return ewc.sparkSession.createDataFrame(
-        pd.DataFrame({"id": ids, "rank": r}), schema
+        pa.table({"id": ids, "rank": r}), schema
     )
+
+
+def dense_ids(id_col, *cols):
+    """Sorted distinct non-null values of the Arrow column ``id_col``,
+    and for each Arrow column in ``cols`` the numpy index of each of its
+    values among them (-1 for a null or a value not among them). Arrow
+    sorts strings by their UTF-8 bytes, i.e. in code-point order, which
+    is Spark's string order, so a smaller index is a smaller id. Hashing
+    and sorting run in Arrow's kernels: no Python object comparisons,
+    whatever the id type."""
+    import pyarrow.compute as pc
+
+    ids = pc.unique(pc.drop_null(id_col))
+    ids = ids.take(pc.sort_indices(ids))
+    return ids, [
+        pc.fill_null(pc.index_in(c.cast(ids.type), value_set=ids), -1)
+        .to_numpy()
+        for c in cols
+    ]
