@@ -621,157 +621,6 @@ class TestSimHashOracleGate:
         pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
-class TestMultimodalRealDecode:
-    """Round-2 'honest stub' closed for stdlib-decodable formats: PNG/PPM
-    payloads flow through extract_media_features / resize_images with
-    fake=False — a real decode -> feature / resample -> re-encode path."""
-
-    def _media_df(self, spark):
-        from xwikire_spark.kernels.imagecodec import encode_png, encode_ppm
-        from xwikire_spark.kernels.jpegcodec import encode_jpeg
-
-        px = bytearray()
-        for y in range(4):
-            for x in range(6):
-                px.extend([x * 40, y * 60, 128])
-        rows = [
-            ("png1", "image", bytes(encode_png(6, 4, 3, px)), "image/png",
-             6, 4, None),
-            ("ppm1", "image", bytes(encode_ppm(6, 4, px)), "image/x-ppm",
-             6, 4, None),
-            ("jpg1", "image", encode_jpeg(6, 4, 3, bytes(px)), "image/jpeg",
-             6, 4, None),
-            ("aud1", "audio", b"\x00\x01\x02", "audio/wav", None, None, 900),
-        ]
-        return spark.createDataFrame(
-            rows,
-            "media_id string, kind string, payload binary, mime string, "
-            "width int, height int, duration_ms int",
-        )
-
-    def test_real_features(self, spark):
-        from xwikire_spark.operators.multimodal import extract_media_features
-
-        media = self._media_df(spark).where("kind = 'image'")
-        got = {r["media_id"]: r for r in
-               extract_media_features(media, fake=False).collect()}
-        # both lossless encodings of the SAME pixels: identical features
-        assert got["png1"]["feat"][:3] == [6.0, 4.0, 3.0]
-        assert got["png1"]["feat"] == got["ppm1"]["feat"]
-        assert got["png1"]["sha1"] != got["ppm1"]["sha1"]  # bytes differ
-        # jpeg is lossy: same shape, channel means within quant error
-        assert got["jpg1"]["feat"][:3] == [6.0, 4.0, 3.0]
-        for a, b in zip(got["jpg1"]["feat"][3:6], got["png1"]["feat"][3:6]):
-            assert abs(a - b) <= 8.0
-
-    def test_null_payload_quarantined_not_fatal(self, spark):
-        """F5 quarantine semantics on the REAL path: a null/empty payload
-        yields NULL features / passes through resize untouched instead of
-        aborting the corpus-wide job with a codec error."""
-        from xwikire_spark.operators.multimodal import (
-            extract_media_features,
-            resize_images,
-        )
-
-        media = self._media_df(spark).unionByName(
-            spark.createDataFrame(
-                [("null1", "image", None, "image/png", 6, 4, None)],
-                self._media_df(spark).schema,
-            )
-        )
-        feats = {r["media_id"]: r for r in
-                 extract_media_features(
-                     media.where("kind = 'image'"), fake=False
-                 ).collect()}
-        assert feats["null1"]["feat"] is None
-        assert feats["png1"]["feat"] is not None  # others still decode
-        out = {r["media_id"]: r for r in resize_images(
-            media, width=3, height=2, fake=False
-        ).collect()}
-        assert bytes(out["null1"]["payload"] or b"") == b""
-        assert (out["null1"]["width"], out["null1"]["height"]) == (6, 4)
-
-    def test_corrupt_and_unsupported_payloads_quarantined(self, spark):
-        """ADVICE r3: fake=False decode must quarantine ANY bad payload —
-        truncated GIF, random garbage, unsupported WebP — as NULL features
-        with an err tag, never abort the corpus job; healthy rows in the
-        same batch still decode with err NULL."""
-        from xwikire_spark.kernels.gifcodec import encode_gif
-        from xwikire_spark.operators.multimodal import (
-            extract_media_features,
-            resize_images,
-        )
-
-        px = bytearray([10, 20, 30] * 4)
-        good_gif = bytes(encode_gif(2, 2, px))
-        rows = [
-            ("ok", "image", good_gif, "image/gif", 2, 2, None),
-            ("trunc", "image", good_gif[: len(good_gif) // 2],
-             "image/gif", 2, 2, None),
-            ("garbage", "image", b"\x00\x01" * 40, "image/bin", 2, 2, None),
-            ("webp", "image", b"RIFF\x10\x00\x00\x00WEBPVP8 ",
-             "image/webp", 2, 2, None),
-        ]
-        media = spark.createDataFrame(
-            rows,
-            "media_id string, kind string, payload binary, mime string, "
-            "width int, height int, duration_ms int",
-        )
-        feats = {r["media_id"]: r for r in
-                 extract_media_features(media, fake=False).collect()}
-        assert feats["ok"]["feat"] is not None and feats["ok"]["err"] is None
-        for bad in ("trunc", "garbage", "webp"):
-            assert feats[bad]["feat"] is None, bad
-            assert feats[bad]["err"], bad
-        assert feats["webp"]["err"].startswith("unsupported")
-        assert "ValueError" in feats["trunc"]["err"]
-        # resize: bad payloads pass through untouched with original metadata
-        out = {r["media_id"]: r for r in
-               resize_images(media, width=1, height=1, fake=False).collect()}
-        assert (out["ok"]["width"], out["ok"]["height"]) == (1, 1)
-        assert bytes(out["trunc"]["payload"]) == good_gif[: len(good_gif) // 2]
-        assert (out["trunc"]["width"], out["trunc"]["height"]) == (2, 2)
-        assert (out["webp"]["width"], out["webp"]["height"]) == (2, 2)
-
-    def test_real_audio_features(self, spark):
-        import numpy as np
-
-        from xwikire_spark.kernels.wavcodec import encode_wav
-        from xwikire_spark.operators.multimodal import extract_media_features
-
-        t = np.arange(2000) / 8000.0
-        blob = encode_wav(8000, np.sin(2 * np.pi * 440 * t) * 0.5)
-        media = spark.createDataFrame(
-            [("wav1", "audio", blob, "audio/wav", None, None, 250)],
-            "media_id string, kind string, payload binary, mime string, "
-            "width int, height int, duration_ms int",
-        )
-        feat = extract_media_features(media, fake=False).collect()[0]["feat"]
-        # frames, duration, channels, rms(A/sqrt2), peak, zcr, rate
-        assert feat[0] == 2000.0 and feat[2] == 1.0 and feat[6] == 8000.0
-        assert abs(feat[1] - 0.25) < 1e-4
-        assert abs(feat[3] - 0.5 / 2 ** 0.5) < 0.01
-
-    def test_real_resize_round_trips(self, spark):
-        from xwikire_spark.kernels.imagecodec import decode_image
-        from xwikire_spark.operators.multimodal import resize_images
-
-        out = {r["media_id"]: r for r in resize_images(
-            self._media_df(spark), width=3, height=2, fake=False
-        ).collect()}
-        w, h, ch, px = decode_image(bytes(out["png1"]["payload"]))
-        assert (w, h, ch) == (3, 2, 3)
-        assert (out["png1"]["width"], out["png1"]["height"]) == (3, 2)
-        # family-preserving re-encode: ppm stays ppm, jpeg stays jpeg
-        assert bytes(out["ppm1"]["payload"]).startswith(b"P6")
-        jb = bytes(out["jpg1"]["payload"])
-        assert jb.startswith(b"\xff\xd8\xff")
-        assert decode_image(jb)[:3] == (3, 2, 3)
-        # non-image rows pass through untouched
-        assert bytes(out["aud1"]["payload"]) == b"\x00\x01\x02"
-        assert out["aud1"]["duration_ms"] == 900
-
-
 class TestScrubPII:
     """URL/email scrubbing (textstats.scrub_pii) — the pre-training
     hygiene pass. Counts + redaction, URL-first ordering, and
@@ -947,107 +796,6 @@ class TestBenchmarkContamination:
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "BroadcastHashJoin" in plan
-
-
-class TestVideoFrames:
-    """sample_video_frames: MJPEG-in-MP4 real frame sampling (r3
-    next-round #4) — the two-phase shape where this stage slices small
-    frame payloads and heavy decode runs per-frame downstream."""
-
-    def _media(self, spark, blob, extra=()):
-        rows = [("vid1", "video", blob, "video/mp4", 8, 8, 2000),
-                ("img1", "image", b"\x00" * 10, "image/png", 2, 2, None)]
-        rows += list(extra)
-        return spark.createDataFrame(
-            rows,
-            "media_id string, kind string, payload binary, mime string, "
-            "width int, height int, duration_ms int",
-        )
-
-    def test_real_frames_decode(self, spark):
-        from xwikire_spark.kernels.jpegcodec import encode_jpeg
-        from xwikire_spark.kernels.mp4codec import encode_mjpeg_mp4
-        from xwikire_spark.operators.multimodal import sample_video_frames
-
-        frames = []
-        for k in range(4):
-            px = bytes(bytearray((x * 30 + k * 40) % 256
-                                 for y in range(8) for x in range(8)
-                                 for _ in range(3)))
-            frames.append(encode_jpeg(8, 8, 3, px))
-        blob = encode_mjpeg_mp4(8, 8, frames, fps=2)  # dts 0/500/1000/1500
-
-        got = sample_video_frames(
-            self._media(spark, blob), every_ms=500, fake=False
-        ).collect()
-        by_ms = {r["sample_ms"]: r for r in got}
-        assert sorted(by_ms) == [0, 500, 1000, 1500]  # only the video row
-        for ms, idx in [(0, 0), (500, 1), (1000, 2), (1500, 3)]:
-            assert by_ms[ms]["frame_idx"] == idx
-            assert bytes(by_ms[ms]["frame"]) == frames[idx]
-            assert by_ms[ms]["err"] is None
-        # the sliced frames ARE decodable images downstream
-        from xwikire_spark.kernels.jpegcodec import decode_jpeg
-
-        w, h, c, _ = decode_jpeg(bytes(by_ms[1000]["frame"]))
-        assert (w, h, c) == (8, 8, 3)
-
-    def test_corrupt_video_quarantined(self, spark):
-        from xwikire_spark.kernels.jpegcodec import encode_jpeg
-        from xwikire_spark.kernels.mp4codec import encode_mjpeg_mp4
-        from xwikire_spark.operators.multimodal import sample_video_frames
-
-        px = bytes(bytearray([9, 9, 9] * 4))
-        blob = encode_mjpeg_mp4(2, 2, [encode_jpeg(2, 2, 3, px)])
-        media = self._media(
-            spark, blob,
-            extra=[("bad1", "video", b"nonsense", "video/mp4", 2, 2, 500),
-                   ("null1", "video", None, "video/mp4", 2, 2, 500)],
-        )
-        got = {r["media_id"]: r for r in
-               sample_video_frames(media, every_ms=1000, fake=False)
-               .where("err IS NOT NULL").collect()}
-        assert set(got) == {"bad1", "null1"}
-        ok = sample_video_frames(media, every_ms=1000, fake=False).where(
-            "err IS NULL").collect()
-        assert [r["media_id"] for r in ok] == ["vid1"]
-
-    def test_inflated_timeline_quarantined_not_hung(self, spark):
-        """ADVICE r4 (medium): a crafted-but-structurally-valid MP4 with a
-        ~2^32 stts delta at timescale=1 implies a ~4e12 ms timeline — the
-        sampling loop must raise into the err quarantine, not iterate
-        billions of times."""
-        import struct
-
-        from xwikire_spark.kernels.jpegcodec import encode_jpeg
-        from xwikire_spark.kernels.mp4codec import encode_mjpeg_mp4
-        from xwikire_spark.operators.multimodal import sample_video_frames
-
-        frames = [encode_jpeg(2, 2, 3, bytes(12)) for _ in range(3)]
-        blob = bytearray(encode_mjpeg_mp4(2, 2, frames, fps=1))
-        raw = bytes(blob)
-        # mdhd timescale -> 1 (payload: ver/flags 4 + ctime 4 + mtime 4)
-        i = raw.index(b"mdhd") + 4 + 4 + 8
-        struct.pack_into(">I", blob, i, 1)
-        # stts sole entry delta -> 0xFFFFFFFF (payload: ver/flags 4 +
-        # count 4 + sample_count 4 + delta 4)
-        j = raw.index(b"stts") + 4 + 4 + 4 + 4
-        struct.pack_into(">I", blob, j, 0xFFFFFFFF)
-        got = sample_video_frames(
-            self._media(spark, bytes(blob)), every_ms=1000, fake=False
-        ).collect()
-        assert len(got) == 1
-        assert got[0]["frame"] is None
-        assert "max_frames" in got[0]["err"]
-
-    def test_fake_path_cadence(self, spark):
-        from xwikire_spark.operators.multimodal import sample_video_frames
-
-        media = self._media(spark, b"\x01\x02\x03")
-        got = sample_video_frames(media, every_ms=500, fake=True).collect()
-        assert [r["sample_ms"] for r in got] == [0, 500, 1000, 1500]
-        assert all(len(bytes(r["frame"])) == 20 for r in got)  # sha1 bytes
-        assert len({bytes(r["frame"]) for r in got}) == 4  # ms-dependent
 
 
 class TestDecontaminate:
@@ -1489,130 +1237,6 @@ class TestIncrementalDedup:
         assert "bh_part" in bands.columns
         assert bands.count() == len(rows) * 8
         assert bands.select("doc_id").distinct().count() == len(rows)
-
-
-class TestMediaMetadata:
-    """media_metadata: the header-only corpus-indexing tier — per-payload
-    (format, typed-JSON meta) without any pixel/sample decode, F5
-    quarantine on corrupt rows. Golden values cross-check each kernel's
-    metadata parser against the ENCODER that produced the payload (dims,
-    rates, durations known by construction)."""
-
-    def _media_df(self, spark):
-        import numpy as np
-
-        from xwikire_spark.kernels.flaccodec import encode_flac
-        from xwikire_spark.kernels.imagecodec import encode_png
-        from xwikire_spark.kernels.jpegcodec import encode_jpeg
-        from xwikire_spark.kernels.mp4codec import encode_mjpeg_mp4
-        from xwikire_spark.kernels.wavcodec import encode_wav
-
-        px = bytes(bytearray(range(72)))  # 6x4 RGB
-        t = np.arange(8000) / 8000.0
-        tone = (0.25 * np.sin(2 * np.pi * 440 * t)).astype(np.float64)
-        mp3 = bytes([0xFF, 0xFB, 0x90, 0x00])
-        mp3 += b"\xAA" * (144 * 128000 // 44100 - 4)
-        aac_len = 7 + 100
-        aac = bytes([0xFF, 0xF1, 0x50, 0x80 | (aac_len >> 11),
-                     (aac_len >> 3) & 0xFF,
-                     ((aac_len & 7) << 5) | 0x1F, 0xFC])
-        aac += b"\xBB" * 100
-        webp_bits = (64 - 1) | ((32 - 1) << 14)
-        webp = (b"RIFF" + (4 + 8 + 5 + 1).to_bytes(4, "little")
-                + b"WEBPVP8L" + (5).to_bytes(4, "little")
-                + b"\x2f" + webp_bits.to_bytes(4, "little") + b"\x00")
-        frames = [encode_jpeg(8, 8, 3, bytes(bytearray(192)))] * 3
-        rows = [
-            ("png1", "image", encode_png(6, 4, 3, px)),
-            ("jpg1", "image", encode_jpeg(6, 4, 3, px)),
-            ("wav1", "audio", encode_wav(8000, tone)),
-            ("flac1", "audio", encode_flac(8000, tone)),
-            ("mp31", "audio", mp3 * 10),
-            ("aac1", "audio", aac * 10),
-            ("webp1", "image", webp),
-            ("mp41", "video", encode_mjpeg_mp4(8, 8, frames, fps=5)),
-            ("bad1", "image", b"\x13\x37" * 20),
-            ("empty1", "image", b""),
-        ]
-        return spark.createDataFrame(
-            [(i, k, bytearray(p), None, None, None, None)
-             for i, k, p in rows],
-            "media_id string, kind string, payload binary, mime string, "
-            "width int, height int, duration_ms int",
-        )
-
-    def test_formats_and_golden_meta(self, spark):
-        import json
-
-        from xwikire_spark.operators.multimodal import media_metadata
-
-        got = {r["media_id"]: r
-               for r in media_metadata(self._media_df(spark)).collect()}
-        ok = {k: json.loads(v["meta"]) for k, v in got.items()
-              if v["meta"] is not None}
-        assert got["png1"]["format"] == "png"
-        assert (ok["png1"]["width"], ok["png1"]["height"]) == (6, 4)
-        assert ok["png1"]["channels"] == 3 and not ok["png1"]["palette"]
-        assert got["jpg1"]["format"] == "jpeg"
-        assert (ok["jpg1"]["width"], ok["jpg1"]["height"]) == (6, 4)
-        assert not ok["jpg1"]["progressive"]
-        assert got["wav1"]["format"] == "wav"
-        assert ok["wav1"]["codec"] == "pcm"
-        assert ok["wav1"]["sample_rate"] == 8000
-        assert abs(ok["wav1"]["duration_sec"] - 1.0) < 1e-9
-        assert got["flac1"]["format"] == "flac"
-        assert ok["flac1"]["sample_rate"] == 8000
-        assert abs(ok["flac1"]["duration_sec"] - 1.0) < 1e-9
-        assert got["mp31"]["format"] == "mp3"
-        assert ok["mp31"]["n_frames"] == 10
-        assert ok["mp31"]["bitrate_kbps_mean"] == 128.0
-        assert got["aac1"]["format"] == "aac"
-        assert ok["aac1"]["n_frames"] == 10
-        assert ok["aac1"]["profile"] == "LC"
-        assert got["webp1"]["format"] == "webp"
-        assert (ok["webp1"]["width"], ok["webp1"]["height"]) == (64, 32)
-        assert got["mp41"]["format"] == "mp4"
-        assert ok["mp41"]["codec"] == "jpeg"
-        assert (ok["mp41"]["width"], ok["mp41"]["height"]) == (8, 8)
-        assert ok["mp41"]["n_samples"] == 3
-
-    def test_quarantine_rows(self, spark):
-        from xwikire_spark.operators.multimodal import media_metadata
-
-        got = {r["media_id"]: r
-               for r in media_metadata(self._media_df(spark)).collect()}
-        assert got["bad1"]["meta"] is None
-        assert got["bad1"]["err"].startswith("meta_error:")
-        assert got["empty1"]["err"] == "empty_payload"
-        assert got["bad1"]["n_bytes"] == 40
-        # quarantine never aborted the good rows
-        assert sum(1 for r in got.values() if r["err"] is None) == 8
-
-    def test_no_sample_decode_on_hot_path(self, spark, monkeypatch):
-        """The indexing tier must stay header-only: poison every sample/
-        pixel decoder and the operator still succeeds on every payload."""
-        import xwikire_spark.kernels.flaccodec as fc
-        import xwikire_spark.kernels.imagecodec as ic
-        import xwikire_spark.kernels.jpegcodec as jc
-        import xwikire_spark.kernels.wavcodec as wc
-        from xwikire_spark.operators.multimodal import _media_info_bytes
-
-        def boom(*a, **k):
-            raise AssertionError("sample decode reached from metadata tier")
-
-        monkeypatch.setattr(ic, "decode_image", boom)
-        monkeypatch.setattr(ic, "decode_png", boom)
-        monkeypatch.setattr(jc, "decode_jpeg", boom)
-        monkeypatch.setattr(wc, "decode_wav", boom)
-        monkeypatch.setattr(fc, "decode_flac", boom)
-        # driver-side check of the same function the executor runs (the
-        # monkeypatch cannot cross the Python-worker boundary)
-        for r in self._media_df(spark).collect():
-            b = bytes(r["payload"]) if r["payload"] is not None else b""
-            if r["media_id"] in ("bad1", "empty1"):
-                continue
-            fmt, meta = _media_info_bytes(b)
-            assert fmt is not None and meta
 
 
 class TestAsofJoin:

@@ -1,6 +1,6 @@
 """Tests for the remaining pipeline stages: negatives (J5), QA assembly
 (J4/X6/X14), typed facts (MergedWikis), WikiReading locations, I/O formats,
-incremental streaming, multimodal plumbing."""
+incremental streaming."""
 
 import hashlib
 
@@ -291,7 +291,6 @@ class TestStreaming:
             .where(F.col("count") > 1).count() == 0
 
 
-
     def test_watermarked_windowed_counts_append_mode(self, spark, tmp_path):
         """streaming/windowed.py: tumbling-window counts with a watermark
         in APPEND mode. Pins the REAL (measured) Spark semantics:
@@ -429,61 +428,3 @@ class TestStreaming:
         # the two file-1 sessions must have closed, exactly once each
         assert got[(1, 1)] == (2, 600)  # 2 events, 10-minute span
         assert got[(2, 1)] == (1, 0)
-
-
-class TestMultimodal:
-    def test_fake_decode_plumbing(self, spark):
-        from xwikire_spark.operators.multimodal import extract_media_features
-
-        media = spark.createDataFrame(
-            [("m1", "image", bytearray(b"\x01\x02\x03"), "image/png",
-              2, 2, None),
-             ("m2", "image", bytearray(b""), "image/png", 0, 0, None)],
-            "media_id string, kind string, payload binary, mime string, "
-            "width int, height int, duration_ms int",
-        )
-        feats = extract_media_features(media, fake=True).collect()
-        by_id = {r.media_id: r for r in feats}
-        assert by_id["m1"].n_bytes == 3
-        assert len(by_id["m1"].feat) == 8
-        assert by_id["m1"].sha1 == hashlib.sha1(b"\x01\x02\x03").hexdigest()
-
-    def test_real_decode_is_stubbed(self, spark):
-        from xwikire_spark.operators.multimodal import _decode_image_bytes
-
-        with pytest.raises(NotImplementedError):
-            _decode_image_bytes(b"x", fake=False)
-
-    def test_frame_sample_plan(self, spark):
-        from xwikire_spark.operators.multimodal import frame_sample_plan
-
-        media = spark.createDataFrame(
-            [("v1", "video", None, "video/mp4", None, None, 3500)],
-            "media_id string, kind string, payload binary, mime string, "
-            "width int, height int, duration_ms int",
-        )
-        rows = frame_sample_plan(media, every_ms=1000).collect()
-        assert [r.sample_ms for r in rows] == [0, 1000, 2000, 3000]
-
-    def test_resize_plumbing(self, spark):
-        from xwikire_spark.operators.multimodal import resize_images
-
-        media = spark.createDataFrame(
-            [("m1", "image", bytearray(b"\x10\x20"), "image/png", 100, 80,
-              None),
-             ("m2", "audio", bytearray(b"\x01"), "audio/wav", None, None,
-              2000)],
-            "media_id string, kind string, payload binary, mime string, "
-            "width int, height int, duration_ms int",
-        )
-        out = {r.media_id: r for r in
-               resize_images(media, 16, 8).collect()}
-        img = out["m1"]
-        assert (img.width, img.height) == (16, 8)
-        assert len(bytes(img.payload)) == 16 * 8
-        # deterministic fake payload
-        again = {r.media_id: r for r in
-                 resize_images(media, 16, 8).collect()}
-        assert bytes(again["m1"].payload) == bytes(img.payload)
-        # non-image rows pass through untouched
-        assert bytes(out["m2"].payload) == b"\x01"

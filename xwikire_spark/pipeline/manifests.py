@@ -29,6 +29,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xwikire_spark.sources.io import path_exists
+
 MANIFEST_SCHEMA = (
     "bucket BIGINT, convs_in BIGINT, rows_in BIGINT, triples_out BIGINT, "
     "input_hash BIGINT, wall_ms BIGINT"
@@ -62,21 +64,10 @@ def _manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, "_manifests")
 
 
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    """Existence through the Hadoop FileSystem of ``path`` (local, HDFS,
-    S3A, ...). Reading a missing path and catching the error would work
-    too, but the JVM prints the PATH_NOT_FOUND stack trace to stderr on
-    every first run."""
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    return jpath.getFileSystem(conf).exists(jpath)
-
-
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     """The manifest rows written so far — empty on a first run."""
     path = _manifest_path(out_dir)
-    if not _path_exists(spark, path):
+    if not path_exists(spark, path):
         return spark.createDataFrame([], MANIFEST_SCHEMA)
     return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
 

@@ -42,6 +42,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xwikire_spark.sources.io import path_exists
+
 _ZM_DIR = "_zonemaps"
 
 
@@ -94,10 +96,10 @@ def refresh_zone_maps(
     ``{"added": n, "dropped": n, "total": n}``."""
     path = _zm_path(table_dir)
     on_disk = _data_files(table_dir)
-    try:
+    if path_exists(spark, path):
         existing = spark.read.parquet(path)
         known = {r["file"] for r in existing.select("file").collect()}
-    except Exception:
+    else:
         existing, known = None, set()
     new_files = [f for f in on_disk if f not in known]
     stale = known - set(on_disk)
@@ -155,10 +157,10 @@ def plan_file_subset(
     for each ranges[col] = (lo, hi)`` (``None`` bound = unbounded on that
     side). Files without zone-map rows are conservatively kept. Returns
     (planned, n_pruned, n_unmapped)."""
-    try:
-        zm = spark.read.parquet(_zm_path(table_dir))
-    except Exception:
+    path = _zm_path(table_dir)
+    if not path_exists(spark, path):
         return list(candidates), 0, len(candidates)
+    zm = spark.read.parquet(path)
     cond = F.lit(True)
     for c, (lo, hi) in ranges.items():
         if f"{c}_min" not in zm.columns:
