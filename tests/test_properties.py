@@ -75,3 +75,39 @@ def test_segmentation_preserves_content(text):
     # sentences contain exactly the non-whitespace content, in order
     joined = "".join("".join(s.split()) for s in segment_sentences(text))
     assert joined == "".join(text.split())
+
+
+@settings(max_examples=50, deadline=None)
+@given(
+    st.integers(min_value=1, max_value=20),
+    st.integers(min_value=1, max_value=20),
+    st.sampled_from([1, 2, 3, 4]),
+    st.randoms(use_true_random=False),
+)
+def test_png_round_trip_any_size_any_content(w, h, ch, rng):
+    from xwikire_spark.kernels.imagecodec import decode_png, encode_png
+
+    px = bytearray(rng.randrange(256) for _ in range(w * h * ch))
+    assert decode_png(encode_png(w, h, ch, px)) == (w, h, ch, px)
+
+
+@settings(max_examples=30, deadline=None)
+@given(
+    st.integers(min_value=1, max_value=20),
+    st.integers(min_value=1, max_value=20),
+    st.sampled_from([1, 3]),
+    st.booleans(),
+    st.integers(min_value=0, max_value=255),
+)
+def test_jpeg_shape_preserved_and_flat_color_bounded(w, h, ch, sub, v):
+    """Any size (including non-multiple-of-8 and 1-pixel), any sampling:
+    decode(encode(x)) keeps exact dimensions; on constant-color input the
+    lossy error is within rounding of the DC path."""
+    from xwikire_spark.kernels.jpegcodec import decode_jpeg, encode_jpeg
+
+    if sub and ch == 1:
+        sub = False  # grayscale has no chroma to subsample
+    px = bytes([v]) * (w * h * ch)
+    gw, gh, gc, got = decode_jpeg(encode_jpeg(w, h, ch, px, subsample=sub))
+    assert (gw, gh, gc) == (w, h, ch)
+    assert max(abs(a - v) for a in got) <= 3

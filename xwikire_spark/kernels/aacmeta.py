@@ -13,9 +13,8 @@ external-validity argument — see COVERAGE.md):
 - a correct decoder needs the ISO/IEC 13818-7 Huffman codebooks and
   window tables verbatim; hundreds of table entries reproduced from
   memory prove nothing.
-- production swaps in ffmpeg behind the same ``operators/multimodal.py``
-  quarantine seam; ``decode_aac`` raises NotImplementedError and lands
-  in the F5 quarantine table with an ``unsupported:`` tag.
+- production swaps in ffmpeg; ``decode_aac`` raises
+  NotImplementedError.
 
 The ADTS FRAME LAYER is a 7/9-byte header with small public tables
 (12-bit sync, MPEG version, profile, sampling-frequency index, channel
@@ -28,7 +27,7 @@ Each ADTS frame carries (number_of_raw_data_blocks_in_frame + 1) raw
 data blocks of 1024 samples each; duration is blocks * 1024 / rate.
 
 Reference parity note: the reference pipeline (SasCezar/XWikiRE) has no
-media handling; this module serves the multimodal tier of the 100 TB
+media handling; this module serves the media tier of the 100 TB
 training-data story.
 """
 

@@ -7,8 +7,7 @@ Closes the round-2 "image decode honestly stubbed" gap for the formats
 decodable without PIL/libvips: PNG is zlib + per-scanline filters, PPM a
 header + raw bytes, baseline and progressive (SOF2) JPEG are implemented
 outright in jpegcodec,
-and GIF in gifcodec. operators/multimodal.py uses this as its REAL decode
-path; the remaining stubs are WebP and inter-frame video codecs
+and GIF in gifcodec. The remaining stubs are WebP and inter-frame video codecs
 (H.264/VP9) — those raise NotImplementedError (swap in libvips/ffmpeg in
 production; the Spark-side plumbing is format-agnostic). MJPEG-in-MP4
 frame extraction is real via kernels/mp4codec.py + decode_jpeg.
@@ -400,8 +399,7 @@ def channel_stats(
     width: int, height: int, channels: int, pixels: bytes | bytearray
 ) -> list[float]:
     """8 deterministic features: w, h, c, then per-channel means (padded to
-    4 with 0.0), global min — the REAL-decode feature vector multimodal
-    emits (same length as the fake-path vector)."""
+    4 with 0.0), global min — a fixed-length real-decode feature vector."""
     n = width * height
     means = []
     for c in range(channels):

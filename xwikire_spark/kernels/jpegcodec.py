@@ -4,8 +4,8 @@ Closes the remaining "real image decode" gap for the dominant
 training-corpus image format without PIL/libvips: stdlib byte-parsing +
 numpy for the 8x8 (I)DCT (numpy is a baked-in dependency of this repo's
 Arrow path). `kernels/imagecodec.py` dispatches to `decode_jpeg` from its
-format sniffer, so `operators/multimodal.py`'s fake=False path now decodes
-PNG, PPM and baseline JPEG end-to-end.
+format sniffer, so `decode_image` decodes PNG, PPM and baseline JPEG
+end-to-end.
 
 Scope (deliberately bounded, fully tested):
 - decode: baseline sequential (SOF0/SOF1) AND progressive (SOF2) DCT,
@@ -623,7 +623,7 @@ def _finish_progressive(coef_state, comps, qtabs, w, h):
     )
 
 
-# --- encoder (test-vector source + multimodal re-encode) ---------------------
+# --- encoder (test-vector source + re-encode) --------------------------------
 
 
 class _BitWriter:

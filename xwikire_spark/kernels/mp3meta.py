@@ -14,10 +14,8 @@ argument, adopted for MP3 in round 6 — see COVERAGE.md):
   scalefactor band tables, and synthesis-filterbank windows verbatim;
   reproducing hundreds of table entries from memory and then "validating"
   them against an encoder built from the same memory proves nothing.
-- production swaps in ffmpeg/libsndfile behind the same
-  ``operators/multimodal.py`` quarantine seam; decode attempts raise
-  NotImplementedError and land in the F5 quarantine table with an
-  ``unsupported:`` tag, exactly like WebP.
+- production swaps in ffmpeg/libsndfile; decode attempts raise
+  NotImplementedError, exactly like WebP.
 
 The FRAME LAYER, by contrast, is a 4-byte header with small public
 tables (sync, version, layer, bitrate index, sample-rate index,
@@ -28,7 +26,7 @@ agree with the header fields round-tripped through an independent
 hand-packed writer in the tests.
 
 Reference parity note: the reference pipeline (SasCezar/XWikiRE) has no
-media handling at all; this module serves the multimodal tier of the
+media handling at all; this module serves the media tier of the
 100 TB training-data story, not reference parity.
 """
 

@@ -279,8 +279,8 @@ def _full(fourcc: bytes, version: int, flags: int, payload: bytes) -> bytes:
 def video_codec_config(payload: bytes) -> tuple[str, str, bytes] | None:
     """The first video track's codec configuration box, when its sample
     entry carries one after the 86-byte VisualSampleEntry header:
-    (entry_fourcc, config_fourcc, config_body) — 'avcC' for H.264
-    (parsed by ``kernels.h264meta.avc_info``), 'hvcC' for H.265, 'esds'
+    (entry_fourcc, config_fourcc, config_body) — 'avcC' for H.264,
+    'hvcC' for H.265, 'esds'
     for MPEG-4 ASP. None when the entry has no config box (e.g. 'jpeg')
     or the file has no video track."""
     try:

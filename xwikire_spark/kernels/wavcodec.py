@@ -1,6 +1,6 @@
-"""RIFF/WAVE codec (stdlib parsing + numpy): the REAL audio decode path
-behind ``operators/multimodal.py``, closing the "audio honestly stubbed"
-gap the same way imagecodec/jpegcodec closed images.
+"""RIFF/WAVE codec (stdlib parsing + numpy): a real audio decode path,
+closing the "audio honestly stubbed" gap the same way
+imagecodec/jpegcodec closed images.
 
 Scope (bounded, fully tested): integer PCM 8/16/24/32-bit, IEEE float32,
 G.711 mu-law (format 7) and A-law (format 6) — both bijective per code,
@@ -9,9 +9,8 @@ gated by an all-256-codes round-trip identity — IMA/DVI ADPCM (format
 predictor-coefficient table + per-block header), both gated by
 encode->decode SNR.
 Any channel count, WAVE_FORMAT_EXTENSIBLE unwrapped, chunk walker
-tolerant of extra chunks (LIST/fact/cue) and odd-size padding. FLAC has
-its own real codec (``kernels/flaccodec.py``); the remaining
-compressed-audio formats (MP3/AAC) raise NotImplementedError — swap in
+tolerant of extra chunks (LIST/fact/cue) and odd-size padding. The
+compressed-audio formats (FLAC/MP3/AAC) raise NotImplementedError — swap in
 ffmpeg/libsndfile in production; the Spark-side plumbing is
 format-agnostic.
 
@@ -327,8 +326,8 @@ def decode_wav(payload: bytes) -> tuple[int, int, np.ndarray]:
     else:
         raise NotImplementedError(
             f"WAV audio format {audio_format} ({bits}-bit) — PCM, float32, "
-            f"G.711 and IMA ADPCM only without libsndfile (MP3/AAC "
-            f"need ffmpeg in production; FLAC has kernels/flaccodec.py)"
+            f"G.711 and IMA ADPCM only without libsndfile (FLAC/MP3/AAC "
+            f"need ffmpeg in production)"
         )
     if n_ch < 1:
         raise ValueError("WAV with zero channels")

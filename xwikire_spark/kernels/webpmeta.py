@@ -3,7 +3,7 @@ header parsing, animation frame counting — the indexing tier for the
 image format whose PIXEL decode is a documented permanent skip
 (kernels/imagecodec.py: a from-memory VP8/VP8L entropy decoder validated
 only by its own encoder has no external validity; production routes
-through PIL/libvips at the multimodal quarantine seam).
+through PIL/libvips).
 
 The CONTAINER layer, by contrast, is fully checkable by construction:
 
@@ -24,7 +24,7 @@ Tests hand-pack each variant with an INDEPENDENT bit layout derivation,
 so the parser and the packer cross-check (the mp3meta/aacmeta pattern).
 
 Reference parity note: the reference pipeline (SasCezar/XWikiRE) has no
-media handling; this module serves the multimodal tier of the 100 TB
+media handling; this module serves the media tier of the 100 TB
 training-data story.
 """
 
