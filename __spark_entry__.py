@@ -167,11 +167,11 @@ def kg_triples_from_turns(turns: DataFrame) -> DataFrame:
         ),
         lambda x: x["pos"] > 0,
     )
-    # Generate barrier (the candidates_jvm pattern): materialize ms/ps ONCE
-    # behind an explode-of-one-struct. Naive select + where lets Catalyst
-    # re-inline the 10-locate() array construction into the size filter,
-    # the subj/pred projection AND the pushed isnotnull filter — the before
-    # plan evaluated every locate() 3-4x per turn (plans/r07/
+    # Generate barrier (as in extraction.extract_triples_join): materialize
+    # ms/ps ONCE behind an explode-of-one-struct. Naive select + where lets
+    # Catalyst re-inline the 10-locate() array construction into the size
+    # filter, the subj/pred projection AND the pushed isnotnull filter —
+    # the before plan evaluated every locate() 3-4x per turn (plans/r07/
     # kg_triples_before.txt Filter(4)/Project(5)/Project(6)).
     g = turns.select(
         "conv_id", "turn_idx", "text",

@@ -7,10 +7,6 @@ Extras reported alongside the contract fields:
 - triples_per_sec: flagship KG extraction throughput (triples emitted /
   extraction wall seconds) — the BASELINE.json headline metric;
 - rows: per-query output row counts (sanity that work actually happened).
-
-Set SPARK_GRAFT_SCALING=1 to additionally run the flagship at local[8] and
-local[32] and report scaling efficiency (N vs 4N executors stand-in; see
-BENCH/BASELINE.md for the recorded protocol runs).
 """
 
 from __future__ import annotations
@@ -23,10 +19,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod  # noqa: E402
-from xwikire_spark.session import get_spark  # noqa: E402
+from xwikire_spark.session import DEFAULT_CPUS as CPUS, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 HEADLINE = [
     "kg_triples",
@@ -183,152 +178,6 @@ def main() -> None:
     }
     result["zonemap"] = _zonemap_stage(spark)
     spark.stop()
-
-    if os.environ.get("SPARK_GRAFT_SCALING") == "1":
-        # [EXECUTED 2026-08-18 as BENCH/bench_r05_scaling_windowD.json:
-        # normalized paired median 0.859 >= 0.8 — recorded FINAL in
-        # BENCH/BASELINE.md r6.0; the declaration below is kept verbatim
-        # as the pre-registration record.]
-        # ROUND-5 PRE-DECLARATION (VERDICT r4 #4, written BEFORE window D
-        # runs): ONE confirmation window for the pre-filtered workload —
-        # repl=6000, 8 interleaved pinned rounds, protocol UNCHANGED from
-        # windows B/C (fresh processes, taskset pinning, min-of-3-warm per
-        # process, paired per-round ratios, in-window mp.Pool ceiling
-        # bracketing). Whatever it reads is recorded as the final word for
-        # this workload in BENCH/BASELINE.md; no further re-measurement.
-        #
-        # Two-cluster-size protocol (BASELINE.md): the SAME job and input at
-        # local[4] and local[16] (N vs 4N executors stand-in — no real
-        # cluster in this sandbox; 4/16 stays clear of this box's all-core
-        # turbo dropoff, measured in BENCH/BASELINE.md). Each measurement is
-        # a FRESH OS process (scripts/scale_probe.py): stacking sessions in
-        # one driver JVM degrades later runs by >2x (leaked python daemons,
-        # heap fragmentation).
-        import json as _json
-        import subprocess
-
-        repl = int(os.environ.get("SPARK_GRAFT_SCALE_REPL", "3000"))
-        k = int(os.environ.get("SPARK_GRAFT_SCALE_SAMPLES", "3"))
-        here = os.path.dirname(os.path.abspath(__file__))
-        secs: dict[int, list[float]] = {4: [], 16: []}
-        n_triples_scale = {}
-        # k INTERLEAVED samples per level (4,16,4,16,...) so both levels
-        # see the same interference windows; the headline statistic is the
-        # MEDIAN per level (ADVICE r1: paired minima overstate)
-        import shutil
-
-        taskset = shutil.which("taskset")
-        # Per-round HARDWARE/HOST CEILING calibration: the same extraction
-        # kernel under plain mp.Pool (zero Spark) runs INSIDE each probe
-        # process, bracketing the timed Spark runs (pre+post, same pinned
-        # cores) — so the ceiling samples the same interference window the
-        # Spark runs saw. On this shared box the ceiling itself swings
-        # (0.4-1.6 observed round-to-round: co-tenant memory traffic +
-        # all-core turbo), so each round's raw Spark efficiency is also
-        # reported NORMALIZED by that round's ceiling — "how much of the
-        # scaling the host permitted did Spark deliver". On a real
-        # 4-node-vs-1-node cluster the ceiling is ~1.0 (4x nodes bring 4x
-        # memory systems, no co-tenants), so the normalized number is the
-        # cluster-relevant one; both are reported.
-        mins: dict[int, list[float]] = {4: [], 16: []}
-        calib: dict[int, list[float]] = {4: [], 16: []}
-        for _ in range(k):
-            for cores in (4, 16):
-                # pin the whole process tree (JVM + python workers) to
-                # exactly `cores` CPUs — without pinning, local[4]'s python
-                # workers borrow extra cores and the 4-wide baseline is
-                # really an ~8-core run, understating scaling efficiency
-                pin = [taskset, "-c", f"0-{cores - 1}"] if taskset else []
-                out = subprocess.run(
-                    pin + [sys.executable,
-                           os.path.join(here, "scripts/scale_probe.py"),
-                           str(cores), str(repl)],
-                    capture_output=True, text=True, check=True,
-                    env={**os.environ, "SPARK_DRIVER_MEM": "24g"},
-                ).stdout.strip().splitlines()[-1]
-                r = _json.loads(out)
-                secs[cores].append(r["sec"])
-                mins[cores].append(r.get("sec_min", r["sec"]))
-                calib[cores].append(r.get("calib_sec", 0.0))
-                n_triples_scale[cores] = r["n_triples"]
-        scale = {}
-        for cores in (4, 16):
-            med = _median(secs[cores])
-            scale[f"local[{cores}]"] = {
-                "samples_sec": secs[cores],
-                "median_sec": round(med, 3),
-                "min_sec": round(min(secs[cores]), 3),
-                "triples_per_sec_median": round(
-                    n_triples_scale[cores] / med, 1
-                ),
-                "n_triples": n_triples_scale[cores],
-            }
-        eff_med = (
-            scale["local[16]"]["triples_per_sec_median"]
-            / scale["local[4]"]["triples_per_sec_median"]
-        ) / 4.0
-        eff_min = (
-            (n_triples_scale[16] / min(secs[16]))
-            / (n_triples_scale[4] / min(secs[4]))
-        ) / 4.0
-        # per-round PAIRED efficiency: each interleaved round's 4-wide and
-        # 16-wide samples ran back-to-back in the same interference window,
-        # so the per-round ratio controls for the host's slow drift; the
-        # statistic is declared here, in advance — not post-hoc pairing of
-        # best samples (which round-1 was dinged for)
-        eff_pairs = [
-            round((s4 / s16) / 4.0, 3)
-            for s4, s16 in zip(secs[4], secs[16])
-        ]
-        # per-round PAIRED efficiency on per-process MINIMA: within one
-        # process the 3 warm runs differ only by one-sided interference,
-        # so the min estimates the uninterfered runtime (timeit's own
-        # recommendation); the median across interleaved rounds is still
-        # the cross-round statistic (no post-hoc pairing of best samples
-        # across rounds — each ratio uses one round's own back-to-back
-        # processes).
-        eff_pairs_min = [
-            round((s4 / s16) / 4.0, 3)
-            for s4, s16 in zip(mins[4], mins[16])
-        ]
-        # ceiling per round: per-worker weak-scaling of the pure-CPU
-        # kernel bracketing the Spark runs in the same process windows
-        # (1.0 = the host scaled mp.Pool perfectly 4 -> 16); normalized =
-        # raw / ceiling, capped at 1
-        ceil_pairs = [
-            round(c4 / c16, 3) if c16 else 0.0
-            for c4, c16 in zip(calib[4], calib[16])
-        ]
-        norm_pairs = [
-            round(min(e / c, 1.0), 3) if c else 0.0
-            for e, c in zip(eff_pairs_min, ceil_pairs)
-        ]
-        result["scaling"] = scale
-        result["scaling_efficiency_4_to_16_median"] = round(eff_med, 3)
-        result["scaling_efficiency_4_to_16_min"] = round(eff_min, 3)
-        result["scaling_efficiency_per_round"] = eff_pairs
-        result["scaling_efficiency_paired_median"] = round(
-            _median(eff_pairs), 3
-        )
-        result["scaling_sec_min_per_process"] = {
-            "local[4]": mins[4], "local[16]": mins[16]
-        }
-        result["scaling_efficiency_minstat_per_round"] = eff_pairs_min
-        result["scaling_efficiency_minstat_median"] = round(
-            _median(eff_pairs_min), 3
-        )
-        result["scaling_calib_sec_per_round"] = {
-            "local[4]": calib[4], "local[16]": calib[16]
-        }
-        result["scaling_host_ceiling_per_round"] = ceil_pairs
-        result["scaling_host_ceiling_median"] = round(
-            _median(ceil_pairs), 3
-        )
-        result["scaling_efficiency_normalized_per_round"] = norm_pairs
-        result["scaling_efficiency_normalized_median"] = round(
-            _median(norm_pairs), 3
-        )
-        result["scaling_input_replication"] = repl
 
     print(json.dumps(result))
 

@@ -24,7 +24,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod  # noqa: E402
-from xwikire_spark.session import get_spark  # noqa: E402
+from xwikire_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 
 def _median(xs):
@@ -49,7 +49,6 @@ def main() -> None:
                     help="run kg_triples once first to absorb JVM spin-up")
     args = ap.parse_args()
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     qs = {**entry_mod.queries(),
           "kg_entity_salience": entry_mod.q_kg_entity_salience}
     names = args.queries or list(qs)
@@ -57,13 +56,13 @@ def main() -> None:
         if n not in qs:
             raise SystemExit(f"unknown query {n!r}")
 
-    spark = get_spark("bench_extra", master=f"local[{cpus}]",
-                      shuffle_partitions=max(cpus, 32))
+    spark = get_spark("bench_extra", master=f"local[{DEFAULT_CPUS}]",
+                      shuffle_partitions=max(DEFAULT_CPUS, 32))
     spark.sparkContext.setLogLevel("ERROR")
     if args.warmup:
         qs["kg_triples"](spark, args.sf).count()
 
-    out: dict = {"sf": args.sf, "cpus": cpus, "reps": args.reps,
+    out: dict = {"sf": args.sf, "cpus": DEFAULT_CPUS, "reps": args.reps,
                  "queries": {}}
     for name in names:
         rec: dict = {}

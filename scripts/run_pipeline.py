@@ -39,22 +39,12 @@ def main(argv: list[str]) -> int:
     p.add_argument("--no-canonicalize", action="store_true")
     p.add_argument(
         "--dict-strategy",
-        choices=["auto", "jvm", "broadcast", "join"],
-        default="auto",
-        help="'auto' = the fused broadcast pandas kernel; 'jvm' compiles"
-             " small dictionaries into the plan (zero Python workers;"
-             " measured per-core comparable, never faster); 'join' keeps"
-             " the dictionaries distributed (use when the alias table is"
-             " too large to broadcast to executors)",
-    )
-    p.add_argument(
-        "--prefilter",
-        choices=["auto", "on", "off"],
-        default="auto",
-        help="JVM rlike pre-filter dropping candidate-free turns before"
-             " the Python kernel (broadcast strategy): 'auto' enables it"
-             " when the dictionaries fit the in-plan cap — measured ~50%%"
-             " less Python CPU and ~1.5x throughput on the bench corpus",
+        choices=["broadcast", "join"],
+        default="broadcast",
+        help="'broadcast' = the fused pandas kernel behind a JVM rlike"
+             " pre-filter (on when the dictionaries fit JVM_MAX_SURFACES);"
+             " 'join' keeps the dictionaries distributed (use when the"
+             " alias table is too large to broadcast to executors)",
     )
     p.add_argument(
         "--table-format",
@@ -93,9 +83,6 @@ def main(argv: list[str]) -> int:
         t = extract_triples(
             df, alias_dict, predicate_dict, n_partitions=args.n_partitions,
             dict_strategy=args.dict_strategy,
-            jvm_prefilter={"auto": None, "on": True, "off": False}[
-                args.prefilter
-            ],
         )
         if not args.no_canonicalize:
             t = canonicalize_triples(t, alias_dict)

@@ -88,33 +88,33 @@ class TestExtraction:
                   if (f.conv_id, f.pid) not in by_conv_pid]
         assert not missed, missed[:5]
 
-    def test_jvm_prefilter_matches_unfiltered(self, spark, corpus):
+    def test_jvm_prefilter_matches_unfiltered(self, spark, corpus,
+                                              monkeypatch):
         """Round-4 scaling lever: the JVM rlike pre-filter in front of the
         fused kernel is a NECESSARY-condition filter — output must be
         bit-identical with it on or off, including on the Kannada turns
         whose combining marks make Java \\b diverge from Python \\b (those
-        must bypass the filter rather than be judged by Java semantics)."""
+        must bypass the filter rather than be judged by Java semantics).
+        The filter is off when the dictionaries exceed JVM_MAX_SURFACES,
+        so a cap of 0 switches it off."""
+        from xwikire_spark.pipeline import extraction
+
         _, _, transcripts, alias_df, pred_df = corpus
         cols = TRIPLE_KEY + ["subj_surface", "pred_surface", "obj_surface"]
+        on_df = extract_triples(transcripts, alias_df, pred_df)
+        monkeypatch.setattr(extraction, "JVM_MAX_SURFACES", 0)
+        off_df = extract_triples(transcripts, alias_df, pred_df)
         on = {tuple(r[k] for k in cols)
-              for r in extract_triples(
-                  transcripts, alias_df, pred_df, jvm_prefilter=True)
-              .select(*cols).collect()}
+              for r in on_df.select(*cols).collect()}
         off = {tuple(r[k] for k in cols)
-               for r in extract_triples(
-                   transcripts, alias_df, pred_df, jvm_prefilter=False)
-               .select(*cols).collect()}
+               for r in off_df.select(*cols).collect()}
         assert on == off and len(on) > 0
         # the filter must be IN the plan when on (codegen-side RLike before
         # the Arrow hop), and absent when off
         # analyzed plan, not optimized: the test corpus is a LocalRelation,
         # which Catalyst folds deterministic filters into at optimize time
-        plan_on = extract_triples(
-            transcripts, alias_df, pred_df, jvm_prefilter=True
-        )._jdf.queryExecution().analyzed().toString()
-        plan_off = extract_triples(
-            transcripts, alias_df, pred_df, jvm_prefilter=False
-        )._jdf.queryExecution().analyzed().toString()
+        plan_on = on_df._jdf.queryExecution().analyzed().toString()
+        plan_off = off_df._jdf.queryExecution().analyzed().toString()
         assert "RLIKE" in plan_on.upper()
         assert "RLIKE" not in plan_off.upper()
 
@@ -137,32 +137,19 @@ class TestExtraction:
             f"broadcast-only={list(a - b)[:3]} join-only={list(b - a)[:3]}"
         )
 
-    def test_jvm_strategy_matches_broadcast(self, spark, corpus):
-        """The in-plan (Catalyst expression) strategy — explicit opt-in
-        (auto maps to broadcast; the r3 A/B showed jvm is never faster on
-        this box) — must reproduce the fused-kernel path exactly,
-        including the engine-divergence fallback routing: the corpus has
-        Kannada turns whose combining marks Java (?U)\\w treats as word
-        chars but Python \\w does not, so those MUST go through the Python
-        branch to keep reference \\b parity."""
+    @pytest.mark.parametrize("strategy", ["jvm", "auto", "bogus"])
+    def test_unknown_dict_strategy_raises(self, corpus, strategy):
+        """Only "broadcast" and "join" exist; any other value (a removed
+        tier, a typo) must fail loudly instead of running broadcast."""
         _, _, transcripts, alias_df, pred_df = corpus
-        cols = TRIPLE_KEY + ["sent_idx", "subj_surface", "pred_surface",
-                             "obj_surface"]
-        a = {tuple(r[k] for k in cols)
-             for r in extract_triples(
-                 transcripts, alias_df, pred_df, dict_strategy="broadcast")
-             .select(*cols).collect()}
-        b = {tuple(r[k] for k in cols)
-             for r in extract_triples(
-                 transcripts, alias_df, pred_df, dict_strategy="jvm")
-             .select(*cols).collect()}
-        assert a == b, (
-            f"broadcast-only={list(a - b)[:3]} jvm-only={list(b - a)[:3]}"
-        )
+        with pytest.raises(ValueError, match="dict_strategy"):
+            extract_triples(
+                transcripts, alias_df, pred_df, dict_strategy=strategy
+            )
 
     def test_jvm_strategy_routes_exotic_text_to_python(self, spark, corpus):
         """Turns containing engine-divergent characters are ineligible for
-        the in-plan path."""
+        Java-side judgement: the prefilter lets them through to Python."""
         from xwikire_spark.pipeline.extraction import jvm_eligible
 
         _, _, transcripts, _, _ = corpus
@@ -177,42 +164,32 @@ class TestExtraction:
         plain = [t for t in flags if t.isascii() and "\t" not in t]
         assert plain and all(flags[t] for t in plain)
 
-    def test_jvm_strategy_plan_shape(self, spark, corpus):
-        """Plan assertions for the explicit jvm strategy: (a) exactly ONE
-        Python eval chain — the exotic-text fallback — everything else
-        whole-stage JVM; (b) each dictionary regex appears exactly once
-        per plan (the Generate barrier prevents Catalyst from re-inlining
-        regexp_extract_all per downstream reference — the round-1/2
-        re-inlining trap)."""
-        _, _, transcripts, alias_df, pred_df = corpus
-        plan = (
-            extract_triples(
-                transcripts, alias_df, pred_df, dict_strategy="jvm"
-            )
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert plan.count("ArrowEvalPython") + plan.count("MapInPandas") == 1
-        assert plan.count("regexp_extract_all") == 2
-
     def test_jvm_plan_compiles_at_surface_cap(self, spark):
-        """1000-surface dictionaries (the JVM_MAX_SURFACES cap) must build
-        and analyze in seconds — the literal regex/map must not be a
-        plan-size bomb (the IVF-centroid lesson)."""
+        """1000-surface dictionaries (the JVM_MAX_SURFACES cap) keep the
+        prefilter on and must build, analyze and run in seconds — the
+        1000-way rlike literal must not be a plan-size bomb (the
+        IVF-centroid lesson)."""
         import time
-
-        from xwikire_spark.pipeline.extraction import candidates_jvm
 
         t = spark.createDataFrame(
             [("c1", 0, "alias7 and alias13 rel5 here")],
             "conv_id string, turn_idx int, text string",
         )
-        aliases = [(f"alias{i}", f"Q{i}") for i in range(1000)]
-        preds = [(f"rel{i}", f"P{i}") for i in range(1000)]
+        aliases = spark.createDataFrame(
+            [(f"alias{i}", f"Q{i}") for i in range(1000)],
+            "alias string, entity_id string",
+        )
+        preds = spark.createDataFrame(
+            [(f"P{i}", f"rel{i}", []) for i in range(1000)],
+            "pid string, label string, aliases array<string>",
+        )
         t0 = time.time()
-        df = candidates_jvm(t, aliases, preds)
+        df = extract_triples(t, aliases, preds)
+        plan = df._jdf.queryExecution().analyzed().toString()
         rows = df.collect()
         assert time.time() - t0 < 60
-        assert {(r["subj"], r["pid"], r["obj"]) for r in rows} == {
+        assert "RLIKE" in plan.upper()
+        assert {(r["subj"], r["pred"], r["obj"]) for r in rows} == {
             ("Q7", "P5", "Q13")
         }
 
@@ -540,29 +517,21 @@ class TestMentionPathEquivalence:
         assert len(regex_path) > 100  # the corpus actually exercises it
 
     def test_auto_strategy_is_single_kernel_pass(self, spark, corpus):
-        """auto = the fused broadcast kernel (measured: the in-plan jvm
-        tier is per-core comparable but never faster and double-scans the
-        source): the plan must contain NO regexp_extract_all (no literal
-        dictionary in the plan) and exactly one Python chain — and an
-        explicit jvm request above the surface cap must degrade to the
-        same single-kernel plan instead of compiling a giant regex."""
+        """The default is the fused broadcast kernel: the plan must contain
+        NO regexp_extract_all (no literal dictionary in the plan) and
+        exactly one Python chain, also above the surface cap."""
         _, _, transcripts, alias_df, pred_df = corpus
         pad = spark.range(1500).select(
             F.concat(F.lit("zqx"), F.col("id")).alias("alias"),
             F.concat(F.lit("QP"), F.col("id")).alias("entity_id"),
         )
         big = alias_df.select("alias", "entity_id").unionByName(pad)
-        for df in (
-            extract_triples(transcripts, big, pred_df),  # auto
-            extract_triples(
-                transcripts, big, pred_df, dict_strategy="jvm"
-            ),  # above-cap jvm degrades
-        ):
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            assert "regexp_extract_all" not in plan
-            assert (
-                plan.count("ArrowEvalPython") + plan.count("MapInPandas") == 1
-            )
+        plan = (
+            extract_triples(transcripts, big, pred_df)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        assert "regexp_extract_all" not in plan
+        assert plan.count("ArrowEvalPython") + plan.count("MapInPandas") == 1
         # and values still match the small-dictionary run (padding never hits)
         small = {tuple(r) for r in extract_triples(
             transcripts, alias_df, pred_df, dict_strategy="broadcast"

@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 
 from xwikire_spark.functions.ids import triple_id
 from xwikire_spark.functions.udfs import make_mention_udf, segment_udf
-from xwikire_spark.kernels import segmenter
 
 
 def segment_turns(transcripts: DataFrame) -> DataFrame:
@@ -252,22 +251,18 @@ def _first_evidence(cands: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Full-JVM expression strategy: for dictionaries small enough to live in the
-# plan, the ENTIRE kernel — segmentation, both dictionary automatons,
-# candidate emission — compiles to Catalyst expressions. Zero Python in the
-# hot path ("UDFs are the slow path"): whole-stage codegen end to end, and
-# the 4→4N scaling of the flagship tracks the JVM instead of the
-# Arrow-pipe + Python-worker share (measured: the fused kernel's Python CPU
-# inflates ~40% from pinned 4 to 16 cores on this box; pure JVM ~10%).
+# JVM rlike prefilter: for dictionaries small enough to live in the plan, a
+# whole-stage-codegen necessary-condition filter drops candidate-free turns
+# before the Arrow hop, so they never reach a Python worker. Python regex
+# semantics stay the spec: the filter may only let too much through.
 # ---------------------------------------------------------------------------
 
 # Characters on which Java (?U) regex and Python's re disagree — texts
-# containing ANY of these route to the Python kernel (per-row parity beats
-# speed; Python semantics are the spec: they are what the reference's
-# \\b-regex distant supervision does):
+# containing ANY of these bypass the prefilter and are always judged by the
+# Python kernel (Python semantics are the spec: they are what the
+# reference's \\b-regex distant supervision does):
 # 1. whitespace: Python \\s / str.strip() treat 0x1C-0x1F as whitespace
-#    (Unicode White_Space does not), and JVM-side sentence parts are
-#    trimmed with Spark's ASCII-space trim — so any whitespace beyond
+#    (Unicode White_Space does not) — so any whitespace beyond
 #    {space, newline} is out.
 # 2. word chars: Java (?U)\\w includes combining marks (Mn/Mc/Me — e.g.
 #    Kannada vowel signs), non-underscore connector punctuation (Pc) and
@@ -288,17 +283,15 @@ _JVM_INELIGIBLE_PATTERN = (
     + "]"
 )
 
-# Cap on distinct dictionary surfaces for the in-plan strategy: beyond this
-# the regex alternation literal and the surface->ids map literal bloat the
-# plan (the IVF-centroid lesson: literals are a plan-size bomb at scale) and
-# a backtracking alternation scan degrades in BOTH engines anyway — larger
-# dictionaries use the broadcast pandas kernel, cluster-sized ones the join
-# path.
+# Cap on distinct dictionary surfaces for the prefilter: beyond this the
+# regex alternation literal bloats the plan (the IVF-centroid lesson:
+# literals are a plan-size bomb at scale) and a backtracking alternation
+# scan degrades anyway — larger dictionaries send every turn to the kernel.
 JVM_MAX_SURFACES = 1000
 
 
 def jvm_eligible() -> Column:
-    """Rows the in-plan path may process with bit-exact Python parity."""
+    """Rows a Java (?U) regex judges with bit-exact Python parity."""
     return ~F.col("text").rlike(_JVM_INELIGIBLE_PATTERN)
 
 
@@ -312,162 +305,12 @@ def _java_dict_pattern(pairs: list[tuple[str, str]]) -> str | None:
     return r"(?U)\b(?:" + "|".join(re.escape(s) for s in by_len) + r")\b"
 
 
-def _ids_map_lit(pairs: list[tuple[str, str]]) -> Column:
-    """surface -> array<id> literal map (ids sorted; dedup'd)."""
-    ids: dict[str, list[str]] = {}
-    for s, i in pairs:
-        if s and i not in ids.setdefault(s, []):
-            ids[s].append(i)
-    entries = []
-    for s, v in ids.items():
-        entries.append(F.lit(s))
-        entries.append(F.array(*[F.lit(i) for i in sorted(v)]))
-    return F.create_map(*entries)
-
-
-def segment_turns_jvm(transcripts: DataFrame) -> DataFrame:
-    """JVM twin of segment_turns for jvm_eligible() texts: collapse
-    paragraphs, split on the segmenter's boundary regex (same pattern
-    source — Java-compatible by construction), trim, drop empties,
-    posexplode. One Generate evaluates the split chain once per row."""
-    pat = "(?U)" + segmenter._BOUNDARY.pattern
-    collapsed = F.replace(F.col("text"), F.lit("\n\n"), F.lit("\n"))
-    sents = F.filter(
-        F.transform(F.split(collapsed, pat), lambda p: F.trim(p)),
-        lambda p: p != F.lit(""),
-    )
-    return transcripts.select(
-        F.col("conv_id").cast("string").alias("conv_id"),
-        F.col("turn_idx").cast("int").alias("turn_idx"),
-        F.posexplode(sents).alias("sent_idx", "sentence"),
-    )
-
-
-def candidates_jvm(
-    transcripts: DataFrame,
-    alias_pairs: list[tuple[str, str]],
-    pred_pairs: list[tuple[str, str]],
-) -> DataFrame:
-    """CANDIDATE_SCHEMA rows via pure Catalyst expressions — the exact
-    semantics of make_candidate_generator's kernel (earliest mention =
-    subject with id tie-break, earliest predicate surface, every
-    other-entity mention an object), proven equal by
-    tests/test_pipeline.py's strategy-equivalence tests.
-
-    Plan shape: each regex evaluates ONCE per row behind a Generate barrier
-    (explode of a single-element array) — naive column reuse would make
-    Catalyst re-inline the regexp_extract_all per downstream reference
-    (the round-1/2 re-inlining trap, see tests/test_plans.py).
-
-    ``obj_start`` carries the match INDEX, not the char offset: finditer
-    order is positional, so per-sentence ordering — the only thing
-    _first_evidence uses it for — is preserved.
-    """
-    apat, ppat = _java_dict_pattern(alias_pairs), _java_dict_pattern(pred_pairs)
-    sentences = segment_turns_jvm(transcripts)
-    g1 = sentences.select(
-        "conv_id",
-        "turn_idx",
-        "sent_idx",
-        "sentence",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.regexp_extract_all("sentence", F.lit(apat), F.lit(0)).alias("am"),
-                    F.regexp_extract_all("sentence", F.lit(ppat), F.lit(0)).alias("pm"),
-                )
-            )
-        ).alias("r"),
-    )
-
-    # cheap necessary condition BEFORE id-expansion: a candidate sentence
-    # needs >=1 alias match (>=2 post-expansion entries can come from a
-    # single collision surface) and >=1 predicate match. This runs on raw
-    # regexp arrays (attributes of g1's Generate — no regex re-evaluation)
-    # and drops ~75% of sentences before the struct-building expansion,
-    # which would otherwise dominate the whole path (measured 3.3s of a
-    # 6.3s plan at 16 cores).
-    g1 = g1.where(
-        (F.size("r.am") >= 1) & (F.size("r.pm") >= 1)
-    )
-
-    def expand(matches: Column, ids_map: Column) -> Column:
-        # one struct per (match, id): alias collisions emit one entry per id,
-        # exactly like the kernel's `for i in aids[m.group()]`
-        return F.flatten(
-            F.transform(
-                matches,
-                lambda s, i: F.transform(
-                    F.coalesce(
-                        F.try_element_at(ids_map, s),
-                        F.array().cast("array<string>"),
-                    ),
-                    lambda e: F.struct(
-                        i.cast("int").alias("idx"),
-                        e.alias("id"),
-                        s.alias("sf"),
-                    ),
-                ),
-            )
-        )
-
-    ms = expand(F.col("r.am"), _ids_map_lit(alias_pairs))
-    ps = expand(F.col("r.pm"), _ids_map_lit(pred_pairs))
-    g2 = g1.select(
-        "conv_id",
-        "turn_idx",
-        "sent_idx",
-        "sentence",
-        F.explode(F.array(F.struct(ms.alias("ms"), ps.alias("ps")))).alias("q"),
-    )
-    # struct sort order (idx, id, sf) == the kernel's min(ms) tuple order
-    # (start, id, surface): idx is monotone in start
-    base = g2.where((F.size("q.ms") >= 2) & (F.size("q.ps") >= 1)).select(
-        "conv_id",
-        "turn_idx",
-        "sent_idx",
-        "sentence",
-        F.element_at(F.array_sort("q.ms"), 1).alias("sb"),
-        F.element_at(F.array_sort("q.ps"), 1).alias("pb"),
-        F.col("q.ms").alias("ms"),
-    )
-    return (
-        base.select(
-            "conv_id",
-            "turn_idx",
-            "sent_idx",
-            "sentence",
-            F.col("sb.id").alias("subj"),
-            F.col("sb.sf").alias("subj_surface"),
-            F.col("pb.id").alias("pid"),
-            F.col("pb.sf").alias("p_surface"),
-            F.explode("ms").alias("m"),
-        )
-        .where(F.col("m.id") != F.col("subj"))
-        .select(
-            "conv_id",
-            "turn_idx",
-            "sent_idx",
-            "sentence",
-            "subj",
-            "subj_surface",
-            "pid",
-            "p_surface",
-            F.col("m.id").alias("obj"),
-            F.col("m.sf").alias("obj_surface"),
-            F.col("m.idx").alias("obj_start"),
-        )
-    )
-
-
 def extract_triples(
     transcripts: DataFrame,
     alias_dict: DataFrame,
     predicate_dict: DataFrame,
     n_partitions: int | None = None,
-    dict_strategy: str = "auto",
-    jvm_max_surfaces: int = JVM_MAX_SURFACES,
-    jvm_prefilter: bool | None = None,
+    dict_strategy: str = "broadcast",
 ) -> DataFrame:
     """The flagship query: transcripts -> (subj, pred, obj) evidence triples.
 
@@ -477,49 +320,40 @@ def extract_triples(
     sentence per (conv_id, subj, pred, obj) — the first in
     (turn_idx, sent_idx, m_start) order (X5 first-match parity).
 
-    ``dict_strategy`` — a three-tier ladder by dictionary size:
-    - "jvm": dictionaries compile INTO the plan (regex alternation + map
-      literals); segmentation + matching run as Catalyst expressions with
-      zero Python for jvm_eligible() texts, the rest falling back to the
-      fused kernel in the same job. Right for dictionaries up to
-      ``jvm_max_surfaces`` distinct surfaces.
-    - "broadcast": dictionaries collect to the driver once and ship to
-      executors via SparkContext.broadcast; one fused mapInPandas does
-      segmentation + both automatons + candidate emission. Right for
-      dictionaries that fit executor memory but not the plan (the
+    ``dict_strategy`` — where the dictionaries live:
+    - "broadcast" (default): dictionaries collect to the driver once and
+      ship to executors via SparkContext.broadcast; one fused mapInPandas
+      does segmentation + both automatons + candidate emission (the
       reference's whole property dictionary is a process dict,
       src/builders/MergedWikis.py:28).
     - "join": dictionaries NEVER leave the cluster — sentence word-runs
       meet the dictionary's first tokens in a shuffle equi-join
       (detect_mentions_join), candidates assemble relationally. Right for
       transcript-scale alias dictionaries (10^8+ surfaces) where a
-      broadcast would OOM the executors.
-    - "auto" (default): "broadcast". Measured head-to-head (pinned, same
-      input, repl=1000): jvm 29.3 s vs broadcast 28.2 s at 4-wide, 10.8 vs
-      9.8 s at 16-wide — the in-plan tier is per-core comparable but never
-      faster, scales no better, and costs a second source scan, so it
-      stays an explicit opt-in for plans that must avoid Python workers
-      entirely. ("join" also stays explicit: only the caller knows the
-      alias table is cluster-sized.)
+      broadcast would OOM the executors; only the caller knows the alias
+      table is cluster-sized, so it is never chosen automatically.
 
-    ``jvm_prefilter`` (broadcast strategy only; None = auto, on when the
-    dictionaries fit the in-plan cap): a JVM-side ``rlike`` necessary-
-    condition filter that drops turns containing no alias surface or no
-    predicate surface BEFORE they ever reach the Python kernel. A candidate
-    sentence needs >=1 alias and >=1 predicate surface (>=2 post-expansion
-    mentions can come from one collision surface), sentences are substrings
-    of the turn, and segmentation only splits/trims — so a turn failing the
-    turn-level test cannot yield a candidate. Texts containing Java/Python
-    regex-divergent characters (_JVM_INELIGIBLE_PATTERN) bypass the filter
-    entirely, so a Java \\b miss can never drop a Python \\b match. Effect:
-    the mapInPandas kernel sees only candidate-bearing turns (~25% of rows
-    on the bench corpus), shrinking the Python CPU share that dominates
-    this pipeline's scaling exposure on shared hosts.
+    The broadcast path puts a JVM-side ``rlike`` prefilter in front of the
+    kernel when both dictionaries are non-empty and have at most
+    ``JVM_MAX_SURFACES`` distinct surfaces. It drops turns containing no
+    alias surface or no predicate surface BEFORE they reach Python. A
+    candidate sentence needs >=1 alias and >=1 predicate surface (>=2
+    post-expansion mentions can come from one collision surface),
+    sentences are substrings of the turn, and segmentation only
+    splits/trims — so a turn failing the turn-level test cannot yield a
+    candidate. Texts outside jvm_eligible() bypass the filter, so a Java
+    \\b miss can never drop a Python \\b match. Effect: the mapInPandas
+    kernel sees only candidate-bearing turns (~25% of rows on the bench
+    corpus).
 
-    All four produce value-identical results
-    (tests/test_pipeline.py strategy-equivalence tests, which run the
-    broadcast path with the prefilter both on and off).
+    Both strategies, with the prefilter on or off, produce value-identical
+    results (tests/test_pipeline.py strategy-equivalence tests).
     """
+    if dict_strategy not in ("broadcast", "join"):
+        raise ValueError(
+            "dict_strategy must be 'broadcast' or 'join', "
+            f"got {dict_strategy!r}"
+        )
     if n_partitions:
         # explicit repartition by conv hash (north_rule); downstream
         # aggregations reuse this hash family.
@@ -533,25 +367,6 @@ def extract_triples(
     n_surfaces = max(
         len({s for s, _ in alias_pairs}), len({s for s, _ in pred_pairs})
     )
-    if dict_strategy == "auto":
-        dict_strategy = "broadcast"
-    if dict_strategy == "jvm" and not (
-        0 < min(len(alias_pairs), len(pred_pairs))
-        and n_surfaces <= jvm_max_surfaces
-    ):
-        # explicit jvm request outside its envelope (empty dictionary or
-        # above the plan-size cap) degrades to the fused kernel — LOUDLY,
-        # because callers pick jvm precisely to avoid Python workers
-        import warnings
-
-        warnings.warn(
-            f"dict_strategy='jvm' needs non-empty dictionaries with at "
-            f"most {jvm_max_surfaces} surfaces (got {n_surfaces}); "
-            f"falling back to the broadcast Python kernel",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        dict_strategy = "broadcast"
 
     # SINGLE Python pass (fused mapInPandas): segmentation + both automatons
     # + candidate emission. Chained per-column UDFs cost 3 Arrow round-trips
@@ -560,37 +375,20 @@ def extract_triples(
         _bc(transcripts, alias_pairs), _bc(transcripts, pred_pairs)
     )
     narrow = transcripts.select("conv_id", "turn_idx", "text")
-    if dict_strategy == "jvm":
-        # in-plan hot path + Python-kernel fallback for texts whose
-        # whitespace Java and Python disagree on; a turn goes to exactly
-        # one branch, and _first_evidence's min_by never compares
-        # obj_start across branches (turn_idx/sent_idx decide first).
-        # Cost: the source is scanned twice (both scans column-pruned and
-        # filter-pushed); the alternative ships every row through Python.
-        eligible = jvm_eligible()
-        cands = candidates_jvm(
-            narrow.where(eligible), alias_pairs, pred_pairs
-        ).unionByName(
-            narrow.where(~eligible).mapInPandas(gen, CANDIDATE_SCHEMA)
+    apat = _java_dict_pattern(alias_pairs)
+    ppat = _java_dict_pattern(pred_pairs)
+    if n_surfaces <= JVM_MAX_SURFACES and apat and ppat:
+        # JVM pre-filter: a turn with no alias surface or no predicate
+        # surface cannot produce a candidate (necessary condition — see the
+        # docstring); regex-divergent texts bypass it so the decision is
+        # always made with Python-parity semantics. This runs in
+        # whole-stage codegen before the Arrow hop, so ~75% of turns never
+        # cross into Python at all.
+        keep = ~jvm_eligible() | (
+            F.col("text").rlike(apat) & F.col("text").rlike(ppat)
         )
-    else:
-        if jvm_prefilter is None:
-            jvm_prefilter = 0 < n_surfaces <= jvm_max_surfaces
-        apat = _java_dict_pattern(alias_pairs)
-        ppat = _java_dict_pattern(pred_pairs)
-        if jvm_prefilter and apat and ppat:
-            # JVM pre-filter: a turn with no alias surface or no predicate
-            # surface cannot produce a candidate (necessary condition —
-            # see the docstring); regex-divergent texts bypass it so the
-            # decision is always made with Python-parity semantics. This
-            # runs in whole-stage codegen before the Arrow hop, so ~75%
-            # of turns never cross into Python at all.
-            keep = F.col("text").rlike(_JVM_INELIGIBLE_PATTERN) | (
-                F.col("text").rlike(apat) & F.col("text").rlike(ppat)
-            )
-            narrow = narrow.where(keep)
-        cands = narrow.mapInPandas(gen, CANDIDATE_SCHEMA)
-    return _first_evidence(cands)
+        narrow = narrow.where(keep)
+    return _first_evidence(narrow.mapInPandas(gen, CANDIDATE_SCHEMA))
 
 
 # ---------------------------------------------------------------------------
