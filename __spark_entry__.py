@@ -1010,9 +1010,9 @@ def q_evt_sessionize(spark, sf_dir):
 
 def q_evt_session_window(spark, sf_dir):
     """Spark's built-in session_window (gap-close semantics: a session's
-    window end = last event + gap) — the native complement to the custom
-    stateful sessionizer (streaming/sessionize.py) and the lag+cumsum batch
-    shape (q_evt_sessionize). All three agree on session membership."""
+    window end = last event + gap) — the native complement to the
+    lag+cumsum batch shape (q_evt_sessionize). Both agree on session
+    membership."""
     e = _load(spark, sf_dir, "events")
     return (
         e.groupBy("user_id", F.session_window("ts", "30 minutes"))
@@ -1291,24 +1291,6 @@ def q_dedup_embedding(spark, sf_dir):
     return cosine_near_duplicates(
         emb, threshold=0.5, n_bands=8, planes_per_band=3
     )
-
-
-def q_txt_token_counts(spark, sf_dir):
-    from xwikire_spark.operators.textstats import token_counts
-
-    return token_counts(_load(spark, sf_dir, "documents"))
-
-
-def q_txt_quality(spark, sf_dir):
-    from xwikire_spark.operators.textstats import quality_scores
-
-    return quality_scores(_load(spark, sf_dir, "documents"))
-
-
-def q_txt_fingerprint(spark, sf_dir):
-    from xwikire_spark.operators.textstats import fingerprint_min_shingle
-
-    return fingerprint_min_shingle(_load(spark, sf_dir, "documents"))
 
 
 def q_txt_stats(spark, sf_dir):

@@ -63,8 +63,8 @@ def main(argv: list[str]) -> int:
         metavar="N",
         help="after the run, binpack-rewrite small-file buckets under"
              " out/triples toward N-byte files (sources/compaction.py)."
-             " Run it on the cadence of your incremental appends — every"
-             " resume/streaming batch leaves a few files per bucket",
+             " Run it on the cadence of your resumed runs — every"
+             " resume batch leaves a few files per bucket",
     )
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)

@@ -43,16 +43,6 @@ UNREACHED = {
     "pipeline.negatives",
     "pipeline.qa",
     "pipeline.wikireading",
-    # physical-plan assertions used by tests/test_plans.py
-    "plans.inspection",
-    # bucketed-table join helpers; no entry point writes bucketed tables
-    "sources.bucketing",
-    # streaming tier (incremental extraction and dedup, sessionization,
-    # windowed counts, canonical-map upkeep); no entry point streams
-    "streaming.canonical",
-    "streaming.incremental",
-    "streaming.sessionize",
-    "streaming.windowed",
 }
 
 

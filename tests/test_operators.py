@@ -395,97 +395,6 @@ class TestConnectedComponentsPaths:
         assert len({r.component for r in cut.collect()}) > 1
 
 
-class TestSessionFold:
-    """Pure fold-logic tests for the stateful sessionizer (late data and
-    sequence continuity — the cases the streaming harness can't easily
-    drive deterministically)."""
-
-    GAP = 1800 * 1_000_000
-
-    def test_late_event_extends_session_backward(self):
-        from xwikire_spark.streaming.sessionize import fold_events
-
-        # open session [12:00, 12:00]; late event 11:50 (within gap)
-        t0 = 1_700_000_000 * 1_000_000
-        closed, (seq, n, start, last) = fold_events(
-            1, 1, t0, t0, [t0 - 600 * 1_000_000], self.GAP
-        )
-        assert closed == []
-        assert (seq, n) == (1, 2)
-        assert start == t0 - 600 * 1_000_000  # start moved earlier
-        assert last == t0
-
-    def test_detached_late_event_is_own_closed_session(self):
-        from xwikire_spark.streaming.sessionize import fold_events
-
-        t0 = 1_700_000_000 * 1_000_000
-        late = t0 - 2 * self.GAP  # > gap before the open session's start
-        closed, (seq, n, start, last) = fold_events(
-            3, 2, t0, t0, [late], self.GAP
-        )
-        # the detached event closes immediately at the current counter and
-        # the open session renumbers after it — no duplicate seq
-        assert closed == [(3, 1, late, late)]
-        assert (seq, n, start, last) == (4, 2, t0, t0)
-
-    def test_late_cluster_merges_into_one_session(self):
-        """Two+ detached late events within gap of EACH OTHER close as one
-        session, like the batch lag+cumsum oracle (ADVICE r2)."""
-        from xwikire_spark.streaming.sessionize import fold_events
-
-        t0 = 1_700_000_000 * 1_000_000
-        lates = [t0 - 5 * self.GAP, t0 - 5 * self.GAP + self.GAP // 2,
-                 t0 - 3 * self.GAP]
-        closed, (seq, n, start, last) = fold_events(
-            3, 2, t0, t0, lates, self.GAP
-        )
-        assert closed == [
-            (3, 2, lates[0], lates[1]),  # cluster of two -> ONE session
-            (4, 1, lates[2], lates[2]),  # detached from both neighbors
-        ]
-        assert (seq, n, start, last) == (5, 2, t0, t0)
-
-    def test_late_chain_bridges_into_open_session(self):
-        """A late run that backward extension brings within gap of the
-        open session merges into it — the three sessionization paths
-        (batch lag+cumsum, session_window, streaming fold) agree."""
-        from xwikire_spark.streaming.sessionize import fold_events
-
-        t0 = 1_700_000_000 * 1_000_000
-        g = self.GAP
-        # 0.8g steps: each within gap of the next; first two detached
-        lates = [t0 - 2 * g, t0 - 2 * g + (8 * g) // 10, t0 - g // 2]
-        closed, (seq, n, start, last) = fold_events(
-            7, 2, t0, t0, lates, g
-        )
-        assert closed == []
-        assert (seq, n, start, last) == (7, 5, lates[0], t0)
-
-    def test_seq_continues_after_timeout_close(self):
-        from xwikire_spark.streaming.sessionize import fold_events
-
-        # after a timeout close the state keeps (seq, 0, NO_SESSION): the
-        # next event must open session seq+1, not restart at 1
-        t0 = 1_700_000_000 * 1_000_000
-        closed, (seq, n, start, last) = fold_events(
-            5, 0, None, None, [t0], self.GAP
-        )
-        assert closed == []
-        assert (seq, n, start, last) == (6, 1, t0, t0)
-
-    def test_matches_batch_semantics_in_order(self):
-        from xwikire_spark.streaming.sessionize import fold_events
-
-        # in-order stream: sessions split exactly at gaps > 30 min
-        base = 1_700_000_000 * 1_000_000
-        m = 60 * 1_000_000
-        ts = [base, base + 10 * m, base + 50 * m, base + 200 * m]
-        closed, (seq, n, start, last) = fold_events(
-            0, 0, None, None, ts, self.GAP
-        )
-        # gaps: 10m (joins), 40m (splits), 150m (splits)
-        assert [(c[0], c[1]) for c in closed] == [(1, 2), (2, 1)]
-        assert (seq, n) == (3, 1)
 
 
 class TestNullTextRows:
@@ -950,293 +859,6 @@ class TestDecontaminate:
         pd.testing.assert_frame_equal(sdf, odf, check_dtype=False)
 
 
-class TestIncrementalDedup:
-    """Streaming dedup bridge (r3 next-round #7): newly-arrived docs join
-    the existing MinHash signature index; batch-then-increment must equal
-    the full-batch pair set."""
-
-    def _docs(self):
-        rows, planted = _mk_docs(n_base=25)
-        for r in rows:
-            r["doc_id"] = str(r["doc_id"])
-        return rows, {(str(a), str(b)) for a, b in planted}
-
-    def test_batch_then_increment_equals_full_batch(self, spark):
-        from xwikire_spark.operators.dedup import (
-            incremental_minhash_dedup,
-            near_duplicates_minhash,
-        )
-
-        rows, _ = self._docs()
-        # split so near-dup pairs straddle the boundary: bases (even rows)
-        # arrive first, their planted dups (odd rows) second — plus a few
-        # whole pairs inside each half
-        first = rows[:20] + rows[20::2]
-        second = [r for r in rows if r not in first]
-        all_df = spark.createDataFrame(pd.DataFrame(rows))
-        f_df = spark.createDataFrame(pd.DataFrame(first))
-        s_df = spark.createDataFrame(pd.DataFrame(second))
-
-        full = {(r["doc_a"], r["doc_b"], r["jaccard"])
-                for r in near_duplicates_minhash(all_df).collect()}
-
-        empty_index = spark.createDataFrame(
-            [], "doc_id string, sig array<bigint>"
-        )
-        p0, idx0, sig0 = incremental_minhash_dedup(f_df, empty_index, f_df)
-        p1, idx1, sig1 = incremental_minhash_dedup(all_df, idx0, s_df)
-        got = {(r["doc_a"], r["doc_b"], r["jaccard"])
-               for r in p0.collect()} | \
-              {(r["doc_a"], r["doc_b"], r["jaccard"]) for r in p1.collect()}
-        assert got == full and len(full) > 0
-        # the updated index covers every doc exactly once
-        assert idx1.count() == len(rows)
-        assert idx1.select("doc_id").distinct().count() == len(rows)
-
-    def test_redelivery_is_idempotent(self, spark):
-        """At-least-once delivery: re-sending an already-indexed batch
-        adds no signatures and re-emits no new-new pairs beyond what the
-        anti-join admits (zero fresh docs -> zero pairs)."""
-        from xwikire_spark.operators.dedup import incremental_minhash_dedup
-
-        rows, _ = self._docs()
-        df = spark.createDataFrame(pd.DataFrame(rows[:10]))
-        empty_index = spark.createDataFrame(
-            [], "doc_id string, sig array<bigint>"
-        )
-        p0, idx0, sig0 = incremental_minhash_dedup(df, empty_index, df)
-        n0 = idx0.count()
-        assert sig0.count() == n0  # first batch: the delta IS the index
-        p1, idx1, sig1 = incremental_minhash_dedup(df, idx0, df)
-        assert idx1.count() == n0
-        assert p1.count() == 0
-        assert sig1.count() == 0  # nothing fresh -> empty delta
-
-    def test_in_batch_duplicates_collapse(self, spark):
-        """A single micro-batch carrying the same doc twice (at-least-once
-        upstream) must index it once — the anti-join only guards against
-        PRIOR batches, so the operator dedups within the batch too."""
-        from xwikire_spark.operators.dedup import incremental_minhash_dedup
-
-        rows, _ = self._docs()
-        doubled = rows[:6] + rows[:3]  # 3 doc_ids appear twice
-        df = spark.createDataFrame(pd.DataFrame(doubled))
-        corpus = spark.createDataFrame(pd.DataFrame(rows[:6]))
-        empty_index = spark.createDataFrame(
-            [], "doc_id string, sig array<bigint>"
-        )
-        p, idx, sig = incremental_minhash_dedup(corpus, empty_index, df)
-        assert sig.count() == 6
-        assert idx.select("doc_id").distinct().count() == idx.count() == 6
-
-    def _banded_dirs(self, spark, tmp_path):
-        from xwikire_spark.operators.dedup import BANDS_SCHEMA
-
-        empty_b = spark.createDataFrame([], BANDS_SCHEMA + ", bh_part int")
-        empty_k = spark.createDataFrame([], "doc_id string")
-        return (
-            str(tmp_path / "bands"), str(tmp_path / "sigs"),
-            empty_b, empty_k,
-        )
-
-    def test_banded_index_batch_then_increment_equals_full_batch(
-        self, spark, tmp_path
-    ):
-        """VERDICT r4 #1: the persisted-banded-index path reproduces the
-        full-batch pair set across an increment, reading/writing the
-        bands and signature tables through parquet like the bridge."""
-        from xwikire_spark.operators.dedup import (
-            bh_part_expr,
-            incremental_minhash_dedup_banded,
-            near_duplicates_minhash,
-        )
-
-        rows, _ = self._docs()
-        first = rows[:20] + rows[20::2]
-        second = [r for r in rows if r not in first]
-        all_df = spark.createDataFrame(pd.DataFrame(rows))
-        f_df = spark.createDataFrame(pd.DataFrame(first))
-        s_df = spark.createDataFrame(pd.DataFrame(second))
-        bands_path, sigs_path, empty_b, empty_k = self._banded_dirs(
-            spark, tmp_path
-        )
-
-        p0, s0, b0 = incremental_minhash_dedup_banded(
-            f_df, empty_b, empty_k, f_df
-        )
-        got = {(r["doc_a"], r["doc_b"], r["jaccard"])
-               for r in p0.collect()}
-        b0.withColumn("bh_part", bh_part_expr()).write.partitionBy(
-            "bh_part"
-        ).parquet(bands_path)
-        s0.write.parquet(sigs_path)
-
-        p1, s1, b1 = incremental_minhash_dedup_banded(
-            all_df,
-            spark.read.parquet(bands_path),
-            spark.read.parquet(sigs_path).select("doc_id"),
-            s_df,
-        )
-        got |= {(r["doc_a"], r["doc_b"], r["jaccard"])
-                for r in p1.collect()}
-        full = {(r["doc_a"], r["doc_b"], r["jaccard"])
-                for r in near_duplicates_minhash(all_df).collect()}
-        assert got == full and len(full) > 0
-        # deltas cover exactly the increment's docs, once
-        assert s1.count() == len(second)
-        assert b1.select("doc_id").distinct().count() == len(second)
-
-    def test_banded_scan_is_bucket_pruned(self, spark, tmp_path):
-        """The IO contract of the persisted index: a batch's scan of the
-        bands table must carry BOTH the bh_part partition filter
-        (directory pruning) and the band_hash IN pushdown (row-group
-        pruning) — asserted on the executed plan's FileScan node."""
-        from xwikire_spark.operators.dedup import (
-            bh_part_expr,
-            incremental_minhash_dedup_banded,
-        )
-
-        rows, _ = self._docs()
-        f_df = spark.createDataFrame(pd.DataFrame(rows[:20]))
-        s_df = spark.createDataFrame(pd.DataFrame(rows[20:]))
-        bands_path, sigs_path, empty_b, empty_k = self._banded_dirs(
-            spark, tmp_path
-        )
-        _p0, s0, b0 = incremental_minhash_dedup_banded(
-            f_df, empty_b, empty_k, f_df
-        )
-        b0.withColumn("bh_part", bh_part_expr()).write.partitionBy(
-            "bh_part"
-        ).parquet(bands_path)
-        s0.write.parquet(sigs_path)
-
-        all_df = spark.createDataFrame(pd.DataFrame(rows))
-        p1, _s1, _b1 = incremental_minhash_dedup_banded(
-            all_df,
-            spark.read.parquet(bands_path),
-            spark.read.parquet(sigs_path).select("doc_id"),
-            s_df,
-        )
-        plan = p1._jdf.queryExecution().executedPlan().toString()
-        # identify the bands-table scan by its schema, NOT a path
-        # substring: Spark truncates Location at
-        # spark.sql.maxMetadataStringLength (100 chars), so under a long
-        # pytest tmp_path the directory name never survives into the line
-        scans = [
-            ln for ln in plan.splitlines()
-            if "FileScan" in ln and "band_hash" in ln
-        ]
-        assert scans, "no FileScan of the bands table in the plan"
-        for ln in scans:
-            assert "PartitionFilters: [bh_part" in ln, ln
-            assert "PushedFilters: [In(band_hash" in ln, ln
-
-    def test_banded_crash_between_bands_and_sigs_is_exact(
-        self, spark, tmp_path
-    ):
-        """Crash-ordering re-proof for the new table (pairs -> bands ->
-        sigs): a crash AFTER the bands append but BEFORE the sigs append
-        makes the retry re-process the batch and append duplicate band
-        rows — the count_distinct occupancy and distinct() candidates
-        must keep the final pair set exactly equal to the clean run."""
-        from xwikire_spark.operators.dedup import (
-            bh_part_expr,
-            incremental_minhash_dedup_banded,
-            near_duplicates_minhash,
-        )
-
-        rows, _ = self._docs()
-        first, second = rows[:25], rows[25:]
-        all_df = spark.createDataFrame(pd.DataFrame(rows))
-        f_df = spark.createDataFrame(pd.DataFrame(first))
-        s_df = spark.createDataFrame(pd.DataFrame(second))
-        bands_path, sigs_path, empty_b, empty_k = self._banded_dirs(
-            spark, tmp_path
-        )
-        p0, s0, b0 = incremental_minhash_dedup_banded(
-            f_df, empty_b, empty_k, f_df
-        )
-        got = {(r["doc_a"], r["doc_b"], r["jaccard"])
-               for r in p0.collect()}
-        # CRASH: bands written, sigs NOT
-        b0.withColumn("bh_part", bh_part_expr()).write.partitionBy(
-            "bh_part"
-        ).parquet(bands_path)
-        # RETRY of batch 0: anti-join sees nothing known (sigs missing),
-        # re-emits the same pairs (dynamic overwrite would replace the
-        # batch partition) and re-appends duplicate band rows
-        empty_k2 = spark.createDataFrame([], "doc_id string")
-        p0r, s0r, b0r = incremental_minhash_dedup_banded(
-            f_df, spark.read.parquet(bands_path), empty_k2, f_df
-        )
-        assert {(r["doc_a"], r["doc_b"], r["jaccard"])
-                for r in p0r.collect()} == got
-        b0r.withColumn("bh_part", bh_part_expr()).write.mode(
-            "append"
-        ).partitionBy("bh_part").parquet(bands_path)
-        s0r.write.mode("append").parquet(sigs_path)
-        # the bands table now holds first-batch rows TWICE
-        n_bands_rows = spark.read.parquet(bands_path).count()
-        assert n_bands_rows == 2 * b0r.count()
-
-        p1, s1, b1 = incremental_minhash_dedup_banded(
-            all_df,
-            spark.read.parquet(bands_path),
-            spark.read.parquet(sigs_path).select("doc_id"),
-            s_df,
-        )
-        got |= {(r["doc_a"], r["doc_b"], r["jaccard"])
-                for r in p1.collect()}
-        full = {(r["doc_a"], r["doc_b"], r["jaccard"])
-                for r in near_duplicates_minhash(all_df).collect()}
-        assert got == full and len(full) > 0
-
-    def test_streaming_end_to_end(self, spark, tmp_path):
-        """Two file drops through run_incremental_dedup (availableNow x2):
-        the pairs accumulated across both runs equal the full-batch set."""
-        import os
-
-        from xwikire_spark.operators.dedup import near_duplicates_minhash
-        from xwikire_spark.streaming.incremental import run_incremental_dedup
-
-        rows, _ = self._docs()
-        for r in rows:
-            r["lang"], r["source"] = "en", "s"
-        cols = ["doc_id", "lang", "source", "text"]
-        first, second = rows[: len(rows) // 2], rows[len(rows) // 2:]
-        d = {k: str(tmp_path / k) for k in
-             ("input", "index", "pairs", "ckpt")}
-        os.makedirs(d["input"], exist_ok=True)
-
-        def drop(batch, name):
-            spark.createDataFrame(
-                pd.DataFrame(batch)[cols]
-            ).coalesce(1).write.mode("append").parquet(d["input"])
-
-        drop(first, "a")
-        run_incremental_dedup(
-            spark, d["input"], d["index"], d["pairs"], d["ckpt"]
-        ).awaitTermination(120)
-        drop(second, "b")
-        run_incremental_dedup(
-            spark, d["input"], d["index"], d["pairs"], d["ckpt"]
-        ).awaitTermination(120)
-
-        got = {(r["doc_a"], r["doc_b"], r["jaccard"])
-               for r in spark.read.parquet(d["pairs"]).collect()}
-        all_df = spark.createDataFrame(pd.DataFrame(rows)[cols])
-        full = {(r["doc_a"], r["doc_b"], r["jaccard"])
-                for r in near_duplicates_minhash(all_df).collect()}
-        assert got == full and len(full) > 0
-        sigs = spark.read.parquet(d["index"])
-        assert sigs.count() == len(rows)
-        assert sigs.select("doc_id").distinct().count() == len(rows)
-        # the persisted banded index (r4 #1) mirrors the signature table:
-        # n_bands rows per doc, partitioned by bh_part for pruned reads
-        bands = spark.read.parquet(d["index"].rstrip("/") + "_bands")
-        assert "bh_part" in bands.columns
-        assert bands.count() == len(rows) * 8
-        assert bands.select("doc_id").distinct().count() == len(rows)
 
 
 class TestAsofJoin:

@@ -273,6 +273,14 @@ class TestCanonicalization:
         assert row.id == hashlib.sha1(
             f"{row.subj} {row.pred} {row.obj}".encode()
         ).hexdigest()
+        # a precomputed map (perfbench's traced run passes one) rewrites
+        # exactly as the alias-dict form does
+        cols = ["id", "subj", "pred", "obj", "conv_id", "turn_idx"]
+        pre = canonicalize_triples(
+            t, None, entity_map=canonical_entity_map(alias_df)
+        )
+        assert {tuple(r) for r in pre.select(*cols).collect()} \
+            == {tuple(r) for r in c.select(*cols).collect()}
 
 
 class TestManifests:
@@ -289,10 +297,10 @@ class TestManifests:
         got = read_manifest(spark, out)
         assert got.count() == 0
         assert got.schema == spark.createDataFrame([], MANIFEST_SCHEMA).schema
-        spark.createDataFrame([(3, 1, 2, 5, 7, 9)], MANIFEST_SCHEMA)\
+        spark.createDataFrame([(3, 1, 2, 5, 7, 9, 1)], MANIFEST_SCHEMA)\
             .write.parquet(str(tmp_path / "fresh" / "_manifests"))
         assert [tuple(r) for r in read_manifest(spark, out).collect()] \
-            == [(3, 1, 2, 5, 7, 9)]
+            == [(3, 1, 2, 5, 7, 9, 1)]
 
     def test_resume_skips_done_buckets(self, spark, corpus, tmp_path):
         _, _, transcripts, alias_df, pred_df = corpus
@@ -339,6 +347,16 @@ class TestManifests:
         want = {tuple(r) for r in
                 fresh.select("conv_id", "subj", "pred", "obj").collect()}
         assert got == want
+        # back to the original input (A -> B -> A): the bucket's latest
+        # manifest row is B's, so it is pending again, and the output
+        # equals a from-scratch run on A, row for row
+        assert len(pending_buckets(spark, transcripts, out, n_buckets)) == 1
+        back = run_with_manifests(spark, transcripts, build, out, n_buckets)
+        cols = ["id", "subj", "pred", "obj", "conv_id", "turn_idx"]
+        assert sorted(map(tuple, back.select(*cols).collect())) == sorted(
+            map(tuple, extract_triples(transcripts, alias_df, pred_df)
+                .select(*cols).collect())
+        )
 
     def test_snapshot_mode_matches_parquet_and_time_travels(
         self, spark, corpus, tmp_path
@@ -740,384 +758,10 @@ def test_pagerank_vertices_count_toward_the_bound(spark, monkeypatch):
             assert abs(got[k] - want[k]) < 1e-9, (bound, k)
 
 
-class TestIncrementalCanonicalize:
-    """Incremental canonical-map maintenance (canonicalize.py): folding an
-    alias-dict append into a persisted map must equal the batch recompute
-    over old ∪ new (when no surface crosses the fanout guard), at
-    O(delta + touched components) cost — never re-running CC on the
-    corpus."""
-
-    OLD = [
-        # component {Q4, Q9} via shared "paris"; singletons Q1, Q2
-        ("paris", "Q4"), ("paris", "Q9"),
-        ("acme", "Q1"), ("globex", "Q2"),
-        ("berlin", "Q7"), ("hauptstadt", "Q7"),
-    ]
-
-    def _df(self, spark, rows):
-        import pandas as pd
-
-        return spark.createDataFrame(
-            pd.DataFrame(rows, columns=["alias", "entity_id"])
-        )
-
-    def _batch_equals_incremental(self, spark, old_rows, new_rows):
-        from xwikire_spark.pipeline.canonicalize import (
-            canonical_entity_map,
-            incremental_canonical_map,
-        )
-
-        old_dict = self._df(spark, old_rows)
-        new_df = self._df(spark, new_rows)
-        base = canonical_entity_map(old_dict)
-        inc = incremental_canonical_map(base, old_dict, new_df)
-        full = canonical_entity_map(
-            old_dict.unionByName(new_df)
-        )
-        got = sorted(map(tuple, inc.collect()))
-        want = sorted(map(tuple, full.collect()))
-        assert got == want
-        return dict(got)
-
-    def test_merge_two_old_components(self, spark):
-        # "bridge" surface links Q1's and Q2's components
-        m = self._batch_equals_incremental(
-            spark, self.OLD, [("bridge", "Q1"), ("bridge", "Q2")]
-        )
-        assert m["Q1"] == m["Q2"] == "Q1"
-        assert m["Q4"] == m["Q9"] == "Q4"  # untouched component intact
-
-    def test_new_smaller_id_becomes_canonical(self, spark):
-        # new entity Q0 < Q4 joins the {Q4, Q9} component via "paris"
-        m = self._batch_equals_incremental(
-            spark, self.OLD, [("paris", "Q0")]
-        )
-        assert m["Q0"] == m["Q4"] == m["Q9"] == "Q0"
-
-    def test_isolated_new_entity_is_singleton(self, spark):
-        m = self._batch_equals_incremental(
-            spark, self.OLD, [("initech", "Q99")]
-        )
-        assert m["Q99"] == "Q99"
-        assert m["Q7"] == "Q7"
-
-    def test_chained_merge_through_new_entity(self, spark):
-        # one new entity with two surfaces merges three components at once
-        m = self._batch_equals_incremental(
-            spark,
-            self.OLD,
-            [("paris", "Q5"), ("berlin", "Q5"), ("acme", "Q5")],
-        )
-        assert m["Q1"] == m["Q4"] == m["Q5"] == m["Q7"] == m["Q9"] == "Q1"
-
-    def test_repeated_append_idempotent(self, spark):
-        from xwikire_spark.pipeline.canonicalize import (
-            canonical_entity_map,
-            incremental_canonical_map,
-        )
-
-        old_dict = self._df(spark, self.OLD)
-        delta = [("bridge", "Q1"), ("bridge", "Q2")]
-        new_df = self._df(spark, delta)
-        base = canonical_entity_map(old_dict)
-        once = incremental_canonical_map(base, old_dict, new_df)
-        # re-delivering the same batch against the updated map + updated
-        # dict changes nothing (streaming retry semantics)
-        twice = incremental_canonical_map(
-            once, old_dict.unionByName(new_df), new_df
-        )
-        assert sorted(map(tuple, once.collect())) == sorted(
-            map(tuple, twice.collect())
-        )
-
-    def test_monotone_fanout_guard(self, spark):
-        """A surface crossing max_bucket in the append contributes no NEW
-        edges (its delta rows are dropped by the combined-count guard) but
-        previously-merged components stay merged — the documented
-        monotone divergence from the batch guard; the batch recompute is
-        the rewrite path that re-applies it globally."""
-        from xwikire_spark.pipeline.canonicalize import (
-            canonical_entity_map,
-            incremental_canonical_map,
-        )
-
-        old_dict = self._df(spark, self.OLD)
-        base = canonical_entity_map(old_dict)
-        # push "paris" past the guard: combined fanout 2 + 2 > 3
-        delta = [("paris", "Q50"), ("paris", "Q51")]
-        inc = incremental_canonical_map(
-            base, old_dict, self._df(spark, delta), max_bucket=3
-        )
-        m = dict(sorted(map(tuple, inc.collect())))
-        assert m["Q4"] == m["Q9"] == "Q4"  # old merge persists
-        # the hot surface's new rows join as singletons, not via paris
-        assert m["Q50"] == "Q50" and m["Q51"] == "Q51"
-
-    def test_map_side_is_broadcast_only(self, spark, tmp_path):
-        """The full-map rewrite must never shuffle the map: every join
-        that touches the persisted table is a BroadcastHashJoin (semi
-        probe + relabel), so the update is one scan at corpus scale."""
-        from xwikire_spark.pipeline.canonicalize import (
-            canonical_entity_map,
-            incremental_canonical_map,
-        )
-
-        old_dict = self._df(spark, self.OLD)
-        path = str(tmp_path / "canonical_map")
-        canonical_entity_map(old_dict).write.parquet(path)
-        base = spark.read.parquet(path)
-        inc = incremental_canonical_map(
-            base, old_dict, self._df(spark, [("paris", "Q0")])
-        )
-        plan = inc._jdf.queryExecution().executedPlan().toString()
-        # the map's FileScan feeds BroadcastHashJoins only — no Exchange
-        # directly above a scan of the persisted map
-        for line in plan.splitlines():
-            if "Exchange hashpartitioning(canonical_id" in line \
-                    or "Exchange hashpartitioning(entity_id" in line \
-                    or "Exchange hashpartitioning(_id" in line:
-                raise AssertionError(
-                    f"persisted map shuffled:\n{line}\n\n{plan}"
-                )
-        assert "BroadcastHashJoin" in plan
 
 
-class TestStreamingCanonicalization:
-    """streaming/canonical.py: the persisted base+remap+newids overlay.
-    Gate: after every availableNow drop, read_canonical_map equals the
-    batch canonical_entity_map over all rows so far — including remap
-    CHAINS (a component merged in batch 1 whose target merges again in
-    batch 3 must chase to the final label)."""
-
-    BATCHES = [
-        # batch 0: two components ({Q4,Q9} via paris) + singletons
-        [("paris", "Q4"), ("paris", "Q9"),
-         ("acme", "Q1"), ("globex", "Q2")],
-        # batch 1: Q2 joins the paris component -> canonical drops to Q2
-        [("paris", "Q2")],
-        # batch 2: Q0 joins it -> canonical drops again (remap chain
-        # Q4 -> Q2 -> Q0 must compose), plus an unrelated new singleton
-        [("paris", "Q0"), ("initech", "Q77")],
-    ]
-
-    def _alias_df(self, spark, rows):
-        import pandas as pd
-
-        return spark.createDataFrame(
-            pd.DataFrame(rows, columns=["alias", "entity_id"])
-        )
-
-    def test_streaming_end_to_end_matches_batch(self, spark, tmp_path):
-        import os
-
-        from xwikire_spark.pipeline.canonicalize import canonical_entity_map
-        from xwikire_spark.streaming.canonical import (
-            read_canonical_map,
-            run_incremental_canonicalization,
-        )
-
-        input_dir = str(tmp_path / "alias_in")
-        map_dir = str(tmp_path / "map")
-        ckpt = str(tmp_path / "ckpt")
-        os.makedirs(input_dir, exist_ok=True)
-        seen = []
-        for batch in self.BATCHES:
-            self._alias_df(spark, batch).coalesce(1).write.mode(
-                "append"
-            ).parquet(input_dir)
-            seen.extend(batch)
-            run_incremental_canonicalization(
-                spark, input_dir, map_dir, ckpt
-            ).awaitTermination(120)
-            got = sorted(
-                map(tuple, read_canonical_map(spark, map_dir).collect())
-            )
-            want = sorted(map(
-                tuple,
-                canonical_entity_map(self._alias_df(spark, seen)).collect(),
-            ))
-            assert got == want, f"after {len(seen)} rows"
-        m = dict(got)
-        assert m["Q4"] == m["Q9"] == m["Q2"] == m["Q0"] == "Q0"
-        assert m["Q77"] == "Q77"
-        # the remap chained: historical label Q4 resolves to Q0
-        remap = {
-            r["id"]: r["component"]
-            for r in spark.read.parquet(map_dir + "/remap").collect()
-        }
-        assert remap.get("Q4") == "Q0" and remap.get("Q2") == "Q0"
-
-    def test_retry_idempotent(self, spark, tmp_path):
-        """Re-applying a batch (availableNow retry after a crash between
-        the newids write and the checkpoint commit) must not change the
-        resolved map."""
-        from xwikire_spark.streaming.canonical import (
-            apply_alias_batch,
-            read_canonical_map,
-        )
-
-        map_dir = str(tmp_path / "map")
-        d0 = self._alias_df(spark, self.BATCHES[0])
-        apply_alias_batch(spark, map_dir, d0, d0, batch_id=0)
-        d1 = self._alias_df(spark, self.BATCHES[1])
-        dict_all = d0.unionByName(d1)
-        apply_alias_batch(spark, map_dir, dict_all, d1, batch_id=1)
-        before = sorted(
-            map(tuple, read_canonical_map(spark, map_dir).collect())
-        )
-        apply_alias_batch(spark, map_dir, dict_all, d1, batch_id=1)
-        after = sorted(
-            map(tuple, read_canonical_map(spark, map_dir).collect())
-        )
-        assert before == after
-        assert dict(before)["Q4"] == "Q2"
-
-    def test_compaction_preserves_view(self, spark, tmp_path):
-        import os
-
-        from xwikire_spark.streaming.canonical import (
-            apply_alias_batch,
-            compact_canonical_map,
-            read_canonical_map,
-        )
-
-        map_dir = str(tmp_path / "map")
-        d0 = self._alias_df(spark, self.BATCHES[0])
-        apply_alias_batch(spark, map_dir, d0, d0, batch_id=0)
-        d1 = self._alias_df(spark, self.BATCHES[1])
-        apply_alias_batch(
-            spark, map_dir, d0.unionByName(d1), d1, batch_id=1
-        )
-        before = sorted(
-            map(tuple, read_canonical_map(spark, map_dir).collect())
-        )
-        st = compact_canonical_map(spark, map_dir)
-        assert st["rows"] == len(before)
-        assert not os.path.exists(map_dir + "/remap")
-        assert not os.path.exists(map_dir + "/newids")
-        after = sorted(
-            map(tuple, read_canonical_map(spark, map_dir).collect())
-        )
-        assert before == after
-        # the overlay keeps composing cleanly after a compaction
-        d2 = self._alias_df(spark, self.BATCHES[2])
-        apply_alias_batch(
-            spark, map_dir,
-            d0.unionByName(d1).unionByName(d2), d2, batch_id=2,
-        )
-        m = dict(sorted(
-            map(tuple, read_canonical_map(spark, map_dir).collect())
-        ))
-        assert m["Q4"] == m["Q2"] == "Q0" and m["Q77"] == "Q77"
-
-    def test_auto_compaction_fires_at_threshold(self, spark, tmp_path):
-        """VERDICT r5 #3 done-gate: with compact_threshold=0 every batch
-        that grows the remap folds the overlays into base/ immediately —
-        remap/ and newids/ are gone after the batch, the composed view is
-        unchanged, and the next batch still merges correctly (so the
-        threshold keeps the per-batch compose input broadcast-small by
-        construction: it can never exceed one batch's delta + threshold)."""
-        import os
-
-        from xwikire_spark.pipeline.canonicalize import canonical_entity_map
-        from xwikire_spark.streaming.canonical import (
-            apply_alias_batch,
-            read_canonical_map,
-        )
-
-        map_dir = str(tmp_path / "map")
-        seen: list[tuple[str, str]] = []
-        dfs = []
-        for i, batch in enumerate(self.BATCHES):
-            seen.extend(batch)
-            dfs.append(self._alias_df(spark, batch))
-            dict_all = dfs[0]
-            for d in dfs[1:]:
-                dict_all = dict_all.unionByName(d)
-            st = apply_alias_batch(
-                spark, map_dir, dict_all, dfs[-1], batch_id=i,
-                compact_threshold=0,
-            )
-            if st["remap_size"] > 0:
-                assert not os.path.exists(map_dir + "/remap"), i
-                assert not os.path.exists(map_dir + "/newids"), i
-            got = sorted(
-                map(tuple, read_canonical_map(spark, map_dir).collect())
-            )
-            want = sorted(map(
-                tuple,
-                canonical_entity_map(
-                    self._alias_df(spark, seen)
-                ).collect(),
-            ))
-            assert got == want, f"after batch {i}"
 
 
-class TestIncrementalCanonicalizationE2E:
-    """Extraction wired to the incrementally-maintained map end-to-end:
-    after each of 3 alias-dict drops, ``extract_triples`` →
-    ``canonicalize_triples(entity_map=read_canonical_map(...))`` must
-    emit EXACTLY the triples of the batch pipeline (map recomputed from
-    scratch over all drops). The earlier gates stopped at map equality;
-    this extends them to the emitted triple set, including a collision
-    that only merges across drops (Paris→Q4 in drop 0, Paris→Q9 in
-    drop 2)."""
-
-    def _drops(self):
-        rows = datagen.alias_rows()
-        groups = [
-            {"Q1", "Q2", "Q3", "Q4", "Q10"},
-            {"Q5", "Q6", "Q7"},
-            {"Q8", "Q9"},
-        ]
-        drops = [
-            [r for r in rows if r["entity_id"] in g] for g in groups
-        ]
-        assert sum(map(len, drops)) == len(rows)
-        return drops
-
-    def test_triples_match_batch_after_each_drop(
-        self, spark, corpus, tmp_path
-    ):
-        import os
-
-        from xwikire_spark.streaming.canonical import (
-            read_canonical_map,
-            run_incremental_canonicalization,
-        )
-
-        _, _, transcripts, _, pred_df = corpus
-        input_dir = str(tmp_path / "alias_in")
-        map_dir = str(tmp_path / "map")
-        ckpt = str(tmp_path / "ckpt")
-        os.makedirs(input_dir)
-        key = ["conv_id", "subj", "pred", "obj", "turn_idx", "sent_idx",
-               "id"]
-        seen: list[dict] = []
-        for drop in self._drops():
-            spark.createDataFrame(pd.DataFrame(drop)).select(
-                "alias", "entity_id"
-            ).coalesce(1).write.mode("append").parquet(input_dir)
-            seen.extend(drop)
-            run_incremental_canonicalization(
-                spark, input_dir, map_dir, ckpt
-            ).awaitTermination(120)
-            alias_so_far = spark.createDataFrame(pd.DataFrame(seen))
-            t = extract_triples(transcripts, alias_so_far, pred_df)
-            inc = canonicalize_triples(
-                t, None, entity_map=read_canonical_map(spark, map_dir)
-            )
-            bat = canonicalize_triples(t, alias_so_far)
-            got = {tuple(r[k] for k in key) for r in inc.collect()}
-            want = {tuple(r[k] for k in key) for r in bat.collect()}
-            assert got == want, f"after {len(seen)} alias rows"
-        # the cross-drop collision merged: Q9 resolved to Q4 in the
-        # incremental map and no emitted triple carries Q9
-        m = dict(map(tuple, read_canonical_map(spark, map_dir).collect()))
-        assert m["Q9"] == "Q4"
-        assert inc.where(
-            (F.col("subj") == "Q9") | (F.col("obj") == "Q9")
-        ).count() == 0
 
 
 class TestManifestZoneMaps:

@@ -1,12 +1,10 @@
 """Tests for the remaining pipeline stages: negatives (J5), QA assembly
-(J4/X6/X14), typed facts (MergedWikis), WikiReading locations, I/O formats,
-incremental streaming."""
+(J4/X6/X14), typed facts (MergedWikis), WikiReading locations, I/O formats."""
 
 import hashlib
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from xwikire_spark.pipeline.facts import build_facts, universal_schema_export
 from xwikire_spark.pipeline.negatives import generate_negatives
@@ -253,178 +251,3 @@ class TestIO:
         )
         rows = read_squad_json(spark, str(p)).collect()
         assert [(r.question, r.q_id) for r in rows] == [("Who?", "q-1")]
-
-
-class TestStreaming:
-    def test_available_now_incremental(self, spark, tmp_path):
-        from xwikire_spark import datagen
-        from xwikire_spark.streaming.incremental import run_available_now
-
-        rows, _ = datagen.generate_transcripts(n_convs=10, turns_per_conv=6)
-        # input_hint schema says int32; pandas gives int64 — cast to match
-        # the stream reader's declared TRANSCRIPT_SCHEMA
-        df = spark.createDataFrame(pd.DataFrame(rows)).withColumn(
-            "turn_idx", F.col("turn_idx").cast("int"))
-        al = spark.createDataFrame(pd.DataFrame(datagen.alias_rows()))
-        pr = spark.createDataFrame(pd.DataFrame(datagen.predicate_rows()))
-
-        inp = str(tmp_path / "in")
-        out = str(tmp_path / "out")
-        ck = str(tmp_path / "ck")
-        df.where(F.col("conv_id") < "conv-00005").write.parquet(
-            inp, mode="append")
-        q = run_available_now(spark, inp, out, ck, al, pr)
-        q.awaitTermination(120)
-        n1 = spark.read.parquet(out).count()
-        assert n1 > 0
-
-        # new files arrive; second run processes ONLY them
-        df.where(F.col("conv_id") >= "conv-00005").write.parquet(
-            inp, mode="append")
-        q = run_available_now(spark, inp, out, ck, al, pr)
-        q.awaitTermination(120)
-        got = spark.read.parquet(out)
-        n2 = got.count()
-        assert n2 > n1
-        # no duplicate processing: every (conv, triple) appears once
-        assert got.groupBy("id", "conv_id", "turn_idx", "sent_idx").count() \
-            .where(F.col("count") > 1).count() == 0
-
-
-    def test_watermarked_windowed_counts_append_mode(self, spark, tmp_path):
-        """streaming/windowed.py: tumbling-window counts with a watermark
-        in APPEND mode. Pins the REAL (measured) Spark semantics:
-
-        - a window is emitted exactly once, at the end of the first
-          batch whose watermark passes its end;
-        - a late row is dropped iff its window was already evicted in a
-          PRIOR batch (predicate: window end <= wm, one-batch lag) —
-          NOT merely because its event time trails the watermark: a
-          late row whose window is still in state merges.
-
-        One availableNow run, maxFilesPerTrigger=1, file mtimes forced
-        increasing -> deterministic batches: wm(batch N) derives from
-        data through batch N-1; eviction at end of batch N uses
-        wm(batch N)."""
-        import datetime as dt
-        import os
-        import time as _time
-
-        from xwikire_spark.streaming.windowed import (
-            run_windowed_counts,
-            windowed_turn_counts,
-        )
-
-        (tmp_path / "win_in").mkdir()
-        inp, out, ck = (str(tmp_path / d) for d in
-                        ("win_in", "win_out", "win_ck"))
-
-        def drop(name, ts_list, order):
-            p = str(tmp_path / "win_in" / f"{name}.parquet")
-            pd.DataFrame({
-                "conv_id": ["c1"] * len(ts_list),
-                "ts": [dt.datetime(2026, 1, 1, h, m) for h, m in ts_list],
-            }).to_parquet(
-                # pandas defaults to ns timestamps, which Spark's µs
-                # TIMESTAMP reader rejects outright
-                p, coerce_timestamps="us",
-            )
-            # the file source processes oldest-mtime first: pin the order
-            t = _time.time() + order * 10
-            os.utime(p, (t, t))
-
-        # batch 0 (wm 0): W0=[9,10) x2, W1=[10,11) x2, W2=[11,12) x1
-        drop("a", [(9, 10), (9, 20), (10, 10), (10, 20), (11, 10)], 0)
-        # batch 1 (wm 10:39): 11:20 merges W2; 12:29 opens W3; end of
-        # batch evicts W0 -> emitted n=2
-        drop("b", [(11, 20), (12, 29)], 1)
-        # batch 2 (wm 11:58): 9:30 targets the ALREADY-EVICTED W0 ->
-        # DROPPED; 10:30 trails the wm but W1 is still in state ->
-        # MERGES (n=3); 14:00 advances wm; end of batch evicts W1
-        drop("c", [(9, 30), (10, 30), (14, 0)], 2)
-        # batch 3 (no-data, wm 13:29): evicts W2 (n=2) and W3 (n=1)
-
-        stream = (spark.readStream
-                  .schema("conv_id string, ts timestamp")
-                  .option("maxFilesPerTrigger", 1).parquet(inp))
-        q = run_windowed_counts(stream, out, ck, window="1 hour",
-                                delay="31 minutes")
-        q.awaitTermination(120)
-
-        got = {(r["window_start"].hour, r["n_turns"])
-               for r in spark.read.parquet(out).collect()}
-        # W0 = 2: the finalized-window late row was dropped
-        # W1 = 3: the open-window late row merged
-        # W4 (14:00) still open -> absent; nothing emitted twice
-        assert got == {(9, 2), (10, 3), (11, 2), (12, 1)}
-        assert spark.read.parquet(out).count() == 4
-        # the drop is visible in the state-operator metrics
-        dropped = sum(
-            (p["stateOperators"][0].get("numRowsDroppedByWatermark") or 0)
-            for p in q.recentProgress if p["stateOperators"]
-        )
-        assert dropped == 1
-
-        # batch parity of the aggregate itself (no watermark in batch
-        # mode): W0 counts its late row too
-        batch = windowed_turn_counts(
-            spark.read.schema("conv_id string, ts timestamp").parquet(inp))
-        bgot = {(r["window_start"].hour, r["n_turns"])
-                for r in batch.collect()}
-        assert bgot == {(9, 3), (10, 3), (11, 2), (12, 1), (14, 1)}
-
-    def test_stateful_sessionize_stream(self, spark, tmp_path):
-        """applyInPandasWithState gap sessionization: a session row is
-        emitted exactly once, when the event-time watermark passes its
-        last event + gap."""
-        import datetime as dt
-
-        from xwikire_spark.streaming.sessionize import sessionize_stream
-
-        t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-
-        def mk(rows):
-            return pd.DataFrame(
-                {"user_id": [r[0] for r in rows],
-                 "ts": [t0 + dt.timedelta(minutes=r[1]) for r in rows]}
-            )
-
-        inp = str(tmp_path / "ev_in")
-        # file 1: user 1 has two events 10 min apart (one session);
-        # user 2 one event (coalesce(1): one FILE = one micro-batch)
-        spark.createDataFrame(mk([(1, 0), (1, 10), (2, 0)])).coalesce(
-            1).write.parquet(inp, mode="append")
-        # file 2: much later events — advances the watermark in batch 2
-        spark.createDataFrame(mk([(1, 180), (2, 185)])).coalesce(
-            1).write.parquet(inp, mode="append")
-        # file 3: even later — batch 3's watermark closes file-1 sessions
-        spark.createDataFrame(mk([(3, 360)])).coalesce(1).write.parquet(
-            inp, mode="append")
-
-        stream = (
-            spark.readStream.schema("user_id bigint, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(inp)
-        )
-        sessions = sessionize_stream(stream, gap_seconds=1800,
-                                     watermark="30 minutes")
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName("sess_test")
-            .outputMode("append")
-            .option(
-                "checkpointLocation", str(tmp_path / "sess_ck")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        got = {
-            (r.user_id, r.session_seq): (r.n_events,
-                                         r.session_end_epoch
-                                         - r.session_start_epoch)
-            for r in spark.sql("SELECT * FROM sess_test").collect()
-        }
-        # the two file-1 sessions must have closed, exactly once each
-        assert got[(1, 1)] == (2, 600)  # 2 events, 10-minute span
-        assert got[(2, 1)] == (1, 0)

@@ -20,7 +20,6 @@ Package layout:
     operators/  analytics & training-data ops (dedup, similarity, splits,
                 vocab, text stats)
     sources/    readers/writers for the formats the reference consumes/emits
-    streaming/  incremental (available-now) processing with resume
 """
 
 __version__ = "0.1.0"

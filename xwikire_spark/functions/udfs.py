@@ -30,7 +30,6 @@ from pyspark.sql.types import (
 from xwikire_spark.kernels.dates import format_date
 from xwikire_spark.kernels.segmenter import segment_sentences
 from xwikire_spark.kernels.templates import fill_template
-from xwikire_spark.kernels.articles import extract_article
 from xwikire_spark.kernels.textfix import fix_text
 from xwikire_spark.kernels.tokenizer import tokenize_with_breaks
 
@@ -292,16 +291,3 @@ def make_fill_template_udf(lang: str = "en"):
         )
 
     return template_udf
-
-
-def make_extract_article_udf(lang: str = "en"):
-    @F.pandas_udf(StringType())
-    def article_udf(text: pd.Series, entity: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                extract_article(t or "", e or "", lang=lang)
-                for t, e in zip(text, entity)
-            ]
-        )
-
-    return article_udf

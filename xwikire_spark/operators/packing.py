@@ -112,7 +112,7 @@ def pack_sequences_incremental(
     the carried total — pack_id/offset come out IDENTICAL to re-packing
     the whole corpus (the equality gate in tests), at O(batch) cost.
 
-    Crash ordering mirrors the other incremental tiers (output -> state):
+    Crash ordering is output -> state:
     the output lands under ``state_dir/packed/`` partitioned by batch_id
     with dynamic overwrite, so a retry after a crash-between-writes
     recomputes from the UNCHANGED state and overwrites its own partition

@@ -58,18 +58,6 @@ def quality_score_cols(text_col: str = "text") -> list:
     ]
 
 
-def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Whitespace + BPE-ish token counts per document (JVM regex)."""
-    return docs.select("doc_id", *token_count_cols(text_col))
-
-
-def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Heuristic quality features: length, distinct-token ratio, stopword
-    ratio, mean word length, punctuation ratio. Deterministic, rounded for
-    cross-engine comparison."""
-    return docs.select("doc_id", *quality_score_cols(text_col))
-
-
 def fingerprint_col(text_col: str = "text", k: int = 3):
     """min-md5-shingle fingerprint as a named Column."""
     from xwikire_spark.operators.dedup import _shingles
@@ -176,16 +164,6 @@ def document_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
         fingerprint_col(text_col),
         repetition_col(text_col),
     )
-
-
-def fingerprint_min_shingle(
-    docs: DataFrame, text_col: str = "text", k: int = 3
-) -> DataFrame:
-    """Winnowing-lite fingerprint: min md5 over k-word shingles — a stable
-    content fingerprint robust to suffix edits. SQL-expressible (oracle in
-    __spark_entry__). Shingles come from the zip_with construction in
-    operators.dedup (the per-index element_at shape is O(words²))."""
-    return docs.select("doc_id", fingerprint_col(text_col, k))
 
 
 # --- language id: character-n-gram profiles, vectorized pandas UDF --------

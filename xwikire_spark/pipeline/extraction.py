@@ -108,29 +108,6 @@ def detect_mentions(sentences: DataFrame, alias_dict: DataFrame) -> DataFrame:
     )
 
 
-def detect_predicates(sentences: DataFrame, predicate_dict: DataFrame) -> DataFrame:
-    """Attach predicate-surface matches (label + aliases,
-    src/builders/SRL.py:36-39). Output: one row per predicate hit with
-    pid, p_surface, p_start."""
-    udf = make_mention_udf(
-        _bc(sentences, _predicate_surface_ids(predicate_dict))
-    )
-    return (
-        sentences.withColumn("pm", udf(F.col("sentence")))
-        .where(F.size("pm") > 0)
-        .select(
-            "conv_id", "turn_idx", "sent_idx",
-            F.explode("pm").alias("p"),
-        )
-        .select(
-            "conv_id", "turn_idx", "sent_idx",
-            F.col("p.surface").alias("p_surface"),
-            F.col("p.matched_id").alias("pid"),
-            F.col("p.start").alias("p_start"),
-        )
-    )
-
-
 CANDIDATE_SCHEMA = (
     "conv_id string, turn_idx int, sent_idx int, sentence string, "
     "subj string, subj_surface string, pid string, p_surface string, "

@@ -9,13 +9,16 @@ redid everything. Here:
   so re-runs see the same partition ids (the reference's id-sorted chunking,
   src/utils/utils.py:36-47, made deterministic);
 - outputs land under ``out/part_bucket=<k>/``; a manifest row
-  (bucket, convs_in, rows_in, triples_out, input_hash) is appended after
-  each bucket's files commit;
-- resume = anti-join the input's buckets against the manifest's buckets
-  (J8) and process only the remainder — idempotent because bucket contents
-  are a pure function of conv_id;
+  (bucket, convs_in, rows_in, triples_out, input_hash, wall_ms, run_seq)
+  is appended after each bucket's files commit;
+- resume = anti-join the input's buckets against the manifest's LATEST row
+  per bucket (J8) and process only the remainder — idempotent because
+  bucket contents are a pure function of conv_id;
 - ``input_hash`` (order-insensitive sum of per-row hashes) detects silent
-  input drift: a bucket whose hash changed is reprocessed.
+  input drift: a bucket whose hash differs from its latest row is
+  reprocessed. ``run_seq`` (one more than the manifest's largest) orders
+  the rows, so an input that returns to an earlier state (A -> B -> A)
+  does not match A's superseded row.
 
 At 10^12 turns: buckets are the unit of retry/backfill; choose n_buckets so
 one bucket ≈ one executor-hour. Quality counters ride on ``observe()``.
@@ -33,7 +36,7 @@ from xwikire_spark.sources.io import path_exists
 
 MANIFEST_SCHEMA = (
     "bucket BIGINT, convs_in BIGINT, rows_in BIGINT, triples_out BIGINT, "
-    "input_hash BIGINT, wall_ms BIGINT"
+    "input_hash BIGINT, wall_ms BIGINT, run_seq BIGINT"
 )
 
 
@@ -75,16 +78,30 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
 def pending_buckets(
     spark: SparkSession, transcripts: DataFrame, out_dir: str, n_buckets: int
 ) -> list[int]:
-    """Buckets not yet present in the manifest (or whose input changed) —
-    the resume anti-join (J8 / src/scripts/extract_unprocessed.py:20-45)."""
+    """Buckets not yet present in the manifest (or whose input changed
+    since the bucket's latest row) — the resume anti-join
+    (J8 / src/scripts/extract_unprocessed.py:20-45)."""
     fp = bucket_fingerprints(transcripts, n_buckets)
-    done = read_manifest(spark, out_dir).select(
-        F.col("bucket").alias("part_bucket"), "input_hash"
+    # rows written before run_seq existed read it as NULL: they rank oldest
+    done = (
+        read_manifest(spark, out_dir)
+        .groupBy(F.col("bucket").alias("part_bucket"))
+        .agg(F.max_by("input_hash", F.coalesce("run_seq", F.lit(0)))
+             .alias("input_hash"))
     )
     pending = fp.join(
         done, ["part_bucket", "input_hash"], "left_anti"
     ).select("part_bucket")
     return sorted(r[0] for r in pending.collect())
+
+
+def _next_run_seq(spark: SparkSession, out_dir: str) -> int:
+    """One more than the manifest's largest ``run_seq``; 1 on a first run,
+    which this answers without a Spark job."""
+    if not path_exists(spark, _manifest_path(out_dir)):
+        return 1
+    last = read_manifest(spark, out_dir).agg(F.max("run_seq")).first()[0]
+    return (last or 0) + 1
 
 
 def run_with_manifests(
@@ -130,6 +147,7 @@ def run_with_manifests(
     if todo:
         from pyspark.sql import Observation
 
+        run_seq = _next_run_seq(spark, out_dir)
         t0 = time.time()
         subset = bucketed.where(F.col("part_bucket").isin(todo))
         triples = build_fn(subset.drop("part_bucket"))
@@ -207,6 +225,7 @@ def run_with_manifests(
                 F.coalesce("triples_out", F.lit(0)).alias("triples_out"),
                 "input_hash",
                 F.lit(wall_ms).alias("wall_ms"),
+                F.lit(run_seq).cast("bigint").alias("run_seq"),
             )
         )
         manifest_rows.write.mode("append").parquet(_manifest_path(out_dir))

@@ -1,9 +1,9 @@
 """Small-file compaction for partitioned parquet output tables.
 
 Why this exists (north_star: "materialized as partitioned edge/vertex
-Iceberg tables with per-partition lineage manifests"): every incremental
-resume (`pipeline.manifests.run_with_manifests`) and every streaming
-micro-batch appends a few files per ``part_bucket=<k>`` directory. At
+Iceberg tables with per-partition lineage manifests"): every resume batch
+of `pipeline.manifests.run_with_manifests` rewrites the pending buckets,
+and every write leaves a few files per ``part_bucket=<k>`` directory. At
 10^12 turns the table ends up with millions of kilobyte-files and every
 downstream scan pays one open/footer-parse per file — the classic
 small-file problem. Compaction rewrites each partition's files into
