@@ -118,6 +118,22 @@ class TestExtraction:
         assert "RLIKE" in plan_on.upper()
         assert "RLIKE" not in plan_off.upper()
 
+    def test_dictionary_pattern_order_is_fixed(self):
+        """Equal-length surfaces are ordered by the surface, not by set
+        iteration order, so the Python regex and the prefilter's rlike
+        literal (and the plan text embedding it) do not depend on the
+        process's hash seed. Checked against a literal: 8 surfaces have
+        8! orders, and the literal is the sorted one."""
+        from xwikire_spark.functions.udfs import _compile_dictionary
+        from xwikire_spark.pipeline.extraction import _java_dict_pattern
+
+        pairs = [(s, f"Q{i}") for i, s in enumerate(
+            ["Paris", "Lima", "Oslo", "Kyiv", "Bern", "Riga", "Sofia",
+             "Minsk"])]
+        body = "Minsk|Paris|Sofia|Bern|Kyiv|Lima|Oslo|Riga"
+        assert _java_dict_pattern(pairs) == rf"(?U)\b(?:{body})\b"
+        assert _compile_dictionary(pairs)[0].pattern == rf"\b(?:{body})\b"
+
     def test_join_strategy_matches_broadcast(self, spark, corpus):
         """The join-based dictionary path (no broadcast, dictionaries stay
         distributed) must reproduce the fused-automaton path exactly —
@@ -756,43 +772,3 @@ def test_pagerank_vertices_count_toward_the_bound(spark, monkeypatch):
         assert set(got) == set(want)
         for k in want:
             assert abs(got[k] - want[k]) < 1e-9, (bound, k)
-
-
-
-
-
-
-
-
-class TestManifestZoneMaps:
-    def test_manifest_run_refreshes_zone_maps(self, spark, tmp_path, corpus):
-        """run_with_manifests(zone_map_cols=...) leaves a queryable
-        _zonemaps table beside the triples and pruned_read over conv_id
-        matches the full-scan filter exactly."""
-        from xwikire_spark.pipeline.manifests import run_with_manifests
-        from xwikire_spark.sources import zonemaps as zm
-
-        _, _, transcripts, alias_df, pred_df = corpus
-        out = str(tmp_path / "kg")
-
-        def build(t):
-            return extract_triples(t, alias_df, pred_df)
-
-        full = run_with_manifests(
-            spark, transcripts, build, out, n_buckets=4,
-            zone_map_cols=["conv_id"],
-        )
-        troot = out + "/triples"
-        lo, hi = "conv-00005", "conv-00020"
-        got, stats = zm.pruned_read(spark, troot, {"conv_id": (lo, hi)})
-        want = full.where(F.col("conv_id").between(lo, hi))
-        assert stats["unmapped"] == 0
-        assert sorted(map(tuple, got.select(*want.columns).collect())) \
-            == sorted(map(tuple, want.collect()))
-        # resume path: a second run adds no buckets and keeps the map
-        run_with_manifests(
-            spark, transcripts, build, out, n_buckets=4,
-            zone_map_cols=["conv_id"],
-        )
-        _, stats2 = zm.pruned_read(spark, troot, {"conv_id": (lo, hi)})
-        assert stats2["unmapped"] == 0

@@ -17,15 +17,3 @@ def triple_id(subj: Column | str, pred: Column | str, obj: Column | str) -> Colu
     """sha1("<subj> <pred> <obj>") — the universal-schema triple id
     (src/universal_schema.py:12-14)."""
     return F.sha1(F.concat_ws(" ", subj, pred, obj))
-
-
-def content_id(text: Column | str) -> Column:
-    """sha1(text) — sentence/document surrogate id
-    (src/builders/builder.py:55-57)."""
-    return F.sha1(F.col(text) if isinstance(text, str) else text)
-
-
-def triple_id_md5(subj: Column | str, pred: Column | str, obj: Column | str) -> Column:
-    """md5 variant used only where a DuckDB oracle must recompute the id
-    (DuckDB 1.0 ships md5 but not sha1)."""
-    return F.md5(F.concat_ws(" ", subj, pred, obj))

@@ -91,12 +91,20 @@ MENTIONS_SCHEMA = ArrayType(
 )
 
 
+def longest_first_surfaces(pairs: list[tuple[str, str]]) -> list[str]:
+    """Distinct non-empty surfaces of (surface, id) pairs, longest first
+    so a regex alternation over them is leftmost-longest. Ties break by
+    the surface itself: the pattern text (and any plan embedding it) is
+    then the same in every process, whatever the hash seed."""
+    return sorted({s for s, _ in pairs if s}, key=lambda s: (-len(s), s))
+
+
 def _compile_dictionary(surfaces: list[tuple[str, str]]):
     """Build (regex, surface -> [ids]) from (surface, id) pairs. Longest
     surface first so alternation is leftmost-longest. Case-sensitive like
     the reference's matching (src/builders/QA.py:78-81). A surface mapping
     to several ids (alias collision) emits one mention per id."""
-    by_len = sorted({s for s, _ in surfaces if s}, key=len, reverse=True)
+    by_len = longest_first_surfaces(surfaces)
     if not by_len:
         return None, {}
     pattern = re.compile(

@@ -1,8 +1,8 @@
 """GIF87a/89a decoder (pure stdlib) + a minimal encoder for test vectors.
 
-Extends the dependency-free real-decode family (imagecodec/jpegcodec/
-wavcodec): GIF is the remaining common still-image format in scraped web
-corpora. Scope:
+Extends the dependency-free real-decode family (imagecodec/wavcodec):
+GIF is the remaining common still-image format in scraped web corpora.
+Scope:
 
 - decode: full LZW (growing codes to 12 bits, CLEAR/EOI), global and
   local color tables, interlaced and non-interlaced, extensions skipped

@@ -1,16 +1,12 @@
 """Dependency-free image codecs: PNG (zlib DEFLATE, filters 0-4), binary
-PPM, baseline + progressive JPEG (via ``kernels/jpegcodec.py`` — stdlib
-parsing + numpy DCT), and GIF87a/89a (via ``kernels/gifcodec.py`` — full
-LZW, interlace).
+PPM, and GIF87a/89a (via ``kernels/gifcodec.py`` — full LZW, interlace).
 
 Closes the round-2 "image decode honestly stubbed" gap for the formats
 decodable without PIL/libvips: PNG is zlib + per-scanline filters, PPM a
-header + raw bytes, baseline and progressive (SOF2) JPEG are implemented
-outright in jpegcodec,
-and GIF in gifcodec. The remaining stubs are WebP and inter-frame video codecs
-(H.264/VP9) — those raise NotImplementedError (swap in libvips/ffmpeg in
-production; the Spark-side plumbing is format-agnostic). MJPEG-in-MP4
-frame extraction is real via kernels/mp4codec.py + decode_jpeg.
+header + raw bytes, and GIF is implemented outright in gifcodec. Every
+other format (JPEG, WebP, video frames) raises NotImplementedError (swap
+in libvips/ffmpeg in production; the Spark-side plumbing is
+format-agnostic).
 
 Scope (deliberately small, fully tested): 8-bit depth; PNG color types
 0 (gray), 2 (RGB), 3 (palette via PLTE, opaque or tRNS-alpha), 4
@@ -30,13 +26,11 @@ _CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
 
 
 def sniff_format(payload: bytes) -> str | None:
-    """'png' | 'ppm' | 'jpeg' | 'gif' | None for anything else."""
+    """'png' | 'ppm' | 'gif' | None for anything else."""
     if payload.startswith(_PNG_SIG):
         return "png"
     if payload.startswith(b"P6"):
         return "ppm"
-    if payload.startswith(b"\xff\xd8\xff"):
-        return "jpeg"
     if payload[:6] in (b"GIF87a", b"GIF89a"):
         return "gif"
     return None
@@ -331,17 +325,13 @@ def decode_image(payload: bytes) -> tuple[int, int, int, bytearray]:
         return decode_png(payload)
     if fmt == "ppm":
         return decode_ppm(payload)
-    if fmt == "jpeg":
-        from xwikire_spark.kernels.jpegcodec import decode_jpeg
-
-        return decode_jpeg(payload)
     if fmt == "gif":
         from xwikire_spark.kernels.gifcodec import decode_gif
 
         return decode_gif(payload)
     raise NotImplementedError(
-        "only PNG/PPM/baseline-JPEG/GIF decode in-container; other codecs "
-        "(WebP/video frames) need PIL/libvips in production"
+        "only PNG/PPM/GIF decode in-container; other codecs "
+        "(JPEG/WebP/video frames) need PIL/libvips in production"
     )
 
 
@@ -352,17 +342,12 @@ def encode_image(
     channels: int,
     pixels: bytes | bytearray,
 ) -> bytes:
-    """Family-preserving re-encode: ppm stays ppm, jpeg stays jpeg
-    (baseline 4:4:4), gif stays gif (nearest-resized GIF pixels are a
-    palette subset, so <=256 colors is guaranteed; >256 falls back to
-    PNG), everything else becomes PNG (lossless container for any channel
-    count)."""
+    """Family-preserving re-encode: ppm stays ppm, gif stays gif
+    (nearest-resized GIF pixels are a palette subset, so <=256 colors is
+    guaranteed; >256 falls back to PNG), everything else becomes PNG
+    (lossless container for any channel count)."""
     if fmt == "ppm" and channels == 3:
         return encode_ppm(width, height, pixels)
-    if fmt == "jpeg" and channels in (1, 3):
-        from xwikire_spark.kernels.jpegcodec import encode_jpeg
-
-        return encode_jpeg(width, height, channels, pixels)
     if fmt == "gif" and channels == 3:
         from xwikire_spark.kernels.gifcodec import encode_gif
 

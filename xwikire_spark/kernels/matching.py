@@ -28,10 +28,6 @@ def _compiled(surface: str) -> re.Pattern:
     return re.compile(whole_word_pattern(surface))
 
 
-def contains_whole_word(surface: str, sentence: str) -> bool:
-    return bool(_compiled(surface).search(sentence))
-
-
 def distant_supervision(
     answer: str, entity: str, sentences: list[str]
 ) -> str | None:

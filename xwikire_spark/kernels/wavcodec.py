@@ -1,6 +1,6 @@
 """RIFF/WAVE codec (stdlib parsing + numpy): a real audio decode path,
 closing the "audio honestly stubbed" gap the same way
-imagecodec/jpegcodec closed images.
+imagecodec closed images.
 
 Scope (bounded, fully tested): integer PCM 8/16/24/32-bit, IEEE float32,
 G.711 mu-law (format 7) and A-law (format 6) — both bijective per code,

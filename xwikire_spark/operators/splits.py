@@ -226,15 +226,3 @@ def sequential_splits(
         .withColumn("split", expr)
         .drop("rank")
     )
-
-
-def duplicate_ids_across_splits(
-    splits: DataFrame, id_col: str = "id"
-) -> DataFrame:
-    """A6 (src/split_entity.py:141-167): ids present more than once across
-    split files — must be empty."""
-    return (
-        splits.groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > 1)
-    )

@@ -49,19 +49,6 @@ def _ranked_vocab(counts: DataFrame) -> DataFrame:
     ).drop("rank")
 
 
-def char_vocab(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Character-level variant (src/utils/vocabs.py:95-110)."""
-    counts = (
-        docs.select(
-            F.explode(F.split(F.col(text_col), "")).alias("token")
-        )
-        .where(F.col("token") != "")
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("count"))
-    )
-    return _ranked_vocab(counts)
-
-
 def oov_coverage(
     tokens: DataFrame, vocab: DataFrame, token_col: str = "token"
 ) -> DataFrame:

@@ -34,7 +34,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from xwikire_spark.functions.ids import triple_id
-from xwikire_spark.functions.udfs import make_mention_udf, segment_udf
+from xwikire_spark.functions.udfs import (
+    longest_first_surfaces,
+    make_mention_udf,
+    segment_udf,
+)
 
 
 def segment_turns(transcripts: DataFrame) -> DataFrame:
@@ -276,7 +280,7 @@ def _java_dict_pattern(pairs: list[tuple[str, str]]) -> str | None:
     """The Java twin of udfs._compile_dictionary's regex: same
     longest-first alternation (leftmost-longest with finditer-consumption
     semantics in both engines), (?U) so \\b is unicode-aware like Python."""
-    by_len = sorted({s for s, _ in pairs if s}, key=len, reverse=True)
+    by_len = longest_first_surfaces(pairs)
     if not by_len:
         return None
     return r"(?U)\b(?:" + "|".join(re.escape(s) for s in by_len) + r")\b"

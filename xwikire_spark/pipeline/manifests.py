@@ -110,7 +110,6 @@ def run_with_manifests(
     build_fn,
     out_dir: str,
     n_buckets: int = 16,
-    zone_map_cols: list[str] | None = None,
     table_format: str = "parquet",
 ) -> DataFrame:
     """Run ``build_fn(transcripts_subset) -> triples`` bucket-group-wise with
@@ -119,11 +118,6 @@ def run_with_manifests(
     Buckets are processed in a handful of *groups* (not one job per bucket —
     at 10^12 rows a per-bucket job would underutilize the cluster; a group
     is one job whose tasks span many buckets).
-
-    ``zone_map_cols``: when set, ``sources.zonemaps.refresh_zone_maps``
-    runs after the bucket write, statting ONLY the files this run added
-    (incremental) — so downstream range queries on those columns (e.g.
-    conv_id) can plan pruned file lists instead of full table scans.
 
     ``table_format``: ``"parquet"`` = partitioned directory + dynamic
     partition overwrite (reprocessing a bucket swaps its directory);
@@ -229,11 +223,6 @@ def run_with_manifests(
             )
         )
         manifest_rows.write.mode("append").parquet(_manifest_path(out_dir))
-
-        if zone_map_cols:
-            from xwikire_spark.sources.zonemaps import refresh_zone_maps
-
-            refresh_zone_maps(spark, triples_root, zone_map_cols)
 
     if snap:
         return snapmod.read_table(spark, triples_root)

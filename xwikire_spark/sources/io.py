@@ -3,8 +3,7 @@
 - JSONL exports (S7): the reference writes json.dumps(ensure_ascii=False)
   per line (src/builders/QA.py:133-167, src/universal_schema.py:24-56) —
   Spark's json sink is already newline-delimited UTF-8.
-- CSV/TSV dims (S8/S9): question templates, property lists, folds, vocab
-  (src/builders/QA.py:110-117, src/utils/vocabs.py:67-71).
+- CSV dims (S8): question templates (src/builders/QA.py:110-117).
 - CoNLL column sink (S10): token/tag pairs, blank line between sentences
   (src/scripts/srl2conll.py:9-37).
 - SQuAD-style nested JSON source (S11): data[].paragraphs[].qas[]
@@ -59,20 +58,6 @@ def read_templates_csv(
         )
         .distinct()
     )
-
-
-def read_property_list(spark: SparkSession, path: str) -> DataFrame:
-    """S8: tab-separated (pid, label) whitelist
-    (src/utils/utils.py:50-57, resources/levy_et_al_properties.txt)."""
-    return spark.read.csv(path, sep="\t", header=False).toDF(
-        "prop_id", "label"
-    )
-
-
-def write_tsv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S9: TSV sink (stats, id sets, vocab, folds —
-    src/scripts/stats.py:36-42, src/utils/vocabs.py:67-71)."""
-    df.write.mode(mode).csv(path, sep="\t", header=False)
 
 
 def write_conll(

@@ -74,18 +74,6 @@ def _stat_aggs(stat_cols: list[str]):
     return aggs
 
 
-def collect_zone_maps(
-    spark: SparkSession, table_dir: str, stat_cols: list[str]
-) -> DataFrame:
-    """One column-pruned scan -> (file, rows, <col>_min, <col>_max ...)
-    for every data file currently in the table. Does not persist; see
-    ``refresh_zone_maps``."""
-    df = spark.read.parquet(table_dir).select(
-        F.input_file_name().alias("file"), *stat_cols
-    )
-    return df.groupBy("file").agg(*_stat_aggs(stat_cols))
-
-
 def refresh_zone_maps(
     spark: SparkSession, table_dir: str, stat_cols: list[str]
 ) -> dict:
