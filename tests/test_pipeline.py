@@ -298,6 +298,39 @@ class TestCanonicalization:
         assert {tuple(r) for r in pre.select(*cols).collect()} \
             == {tuple(r) for r in c.select(*cols).collect()}
 
+    def test_driver_map_matches_distributed(self, spark, monkeypatch):
+        """The driver path (alias table within the bound) and the
+        collision_edges + connected_components path (bound 0) give the
+        same map: a chain across surfaces merges, while a null alias, a
+        null entity_id and a surface over the fan-out cap link nothing."""
+        from xwikire_spark.pipeline import graph
+        from xwikire_spark.pipeline.canonicalize import (
+            DEFAULT_MAX_ALIAS_FANOUT,
+        )
+
+        hot = [f"H{i:04d}" for i in range(DEFAULT_MAX_ALIAS_FANOUT + 1)]
+        rows = (
+            [("a", "Q1"), ("a", "Q2"), ("b", "Q2"), ("b", "Q3"),
+             ("a", "Q1"), (None, "Q4"), (None, "Q5"), ("c", None),
+             ("c", "Q6"), ("d", "Q7")]
+            + [("hot", h) for h in hot]
+        )
+        alias_df = spark.createDataFrame(
+            pd.DataFrame(rows, columns=["alias", "entity_id"])
+        )
+
+        def entity_map():
+            m = canonical_entity_map(alias_df)
+            assert m.columns == ["entity_id", "canonical_id"]
+            return sorted(map(tuple, m.collect()), key=repr)
+
+        on_driver = entity_map()
+        monkeypatch.setattr(graph, "DRIVER_LOOP_MAX_ROWS", 0)
+        assert entity_map() == on_driver
+        want = {"Q1": "Q1", "Q2": "Q1", "Q3": "Q1", "Q4": "Q4", "Q5": "Q5",
+                "Q6": "Q6", "Q7": "Q7", None: None, **{h: h for h in hot}}
+        assert on_driver == sorted(want.items(), key=repr)
+
 
 class TestManifests:
     def test_first_run_reads_empty_manifest(self, spark, tmp_path):
@@ -344,7 +377,37 @@ class TestManifests:
         def build(df):
             return extract_triples(df, alias_df, pred_df)
 
+        from xwikire_spark.pipeline.manifests import (
+            bucket_fingerprints,
+            read_manifest,
+        )
+
+        seen = []
+
+        def check_new_rows(df, run_seq, buckets=None):
+            """The last run appended one manifest row per bucket in
+            ``buckets`` (default: every bucket of ``df``), carrying the
+            bucket's fingerprint, its written triple count and
+            ``run_seq``."""
+            new = [tuple(r) for r in read_manifest(spark, out).collect()
+                   if tuple(r) not in seen]
+            seen.extend(new)
+            fp = {r["part_bucket"]: (r["convs_in"], r["rows_in"],
+                                     r["input_hash"])
+                  for r in bucket_fingerprints(df, n_buckets).collect()}
+            written = dict(
+                spark.read.parquet(out + "/triples")
+                .groupBy(F.col("part_bucket").cast("bigint"))
+                .count().collect()
+            )
+            assert sorted(r[0] for r in new) == sorted(buckets or fp)
+            for bucket, convs, n_rows, triples_out, input_hash, _, seq in new:
+                assert (convs, n_rows, input_hash) == fp[bucket]
+                assert triples_out == written.get(bucket, 0)
+                assert seq == run_seq
+
         run_with_manifests(spark, transcripts, build, out, n_buckets)
+        check_new_rows(transcripts, 1)
         # mutate one conversation's text -> exactly its bucket pending
         drifted = transcripts.withColumn(
             "text",
@@ -356,6 +419,7 @@ class TestManifests:
         todo = pending_buckets(spark, drifted, out, n_buckets)
         assert len(todo) == 1
         merged = run_with_manifests(spark, drifted, build, out, n_buckets)
+        check_new_rows(drifted, 2, todo)
         # result equals a from-scratch run on the drifted input
         fresh = extract_triples(drifted, alias_df, pred_df)
         got = {tuple(r) for r in
@@ -368,6 +432,7 @@ class TestManifests:
         # equals a from-scratch run on A, row for row
         assert len(pending_buckets(spark, transcripts, out, n_buckets)) == 1
         back = run_with_manifests(spark, transcripts, build, out, n_buckets)
+        check_new_rows(transcripts, 3, todo)
         cols = ["id", "subj", "pred", "obj", "conv_id", "turn_idx"]
         assert sorted(map(tuple, back.select(*cols).collect())) == sorted(
             map(tuple, extract_triples(transcripts, alias_df, pred_df)
@@ -463,6 +528,40 @@ class TestGraphMaterialization:
         assert m[0].triples_out == n_edges
         assert m[0].empty_evidence == 0
         assert m[0].approx_convs > 0
+
+    def test_spark_job_count(self, spark, corpus, tmp_path):
+        """A pipeline run (graph write + salience) stays within its Spark
+        job budget. Answers with at most n_buckets rows, or as many as
+        the alias dictionary, are collected once and used on the driver;
+        the bound is the measured count plus 2 for adaptive-execution
+        variance."""
+        from xwikire_spark.pipeline.graph import (
+            entity_salience,
+            materialize_graph,
+        )
+
+        _, _, transcripts, alias_df, pred_df = corpus
+        sc = spark.sparkContext
+
+        def build(df):
+            return canonicalize_triples(
+                extract_triples(df, alias_df, pred_df), alias_df
+            )
+
+        group = "test_spark_job_count"
+        sc.setJobGroup(group, group)
+        try:
+            edges, _ = materialize_graph(
+                spark, transcripts, build, str(tmp_path / "g"), n_buckets=4
+            )
+            assert entity_salience(edges).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        # measured: 27 (39 while the resume decision, the manifest rows
+        # and the entity map ran as Spark shuffles)
+        assert n_jobs <= 27 + 2, n_jobs
 
     def test_snapshot_format_edges_and_vertices(
         self, spark, corpus, tmp_path

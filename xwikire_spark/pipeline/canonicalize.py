@@ -25,6 +25,13 @@ Scale notes:
 - a graph of at most ``graph.DRIVER_LOOP_MAX_ROWS`` vertices + edges is
   collected once and labelled on the driver in numpy instead: there the
   rounds cost Spark's per-job floor, not data.
+
+``canonical_entity_map`` goes one step earlier: an alias table of at most
+``graph.DRIVER_LOOP_MAX_ROWS`` rows is itself collected with Arrow in one
+Spark job, and its collision links are built and labelled on the driver
+(same fan-out cap, same null rules, same min-id labels as
+``collision_edges`` + ``connected_components``, which run above the
+bound). Both numpy paths share one labelling loop, ``_min_labels``.
 """
 
 from __future__ import annotations
@@ -196,34 +203,49 @@ def connected_components(
 def _components_numpy(vertices: DataFrame, edges: DataFrame) -> DataFrame:
     """Min-id connected components on the driver, over the collected
     ``vertices(id)`` and non-null ``edges(src, dst)``. The distinct ids
-    are sorted (``graph.dense_ids``), so a smaller index is a smaller id.
-    Labels are indices, lowered across every edge in both directions and
-    then pointer-jumped (``labels[labels]``) until nothing changes — at
-    the fixed point every vertex holds the smallest index of its
+    are sorted (``graph.dense_ids``), so a smaller index is a smaller id,
+    and ``_min_labels`` gives every vertex the smallest index of its
     component. One row per distinct id; a null vertex id keeps a null
     component, as in the distributed loop."""
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql.types import StructField, StructType
-
     from xwikire_spark.pipeline.graph import dense_ids
 
     vcol = vertices.toArrow().column("id")
     et = edges.toArrow()
     ids, (s, d) = dense_ids(vcol, et.column("src"), et.column("dst"))
     keep = (s >= 0) & (d >= 0)
-    s, d = s[keep], d[keep]
-    labels = np.arange(len(ids))
+    return _label_frame(
+        vertices.sparkSession, ids, _min_labels(len(ids), s[keep], d[keep]),
+        vcol.null_count, vertices.schema["id"].dataType,
+    )
+
+
+def _min_labels(n: int, s, d):
+    """Component labels of ``n`` vertices linked by the numpy index arrays
+    ``s`` and ``d``: labels start as the indices, are lowered across every
+    link in both directions and then pointer-jumped (``labels[labels]``)
+    until nothing changes. At the fixed point every vertex holds the
+    smallest index of its component."""
+    import numpy as np
+
+    labels = np.arange(n)
     while True:
         prev = labels.copy()
         np.minimum.at(labels, d, labels[s])
         np.minimum.at(labels, s, labels[d])
         labels = labels[labels]
         if np.array_equal(labels, prev):
-            break
-    nulls = pa.nulls(vcol.null_count, ids.type)
-    id_type = vertices.schema["id"].dataType
-    return vertices.sparkSession.createDataFrame(
+            return labels
+
+
+def _label_frame(spark, ids, labels, n_null: int, id_type) -> DataFrame:
+    """The local frame (id, component) of the sorted Arrow ``ids`` and
+    their ``labels`` (indices into ``ids``), plus ``n_null`` rows of a
+    null id with a null component."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructField, StructType
+
+    nulls = pa.nulls(n_null, ids.type)
+    return spark.createDataFrame(
         pa.table({
             "id": pa.concat_arrays([ids, nulls]),
             "component": pa.concat_arrays([ids.take(labels), nulls]),
@@ -236,14 +258,54 @@ def _components_numpy(vertices: DataFrame, edges: DataFrame) -> DataFrame:
 
 def canonical_entity_map(alias_dict: DataFrame) -> DataFrame:
     """entity_id -> canonical component id over the alias-collision graph.
-    Output: entity_id, canonical_id."""
-    vertices = alias_dict.select(
-        F.col("entity_id").alias("id")
-    ).distinct()
-    edges = collision_edges(alias_dict)
-    cc = connected_components(vertices, edges)
+    Output: entity_id, canonical_id.
+
+    An alias table of at most ``graph.DRIVER_LOOP_MAX_ROWS`` rows is
+    collected with Arrow in one Spark job and labelled on the driver
+    (``_entity_map_numpy``); a larger one runs ``collision_edges`` and
+    ``connected_components``. Both give the same map."""
+    from xwikire_spark.pipeline import graph
+
+    bound = graph.DRIVER_LOOP_MAX_ROWS
+    t = alias_dict.select("alias", "entity_id").limit(bound + 1).toArrow()
+    if t.num_rows <= bound:
+        cc = _entity_map_numpy(
+            alias_dict.sparkSession, t, alias_dict.schema["entity_id"].dataType
+        )
+    else:
+        vertices = alias_dict.select(F.col("entity_id").alias("id")).distinct()
+        cc = connected_components(vertices, collision_edges(alias_dict))
     return cc.select(
         F.col("id").alias("entity_id"), F.col("component").alias("canonical_id")
+    )
+
+
+def _entity_map_numpy(spark, t, id_type) -> DataFrame:
+    """``collision_edges`` + ``connected_components`` on the driver, over
+    the collected Arrow table ``t(alias, entity_id)`` -> (id, component).
+    The vertices are the distinct entity ids. Like ``collision_edges``,
+    an alias counts its distinct (alias, entity_id) pairs against
+    ``DEFAULT_MAX_ALIAS_FANOUT`` (a null entity id is one of them), and a
+    null alias or a null entity id links nothing. Each kept alias links
+    its entities to its smallest one: a star, which connects what the
+    pairwise edges connect without their quadratic count."""
+    import numpy as np
+
+    from xwikire_spark.pipeline.graph import dense_ids
+
+    ecol, acol = t.column("entity_id"), t.column("alias")
+    ids, (e,) = dense_ids(ecol, ecol)
+    _, (a,) = dense_ids(acol, acol)
+    a, e = np.unique(np.stack([a, e], axis=1), axis=0).T
+    a, e = a[a >= 0], e[a >= 0]
+    fanout = np.bincount(a)
+    keep = (e >= 0) & (fanout[a] <= DEFAULT_MAX_ALIAS_FANOUT)
+    a, e = a[keep], e[keep]
+    root = np.full(len(fanout), len(ids))
+    np.minimum.at(root, a, e)
+    return _label_frame(
+        spark, ids, _min_labels(len(ids), e, root[a]),
+        min(ecol.null_count, 1), id_type,
     )
 
 

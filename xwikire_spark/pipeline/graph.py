@@ -119,8 +119,10 @@ def entity_salience(
     conv_mentions), salience_rank 1..top_k descending by rank (entity_id
     tiebreak — a total order, so ranks are deterministic).
 
-    The <= k rows of ``_salience_topk`` are collected, numbered 1..k on
-    the driver and returned as a local frame with an explicit schema."""
+    The <= k rows of ``_salience_topk`` are collected with Arrow,
+    numbered 1..k on the driver and returned as a local frame with an
+    explicit schema."""
+    import pyarrow as pa
     from pyspark.sql.types import LongType, StructField, StructType
 
     top = _salience_topk(triples, damping, n_iter, top_k)
@@ -128,8 +130,11 @@ def entity_salience(
         [StructField("salience_rank", LongType(), False)]
         + top.schema.fields
     )
-    rows = [(i, *r) for i, r in enumerate(top.collect(), start=1)]
-    return top.sparkSession.createDataFrame(rows, schema)
+    t = top.toArrow()
+    t = t.add_column(
+        0, "salience_rank", pa.array(range(1, t.num_rows + 1), pa.int64())
+    )
+    return top.sparkSession.createDataFrame(t, schema)
 
 
 def _salience_topk(

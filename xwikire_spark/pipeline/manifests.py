@@ -11,14 +11,23 @@ redid everything. Here:
 - outputs land under ``out/part_bucket=<k>/``; a manifest row
   (bucket, convs_in, rows_in, triples_out, input_hash, wall_ms, run_seq)
   is appended after each bucket's files commit;
-- resume = anti-join the input's buckets against the manifest's LATEST row
-  per bucket (J8) and process only the remainder — idempotent because
-  bucket contents are a pure function of conv_id;
-- ``input_hash`` (order-insensitive sum of per-row hashes) detects silent
+- resume = the input's buckets minus those whose LATEST manifest row
+  matches (J8's anti-join, decided on the driver) — only the remainder is
+  processed, idempotently because bucket contents are a pure function of
+  conv_id;
+- ``input_hash`` (order-insensitive xor of per-row hashes) detects silent
   input drift: a bucket whose hash differs from its latest row is
   reprocessed. ``run_seq`` (one more than the manifest's largest) orders
   the rows, so an input that returns to an earlier state (A -> B -> A)
   does not match A's superseded row.
+
+Like the reference's stats dicts, every per-bucket answer is small — at
+most ``n_buckets`` rows — so it is collected to the driver once and used
+there: the fingerprints, each bucket's latest manifest row
+(together they decide the pending buckets and the next ``run_seq``) and
+the written triple count per bucket. The manifest rows are built from
+these collected values as a local frame, so the transcripts are scanned
+once for fingerprints and once for the build.
 
 At 10^12 turns: buckets are the unit of retry/backfill; choose n_buckets so
 one bucket ≈ one executor-hour. Quality counters ride on ``observe()``.
@@ -81,27 +90,44 @@ def pending_buckets(
     """Buckets not yet present in the manifest (or whose input changed
     since the bucket's latest row) — the resume anti-join
     (J8 / src/scripts/extract_unprocessed.py:20-45)."""
-    fp = bucket_fingerprints(transcripts, n_buckets)
-    # rows written before run_seq existed read it as NULL: they rank oldest
-    done = (
-        read_manifest(spark, out_dir)
-        .groupBy(F.col("bucket").alias("part_bucket"))
-        .agg(F.max_by("input_hash", F.coalesce("run_seq", F.lit(0)))
-             .alias("input_hash"))
-    )
-    pending = fp.join(
-        done, ["part_bucket", "input_hash"], "left_anti"
-    ).select("part_bucket")
-    return sorted(r[0] for r in pending.collect())
+    return _plan_buckets(spark, transcripts, out_dir, n_buckets)[1]
 
 
-def _next_run_seq(spark: SparkSession, out_dir: str) -> int:
-    """One more than the manifest's largest ``run_seq``; 1 on a first run,
-    which this answers without a Spark job."""
-    if not path_exists(spark, _manifest_path(out_dir)):
-        return 1
-    last = read_manifest(spark, out_dir).agg(F.max("run_seq")).first()[0]
-    return (last or 0) + 1
+def _plan_buckets(
+    spark: SparkSession, transcripts: DataFrame, out_dir: str, n_buckets: int
+) -> tuple[dict[int, tuple[int, int, int]], list[int], int]:
+    """The resume decision on the driver: ({bucket: (convs_in, rows_in,
+    input_hash)}, the sorted pending buckets, the next ``run_seq``).
+
+    Both inputs have at most ``n_buckets`` rows, so each is collected
+    once: the fingerprints, and each bucket's latest manifest row
+    (none on a first run, which reads no manifest). A bucket is pending
+    when it has no manifest row or its input hash differs from its latest
+    row's. Rows written before ``run_seq`` existed read it as NULL and rank
+    oldest. The next ``run_seq`` is one more than the largest written."""
+    fp = {
+        r["part_bucket"]: (r["convs_in"], r["rows_in"], r["input_hash"])
+        for r in bucket_fingerprints(transcripts, n_buckets).collect()
+    }
+    latest, last_seq = {}, 0
+    if path_exists(spark, _manifest_path(out_dir)):
+        # the manifest holds a few rows per bucket and run: one task
+        # reduces them, so the aggregate needs no shuffle
+        for r in (
+            read_manifest(spark, out_dir)
+            .coalesce(1)
+            .groupBy("bucket")
+            .agg(
+                F.max_by("input_hash", F.coalesce("run_seq", F.lit(0)))
+                .alias("input_hash"),
+                F.max("run_seq").alias("run_seq"),
+            )
+            .collect()
+        ):
+            latest[r["bucket"]] = r["input_hash"]
+            last_seq = max(last_seq, r["run_seq"] or 0)
+    pending = sorted(b for b, f in fp.items() if latest.get(b) != f[2])
+    return fp, pending, last_seq + 1
 
 
 def run_with_manifests(
@@ -134,14 +160,13 @@ def run_with_manifests(
     if snap:
         from xwikire_spark.sources import snapshots as snapmod
     triples_root = os.path.join(out_dir, "triples")
-    todo = pending_buckets(spark, transcripts, out_dir, n_buckets)
+    fp, todo, run_seq = _plan_buckets(spark, transcripts, out_dir, n_buckets)
     bucketed = with_bucket(transcripts, n_buckets)
-    fp = bucket_fingerprints(transcripts, n_buckets)
 
     if todo:
+        import pyarrow as pa
         from pyspark.sql import Observation
 
-        run_seq = _next_run_seq(spark, out_dir)
         t0 = time.time()
         subset = bucketed.where(F.col("part_bucket").isin(todo))
         triples = build_fn(subset.drop("part_bucket"))
@@ -183,15 +208,18 @@ def run_with_manifests(
                 triples_root
             )
         wall_ms = int((time.time() - t0) * 1000)
-        # aggregates over a zero-row write observe NULL (e.g. the sum) —
-        # coalesce to 0 and pin the schema or createDataFrame fails type
-        # inference on the all-None row
+        # aggregates over a zero-row write observe NULL (e.g. the sum):
+        # coalesce to 0. Local frames are built from Arrow tables, which
+        # Spark keeps as a LocalRelation (a list would become a Python RDD
+        # that starts a Python worker when written).
         metrics = {k: (0 if v is None else v) for k, v in dict(obs.get).items()}
         metrics["wall_ms"] = wall_ms
         metrics["n_buckets_processed"] = len(todo)
-        metrics_schema = ", ".join(f"{k} bigint" for k in metrics)
-        spark.createDataFrame([tuple(metrics.values())], metrics_schema)\
-            .write.mode("append").parquet(os.path.join(out_dir, "_metrics"))
+        spark.createDataFrame(
+            pa.table({k: pa.array([v], pa.int64())
+                      for k, v in metrics.items()}),
+            ", ".join(f"{k} bigint" for k in metrics),
+        ).write.mode("append").parquet(os.path.join(out_dir, "_metrics"))
 
         # count from the just-written files, NOT the build DataFrame —
         # re-aggregating `out` would recompute the whole extraction
@@ -204,25 +232,28 @@ def run_with_manifests(
                 F.col("part_bucket").isin(todo)
             )
         )
-        counts = (
+        counts = dict(
             written
             .groupBy(F.col("part_bucket").cast("bigint").alias("part_bucket"))
             .agg(F.count(F.lit(1)).alias("triples_out"))
+            .collect()
         )
-        manifest_rows = (
-            fp.where(F.col("part_bucket").isin(todo))
-            .join(counts, "part_bucket", "left")
-            .select(
-                F.col("part_bucket").alias("bucket"),
-                "convs_in",
-                "rows_in",
-                F.coalesce("triples_out", F.lit(0)).alias("triples_out"),
-                "input_hash",
-                F.lit(wall_ms).alias("wall_ms"),
-                F.lit(run_seq).cast("bigint").alias("run_seq"),
-            )
-        )
-        manifest_rows.write.mode("append").parquet(_manifest_path(out_dir))
+        # the manifest rows come from the collected fingerprints: the
+        # transcripts are not scanned a second time. One file per append
+        # (a local frame is split across the default parallelism).
+        convs_in, rows_in, input_hash = zip(*(fp[b] for b in todo))
+        spark.createDataFrame(
+            pa.table({
+                "bucket": todo,
+                "convs_in": convs_in,
+                "rows_in": rows_in,
+                "triples_out": [counts.get(b, 0) for b in todo],
+                "input_hash": input_hash,
+                "wall_ms": [wall_ms] * len(todo),
+                "run_seq": [run_seq] * len(todo),
+            }),
+            MANIFEST_SCHEMA,
+        ).coalesce(1).write.mode("append").parquet(_manifest_path(out_dir))
 
     if snap:
         return snapmod.read_table(spark, triples_root)
