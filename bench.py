@@ -75,65 +75,6 @@ def _run_once(spark, name: str, fn) -> tuple[float, int]:
     return time.time() - t0, n
 
 
-def _zonemap_stage(spark) -> dict:
-    """Zone-map pruned scan in a MEASURED path (VERDICT r5 #4; previously
-    pytest-only). Stage: the sf events table rewritten once into a
-    16-file event_id-ranged layout (cached under .bench_data/, keyed by
-    sf) + refresh_zone_maps. Timed: an event_id-range aggregate through
-    ``pruned_read`` vs the identical full-scan ``.where`` — same result
-    rows by construction (the equivalence contract test in
-    tests/test_io.py), but the pruned plan lists only the files whose
-    recorded bounds intersect the range. files_pruned lands in the bench
-    JSON."""
-    from pyspark.sql import functions as F
-
-    from xwikire_spark.sources import zonemaps as zm
-
-    sf_tag = SF_DIR.rstrip("/").split("sf")[-1]
-    here = os.path.dirname(os.path.abspath(__file__))
-    root = os.path.join(here, ".bench_data", f"zm_events_sf{sf_tag}")
-    if not os.path.exists(os.path.join(root, zm._ZM_DIR)):
-        ev = spark.read.parquet(os.path.join(SF_DIR, "events.parquet"))
-        ev.repartitionByRange(16, "event_id").write.mode(
-            "overwrite"
-        ).parquet(root)
-        zm.refresh_zone_maps(spark, root, ["event_id", "ts"])
-    bounds = spark.read.parquet(os.path.join(root, zm._ZM_DIR)).agg(
-        F.min("event_id_min").alias("lo"), F.max("event_id_max").alias("hi")
-    ).collect()[0]
-    span = bounds["hi"] - bounds["lo"]
-    lo = bounds["lo"] + span * 7 // 16
-    hi = bounds["lo"] + span * 8 // 16  # ~1/16 of the id span
-
-    def agg(df):
-        return df.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n"), F.sum("value").alias("sv")
-        )
-
-    pruned_secs, full_secs = [], []
-    for _ in range(3):
-        t0 = time.time()
-        df, stats = zm.pruned_read(
-            spark, root, {"event_id": (lo, hi)}
-        )
-        n_pruned = agg(df).count()
-        pruned_secs.append(time.time() - t0)
-        t0 = time.time()
-        full = spark.read.parquet(root).where(
-            (F.col("event_id") >= lo) & (F.col("event_id") <= hi)
-        )
-        n_full = agg(full).count()
-        full_secs.append(time.time() - t0)
-    return {
-        "files_total": stats["files_total"],
-        "files_planned": stats["files_planned"],
-        "files_pruned": stats["files_pruned"],
-        "pruned_scan_sec": round(_median(pruned_secs), 3),
-        "full_scan_sec": round(_median(full_secs), 3),
-        "rows_equal": n_pruned == n_full,
-    }
-
-
 def main() -> None:
     qs = {**entry_mod.queries(), **EXTRA_QUERIES}
     spark = get_spark("bench", master=f"local[{CPUS}]",
@@ -176,7 +117,6 @@ def main() -> None:
         "n_triples": n_triples,
         "cpus": CPUS,
     }
-    result["zonemap"] = _zonemap_stage(spark)
     spark.stop()
 
     print(json.dumps(result))

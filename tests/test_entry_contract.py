@@ -29,8 +29,6 @@ UNREACHED = {
     # media codec and metadata kernels left from the deleted media
     # operator; only their own tests import them
     "kernels.aacmeta",
-    "kernels.gifcodec",
-    "kernels.imagecodec",
     "kernels.mp3meta",
     "kernels.wavcodec",
     "kernels.webpmeta",

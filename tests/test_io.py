@@ -175,116 +175,6 @@ class TestCompaction:
         assert compaction.read_partitioned(spark, root).count() == n0 + 1
 
 
-class TestZoneMaps:
-    """File-level zone maps + pruned scan planning (sources/zonemaps.py):
-    the Iceberg data-file-stats analog. Contract: pruned_read ==
-    full-scan-with-filter exactly, files not in the map are scanned
-    conservatively, refresh is incremental and drops vanished files."""
-
-    def _table(self, spark, root):
-        import pandas as pd
-
-        from pyspark.sql import functions as F
-
-        df = spark.createDataFrame(pd.DataFrame({
-            "conv_id": [f"c{i:04d}" for i in range(800)],
-            "turn_idx": [i % 10 for i in range(800)],
-            "text": [f"text {i}" for i in range(800)],
-        }))
-        out = df.withColumn(
-            "part_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(2))
-        )
-        # range-partition by conv_id so per-file conv_id bounds are tight
-        # (the shape a sorted/clustered write produces — zone maps only
-        # prune well on clustered columns, same as Iceberg)
-        out.repartitionByRange(8, "conv_id").write.partitionBy(
-            "part_bucket"
-        ).mode("overwrite").parquet(root)
-        return root
-
-    def test_refresh_and_pruned_read_equivalence(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
-        from xwikire_spark.sources import zonemaps as zm
-
-        root = self._table(spark, str(tmp_path / "t"))
-        st = zm.refresh_zone_maps(spark, root, ["conv_id", "turn_idx"])
-        assert st["added"] == st["total"] > 1 and st["dropped"] == 0
-
-        ranges = {"conv_id": ("c0100", "c0199")}
-        df, stats = zm.pruned_read(spark, root, ranges)
-        want = (
-            spark.read.parquet(root)
-            .where(F.col("conv_id").between("c0100", "c0199"))
-        )
-        assert stats["files_pruned"] > 0  # planning really skipped files
-        assert stats["files_planned"] < stats["files_total"]
-        assert stats["unmapped"] == 0
-        got = sorted(tuple(r) for r in df.select(*want.columns).collect())
-        exp = sorted(tuple(r) for r in want.collect())
-        assert got == exp and len(exp) == 100
-
-    def test_unmapped_files_scanned_conservatively(self, spark, tmp_path):
-        import pandas as pd
-
-        from pyspark.sql import functions as F
-
-        from xwikire_spark.sources import zonemaps as zm
-
-        root = self._table(spark, str(tmp_path / "t"))
-        zm.refresh_zone_maps(spark, root, ["conv_id"])
-        # append rows IN the query range without refreshing the map
-        extra = spark.createDataFrame(pd.DataFrame({
-            "conv_id": ["c0150"] * 5,
-            "turn_idx": [99] * 5,
-            "text": ["late append"] * 5,
-        })).withColumn(
-            "part_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(2))
-        )
-        extra.coalesce(1).write.partitionBy("part_bucket").mode(
-            "append"
-        ).parquet(root)
-
-        df, stats = zm.pruned_read(
-            spark, root, {"conv_id": ("c0100", "c0199")}
-        )
-        assert stats["unmapped"] >= 1  # new file has no stats yet...
-        assert df.where("turn_idx = 99").count() == 5  # ...but IS read
-        # refresh stats only the new file, not the whole table
-        st2 = zm.refresh_zone_maps(spark, root, ["conv_id"])
-        assert st2["added"] >= 1 and st2["added"] <= 2
-        _, stats3 = zm.pruned_read(
-            spark, root, {"conv_id": ("c0100", "c0199")}
-        )
-        assert stats3["unmapped"] == 0
-
-    def test_refresh_drops_vanished_files(self, spark, tmp_path):
-        import os as _os
-
-        from xwikire_spark.sources import zonemaps as zm
-
-        root = self._table(spark, str(tmp_path / "t"))
-        zm.refresh_zone_maps(spark, root, ["conv_id"])
-        victim = zm._data_files(root)[0].removeprefix("file://")
-        _os.remove(victim)
-        st = zm.refresh_zone_maps(spark, root, ["conv_id"])
-        assert st["dropped"] == 1 and st["added"] == 0
-        files, stats = zm.plan_files(spark, root, {})
-        assert stats["files_total"] == st["total"] == len(files)
-
-    def test_unstatted_column_no_pruning_but_correct(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
-        from xwikire_spark.sources import zonemaps as zm
-
-        root = self._table(spark, str(tmp_path / "t"))
-        zm.refresh_zone_maps(spark, root, ["conv_id"])
-        df, stats = zm.pruned_read(spark, root, {"turn_idx": (3, 4)})
-        assert stats["files_pruned"] == 0  # turn_idx not stat'd
-        want = spark.read.parquet(root).where(F.col("turn_idx").between(3, 4))
-        assert df.count() == want.count() == 160
-
-
 class TestSnapshots:
     """sources/snapshots.py: snapshot-isolated commits + time travel (the
     Iceberg metadata-layer analog). Core contracts: readers plan from the
@@ -424,37 +314,6 @@ class TestSnapshots:
         ]
         assert staging == []
 
-    def test_pruned_read_composes_with_zone_maps(self, spark, tmp_path):
-        """Snapshot isolation x zone-map pruning: the plan starts from
-        the SNAPSHOT's file list (an old version never plans files a
-        later commit added), then drops files whose bounds prove no
-        match; the residual filter keeps exact semantics."""
-        from pyspark.sql import functions as F
-
-        from xwikire_spark.sources import snapshots as sn
-        from xwikire_spark.sources import zonemaps as zm
-
-        root = str(tmp_path / "t")
-        # 4 range-disjoint files in v1 via repartitionByRange
-        sn.commit_append(
-            spark, root,
-            self._df(spark, range(100)).repartitionByRange(4, "id"),
-        )
-        sn.commit_append(spark, root, self._df(spark, range(100, 200)))
-        zm.refresh_zone_maps(spark, root, ["id"])
-        df, st = sn.pruned_read(spark, root, {"id": (10, 20)})
-        assert st["files_pruned"] > 0 and st["unmapped"] == 0
-        want = self._ids(
-            sn.read_table(spark, root).where(F.col("id").between(10, 20))
-        )
-        assert self._ids(df) == want == list(range(10, 21))
-        # time travel + pruning: v1 never plans v2's files
-        df1, st1 = sn.pruned_read(
-            spark, root, {"id": (150, 160)}, version=1
-        )
-        assert df1.count() == 0
-        assert st1["files_total"] < st["files_total"]
-
     def test_empty_and_missing_versions(self, spark, tmp_path):
         import pytest as _pytest
 
@@ -545,13 +404,41 @@ class TestSnapshotPartitioned:
             ).distinct().collect()
         }
         assert all("bucket=2" in f for f in got_files)
-        # pruned_read: a range on the partition col prunes at the manifest
-        # with zero zone maps present
-        df, st = sn.pruned_read(spark, root, {"bucket": (1, 2)})
-        assert st["partition_pruned"] > 0
-        assert self._rows(df) == self._rows(
-            full.where(F.col("bucket").between(1, 2))
-        )
+
+    def test_local_frames_are_local_relations(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The frames built on the driver (a commit's manifest rows, the
+        empty plan of a snapshot with no matching files, a first run's
+        empty KG manifest) come from Arrow tables, so Spark holds them as
+        a LocalRelation: no Python RDD, no Python worker to write them."""
+        from xwikire_spark.pipeline.manifests import read_manifest
+        from xwikire_spark.sources import snapshots as sn
+
+        def leaf_kinds(df):
+            leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+            return {leaves.apply(i).getClass().getSimpleName()
+                    for i in range(leaves.length())}
+
+        df = self._pdf(spark, [(0, 1), (1, 2)])
+        built = []
+        create = spark.createDataFrame
+
+        def recording(*args, **kwargs):
+            built.append(create(*args, **kwargs))
+            return built[-1]
+
+        monkeypatch.setattr(spark, "createDataFrame", recording)
+        root = str(tmp_path / "t")
+        sn.commit_replace_partitions(spark, root, df, "bucket")
+        sn.commit_replace_partitions(spark, root, df, "bucket")
+        assert len(built) == 2  # one manifest frame per commit
+        none = sn.read_table(spark, root, partitions=[7])
+        assert len(built) == 3 and none.count() == 0
+        assert read_manifest(spark, str(tmp_path / "kg")).count() == 0
+        assert len(built) == 4
+        assert [leaf_kinds(f) for f in built + [none]] \
+            == [{"LocalRelation"}] * 5
 
     def test_partition_spec_inherited_and_enforced(self, spark, tmp_path):
         import pytest as _pytest

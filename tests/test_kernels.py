@@ -421,220 +421,6 @@ class TestPerceptronCorpus:
         assert acc >= 0.9, f"held-out accuracy {acc:.4f}"
 
 
-class TestImageCodec:
-    """Pure-stdlib PNG/PPM codec (kernels/imagecodec.py) — a real decode
-    path for the formats stdlib zlib can handle."""
-
-    @staticmethod
-    def _checker(w, h, ch):
-        px = bytearray()
-        for y in range(h):
-            for x in range(w):
-                v = 255 if (x + y) % 2 == 0 else 0
-                px.extend([v, 255 - v, x % 256, 200][:ch])
-        return px
-
-    def test_png_round_trip_all_channel_counts(self):
-        from xwikire_spark.kernels.imagecodec import decode_png, encode_png
-
-        for ch in (1, 2, 3, 4):
-            px = self._checker(7, 5, ch)
-            blob = encode_png(7, 5, ch, px)
-            w, h, c, got = decode_png(blob)
-            assert (w, h, c) == (7, 5, ch)
-            assert got == px
-
-    def test_png_all_filter_types_decode(self):
-        """Hand-build IDAT scanlines with every filter type (forward
-        filtering implemented here in the test) and check the decoder
-        inverts each one exactly."""
-        import struct
-        import zlib
-
-        from xwikire_spark.kernels.imagecodec import _paeth, decode_png
-
-        w, h, ch = 6, 5, 3
-        px = self._checker(w, h, ch)
-        stride = w * ch
-        raw = bytearray()
-        for y, f in enumerate([0, 1, 2, 3, 4]):
-            raw.append(f)
-            for i in range(stride):
-                v = px[y * stride + i]
-                left = px[y * stride + i - ch] if i >= ch else 0
-                up = px[(y - 1) * stride + i] if y > 0 else 0
-                ul = px[(y - 1) * stride + i - ch] if (y > 0 and i >= ch) else 0
-                if f == 0:
-                    raw.append(v)
-                elif f == 1:
-                    raw.append((v - left) & 0xFF)
-                elif f == 2:
-                    raw.append((v - up) & 0xFF)
-                elif f == 3:
-                    raw.append((v - (left + up) // 2) & 0xFF)
-                else:
-                    raw.append((v - _paeth(left, up, ul)) & 0xFF)
-
-        def chunk(t, d):
-            return (struct.pack(">I", len(d)) + t + d
-                    + struct.pack(">I", zlib.crc32(t + d) & 0xFFFFFFFF))
-
-        blob = (b"\x89PNG\r\n\x1a\n"
-                + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-                + chunk(b"IDAT", zlib.compress(bytes(raw)))
-                + chunk(b"IEND", b""))
-        got = decode_png(blob)
-        assert got == (w, h, ch, px)
-
-    def test_png_palette_round_trip(self):
-        """Color-type-3 PLTE decode (VERDICT r4 #7): RGB pixels survive
-        the palette indirection exactly; tRNS promotes output to RGBA
-        with per-entry alpha (absent entries opaque)."""
-        from xwikire_spark.kernels.imagecodec import (
-            decode_png,
-            encode_png_palette,
-        )
-
-        px = self._checker(7, 5, 3)
-        assert decode_png(encode_png_palette(7, 5, px)) == (7, 5, 3, px)
-
-        trns = {(255, 0, 0): 7}  # the (x+y)-even checker color
-        w, h, c, got = decode_png(encode_png_palette(7, 5, px, trns=trns))
-        assert (w, h, c) == (7, 5, 4)
-        for i in range(7 * 5):
-            rgb = tuple(px[i * 3 : i * 3 + 3])
-            assert tuple(got[i * 4 : i * 4 + 3]) == rgb
-            assert got[i * 4 + 3] == trns.get(rgb, 255)
-
-    def test_png_adam7_round_trip(self):
-        """Adam7 interlace round-trips for every color type, including
-        dimensions that leave some passes empty (w or h < pass origin)."""
-        from xwikire_spark.kernels.imagecodec import (
-            decode_png,
-            encode_png,
-            encode_png_palette,
-        )
-
-        for w, h in [(8, 8), (7, 5), (3, 3), (1, 1), (2, 9)]:
-            for ch in (1, 2, 3, 4):
-                px = self._checker(w, h, ch)
-                got = decode_png(encode_png(w, h, ch, px, interlace=True))
-                assert got == (w, h, ch, px), (w, h, ch)
-            px3 = self._checker(w, h, 3)
-            got = decode_png(encode_png_palette(w, h, px3, interlace=True))
-            assert got == (w, h, 3, px3), (w, h, "palette")
-
-    def test_png_adam7_pass_geometry_matches_spec(self):
-        """External validity for the Adam7 scatter: a hand-built 8x8
-        grayscale interlaced PNG whose pass-p samples all equal p must
-        decode to the canonical pass-assignment diagram published in the
-        PNG spec."""
-        import struct
-        import zlib
-
-        from xwikire_spark.kernels.imagecodec import decode_png
-
-        # (pass_w, pass_h) for 8x8: the seven sub-images
-        dims = [(1, 1), (1, 1), (2, 1), (2, 2), (4, 2), (4, 4), (8, 4)]
-        raw = bytearray()
-        for p, (pw, ph) in enumerate(dims, start=1):
-            for _ in range(ph):
-                raw.append(0)  # filter None
-                raw.extend([p] * pw)
-
-        def chunk(t, d):
-            return (struct.pack(">I", len(d)) + t + d
-                    + struct.pack(">I", zlib.crc32(t + d) & 0xFFFFFFFF))
-
-        blob = (b"\x89PNG\r\n\x1a\n"
-                + chunk(b"IHDR", struct.pack(">IIBBBBB", 8, 8, 8, 0, 0, 0, 1))
-                + chunk(b"IDAT", zlib.compress(bytes(raw)))
-                + chunk(b"IEND", b""))
-        w, h, c, got = decode_png(blob)
-        assert (w, h, c) == (8, 8, 1)
-        spec = [
-            1, 6, 4, 6, 2, 6, 4, 6,
-            7, 7, 7, 7, 7, 7, 7, 7,
-            5, 6, 5, 6, 5, 6, 5, 6,
-            7, 7, 7, 7, 7, 7, 7, 7,
-            3, 6, 4, 6, 3, 6, 4, 6,
-            7, 7, 7, 7, 7, 7, 7, 7,
-            5, 6, 5, 6, 5, 6, 5, 6,
-            7, 7, 7, 7, 7, 7, 7, 7,
-        ]
-        assert list(got) == spec
-
-    def test_png_palette_malformed(self):
-        """Module contract: palette without PLTE and out-of-range indexes
-        raise ValueError, not IndexError/garbage pixels."""
-        import pytest as _pytest
-
-        from xwikire_spark.kernels.imagecodec import (
-            decode_png,
-            encode_png_palette,
-        )
-
-        blob = encode_png_palette(4, 3, self._checker(4, 3, 3))
-        i = blob.index(b"PLTE")
-        no_plte = blob[: i - 4] + blob[i - 4:].replace(b"PLTE", b"pLTe", 1)
-        with _pytest.raises(ValueError, match="PLTE"):
-            decode_png(no_plte)
-
-        import struct
-        import zlib
-
-        def chunk(t, d):
-            return (struct.pack(">I", len(d)) + t + d
-                    + struct.pack(">I", zlib.crc32(t + d) & 0xFFFFFFFF))
-
-        # 1x1 image, 1-entry palette, but the sole index is 5
-        bad = (b"\x89PNG\r\n\x1a\n"
-               + chunk(b"IHDR", struct.pack(">IIBBBBB", 1, 1, 8, 3, 0, 0, 0))
-               + chunk(b"PLTE", b"\x01\x02\x03")
-               + chunk(b"IDAT", zlib.compress(b"\x00\x05"))
-               + chunk(b"IEND", b""))
-        with _pytest.raises(ValueError, match="palette index"):
-            decode_png(bad)
-
-    def test_ppm_round_trip_with_comment(self):
-        from xwikire_spark.kernels.imagecodec import decode_ppm, encode_ppm
-
-        px = self._checker(4, 3, 3)
-        blob = encode_ppm(4, 3, px)
-        assert decode_ppm(blob) == (4, 3, 3, px)
-        commented = blob.replace(b"P6\n", b"P6\n# a comment\n", 1)
-        assert decode_ppm(commented) == (4, 3, 3, px)
-
-    def test_resize_nearest(self):
-        from xwikire_spark.kernels.imagecodec import resize_nearest
-
-        # 2x2 quadrant image -> 4x4 keeps quadrants
-        px = bytearray([10, 20, 30, 40])
-        out = resize_nearest(2, 2, 1, px, 4, 4)
-        assert bytes(out) == bytes(
-            [10, 10, 20, 20, 10, 10, 20, 20,
-             30, 30, 40, 40, 30, 30, 40, 40]
-        )
-
-    def test_unsupported_format_raises(self):
-        import pytest as _pytest
-
-        from xwikire_spark.kernels.imagecodec import decode_image
-
-        with _pytest.raises(NotImplementedError):
-            decode_image(b"RIFF\x00\x00\x00\x00WEBPVP8 not supported")
-        # JPEG has no in-container decoder: same stub path as WebP
-        with _pytest.raises(NotImplementedError):
-            decode_image(b"\xff\xd8\xff\xe0 jpeg-ish")
-
-    def test_channel_stats_shape(self):
-        from xwikire_spark.kernels.imagecodec import channel_stats
-
-        feats = channel_stats(2, 2, 3, self._checker(2, 2, 3))
-        assert len(feats) == 8
-        assert feats[:3] == [2.0, 2.0, 3.0]
-
-
 class TestWavCodec:
     """RIFF/WAVE PCM codec (kernels/wavcodec.py) — a real audio decode.
     Synthesized sine vectors give analytic
@@ -778,123 +564,6 @@ class TestWavCodec:
         assert abs(rms - 0.5 / 2 ** 0.5) < 0.01     # A/sqrt(2)
         assert abs(peak - 0.5) < 0.01
         assert abs(zcr - 2 * 440 / 8000) < 0.01     # 2f/rate crossings
-
-
-class TestGifCodec:
-    """GIF87a/89a decoder (kernels/gifcodec.py): full LZW with growing
-    code widths, interlace, background composition; minimal encoder as
-    the vector source."""
-
-    @staticmethod
-    def _quads(w, h):
-        px = bytearray()
-        for y in range(h):
-            for x in range(w):
-                px.extend([(x * 37) % 256 // 64 * 64,
-                           (y * 53) % 256 // 64 * 64, 128])
-        return px
-
-    def test_round_trip_plain_and_interlaced(self):
-        from xwikire_spark.kernels.gifcodec import decode_gif, encode_gif
-
-        px = self._quads(13, 9)
-        for il in (False, True):
-            w, h, c, got = decode_gif(encode_gif(13, 9, px, interlace=il))
-            assert (w, h, c) == (13, 9, 3)
-            assert bytes(got) == bytes(px)
-
-    def test_wide_codes_and_reclear(self):
-        """200 distinct colors force 8-bit LZW roots and repeated CLEAR
-        codes — exercises the table-growth path."""
-        import random
-
-        from xwikire_spark.kernels.gifcodec import decode_gif, encode_gif
-
-        rng = random.Random(5)
-        pal = [(rng.randrange(256), rng.randrange(256), rng.randrange(256))
-               for _ in range(200)]
-        px = bytearray()
-        for _ in range(40 * 25):
-            px.extend(pal[rng.randrange(200)])
-        assert decode_gif(encode_gif(40, 25, px))[3] == px
-
-    def test_gif89a_with_extension_blocks(self):
-        """Graphic-control / comment extensions must be skipped, and a
-        GIF89a signature accepted."""
-        from xwikire_spark.kernels.gifcodec import decode_gif, encode_gif
-
-        px = self._quads(6, 4)
-        blob = bytearray(encode_gif(6, 4, px))
-        blob[:6] = b"GIF89a"
-        # splice a graphic control extension right before the image
-        # descriptor (0x2C)
-        at = bytes(blob).index(b"\x2c")
-        gce = b"\x21\xf9\x04\x00\x00\x00\x00\x00"
-        patched = bytes(blob[:at]) + gce + bytes(blob[at:])
-        assert decode_gif(patched)[3] == px
-
-    def test_too_many_colors_encode_raises(self):
-        import pytest as _pytest
-
-        from xwikire_spark.kernels.gifcodec import encode_gif
-
-        px = bytearray()
-        for i in range(300):
-            px.extend([i % 256, i // 256, 7])
-        with _pytest.raises(ValueError):
-            encode_gif(300, 1, px)
-
-    def test_truncated_gif_raises_valueerror(self):
-        """Malformed-input contract (ADVICE r3): every truncation point —
-        mid-header, mid-sub-block, and an LZW stream that hits EOI before
-        w*h pixels — must surface as ValueError, never raw IndexError."""
-        import pytest as _pytest
-
-        from xwikire_spark.kernels.gifcodec import decode_gif, encode_gif
-
-        blob = encode_gif(13, 9, self._quads(13, 9))
-        # property over EVERY prefix: decode either succeeds (only cuts
-        # past the image data, e.g. the trailing 0x3B) or raises
-        # ValueError — never IndexError/struct.error
-        raised = 0
-        for cut in range(14, len(blob)):
-            try:
-                decode_gif(blob[:cut])
-            except ValueError:
-                raised += 1
-        assert raised >= len(blob) - 20  # nearly every prefix is malformed
-        # early EOI: 2x2 image whose LZW data is just CLEAR,EOI (2-bit
-        # min-code: clear=4, eoi=5, 3-bit codes -> byte 0b101_100 = 0x2C)
-        early = (
-            b"GIF87a"
-            + bytes([2, 0, 2, 0, 0x80 | 0, 0, 0])  # screen + 2-color GCT
-            + b"\x00\x00\x00\xff\xff\xff"
-            + b"\x2c" + bytes([0, 0, 0, 0, 2, 0, 2, 0, 0])  # descriptor
-            + bytes([2])  # LZW min code size
-            + bytes([1, 0x2C])  # one sub-block: CLEAR then EOI
-            + b"\x00\x3b"
-        )
-        with _pytest.raises(ValueError, match="LZW ended early"):
-            decode_gif(early)
-
-    def test_imagecodec_dispatch_and_family_reencode(self):
-        from xwikire_spark.kernels.imagecodec import (
-            decode_image,
-            encode_image,
-            resize_nearest,
-            sniff_format,
-        )
-        from xwikire_spark.kernels.gifcodec import encode_gif
-
-        px = self._quads(8, 6)
-        blob = encode_gif(8, 6, px)
-        assert sniff_format(blob) == "gif"
-        w, h, c, got = decode_image(blob)
-        assert (w, h, c) == (8, 6, 3) and bytes(got) == bytes(px)
-        rp = resize_nearest(8, 6, 3, got, 4, 3)
-        re = encode_image("gif", 4, 3, 3, rp)
-        assert sniff_format(re) == "gif"  # palette subset stays GIF
-        assert decode_image(re)[:3] == (4, 3, 3)
 
 
 class TestLangId:

@@ -351,6 +351,31 @@ class TestManifests:
         assert [tuple(r) for r in read_manifest(spark, out).collect()] \
             == [(3, 1, 2, 5, 7, 9, 1)]
 
+    def test_manifest_read_names_no_hidden_root(self, spark, tmp_path):
+        """The manifest scan is planned over the part files, not the
+        ``_manifests`` directory: Spark counts a root path whose name
+        starts with ``_`` as hidden and warns on every resume run."""
+        from xwikire_spark.pipeline.manifests import (
+            MANIFEST_SCHEMA,
+            read_manifest,
+        )
+
+        out = str(tmp_path / "kg")
+        for seq in (1, 2):
+            spark.createDataFrame([(3, 1, 2, 5, 7, 9, seq)], MANIFEST_SCHEMA)\
+                .coalesce(1).write.mode("append")\
+                .parquet(str(tmp_path / "kg" / "_manifests"))
+        got = read_manifest(spark, out)
+        leaves = got._jdf.queryExecution().analyzed().collectLeaves()
+        assert leaves.length() == 1
+        roots = leaves.apply(0).relation().location().rootPaths()
+        names = [roots.apply(i).getName() for i in range(roots.length())]
+        assert not [n for n in names if n.startswith("_")], names
+        assert len(names) == 2
+        assert sorted(tuple(r) for r in got.collect()) == [
+            (3, 1, 2, 5, 7, 9, 1), (3, 1, 2, 5, 7, 9, 2)
+        ]
+
     def test_resume_skips_done_buckets(self, spark, corpus, tmp_path):
         _, _, transcripts, alias_df, pred_df = corpus
         out = str(tmp_path / "kg")

@@ -75,17 +75,3 @@ def test_segmentation_preserves_content(text):
     # sentences contain exactly the non-whitespace content, in order
     joined = "".join("".join(s.split()) for s in segment_sentences(text))
     assert joined == "".join(text.split())
-
-
-@settings(max_examples=50, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=20),
-    st.integers(min_value=1, max_value=20),
-    st.sampled_from([1, 2, 3, 4]),
-    st.randoms(use_true_random=False),
-)
-def test_png_round_trip_any_size_any_content(w, h, ch, rng):
-    from xwikire_spark.kernels.imagecodec import decode_png, encode_png
-
-    px = bytearray(rng.randrange(256) for _ in range(w * h * ch))
-    assert decode_png(encode_png(w, h, ch, px)) == (w, h, ch, px)

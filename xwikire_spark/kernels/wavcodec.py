@@ -1,6 +1,5 @@
 """RIFF/WAVE codec (stdlib parsing + numpy): a real audio decode path,
-closing the "audio honestly stubbed" gap the same way
-imagecodec closed images.
+closing the "audio honestly stubbed" gap.
 
 Scope (bounded, fully tested): integer PCM 8/16/24/32-bit, IEEE float32,
 G.711 mu-law (format 7) and A-law (format 6) — both bijective per code,
@@ -521,9 +520,8 @@ def encode_wav_ms(
 
 
 def audio_stats(rate: int, n_ch: int, x: np.ndarray) -> list[float]:
-    """8 deterministic features (same vector length as imagecodec's
-    channel_stats, so FEATURES_SCHEMA holds across modalities): frames,
-    duration_s, channels, rms, peak, zero-crossing rate, sample rate, 0."""
+    """8 deterministic features: frames, duration_s, channels, rms, peak,
+    zero-crossing rate, sample rate, 0."""
     frames = x.shape[0]
     if frames == 0:
         return [0.0, 0.0, float(n_ch), 0.0, 0.0, 0.0, float(rate), 0.0]

@@ -1,9 +1,8 @@
 """WebP container-layer metadata: RIFF chunk walking, VP8/VP8L/VP8X
 header parsing, animation frame counting — the indexing tier for the
-image format whose PIXEL decode is a documented permanent skip
-(kernels/imagecodec.py: a from-memory VP8/VP8L entropy decoder validated
-only by its own encoder has no external validity; production routes
-through PIL/libvips).
+image format whose PIXEL decode is a documented permanent skip (a
+from-memory VP8/VP8L entropy decoder validated only by its own encoder
+has no external validity; production routes through PIL/libvips).
 
 The CONTAINER layer, by contrast, is fully checkable by construction:
 
@@ -144,9 +143,8 @@ def webp_info(payload: bytes) -> dict:
 
 
 def decode_webp(payload: bytes):
-    """Pixel decode is a DOCUMENTED PERMANENT SKIP (module docstring +
-    kernels/imagecodec.py): production routes through PIL/libvips at
-    this seam."""
+    """Pixel decode is a DOCUMENTED PERMANENT SKIP (module docstring):
+    production routes through PIL/libvips at this seam."""
     raise NotImplementedError(
         "WebP pixel decode needs PIL/libvips in production; container "
         "metadata is available via webp_info()"

@@ -41,12 +41,11 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xwikire_spark.sources.io import path_exists
-
-MANIFEST_SCHEMA = (
-    "bucket BIGINT, convs_in BIGINT, rows_in BIGINT, triples_out BIGINT, "
-    "input_hash BIGINT, wall_ms BIGINT, run_seq BIGINT"
+_MANIFEST_COLS = (
+    "bucket", "convs_in", "rows_in", "triples_out", "input_hash", "wall_ms",
+    "run_seq",
 )
+MANIFEST_SCHEMA = ", ".join(f"{c} BIGINT" for c in _MANIFEST_COLS)
 
 
 def with_bucket(transcripts: DataFrame, n_buckets: int) -> DataFrame:
@@ -77,11 +76,27 @@ def _manifest_path(out_dir: str) -> str:
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The manifest rows written so far — empty on a first run."""
-    path = _manifest_path(out_dir)
-    if not path_exists(spark, path):
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
-    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
+    """The manifest rows written so far — empty on a first run.
+
+    The part files are listed through the Hadoop FileSystem (local, HDFS,
+    S3A, ...) and read by name: Spark ignores a directory whose name
+    starts with ``_`` as hidden, and warns about it, when that directory
+    is the path it is given. A missing directory lists no files, and the
+    empty frame is a local relation, so a first run starts no job."""
+    import pyarrow as pa
+
+    jvm = spark.sparkContext._jvm
+    pattern = jvm.org.apache.hadoop.fs.Path(
+        _manifest_path(out_dir) + "/*.parquet"
+    )
+    fs = pattern.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    files = [st.getPath().toString() for st in fs.globStatus(pattern) or []]
+    if not files:
+        return spark.createDataFrame(
+            pa.schema([(c, pa.int64()) for c in _MANIFEST_COLS]).empty_table(),
+            MANIFEST_SCHEMA,
+        )
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(*files)
 
 
 def pending_buckets(
@@ -101,31 +116,32 @@ def _plan_buckets(
 
     Both inputs have at most ``n_buckets`` rows, so each is collected
     once: the fingerprints, and each bucket's latest manifest row
-    (none on a first run, which reads no manifest). A bucket is pending
-    when it has no manifest row or its input hash differs from its latest
-    row's. Rows written before ``run_seq`` existed read it as NULL and rank
-    oldest. The next ``run_seq`` is one more than the largest written."""
+    (none on a first run, whose manifest frame is empty). A bucket is
+    pending when it has no manifest row or its input hash differs from
+    its latest row's. Rows written before ``run_seq`` existed read it as
+    NULL and rank oldest. The next ``run_seq`` is one more than the
+    largest written."""
     fp = {
         r["part_bucket"]: (r["convs_in"], r["rows_in"], r["input_hash"])
         for r in bucket_fingerprints(transcripts, n_buckets).collect()
     }
     latest, last_seq = {}, 0
-    if path_exists(spark, _manifest_path(out_dir)):
-        # the manifest holds a few rows per bucket and run: one task
-        # reduces them, so the aggregate needs no shuffle
-        for r in (
-            read_manifest(spark, out_dir)
-            .coalesce(1)
-            .groupBy("bucket")
-            .agg(
-                F.max_by("input_hash", F.coalesce("run_seq", F.lit(0)))
-                .alias("input_hash"),
-                F.max("run_seq").alias("run_seq"),
-            )
-            .collect()
-        ):
-            latest[r["bucket"]] = r["input_hash"]
-            last_seq = max(last_seq, r["run_seq"] or 0)
+    # the manifest holds a few rows per bucket and run: one task reduces
+    # them, so the aggregate needs no shuffle (and over a first run's
+    # empty frame, no job)
+    for r in (
+        read_manifest(spark, out_dir)
+        .coalesce(1)
+        .groupBy("bucket")
+        .agg(
+            F.max_by("input_hash", F.coalesce("run_seq", F.lit(0)))
+            .alias("input_hash"),
+            F.max("run_seq").alias("run_seq"),
+        )
+        .collect()
+    ):
+        latest[r["bucket"]] = r["input_hash"]
+        last_seq = max(last_seq, r["run_seq"] or 0)
     pending = sorted(b for b, f in fp.items() if latest.get(b) != f[2])
     return fp, pending, last_seq + 1
 

@@ -16,18 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def path_exists(spark: SparkSession, path: str) -> bool:
-    """Existence through the Hadoop FileSystem of ``path`` (local, HDFS,
-    S3A, ...). Check optional paths with this before reading them:
-    reading a missing path and catching the error would work too, but the
-    JVM prints the PATH_NOT_FOUND stack trace to stderr on every first
-    run."""
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    return jpath.getFileSystem(conf).exists(jpath)
-
-
 def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """S7: newline-delimited JSON (UTF-8, non-ASCII preserved)."""
     df.write.mode(mode).json(path)

@@ -1,6 +1,6 @@
 """Snapshot-isolated table commits + time travel: the Iceberg metadata
-layer this repo's plain-parquet substrate was missing (zonemaps.py is
-the data-file-STATS analog; this is the snapshot/manifest analog).
+layer (snapshots and manifests) this repo's plain-parquet substrate was
+missing.
 
 Layout under a table root::
 
@@ -39,9 +39,9 @@ file's partition value (Iceberg's per-file partition tuple), and
 atomic versioned commit — the KG pipeline's idempotent bucket-reprocess
 path. Readers re-derive the partition column from the file path
 (``input_file_name`` regexp — one relation, no directory inference) and
-``read_table(partitions=[...])`` / ``pruned_read`` prune at the
-manifest. Partition values must be path-safe scalars (bucket ints here;
-escaped strings are a documented non-goal of the local stand-in).
+``read_table(partitions=[...])`` prunes at the manifest. Partition
+values must be path-safe scalars (bucket ints here; escaped strings are
+a documented non-goal of the local stand-in).
 
 ``compact_snapshot`` rewrites the CURRENT view into fewer files and
 commits it as op="compact": a logical no-op — readers pinned to older
@@ -52,12 +52,9 @@ referenced only by them (computed against the RETAINED manifests —
 metadata-sized work).
 
 At 10^12 turns the manifest for one table is O(file count) rows
-(~10^5-10^6 at 1 GB files) — metadata-sized next to the data, same
-argument as zonemaps; Iceberg shards it into a manifest tree, this
-single parquet list is the honest local stand-in with the same
-contract. ``pruned_read`` composes snapshot isolation with the zone-map
-bounds: plan = snapshot file list MINUS files whose recorded bounds
-prove no match.
+(~10^5-10^6 at 1 GB files) — metadata-sized next to the data; Iceberg
+shards it into a manifest tree, this single parquet list is the honest
+local stand-in with the same contract.
 
 Reference parity note: the reference has no table format at all (Mongo
 collections, full-cursor walks). This module exists for the 100 TB
@@ -165,7 +162,11 @@ def _plan_df(
     schema = StructType.fromJson(json.loads(meta["schema"]))
     pcol = meta.get("partition_col")
     if not files:
-        return spark.createDataFrame([], schema)
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        return spark.createDataFrame(
+            to_arrow_schema(schema).empty_table(), schema
+        )
     if not pcol:
         return spark.read.schema(schema).parquet(*files)
     data_schema = StructType([f for f in schema.fields if f.name != pcol])
@@ -257,6 +258,8 @@ def _commit(
     partition_col: str | None = None,
     replace_partitions: bool = False,
 ) -> dict:
+    import pyarrow as pa
+
     os.makedirs(_snap_dir(root), exist_ok=True)
     parent = current_version(root)
     version = parent + 1
@@ -274,9 +277,11 @@ def _commit(
                 f"{op} with partition_col={partition_col!r}"
             )
     rel_dir, new_rows = _write_data(df, root, partition_col)
+    # built from an Arrow table, the manifest is a local relation: writing
+    # it starts no Python worker
     manifest = spark.createDataFrame(
-        [(r["path"], r["rows"], r["bytes"], r["partition"])
-         for r in new_rows],
+        pa.table({c: [r[c] for r in new_rows]
+                  for c in ("path", "rows", "bytes", "partition")}),
         MANIFEST_SCHEMA,
     )
     if keep_parent_files and parent:
@@ -471,64 +476,3 @@ def expire_snapshots(
         "dropped_snapshots": dropped_snaps,
         "dropped_files": dropped_files,
     }
-
-
-def pruned_read(
-    spark: SparkSession,
-    root: str,
-    ranges: dict[str, tuple],
-    version: int | None = None,
-) -> tuple[DataFrame, dict]:
-    """Snapshot isolation x zone-map pruning: plan = the snapshot's file
-    list minus files whose ``sources.zonemaps`` bounds PROVE no match
-    (files absent from the zone map are conservatively kept). Returns
-    (df-with-residual-filter, stats) like ``zonemaps.pruned_read``."""
-    from xwikire_spark.sources import zonemaps as zm
-
-    v = _resolve(root, version)
-    if v == 0:
-        raise ValueError(f"{root} has no committed snapshot")
-    meta = snapshot_meta(root, v)
-    rows = _read_manifest(spark, root, v).collect()
-    pcol = meta.get("partition_col")
-    n_total = len(rows)
-    if pcol and pcol in ranges:
-        # manifest-level partition pruning: the partition value is the
-        # file's exact bound for that column (rows whose value fails to
-        # parse are conservatively kept)
-        lo, hi = ranges[pcol]
-
-        def _keep(r):
-            if not r["partition"]:
-                return True
-            try:
-                val = float(r["partition"].split("=", 1)[1])
-            except (ValueError, IndexError):
-                # malformed partition strings (no '=' or non-numeric
-                # value) are kept conservatively, as promised above
-                return True
-            return (lo is None or val >= lo) and (hi is None or val <= hi)
-
-        rows = [r for r in rows if _keep(r)]
-    n_part_pruned = n_total - len(rows)
-    files = [os.path.join(root, r["path"]) for r in rows]
-    # zone maps stat only columns present in the data files; the
-    # partition column (absent there) falls through conservatively
-    keep, n_pruned, n_unmapped = zm.plan_file_subset(
-        spark, root, files, ranges
-    )
-    stats = {
-        "version": v,
-        "files_total": n_total,
-        "files_planned": len(keep),
-        "files_pruned": n_pruned + n_part_pruned,
-        "partition_pruned": n_part_pruned,
-        "unmapped": n_unmapped,
-    }
-    df = _plan_df(spark, root, meta, keep)
-    for col, (lo, hi) in ranges.items():
-        if lo is not None:
-            df = df.where(F.col(col) >= F.lit(lo))
-        if hi is not None:
-            df = df.where(F.col(col) <= F.lit(hi))
-    return df, stats
