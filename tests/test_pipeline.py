@@ -332,6 +332,27 @@ class TestCanonicalization:
         assert on_driver == sorted(want.items(), key=repr)
 
 
+def _text_transcripts(spark, rows):
+    """Transcripts of one turn per ``(conv_id, text)`` row."""
+    return spark.createDataFrame(
+        [(c, i, t) for i, (c, t) in enumerate(rows)],
+        "conv_id string, turn_idx int, text string",
+    )
+
+
+def _text_edges(df):
+    """One triple per turn of text ``"<subj> <obj> <conv>"``: ``-`` is a
+    null subj or obj, and a third word other than ``+`` a null conv_id."""
+    w = F.split("text", " ")
+    return df.select(
+        F.when(w[2] == "+", F.col("conv_id")).alias("conv_id"),
+        F.when(w[0] != "-", w[0]).alias("subj"),
+        F.lit("p").alias("pred"),
+        F.when(w[1] != "-", w[1]).alias("obj"),
+        "turn_idx",
+    )
+
+
 class TestManifests:
     def test_first_run_reads_empty_manifest(self, spark, tmp_path):
         """No ``_manifests`` yet: the existence check goes through the
@@ -375,6 +396,26 @@ class TestManifests:
         assert sorted(tuple(r) for r in got.collect()) == [
             (3, 1, 2, 5, 7, 9, 1), (3, 1, 2, 5, 7, 9, 2)
         ]
+
+    @pytest.mark.parametrize("table_format", ["parquet", "snapshot"])
+    def test_row_count_matches_frame(self, spark, tmp_path, table_format):
+        """The row count ``_run_with_manifests`` returns with its frame
+        (collected values only: the written counts of the buckets
+        processed now, the latest manifest counts of the others) equals
+        the frame's count on a first run, a run with nothing pending, a
+        run with one drifted conversation, and a run whose input no
+        longer reaches some buckets (their old files stay and count)."""
+        from xwikire_spark.pipeline.manifests import _run_with_manifests
+
+        out = str(tmp_path / "m")
+        a = [(f"c{i}", f"a{i} b{i} +") for i in range(8)]
+        drifted = a[:-1] + [("c7", "z y +")]
+        for rows in (a, a, drifted, drifted[:2]):
+            df, n = _run_with_manifests(
+                spark, _text_transcripts(spark, rows), _text_edges, out, 4,
+                table_format,
+            )
+            assert n == df.count() > 0
 
     def test_resume_skips_done_buckets(self, spark, corpus, tmp_path):
         _, _, transcripts, alias_df, pred_df = corpus
@@ -584,9 +625,11 @@ class TestGraphMaterialization:
             sc.setLocalProperty("spark.jobGroup.id", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        # measured: 27 (39 while the resume decision, the manifest rows
-        # and the entity map ran as Spark shuffles)
-        assert n_jobs <= 27 + 2, n_jobs
+        # measured: 16 (27 while the vertex table and the salience answer
+        # ran as Spark shuffles and the written parquet was read back with
+        # schema inference; 39 while the resume decision, the manifest
+        # rows and the entity map ran as Spark shuffles)
+        assert n_jobs <= 16 + 2, n_jobs
 
     def test_snapshot_format_edges_and_vertices(
         self, spark, corpus, tmp_path
@@ -619,6 +662,126 @@ class TestGraphMaterialization:
         assert sn.snapshot_meta(
             os.path.join(out, "triples"), 1
         )["partition_col"] == "part_bucket"
+
+
+    def test_rerun_replaces_vertex_table(self, spark, tmp_path):
+        """A run over input B in the directory of a run over input A: the
+        vertex table read back is exactly ``vertex_table`` of B's edges,
+        with no row left from A in a bucket B's entities do not reach."""
+        from xwikire_spark.pipeline.graph import (
+            materialize_graph,
+            vertex_table,
+        )
+
+        out = str(tmp_path / "g")
+        a = [(f"c{i}", f"a{i} b{i} +") for i in range(8)]
+        b = [(f"c{i}", "x y +") for i in range(8)]
+        for rows in (a, b):
+            edges, vertices = materialize_graph(
+                spark, _text_transcripts(spark, rows), _text_edges, out,
+                n_buckets=4,
+            )
+        got = sorted(tuple(r) for r in vertices.drop("part_bucket").collect())
+        assert got == [("x", 8, 0, 8), ("y", 0, 8, 8)]
+        assert got == sorted(tuple(r) for r in vertex_table(edges).collect())
+
+    def test_writes_leave_session_overwrite_mode(self, spark, tmp_path):
+        """The graph, manifest and incremental-packing writes choose their
+        partition overwrite mode per write: the session's setting is the
+        same after each call as before it."""
+        from xwikire_spark.operators.packing import pack_sequences_incremental
+        from xwikire_spark.pipeline.graph import materialize_graph
+
+        key = "spark.sql.sources.partitionOverwriteMode"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "STATIC")
+        rows = [(f"c{i}", f"a{i} b{i} +") for i in range(4)]
+        try:
+            run_with_manifests(
+                spark, _text_transcripts(spark, rows), _text_edges,
+                str(tmp_path / "m"), n_buckets=4,
+            )
+            assert spark.conf.get(key) == "STATIC"
+            materialize_graph(
+                spark, _text_transcripts(spark, rows), _text_edges,
+                str(tmp_path / "g"), n_buckets=4,
+            )
+            assert spark.conf.get(key) == "STATIC"
+            pack_sequences_incremental(
+                spark.createDataFrame(
+                    [(i, 10) for i in range(5)],
+                    "doc_id bigint, n_tokens bigint",
+                ),
+                str(tmp_path / "pk"), "doc_id", "n_tokens", 32, batch_id=0,
+            )
+            assert spark.conf.get(key) == "STATIC"
+        finally:
+            spark.conf.set(key, old)
+
+    @pytest.mark.parametrize("table_format", ["parquet", "snapshot"])
+    def test_driver_vertices_match_vertex_table(
+        self, spark, tmp_path, monkeypatch, table_format
+    ):
+        """The vertex table built on the driver equals the one
+        ``vertex_table`` aggregates above the bound (monkeypatched to 0):
+        multi-edges, a null subj, a null obj and a null conv_id (the null
+        entity is one row; conv_mentions counts non-null convs). The
+        driver path is taken only at the default bound, and its table is
+        written one file per bucket. The returned edges and vertices have
+        the schemas an inferred read of the written parquet gives."""
+        import os
+
+        from xwikire_spark.pipeline import graph
+
+        rows = [
+            ("c1", "a b +"), ("c1", "a b +"), ("c2", "a b +"),
+            ("c2", "b a +"), ("c3", "a a +"), ("c1", "- a +"),
+            ("c4", "b - +"), ("c4", "c d x"), ("c5", "- - +"),
+        ]
+        real, calls, got = graph._vertex_frame, [], {}
+        monkeypatch.setattr(
+            graph, "_vertex_frame",
+            lambda *a: calls.append(a) or real(*a),
+        )
+        for bound in (graph.DRIVER_LOOP_MAX_ROWS, 0):
+            monkeypatch.setattr(graph, "DRIVER_LOOP_MAX_ROWS", bound)
+            out = str(tmp_path / f"g{bound}")
+            n_calls = len(calls)
+            edges, vertices = graph.materialize_graph(
+                spark, _text_transcripts(spark, rows), _text_edges, out,
+                n_buckets=4, table_format=table_format,
+            )
+            assert (len(calls) > n_calls) == (bound > 0), bound
+            if bound and table_format == "parquet":
+                # the driver-built frame is written by one task: one file
+                # per bucket
+                v_root = os.path.join(out, "vertices")
+                for d in os.listdir(v_root):
+                    if d.startswith("part_bucket="):
+                        files = os.listdir(os.path.join(v_root, d))
+                        assert len(
+                            [f for f in files if f.endswith(".parquet")]
+                        ) == 1, d
+            got[bound] = sorted(
+                (tuple(r) for r in vertices.collect()), key=repr
+            )
+            want = sorted(
+                (tuple(r) for r in graph.vertex_table(edges).withColumn(
+                    "part_bucket", F.pmod(F.xxhash64("entity_id"), F.lit(4))
+                ).collect()),
+                key=repr,
+            )
+            assert got[bound] == want, bound
+            if table_format == "parquet":
+                for df, name in ((edges, "triples"), (vertices, "vertices")):
+                    inferred = spark.read.parquet(os.path.join(out, name))
+                    assert df.schema == inferred.schema, name
+        assert got[0] == got[graph.DRIVER_LOOP_MAX_ROWS]
+        by_id = {r[0]: r[1:4] for r in got[0]}
+        assert by_id == {
+            "a": (4, 3, 3), "b": (2, 3, 3), "c": (1, 0, 0), "d": (0, 1, 0),
+            None: (2, 2, 3),
+        }
 
 
 class TestMentionPathEquivalence:
@@ -847,6 +1010,22 @@ class TestPageRank:
         with _pytest.raises(ValueError, match="superset"):
             pagerank(e, vertices=v)
 
+    def test_null_endpoint_edges_are_dropped(self, spark):
+        """Derived vertices are the non-null endpoints; an edge with a
+        null endpoint carries no rank and adds no out-degree (the
+        distributed loop once kept a null vertex and leaked rank mass)."""
+        from xwikire_spark.pipeline.graph import pagerank
+
+        extra = [(None, "a"), ("c", None), ("g", None), (None, None)]
+        e = spark.createDataFrame(
+            self.EDGES + extra, "src string, dst string"
+        )
+        got = {r["id"]: r["rank"] for r in pagerank(e).collect()}
+        want = self._numpy_ranks(ids=self.VERTS)
+        assert set(got) == set(want)
+        for k in want:
+            assert abs(got[k] - want[k]) < 1e-9, (k, got[k], want[k])
+
     def test_uniform_on_cycle_and_derived_vertices(self, spark):
         import pandas as pd
 
@@ -896,3 +1075,66 @@ def test_pagerank_vertices_count_toward_the_bound(spark, monkeypatch):
         assert set(got) == set(want)
         for k in want:
             assert abs(got[k] - want[k]) < 1e-9, (bound, k)
+
+
+SALIENCE_CASES = {
+    "multi_edges": [
+        ("a", "b", "c1"), ("a", "b", "c1"), ("a", "b", "c2"),
+        ("b", "a", "c1"), ("b", "c", "c2"), ("c", "a", "c3"),
+    ],
+    "null_subj_obj_conv": [
+        ("a", "b", "c1"), (None, "a", "c1"), ("b", None, "c2"),
+        ("b", "c", None), (None, None, "c3"), ("c", "a", "c1"),
+        ("d", None, "c4"),
+    ],
+    "dangling": [
+        ("a", "b", "c1"), ("a", "c", "c1"), ("b", "d", "c2"),
+        ("c", "d", "c2"), ("e", "a", "c3"),
+    ],
+    "rank_ties": [
+        ("c", "d", "c1"), ("a", "b", "c1"), ("e", "f", "c2"),
+        ("d", "c", "c2"), ("b", "a", "c3"), ("g", "h", "c3"),
+    ],
+}
+
+
+@pytest.mark.parametrize("top_k", [3, 100])
+@pytest.mark.parametrize("case", sorted(SALIENCE_CASES))
+def test_entity_salience_driver_matches_distributed(
+    spark, monkeypatch, case, top_k
+):
+    """``entity_salience`` computed on the driver and, with the bound
+    monkeypatched to 0, by the Spark aggregates and the distributed
+    PageRank loop: same schema, same entities in the same order, same
+    degree stats and ranks within 1e-9 — on multi-edges, null
+    subj/obj/conv_id, dangling vertices, exact rank ties (ordered by
+    entity_id) and a top_k larger than the entity count."""
+    from xwikire_spark.pipeline import graph
+
+    triples = spark.createDataFrame(
+        SALIENCE_CASES[case], "subj string, obj string, conv_id string"
+    )
+    real, calls, got = graph._salience_numpy, [], {}
+    monkeypatch.setattr(
+        graph, "_salience_numpy",
+        lambda *a, **k: calls.append(a) or real(*a, **k),
+    )
+    for bound in (graph.DRIVER_LOOP_MAX_ROWS, 0):
+        monkeypatch.setattr(graph, "DRIVER_LOOP_MAX_ROWS", bound)
+        n_calls = len(calls)
+        df = graph.entity_salience(triples, top_k=top_k)
+        got[bound] = (df.schema, [tuple(r) for r in df.collect()])
+        assert (len(calls) > n_calls) == (bound > 0), bound
+    (schema, rows), (schema0, rows0) = got.values()
+    assert schema == schema0
+    ids = {v for t in SALIENCE_CASES[case] for v in t[:2] if v is not None}
+    assert len(rows) == min(top_k, len(ids))
+    assert [r[0] for r in rows] == list(range(1, len(rows) + 1))
+    assert [r[1] for r in rows] == [r[1] for r in rows0]
+    assert [r[3:] for r in rows] == [r[3:] for r in rows0]
+    for r, r0 in zip(rows, rows0):
+        assert abs(r[2] - r0[2]) < 1e-9, (r, r0)
+    for r, nxt in zip(rows, rows[1:]):
+        assert (-r[2], r[1]) < (-nxt[2], nxt[1])
+    if case == "rank_ties":  # the two 2-cycles tie, a..d in id order
+        assert "".join(r[1] for r in rows)[:4] == "abcd"[:len(rows)]

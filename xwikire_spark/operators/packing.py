@@ -169,10 +169,11 @@ def pack_sequences_incremental(
         .drop("__cum")
     )
     spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     out.withColumn("batch_id", F.lit(batch_id)).write.mode(
         "overwrite"
-    ).partitionBy("batch_id").parquet(_os.path.join(state_dir, "packed"))
+    ).option("partitionOverwriteMode", "dynamic").partitionBy(
+        "batch_id"
+    ).parquet(_os.path.join(state_dir, "packed"))
     hi = df.agg(F.max(order_col).alias("hi")).collect()[0]["hi"]
     tmp = state_p + ".tmp"
     with open(tmp, "w") as f:

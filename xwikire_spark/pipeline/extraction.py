@@ -61,12 +61,12 @@ def segment_turns(transcripts: DataFrame) -> DataFrame:
 
 
 def _alias_surface_ids(alias_dict: DataFrame) -> list[tuple[str, str]]:
-    """(alias, entity_id) pairs — collisions preserved (one pair per id)."""
-    return [
-        (r["alias"], r["entity_id"])
-        for r in alias_dict.select("alias", "entity_id").distinct().collect()
-        if r["alias"]
-    ]
+    """(alias, entity_id) pairs — collisions preserved (one pair per id).
+    The dictionary is collected once with Arrow and deduplicated on the
+    driver (a Spark ``distinct`` would add a shuffle job)."""
+    t = alias_dict.select("alias", "entity_id").toArrow()
+    pairs = zip(*(t.column(c).to_pylist() for c in ("alias", "entity_id")))
+    return [p for p in dict.fromkeys(pairs) if p[0]]
 
 
 def _predicate_surface_ids(predicate_dict: DataFrame) -> list[tuple[str, str]]:

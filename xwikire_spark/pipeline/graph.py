@@ -9,6 +9,15 @@ obj)), bucketed by pmod(xxhash64(conv_id)) through pipeline.manifests so
 they inherit checkpointed resume. Vertices = one row per entity with
 degree stats, bucketed by entity hash — the side the canonicalization and
 entity-serving layers read.
+
+Size-adaptive throughout, with one bound, ``DRIVER_LOOP_MAX_ROWS``: an
+edge table of at most that many rows is collected once with Arrow, and
+the vertex table (``materialize_graph``) or the whole salience answer —
+vertex stats, PageRank and the top-k (``entity_salience``) — is computed
+on the driver in numpy (``_vertex_stats``, ``_power_iteration``) and
+returned as a local frame. Above the bound the same answers come from
+Spark aggregates and the distributed PageRank loop. Both paths give the
+same rows.
 """
 
 from __future__ import annotations
@@ -23,13 +32,21 @@ from pyspark.sql import functions as F
 # at most this many rows: its distinct edges, plus its vertex rows where
 # those are collected too. Both read the row counts from jobs they run
 # anyway, so choosing a path costs no extra job; above the bound the
-# distributed loops run. Measured on a 4-core host (local[4]) with seeded
-# random graphs of 12-character string ids, one run per point: the driver
-# path was faster at every size tried, 1e4 to 3e6 rows (at 1e6: PageRank
-# 5.3 s vs 25.8 s, CC 4.8 s vs 61.0 s), so the bound is set by driver
-# memory, not by a crossover: at 1e6 rows the Python driver grew by 92 MB
-# (PageRank) and 66 MB (CC), at 3e6 by 259 MB and 194 MB
-# (``scripts/driver_loop_bound.py`` repeats the measurement).
+# distributed loops run. The vertex table and the salience answer are
+# built on the driver from an edge table of at most this many rows (one
+# row per triple, three string columns: it is collected whole); its
+# count comes from the manifests or from the salience checkpoint's job.
+# Measured on a 4-core host (local[4]) with seeded random graphs of
+# 12-character string ids (triples: n rows over n/4 entities and n/8
+# conversations), one run per point: the driver path was faster at
+# every size tried, 1e4 to 3e6 rows (at 1e6: PageRank 5.3 s vs 25.8 s,
+# CC 4.8 s vs 61.0 s, salience 4.2 s vs 50.1 s, the vertex table built
+# and written 5.3 s vs 8.0 s), so the bound is set by driver memory, not
+# by a crossover: at 1e6 rows the Python driver grew by 92 MB (PageRank),
+# 66 MB (CC), 145 MB (salience) and 137 MB (vertex table), at 3e6 by
+# 259, 194, 433 and 421 MB. The vertex table nears its crossover at 3e6
+# (12.3 s vs 13.0 s). ``scripts/driver_loop_bound.py`` repeats the
+# measurement.
 DRIVER_LOOP_MAX_ROWS = 1_000_000
 
 
@@ -39,7 +56,9 @@ def vertex_table(triples: DataFrame) -> DataFrame:
     entity appears in, either role — the roles are unioned before the
     countDistinct, so a conversation where the entity is both subject and
     object counts once; ADVICE r2 flagged the earlier role-summed double
-    count). Three hash aggregates on the (small) entity key."""
+    count). One hash aggregate on the (small) entity key; a null subj or
+    obj forms one null-entity row. ``_vertex_stats`` computes the same
+    rows on the driver."""
     # r7 (guide §2.4): one role-tagged union + ONE aggregate replaces the
     # old three aggregates + two full outer joins (each join another
     # shuffle of the entity key). Identical semantics: conditional counts
@@ -77,18 +96,39 @@ def materialize_graph(
     derived FROM THE WRITTEN EDGES (no recompute of the extraction) and
     bucketed by entity hash. Returns (edges, vertices) read back.
 
+    The vertex table is rebuilt whole on every call and replaces the old
+    one whole (static overwrite), so an entity the new edges no longer
+    name leaves no row behind. The path is chosen from the edge count
+    the manifests already hold (the written count of each bucket, see
+    ``manifests._run_with_manifests``), before anything is collected:
+    at most ``DRIVER_LOOP_MAX_ROWS`` edges are collected once with Arrow
+    as ``(subj, obj, conv_id)``, their vertex stats computed on the
+    driver (``_vertex_stats``) and written from one local frame in one
+    partition (one task, one file per bucket); above the bound
+    ``vertex_table`` aggregates them in Spark.
+
     ``table_format="snapshot"``: both tables are ``sources.snapshots``
     tables — edges get per-batch atomic replace-partitions commits (see
     run_with_manifests), vertices a whole-table overwrite commit per
     refresh (the derived table is rebuilt from the written edges, so
     overwrite IS its natural increment); both keep time travel."""
-    from xwikire_spark.pipeline.manifests import run_with_manifests
-
-    edges = run_with_manifests(
-        spark, transcripts, build_fn, out_dir, n_buckets,
-        table_format=table_format,
+    from xwikire_spark.pipeline.manifests import (
+        _run_with_manifests,
+        read_bucketed,
     )
-    vertices = vertex_table(edges).withColumn(
+
+    edges, n_edges = _run_with_manifests(
+        spark, transcripts, build_fn, out_dir, n_buckets, table_format
+    )
+    if n_edges <= DRIVER_LOOP_MAX_ROWS:
+        vertices = _vertex_frame(
+            spark,
+            edges.select("subj", "obj", "conv_id").toArrow(),
+            edges.schema["subj"].dataType,
+        ).coalesce(1)
+    else:
+        vertices = vertex_table(edges)
+    vertices = vertices.withColumn(
         "part_bucket", F.pmod(F.xxhash64("entity_id"), F.lit(n_buckets))
     )
     v_root = os.path.join(out_dir, "vertices")
@@ -99,11 +139,67 @@ def materialize_graph(
             spark, v_root, vertices, partition_col="part_bucket"
         )
         return edges, snapmod.read_table(spark, v_root)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    vertices.write.mode("overwrite").partitionBy("part_bucket").parquet(
-        v_root
+    vertices.write.mode("overwrite").option(
+        "partitionOverwriteMode", "static"
+    ).partitionBy("part_bucket").parquet(v_root)
+    return edges, read_bucketed(spark, v_root, vertices.schema)
+
+
+_STAT_COLS = ("out_degree", "in_degree", "conv_mentions")
+
+
+def _vertex_stats(t):
+    """``vertex_table`` on the driver, over the Arrow table ``t(subj, obj,
+    conv_id)`` -> (ids, s, o, stats). ``ids`` are the sorted distinct
+    non-null entities (``dense_ids``); ``s`` and ``o`` each row's subject
+    and object index among them (-1 for null). ``stats`` holds the int64
+    arrays out_degree, in_degree and conv_mentions, one entry per id and
+    a last one for the null entity: degrees count rows, and
+    conv_mentions counts the distinct non-null conv_ids over both
+    roles."""
+    import numpy as np
+    import pyarrow as pa
+
+    subj, obj, conv = (t.column(c) for c in ("subj", "obj", "conv_id"))
+    ids, (s, o) = dense_ids(
+        pa.chunked_array(subj.chunks + obj.chunks, subj.type), subj, obj
     )
-    return edges, spark.read.parquet(v_root)
+    _, (c,) = dense_ids(conv, conv)
+    n, n_conv = len(ids), max(int(c.max(initial=-1)) + 1, 1)
+    # the null entity takes index n: vertex_table groups it as one entity
+    e = np.concatenate([s, o]).astype(np.int64)
+    e[e < 0] = n
+    cc = np.concatenate([c, c])
+    pairs = np.unique(e[cc >= 0] * n_conv + cc[cc >= 0])
+    stats = [
+        np.bincount(e[:len(s)], minlength=n + 1),
+        np.bincount(e[len(s):], minlength=n + 1),
+        np.bincount(pairs // n_conv, minlength=n + 1),
+    ]
+    return ids, s, o, stats
+
+
+def _vertex_frame(spark, t, id_type) -> DataFrame:
+    """The rows of ``vertex_table`` over the collected Arrow table
+    ``t(subj, obj, conv_id)``, as one local frame of the same schema: the
+    non-null entities in id order, then the null entity if any subj or
+    obj is null."""
+    import pyarrow as pa
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    ids, _, _, stats = _vertex_stats(t)
+    keep = len(ids) + int(stats[0][-1] + stats[1][-1] > 0)
+    return spark.createDataFrame(
+        pa.table(
+            {"entity_id": pa.concat_arrays(
+                [ids, pa.nulls(keep - len(ids), ids.type)])}
+            | {k: v[:keep] for k, v in zip(_STAT_COLS, stats)}
+        ),
+        StructType(
+            [StructField("entity_id", id_type)]
+            + [StructField(k, LongType(), False) for k in _STAT_COLS]
+        ),
+    )
 
 
 def entity_salience(
@@ -117,43 +213,22 @@ def entity_salience(
 
     -> (salience_rank, entity_id, rank, out_degree, in_degree,
     conv_mentions), salience_rank 1..top_k descending by rank (entity_id
-    tiebreak — a total order, so ranks are deterministic).
+    tiebreak — a total order, so ranks are deterministic). Entities are
+    the non-null subj/obj values; a triple with a null endpoint adds to
+    the other endpoint's stats but is no PageRank edge.
 
-    The <= k rows of ``_salience_topk`` are collected with Arrow,
-    numbered 1..k on the driver and returned as a local frame with an
-    explicit schema."""
+    The triples' ``(subj, obj, conv_id)`` are checkpointed once, and that
+    job counts them. At most ``DRIVER_LOOP_MAX_ROWS`` rows are collected
+    once with Arrow and the whole answer is computed on the driver
+    (``_salience_numpy``); above the bound ``_salience_topk`` computes it
+    in Spark and its <= k rows are collected and numbered 1..k on the
+    driver. Either way the result is a local frame with an explicit
+    schema, and ``F.round`` stays a Spark expression: Python's ``round``
+    rounds half to even, Spark's half up."""
     import pyarrow as pa
+    from pyspark.sql import Observation
     from pyspark.sql.types import LongType, StructField, StructType
 
-    top = _salience_topk(triples, damping, n_iter, top_k)
-    schema = StructType(
-        [StructField("salience_rank", LongType(), False)]
-        + top.schema.fields
-    )
-    t = top.toArrow()
-    t = t.add_column(
-        0, "salience_rank", pa.array(range(1, t.num_rows + 1), pa.int64())
-    )
-    return top.sparkSession.createDataFrame(t, schema)
-
-
-def _salience_topk(
-    triples: DataFrame, damping: float, n_iter: int, top_k: int
-) -> DataFrame:
-    """The top-k salience rows, best first, without their rank numbers:
-    (entity_id, rank, out_degree, in_degree, conv_mentions).
-
-    Plan shape: ``orderBy(rank desc, entity_id).limit(top_k)`` — a
-    TakeOrderedAndProject: each partition keeps its own k best rows and
-    only those k-per-partition rows meet, so there is NO Exchange
-    SinglePartition over the vertex table (``row_number() OVER (ORDER BY
-    rank DESC)`` would funnel every vertex through one task).
-    ``splits.global_rank`` ranked ALL vertices first and cost 14 Spark
-    jobs against this plan's 4 on the same joined frame. ``F.round``
-    stays a Spark expression: Python's ``round`` rounds half to even,
-    Spark's half up. The rank⋈degree join keys on entity_id (both sides
-    already aggregated per entity — small next to the edge table);
-    iterative cost lives in ``pagerank`` (see its notes)."""
     # Materialize the triple frame ONCE: it is read by pagerank's init
     # and vertex_table's aggregate — an expensive upstream (the live
     # extraction pipeline) would otherwise re-run per branch (measured 6x
@@ -164,7 +239,99 @@ def _salience_topk(
     # the extraction to materialize its evidence sentences and min_by
     # payload; the narrow projection lets Catalyst prune them out of the
     # upstream aggregate entirely (no consumer here reads id/evidence).
-    triples = triples.select("subj", "obj", "conv_id").localCheckpoint()
+    obs = Observation()
+    triples = (
+        triples.select("subj", "obj", "conv_id")
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    if (dict(obs.get).get("n") or 0) <= DRIVER_LOOP_MAX_ROWS:
+        top = _salience_numpy(triples, damping, n_iter, top_k)
+    else:
+        top = _salience_topk(triples, damping, n_iter, top_k)
+        t = top.toArrow()
+        top = triples.sparkSession.createDataFrame(
+            t.add_column(0, "salience_rank",
+                         pa.array(range(1, t.num_rows + 1), pa.int64())),
+            StructType([StructField("salience_rank", LongType(), False)]
+                       + top.schema.fields),
+        )
+    return top.select(
+        "salience_rank",
+        "entity_id",
+        F.round("rank", 9).alias("rank"),
+        "out_degree",
+        "in_degree",
+        "conv_mentions",
+    )
+
+
+def _salience_numpy(
+    triples: DataFrame, damping: float, n_iter: int, top_k: int
+) -> DataFrame:
+    """``_salience_topk`` on the driver, over the collected ``triples(subj,
+    obj, conv_id)``: the vertex stats (``_vertex_stats``), PageRank over
+    the non-null (subj, obj) pairs collapsed to ``(s, d, cnt)``
+    (``_power_iteration``, the loop of ``_pagerank_numpy``) and the first
+    ``top_k`` entities by (-rank, entity_id) — the ids are sorted, so
+    index order is id order. -> a local frame (salience_rank, entity_id,
+    rank, out_degree, in_degree, conv_mentions), rank unrounded."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import (
+        DoubleType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
+    ids, s, o, stats = _vertex_stats(triples.toArrow())
+    n = len(ids)
+    keep = (s >= 0) & (o >= 0)
+    sd, cnt = np.unique(
+        s[keep].astype(np.int64) * n + o[keep], return_counts=True
+    )
+    r = _power_iteration(
+        n, sd // n, sd % n, cnt.astype(np.float64), damping, n_iter
+    )
+    top = np.lexsort((np.arange(n), -r))[:max(top_k, 0)]
+    return triples.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "salience_rank": np.arange(1, len(top) + 1),
+                "entity_id": ids.take(top),
+                "rank": r[top],
+            }
+            | {k: v[top] for k, v in zip(_STAT_COLS, stats)}
+        ),
+        StructType(
+            [
+                StructField("salience_rank", LongType(), False),
+                StructField("entity_id", triples.schema["subj"].dataType),
+                StructField("rank", DoubleType()),
+            ]
+            + [StructField(k, LongType(), False) for k in _STAT_COLS]
+        ),
+    )
+
+
+def _salience_topk(
+    triples: DataFrame, damping: float, n_iter: int, top_k: int
+) -> DataFrame:
+    """The top-k salience rows, best first, without their rank numbers:
+    (entity_id, rank, out_degree, in_degree, conv_mentions), over the
+    checkpointed ``triples(subj, obj, conv_id)``; rank unrounded.
+
+    Plan shape: ``orderBy(rank desc, entity_id).limit(top_k)`` — a
+    TakeOrderedAndProject: each partition keeps its own k best rows and
+    only those k-per-partition rows meet, so there is NO Exchange
+    SinglePartition over the vertex table (``row_number() OVER (ORDER BY
+    rank DESC)`` would funnel every vertex through one task).
+    ``splits.global_rank`` ranked ALL vertices first and cost 14 Spark
+    jobs against this plan's 4 on the same joined frame. The rank⋈degree
+    join keys on entity_id (both sides already aggregated per entity —
+    small next to the edge table); iterative cost lives in ``pagerank``
+    (see its notes)."""
     e = triples.select(
         F.col("subj").alias("src"), F.col("obj").alias("dst")
     )
@@ -174,13 +341,6 @@ def _salience_topk(
         .join(vertex_table(triples), "entity_id")
         .orderBy(F.col("rank").desc(), F.col("entity_id"))
         .limit(top_k)
-        .select(
-            "entity_id",
-            F.round("rank", 9).alias("rank"),
-            "out_degree",
-            "in_degree",
-            "conv_mentions",
-        )
     )
 
 
@@ -196,7 +356,9 @@ def pagerank(
 
     Inputs: ``edges(src, dst)`` directed (use the triples' (subj, obj)
     projection); ``vertices(id)`` optional — derived from the edges when
-    omitted (isolated vertices then need the explicit frame). A supplied
+    omitted (isolated vertices then need the explicit frame); derived
+    vertices are the non-null endpoints, and an edge with a null endpoint
+    is dropped, on both the driver and the distributed path. A supplied
     ``vertices`` MUST be a superset of the edge endpoints — otherwise the
     ranks-sum-to-N invariant silently breaks (contributions to a dst not
     in vertices drop in the left join, and an out-of-vertex src absorbs
@@ -301,11 +463,21 @@ def pagerank(
     # out-degrees. The vertex count and the dangling-vertex count both
     # ride this single checkpoint job via observe(); since initial ranks
     # are all 1.0, dang0 = n_dangling * 1.0 exactly.
+    # As on the driver path, an edge with a null endpoint is dropped (it
+    # adds no out-degree and carries no rank) while its other endpoint
+    # stays a vertex, and there is no null vertex: null never matches in
+    # the joins, so such a vertex or edge would leak rank mass.
     deg_all = (
-        ewc.select(F.col("src").alias("id"), F.col("cnt").alias("c"))
+        ewc.select(
+            F.col("src").alias("id"),
+            F.when(F.col("dst").isNotNull(), F.col("cnt"))
+            .otherwise(0)
+            .alias("c"),
+        )
         .unionByName(
             ewc.select(F.col("dst").alias("id"), F.lit(0).alias("c"))
         )
+        .where(F.col("id").isNotNull())
         .groupBy("id")
         .agg(F.sum("c").alias("out_deg"))
     )
@@ -349,7 +521,7 @@ def pagerank(
     # cnt == 1 graphs bit-identical (*1 is exact) and multigraphs
     # differing only at the last ulp (gated at 1e-9 by the numpy
     # differential).
-    ew = ewc.join(
+    ew = ewc.where(F.col("dst").isNotNull()).join(
         dv.select(F.col("id").alias("src"), "out_deg"), "src"
     ).localCheckpoint()
 
@@ -412,9 +584,8 @@ def _pagerank_numpy(
 ) -> DataFrame:
     """The power iteration of ``pagerank`` on the driver, over the
     collected weighted edges ``ewc(src, dst, cnt)`` and, when supplied,
-    the collected ``vertices``. Every expression mirrors one Spark column
-    of the distributed loop, in the same order. Ids are non-null: an
-    edge with a null endpoint is dropped."""
+    the collected ``vertices`` (``_power_iteration``). Ids are non-null:
+    an edge with a null endpoint is dropped."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql.types import DoubleType, StructField, StructType
@@ -431,7 +602,22 @@ def _pagerank_numpy(
     keep = (s >= 0) & (d >= 0)
     s, d = s[keep], d[keep]
     cnt = et.column("cnt").to_numpy()[keep].astype(np.float64)
-    n = len(ids)
+    r = _power_iteration(len(ids), s, d, cnt, damping, n_iter)
+    schema = StructType(
+        [StructField("id", id_type), StructField("rank", DoubleType())]
+    )
+    return ewc.sparkSession.createDataFrame(
+        pa.table({"id": ids, "rank": r}), schema
+    )
+
+
+def _power_iteration(n: int, s, d, cnt, damping: float, n_iter: int):
+    """The ranks of ``n`` vertices after ``n_iter`` rounds of PageRank over
+    the weighted edges ``s -> d`` (numpy index arrays) of multiplicity
+    ``cnt`` (float64). Every expression mirrors one Spark column of the
+    distributed loop, in the same order."""
+    import numpy as np
+
     out_deg = np.bincount(s, weights=cnt, minlength=n)
     dangling = out_deg == 0
     r = np.ones(n)
@@ -440,12 +626,7 @@ def _pagerank_numpy(
         msg = np.bincount(d, weights=r[s] / out_deg[s] * cnt, minlength=n)
         r = (1.0 - damping) + damping * (msg + dang / n)
         dang = float(r[dangling].sum())
-    schema = StructType(
-        [StructField("id", id_type), StructField("rank", DoubleType())]
-    )
-    return ewc.sparkSession.createDataFrame(
-        pa.table({"id": ids, "rank": r}), schema
-    )
+    return r
 
 
 def dense_ids(id_col, *cols):

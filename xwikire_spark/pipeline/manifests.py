@@ -27,7 +27,9 @@ there: the fingerprints, each bucket's latest manifest row
 (together they decide the pending buckets and the next ``run_seq``) and
 the written triple count per bucket. The manifest rows are built from
 these collected values as a local frame, so the transcripts are scanned
-once for fingerprints and once for the build.
+once for fingerprints and once for the build; the written counts and
+the latest rows' ``triples_out`` also give the output's row count, which
+``graph.materialize_graph`` sizes its vertex path by.
 
 At 10^12 turns: buckets are the unit of retry/backfill; choose n_buckets so
 one bucket ≈ one executor-hour. Quality counters ride on ``observe()``.
@@ -40,6 +42,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 _MANIFEST_COLS = (
     "bucket", "convs_in", "rows_in", "triples_out", "input_hash", "wall_ms",
@@ -69,6 +72,26 @@ def bucket_fingerprints(transcripts: DataFrame, n_buckets: int) -> DataFrame:
             ),
         )
     )
+
+
+def read_bucketed(
+    spark: SparkSession, root: str, written: StructType | None = None
+) -> DataFrame:
+    """The table at ``root``, written with ``partitionBy("part_bucket")``,
+    read back. ``written`` is the schema of the frame written there:
+    given it, the read takes the schema Spark would infer — the data
+    columns, nullable, then ``part_bucket`` as INT — and runs no
+    schema-inference job. Without it (nothing written in this call) the
+    schema is inferred."""
+    if written is None:
+        return spark.read.parquet(root)
+    return spark.read.schema(
+        StructType(
+            [StructField(f.name, f.dataType) for f in written
+             if f.name != "part_bucket"]
+            + [StructField("part_bucket", IntegerType())]
+        )
+    ).parquet(root)
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -110,9 +133,10 @@ def pending_buckets(
 
 def _plan_buckets(
     spark: SparkSession, transcripts: DataFrame, out_dir: str, n_buckets: int
-) -> tuple[dict[int, tuple[int, int, int]], list[int], int]:
+) -> tuple[dict[int, tuple[int, int, int]], list[int], int, dict[int, int]]:
     """The resume decision on the driver: ({bucket: (convs_in, rows_in,
-    input_hash)}, the sorted pending buckets, the next ``run_seq``).
+    input_hash)}, the sorted pending buckets, the next ``run_seq``,
+    {bucket: triples_out} of each bucket's latest manifest row).
 
     Both inputs have at most ``n_buckets`` rows, so each is collected
     once: the fingerprints, and each bucket's latest manifest row
@@ -125,7 +149,8 @@ def _plan_buckets(
         r["part_bucket"]: (r["convs_in"], r["rows_in"], r["input_hash"])
         for r in bucket_fingerprints(transcripts, n_buckets).collect()
     }
-    latest, last_seq = {}, 0
+    latest, rows_out, last_seq = {}, {}, 0
+    seq = F.coalesce("run_seq", F.lit(0))
     # the manifest holds a few rows per bucket and run: one task reduces
     # them, so the aggregate needs no shuffle (and over a first run's
     # empty frame, no job)
@@ -134,16 +159,17 @@ def _plan_buckets(
         .coalesce(1)
         .groupBy("bucket")
         .agg(
-            F.max_by("input_hash", F.coalesce("run_seq", F.lit(0)))
-            .alias("input_hash"),
+            F.max_by("input_hash", seq).alias("input_hash"),
+            F.max_by("triples_out", seq).alias("triples_out"),
             F.max("run_seq").alias("run_seq"),
         )
         .collect()
     ):
         latest[r["bucket"]] = r["input_hash"]
+        rows_out[r["bucket"]] = r["triples_out"] or 0
         last_seq = max(last_seq, r["run_seq"] or 0)
     pending = sorted(b for b, f in fp.items() if latest.get(b) != f[2])
-    return fp, pending, last_seq + 1
+    return fp, pending, last_seq + 1, rows_out
 
 
 def run_with_manifests(
@@ -162,7 +188,9 @@ def run_with_manifests(
     is one job whose tasks span many buckets).
 
     ``table_format``: ``"parquet"`` = partitioned directory + dynamic
-    partition overwrite (reprocessing a bucket swaps its directory);
+    partition overwrite, set on the write (reprocessing a bucket swaps
+    its directory; the session's overwrite mode is left as it is), read
+    back with the written schema (``read_bucketed``);
     ``"snapshot"`` = ``sources.snapshots`` table — each resume batch is
     ONE atomic versioned commit (``commit_replace_partitions`` on
     part_bucket), readers plan from manifests instead of directory
@@ -170,13 +198,33 @@ def run_with_manifests(
     time-travel to any prior batch's view. Resume semantics (lineage
     manifest, drift detection, idempotent reprocess) are identical.
     """
+    return _run_with_manifests(
+        spark, transcripts, build_fn, out_dir, n_buckets, table_format
+    )[0]
+
+
+def _run_with_manifests(
+    spark: SparkSession,
+    transcripts: DataFrame,
+    build_fn,
+    out_dir: str,
+    n_buckets: int,
+    table_format: str,
+) -> tuple[DataFrame, int]:
+    """``run_with_manifests`` -> (its frame, the frame's row count). The
+    count comes from values collected anyway: the written count of each
+    bucket processed now, and the latest manifest ``triples_out`` of
+    every other bucket with a manifest row. So it costs no job, and it
+    counts the rows on disk as far as the manifest records them."""
     if table_format not in ("parquet", "snapshot"):
         raise ValueError(f"unknown table_format {table_format!r}")
     snap = table_format == "snapshot"
     if snap:
         from xwikire_spark.sources import snapshots as snapmod
     triples_root = os.path.join(out_dir, "triples")
-    fp, todo, run_seq = _plan_buckets(spark, transcripts, out_dir, n_buckets)
+    fp, todo, run_seq, rows_out = _plan_buckets(
+        spark, transcripts, out_dir, n_buckets
+    )
     bucketed = with_bucket(transcripts, n_buckets)
 
     if todo:
@@ -216,13 +264,10 @@ def run_with_manifests(
         else:
             # dynamic partition overwrite: reprocessing a drifted bucket
             # replaces its files instead of appending duplicates — resume
-            # is idempotent.
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            out.write.mode("overwrite").partitionBy("part_bucket").parquet(
-                triples_root
-            )
+            # is idempotent. Set on this write, not on the session.
+            out.write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("part_bucket").parquet(triples_root)
         wall_ms = int((time.time() - t0) * 1000)
         # aggregates over a zero-row write observe NULL (e.g. the sum):
         # coalesce to 0. Local frames are built from Arrow tables, which
@@ -244,7 +289,7 @@ def run_with_manifests(
         written = (
             snapmod.read_table(spark, triples_root, partitions=todo)
             if snap
-            else spark.read.parquet(triples_root).where(
+            else read_bucketed(spark, triples_root, out.schema).where(
                 F.col("part_bucket").isin(todo)
             )
         )
@@ -257,13 +302,14 @@ def run_with_manifests(
         # the manifest rows come from the collected fingerprints: the
         # transcripts are not scanned a second time. One file per append
         # (a local frame is split across the default parallelism).
+        rows_out.update((b, counts.get(b, 0)) for b in todo)
         convs_in, rows_in, input_hash = zip(*(fp[b] for b in todo))
         spark.createDataFrame(
             pa.table({
                 "bucket": todo,
                 "convs_in": convs_in,
                 "rows_in": rows_in,
-                "triples_out": [counts.get(b, 0) for b in todo],
+                "triples_out": [rows_out[b] for b in todo],
                 "input_hash": input_hash,
                 "wall_ms": [wall_ms] * len(todo),
                 "run_seq": [run_seq] * len(todo),
@@ -271,6 +317,10 @@ def run_with_manifests(
             MANIFEST_SCHEMA,
         ).coalesce(1).write.mode("append").parquet(_manifest_path(out_dir))
 
+    n_rows = sum(rows_out.values())
     if snap:
-        return snapmod.read_table(spark, triples_root)
-    return spark.read.parquet(triples_root)
+        return snapmod.read_table(spark, triples_root), n_rows
+    return (
+        read_bucketed(spark, triples_root, out.schema if todo else None),
+        n_rows,
+    )
