@@ -404,7 +404,7 @@ class TestManifests:
         processed now, the latest manifest counts of the others) equals
         the frame's count on a first run, a run with nothing pending, a
         run with one drifted conversation, and a run whose input no
-        longer reaches some buckets (their old files stay and count)."""
+        longer reaches some buckets (their old files go and count 0)."""
         from xwikire_spark.pipeline.manifests import _run_with_manifests
 
         out = str(tmp_path / "m")
@@ -416,6 +416,47 @@ class TestManifests:
                 table_format,
             )
             assert n == df.count() > 0
+
+    @pytest.mark.parametrize("table_format", ["parquet", "snapshot"])
+    def test_buckets_the_input_leaves_lose_their_edges(
+        self, spark, tmp_path, monkeypatch, table_format
+    ):
+        """8 conversations, then 2 of them in the same directory: the
+        buckets the 2 no longer reach lose their edges, so the edges,
+        the vertices and the row count ``_run_with_manifests`` returns
+        equal a fresh run on the 2. Their manifest rows record them as
+        empty: a third run over the 2 finds nothing pending. Then an
+        empty input leaves no edge, vertex or row, also on the run after
+        it, which has nothing pending and no part file to read."""
+        from xwikire_spark.pipeline import manifests
+        from xwikire_spark.pipeline.graph import materialize_graph
+
+        counts, real = [], manifests._run_with_manifests
+
+        def counted(*a):
+            df, n = real(*a)
+            counts.append(n)
+            return df, n
+
+        monkeypatch.setattr(manifests, "_run_with_manifests", counted)
+        rows = [(f"c{i}", f"a{i} b{i} +") for i in range(8)]
+
+        def graph(rows, out):
+            edges, vertices = materialize_graph(
+                spark, _text_transcripts(spark, rows), _text_edges,
+                str(tmp_path / out), n_buckets=4, table_format=table_format,
+            )
+            return [sorted(tuple(r) for r in df.collect())
+                    for df in (edges, vertices)], counts[-1]
+
+        graph(rows, "g")
+        resumed = graph(rows[:2], "g")
+        assert resumed == graph(rows[:2], "fresh")
+        assert len(resumed[0][0]) == resumed[1] == 2
+        assert pending_buckets(
+            spark, _text_transcripts(spark, rows[:2]), str(tmp_path / "g"), 4
+        ) == []
+        assert graph([], "g") == graph([], "g") == ([[], []], 0)
 
     def test_resume_skips_done_buckets(self, spark, corpus, tmp_path):
         _, _, transcripts, alias_df, pred_df = corpus
@@ -1138,3 +1179,91 @@ def test_entity_salience_driver_matches_distributed(
         assert (-r[2], r[1]) < (-nxt[2], nxt[1])
     if case == "rank_ties":  # the two 2-cycles tie, a..d in id order
         assert "".join(r[1] for r in rows)[:4] == "abcd"[:len(rows)]
+
+
+def _codegen_compiles(spark):
+    """Generated classes compiled so far in this JVM (Spark's
+    ``CodegenMetrics``)."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics\
+        .METRIC_COMPILATION_TIME().getCount()
+
+
+def test_second_run_compiles_no_class(spark, corpus, tmp_path):
+    """A fixed sequence of plans run twice — the test-corpus pipeline
+    (graph write + salience) and six operators whose plans do not
+    depend on adaptive execution — compiles no generated class the
+    second time. The sequence needs more than 100 distinct classes,
+    Spark's default cache size, so this holds only while the session's
+    codegen cache holds them all (``session.get_spark``)."""
+    from xwikire_spark.operators.asof import asof_join
+    from xwikire_spark.operators.chunking import chunk_documents
+    from xwikire_spark.operators.dedup import near_duplicates_minhash
+    from xwikire_spark.operators.graph_metrics import triangle_counts
+    from xwikire_spark.operators.quantiles import exact_group_quantiles
+    from xwikire_spark.operators.textstats import scrub_pii
+    from xwikire_spark.pipeline.canonicalize import connected_components
+    from xwikire_spark.pipeline.graph import (
+        entity_salience,
+        materialize_graph,
+    )
+
+    _, _, transcripts, alias_df, pred_df = corpus
+    words = "alpha beta gamma delta epsilon zeta eta theta".split()
+    docs = spark.createDataFrame(
+        [(i, ["en", "de"][i % 2],
+          " ".join(words[(i + j) % 8] for j in range(12))
+          + f" see http://x.org/{i} or mail a{i}@x.org")
+         for i in range(16)],
+        "doc_id long, lang string, text string",
+    )
+    links = spark.createDataFrame(
+        [(i, (i + 1) % 6) for i in range(6)] + [(0, 2), (7, 8)],
+        "src long, dst long",
+    )
+    nodes = spark.createDataFrame([(i,) for i in range(9)], "id long")
+    events = spark.createDataFrame(
+        [(i, i % 3, i * 10, float(i)) for i in range(12)],
+        "event_id long, user_id long, ts long, value double",
+    )
+
+    def build(df):
+        return canonicalize_triples(
+            extract_triples(df, alias_df, pred_df), alias_df
+        )
+
+    def sequence(run):
+        edges, _ = materialize_graph(
+            spark, transcripts, build, str(tmp_path / f"g{run}"), n_buckets=4
+        )
+        entity_salience(edges).collect()
+        near_duplicates_minhash(docs, threshold=0.5).collect()
+        scrub_pii(docs).collect()
+        triangle_counts(links).collect()
+        exact_group_quantiles(
+            docs.withColumn("n_chars", F.length("text")), "n_chars", "lang",
+            [0.5, 1.0], tiebreak_col="doc_id",
+        ).collect()
+        chunk_documents(docs, chunk_tokens=8, overlap=2).collect()
+        asof_join(
+            events.where(F.col("event_id") % 2 == 0).select(
+                "event_id", "user_id", "ts"),
+            events.where(F.col("event_id") % 2 == 1).select(
+                "user_id", "ts", "value"),
+            on="ts", by="user_id",
+        ).collect()
+        connected_components(nodes, links).collect()
+
+    # empty the JVM-wide compiled-class cache first, so the first run
+    # compiles every class the sequence needs whatever ran before it
+    gen = spark._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    )
+    cache = gen.getDeclaredMethod("cache", None)
+    cache.setAccessible(True)
+    cache.invoke(gen.getField("MODULE$").get(None), None).invalidateAll()
+    n = [_codegen_compiles(spark)]
+    for run in range(2):
+        sequence(run)
+        n.append(_codegen_compiles(spark))
+    assert n[1] - n[0] > 100, n
+    assert n[2] - n[1] == 0, n

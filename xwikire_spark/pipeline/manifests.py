@@ -17,9 +17,13 @@ redid everything. Here:
   conv_id;
 - ``input_hash`` (order-insensitive xor of per-row hashes) detects silent
   input drift: a bucket whose hash differs from its latest row is
-  reprocessed. ``run_seq`` (one more than the manifest's largest) orders
-  the rows, so an input that returns to an earlier state (A -> B -> A)
-  does not match A's superseded row.
+  reprocessed. A bucket the input no longer reaches has the empty
+  fingerprint (no conversations, no rows, hash 0, the xor of nothing):
+  while its latest row says otherwise it is pending, its output is
+  removed and its new row records it as empty. ``run_seq`` (one more
+  than the manifest's largest) orders the rows, so an input that
+  returns to an earlier state (A -> B -> A) does not match A's
+  superseded row.
 
 Like the reference's stats dicts, every per-bucket answer is small — at
 most ``n_buckets`` rows — so it is collected to the driver once and used
@@ -94,8 +98,32 @@ def read_bucketed(
     ).parquet(root)
 
 
+# the fingerprint of a bucket with no input rows
+_EMPTY_FP = (0, 0, 0)
+
+
 def _manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, "_manifests")
+
+
+def _glob(spark: SparkSession, pattern: str) -> tuple:
+    """(the Hadoop FileSystem of ``pattern`` — local, HDFS, S3A, ...,
+    the paths matching it; none when nothing matches)."""
+    path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(pattern)
+    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs, [st.getPath() for st in fs.globStatus(path) or []]
+
+
+def _drop_bucket_dirs(spark: SparkSession, root: str, buckets) -> None:
+    """Delete ``root/part_bucket=<b>`` for each of ``buckets`` that
+    exists. Dynamic partition overwrite replaces only the buckets a
+    write produces rows for, so a reprocessed bucket whose new output is
+    empty would keep its old files."""
+    names = {f"part_bucket={b}" for b in buckets}
+    fs, paths = _glob(spark, root + "/part_bucket=*")
+    for p in paths:
+        if p.getName() in names:
+            fs.delete(p, True)
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -108,12 +136,8 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     empty frame is a local relation, so a first run starts no job."""
     import pyarrow as pa
 
-    jvm = spark.sparkContext._jvm
-    pattern = jvm.org.apache.hadoop.fs.Path(
-        _manifest_path(out_dir) + "/*.parquet"
-    )
-    fs = pattern.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    files = [st.getPath().toString() for st in fs.globStatus(pattern) or []]
+    _, paths = _glob(spark, _manifest_path(out_dir) + "/*.parquet")
+    files = [p.toString() for p in paths]
     if not files:
         return spark.createDataFrame(
             pa.schema([(c, pa.int64()) for c in _MANIFEST_COLS]).empty_table(),
@@ -125,8 +149,9 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
 def pending_buckets(
     spark: SparkSession, transcripts: DataFrame, out_dir: str, n_buckets: int
 ) -> list[int]:
-    """Buckets not yet present in the manifest (or whose input changed
-    since the bucket's latest row) — the resume anti-join
+    """Buckets not yet present in the manifest, whose input changed
+    since the bucket's latest row, or that the input no longer reaches
+    while their latest row is not empty — the resume anti-join
     (J8 / src/scripts/extract_unprocessed.py:20-45)."""
     return _plan_buckets(spark, transcripts, out_dir, n_buckets)[1]
 
@@ -142,7 +167,9 @@ def _plan_buckets(
     once: the fingerprints, and each bucket's latest manifest row
     (none on a first run, whose manifest frame is empty). A bucket is
     pending when it has no manifest row or its input hash differs from
-    its latest row's. Rows written before ``run_seq`` existed read it as
+    its latest row's; a bucket with a manifest row and no input rows
+    takes the empty fingerprint, so it is pending until a row records it
+    as empty. Rows written before ``run_seq`` existed read it as
     NULL and rank oldest. The next ``run_seq`` is one more than the
     largest written."""
     fp = {
@@ -168,6 +195,8 @@ def _plan_buckets(
         latest[r["bucket"]] = r["input_hash"]
         rows_out[r["bucket"]] = r["triples_out"] or 0
         last_seq = max(last_seq, r["run_seq"] or 0)
+    for b in latest.keys() - fp.keys():
+        fp[b] = _EMPTY_FP
     pending = sorted(b for b, f in fp.items() if latest.get(b) != f[2])
     return fp, pending, last_seq + 1, rows_out
 
@@ -257,14 +286,18 @@ def _run_with_manifests(
         if snap:
             # one atomic versioned commit per resume batch; a drifted
             # bucket's files fall out of the new manifest (old versions
-            # keep them — time travel), so reprocess is idempotent
+            # keep them — time travel), so reprocess is idempotent. Every
+            # todo bucket is replaced, so one left without rows is empty.
             snapmod.commit_replace_partitions(
-                spark, triples_root, out, "part_bucket"
+                spark, triples_root, out, "part_bucket", partitions=todo
             )
         else:
             # dynamic partition overwrite: reprocessing a drifted bucket
             # replaces its files instead of appending duplicates — resume
-            # is idempotent. Set on this write, not on the session.
+            # is idempotent. Set on this write, not on the session. It
+            # replaces only the buckets the write has rows for, so the
+            # todo buckets' old files go first.
+            _drop_bucket_dirs(spark, triples_root, todo)
             out.write.mode("overwrite").option(
                 "partitionOverwriteMode", "dynamic"
             ).partitionBy("part_bucket").parquet(triples_root)
@@ -320,7 +353,12 @@ def _run_with_manifests(
     n_rows = sum(rows_out.values())
     if snap:
         return snapmod.read_table(spark, triples_root), n_rows
-    return (
-        read_bucketed(spark, triples_root, out.schema if todo else None),
-        n_rows,
-    )
+    schema = out.schema if todo else None
+    if schema is None and not n_rows:
+        # no part file records the schema (an output without rows, e.g.
+        # every bucket left by the input, has none): plan the build over
+        # no rows for it
+        schema = with_bucket(
+            build_fn(bucketed.drop("part_bucket").limit(0)), n_buckets
+        ).schema
+    return read_bucketed(spark, triples_root, schema), n_rows

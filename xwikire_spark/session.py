@@ -10,8 +10,28 @@ scheduler. Every knob here exists to keep the 100 TB plan healthy:
 - Arrow on with a bounded batch size — all Python kernels run as vectorized
   pandas UDFs (BASELINE.json input_hint mandates no per-row Python).
 - UTC session timezone — deterministic timestamps across executors/oracles.
-- shuffle partitions default to 2x cores locally; on a real cluster this is
-  overridden via spark-submit --conf (AQE coalesces the excess anyway).
+- shuffle partitions default to ``max(DEFAULT_CPUS, 32)``, and
+  ``DEFAULT_CPUS`` is ``$SPARK_GRAFT_CPUS`` or 32 when it is unset; on a
+  real cluster this is overridden via spark-submit --conf (AQE coalesces
+  the excess anyway).
+- codegen cache of 1,000 compiled classes (Spark's default is 100). The
+  program is a fixed set of plans run again and again (resume batches,
+  bench samples, benchmark repetitions). Spark keeps each plan's compiled
+  class in this cache and evicts the least recently used, so a pass
+  that needs more than 100 distinct classes recompiles them on every
+  repetition, and the JVM interprets and re-JITs them. Measured on
+  a 4-core host (``local[4]``) with a 10,000-entry cache, one run
+  compiles 369 distinct classes for ``bench.py`` at sf0.1 (the largest),
+  219 for perfbench ``operators``, 74 for ``kg_small`` and 60 for
+  ``scripts/run_pipeline.py``: 1,000 holds the largest 2.7 times over.
+  The cache belongs to each JVM (driver and every executor), and a full
+  one costs about the memory of a thrashed one: at the end of a
+  ``bench.py`` run Metaspace read 169 MB at 100 entries and 172 MB at
+  1,000, and the JVM's peak RSS 4.20 and 3.96 GB; after 30 s of
+  ``operators`` passes, 177 and 170 MB, 1.71 and 1.46 GB. The conf is
+  static: it takes effect only when ``get_spark`` creates the session,
+  and a caller that wants another size passes it in ``extra_conf``,
+  which is applied last.
 """
 
 from __future__ import annotations
@@ -57,20 +77,23 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Input split size (guide §2.5 input skew / §6): parameterised via
-        # env because the right value is deployment-dependent. The LOCAL
-        # default is 16m: the bench corpus arrives as single 100-MB-class
-        # parquet files, and the default 128m packs a whole table into ONE
-        # scan task, serializing every pre-shuffle stage on one of 32
-        # cores (measured: lineitem 6M rows = 1 task). On a real cluster
-        # reading thousands of files, raise to 512m-1g (guide §6: fewer,
-        # larger map tasks feeding each shuffle).
+        # env because the right value is deployment-dependent. Spark caps
+        # a split at the smaller of this value and the input's bytes per
+        # core (at least 4 MB), so a small local input is still spread
+        # over every core while a cluster reading thousands of files gets
+        # fewer, larger map tasks feeding each shuffle (guide §6:
+        # 512m-1g). On 4 cores every bench.py leaf at sf0.1 runs the same
+        # task count at 16m and at 512m.
         .config(
             "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
+            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "512m"),
         )
         .config("spark.executorEnv.PYTHONPATH", repo_root)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # compiled-class cache per JVM, sized to the program's plans: see
+        # the module docstring for the measured working sets
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -257,6 +257,7 @@ def _commit(
     keep_parent_files: bool,
     partition_col: str | None = None,
     replace_partitions: bool = False,
+    partitions=(),
 ) -> dict:
     import pyarrow as pa
 
@@ -291,9 +292,12 @@ def _commit(
             # files in partitions this commit rewrote fall out of the new
             # manifest (their bytes stay on disk for time travel, expired
             # later) — the set of touched partitions comes from the files
-            # just written, zero extra jobs
+            # just written, zero extra jobs — plus the ``partitions``
+            # named by the caller, which this commit leaves empty if it
+            # wrote no file there
             touched = sorted(
                 {r["partition"] for r in new_rows if r["partition"]}
+                | {f"{partition_col}={v}" for v in partitions}
             )
             parent_manifest = parent_manifest.where(
                 F.col("partition").isNull()
@@ -372,7 +376,11 @@ def commit_overwrite(
 
 
 def commit_replace_partitions(
-    spark: SparkSession, root: str, df: DataFrame, partition_col: str
+    spark: SparkSession,
+    root: str,
+    df: DataFrame,
+    partition_col: str,
+    partitions=(),
 ) -> dict:
     """Dynamic partition overwrite as ONE atomic snapshot commit (the
     Iceberg ``REPLACE PARTITIONS`` / Spark dynamic-overwrite analog, but
@@ -380,10 +388,13 @@ def commit_replace_partitions(
     everything else is carried forward from the parent manifest
     untouched. The resume path's idempotent bucket reprocess rides on
     this — a drifted bucket replaces its files in the NEW snapshot while
-    readers pinned to the old version still see the old bucket."""
+    readers pinned to the old version still see the old bucket.
+    ``partitions`` names partition values replaced as well, rows or not:
+    one that ``df`` has no rows in is left empty."""
     return _commit(
         spark, root, df, "replace", keep_parent_files=True,
         partition_col=partition_col, replace_partitions=True,
+        partitions=partitions,
     )
 
 
