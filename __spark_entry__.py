@@ -1243,15 +1243,6 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     return near_duplicates_minhash(docs, threshold=0.8)
 
 
-def q_dedup_simhash(spark, sf_dir):
-    """SimHash banding — md5-bit flavor (dedup.simhash_md5), which both
-    engines can compute, so bands + fingerprint are value-hash checked;
-    the xxhash64 production flavor shares the identical vote/band logic."""
-    from xwikire_spark.operators.dedup import simhash_md5
-
-    return simhash_md5(_load(spark, sf_dir, "documents"))
-
-
 def q_ann_topk_cosine(spark, sf_dir):
     """Brute-force cosine top-k (query set = vec_id < 8)."""
     from xwikire_spark.operators.similarity import cosine_topk_bruteforce
@@ -1470,44 +1461,6 @@ FROM shared
 JOIN sizes sa ON sa.doc_id = doc_a
 JOIN sizes sb ON sb.doc_id = doc_b
 WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= {threshold}
-"""
-
-
-def _simhash_md5_oracle_sql() -> str:
-    """Same md5-hex-digit bit votes as dedup.simhash_md5, generated."""
-
-    def digit(i: int) -> str:
-        return f"(strpos('0123456789abcdef', substr(h, {i + 1}, 1)) - 1)"
-
-    votes = ",\n    ".join(
-        f"SUM(2 * (({digit(b // 4)} // {1 << (b % 4)}) % 2) - 1) AS v{b}"
-        for b in range(64)
-    )
-
-    def bit(b: int) -> str:
-        return f"(CASE WHEN v{b} >= 0 THEN 1 ELSE 0 END)"
-
-    bands = ",\n    ".join(
-        "CAST("
-        + " + ".join(f"{bit(16 * j + off)} * {1 << off}" for off in range(16))
-        + f" AS INT) AS band{j}"
-        for j in range(4)
-    )
-    return f"""
-WITH tok AS (
-  SELECT doc_id, unnest(string_split(coalesce(text, ''), ' ')) AS tok
-  FROM documents
-),
-hashed AS (SELECT doc_id, md5(tok) AS h FROM tok),
-votes AS (SELECT doc_id,
-    {votes}
-  FROM hashed GROUP BY doc_id),
-bands AS (SELECT doc_id,
-    {bands}
-  FROM votes)
-SELECT doc_id, band0, band1, band2, band3,
-       printf('%04x%04x%04x%04x', band0, band1, band2, band3) AS simhash_hex
-FROM bands
 """
 
 

@@ -1,11 +1,9 @@
 """Driver-contract smoke: entry() runs and the queries()/oracle_sql() maps
 stay consistent (every oracle key has a query; flagship schema stable),
 every library module sits on an import path from a declared entry
-point, and every top-level function or class is named outside tests."""
+point, and every top-level definition is used by code outside tests."""
 
 import ast
-import re
-from collections import Counter
 from pathlib import Path
 
 import __spark_entry__ as entry_mod
@@ -30,7 +28,6 @@ UNREACHED = {
     # operator; only their own tests import them
     "kernels.aacmeta",
     "kernels.mp3meta",
-    "kernels.wavcodec",
     "kernels.webpmeta",
     # paper stages downstream of the KG (typed facts, negative examples,
     # QA assembly, WikiReading documents) that no query or pipeline
@@ -41,34 +38,33 @@ UNREACHED = {
     "pipeline.wikireading",
 }
 
-# Top-level functions and classes of reached modules whose name no .py
-# file outside tests/ mentions outside their own definition, and why each
-# is still here. The dict may only shrink, like UNREACHED.
+# Top-level definitions (functions, classes and assignments) of reached
+# modules that no code outside tests/ uses, and why each is still here.
+# The dict may only shrink, like UNREACHED.
 TEST_ONLY = {
     "__spark_entry__.q_kg_triples_pipeline":
         "pytest gate of the fused kernel against the flagship query",
-    "__spark_entry__.q_dedup_simhash":
-        "md5 SimHash twin, gated by pytest since it left queries()",
-    "__spark_entry__._simhash_md5_oracle_sql":
-        "DuckDB oracle of q_dedup_simhash",
     "datagen.claim_rows":
         "claims-table generator for pipeline.facts (ROADMAP 1d decides)",
     "datagen.entity_label_rows":
         "entity-label generator for pipeline.facts (ROADMAP 1d decides)",
     "kernels.matching.find_matches":
         "WikiReading answer-token match; pipeline.wikireading is unreached",
-    "kernels.pos.pos_tag_perceptron":
-        "per-call perceptron tagger; srl broadcasts the model instead",
     "kernels.pos_corpus.evaluate":
         "held-out accuracy gate of the perceptron corpus",
+    "kernels.pos_data.HELDOUT_CORPUS":
+        "held-out sentences the perceptron tests score against",
     "kernels.tokenizer.sentence_break_indices":
         "WikiReading break levels; pipeline.wikireading is unreached",
     "kernels.tokenizer.paragraph_break_indices":
         "WikiReading break levels; pipeline.wikireading is unreached",
-    "operators.packing.pack_sequences_incremental":
-        "append-only packing; no query or pipeline stage packs batches",
-    "pipeline.extraction.segment_turns":
-        "sentence-per-row view of the fused kernel's segmentation",
+    "operators.dedup.decontaminate":
+        "its excise tests are the targeted tests of excise_plan_exprs and "
+        "excise_kept_expr, which q_txt_hygiene inlines",
+    "operators.textstats.langid_score":
+        "per-text reference scorer the langid UDF is tested against",
+    "sources.compaction.partition_hash":
+        "row-content hash the compaction tests compare before and after",
     "sources.compaction.read_partitioned":
         "one-line reader the compaction tests use",
     "sources.io.write_jsonl": "S7 JSONL sink; only the QA-chain tests use it",
@@ -80,8 +76,11 @@ TEST_ONLY = {
         "S11 SQuAD source; no stage reads SQuAD JSON yet",
     "sources.snapshots.commit_append":
         "append commit; the manifest run only replaces partitions",
+    "sources.snapshots.expire_snapshots":
+        "snapshot retention, run out of band of the pipeline",
+    "sources.snapshots.snapshot_log":
+        "snapshot history for inspection, run out of band of the pipeline",
 }
-
 
 class TestDriverContract:
     def test_entry_smoke(self, spark):
@@ -161,10 +160,11 @@ def _reached_files():
     return seen
 
 
-def _module_name(f):
-    rel = f.relative_to(REPO / "xwikire_spark").with_suffix("")
-    parts = rel.parts[:-1] if rel.name == "__init__" else rel.parts
-    return ".".join(parts)
+def _module_name(rel):
+    """Dotted name of a library file below ``xwikire_spark/``, from its
+    path relative to the repo."""
+    parts = rel.with_suffix("").parts[1:]
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
 
 
 def test_every_library_module_is_reachable():
@@ -178,42 +178,126 @@ def test_every_library_module_is_reachable():
         ):
             continue  # docstring-only package marker
         if f not in seen:
-            unreached.add(_module_name(f))
+            unreached.add(_module_name(f.relative_to(REPO)))
     assert unreached - UNREACHED == set(), "new module no entry point imports"
     assert UNREACHED - unreached == set(), "now reachable: drop from UNREACHED"
 
 
+def _refs(node):
+    """Every name ``node`` uses in code: names, attributes and imports
+    (f-string expressions included). Docstrings, comments and other
+    strings are not code."""
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+        elif isinstance(n, ast.alias):
+            yield from n.name.split(".")
+            if n.asname:
+                yield n.asname
+
+
+def _defined(node):
+    """The names a top-level statement defines: a def or class, or the
+    plain names an assignment binds (UDF objects and schemas)."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        return [t.id for t in node.targets if isinstance(t, ast.Name)]
+    if isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+        return [node.target.id]
+    return []
+
+
+def _test_only(sources):
+    """Top-level definitions of ``__spark_entry__.py`` and of the library
+    modules not in UNREACHED among ``sources`` ({path relative to the
+    repo: source}) that no live code uses, as ``module.name``. Live code
+    is everything outside those modules (scripts, benchmarks, and the
+    UNREACHED modules, whose debt that list already holds), their other
+    top-level statements, ``entry``, and, to a fixed point, the definitions
+    live code names. So a use from inside a definition only tests reach
+    does not count, nor does a definition's use of itself. Dunder names
+    are skipped."""
+    live = {"entry"}  # the entry contract: called by name from outside
+    defs = {}  # module.name -> (name, names its definition uses)
+    for rel, src in sources.items():
+        tree = ast.parse(src)
+        if rel == Path("__spark_entry__.py"):
+            mod = "__spark_entry__"
+        elif (
+            rel.parts[0] == "xwikire_spark"
+            and _module_name(rel) not in UNREACHED
+        ):
+            mod = _module_name(rel)
+        else:
+            live.update(_refs(tree))
+            continue
+        for node in tree.body:
+            names = [n for n in _defined(node) if not n.startswith("__")]
+            uses = set(_refs(node))
+            for n in names:
+                defs[f"{mod}.{n}"] = (n, uses - {n})
+            if not names:
+                live |= uses
+    dead = set(defs)
+    grew = True
+    while grew:
+        reached = {k for k in dead if defs[k][0] in live}
+        dead -= reached
+        for k in reached:
+            live |= defs[k][1]
+        grew = bool(reached)
+    return dead
+
+
 def test_every_library_function_is_referenced():
-    """Each top-level def/class of ``__spark_entry__.py`` and of every
-    module not in UNREACHED is named, as a whole word, in some .py file
-    outside tests/ other than inside its own definition (a recursive call
-    or an error message naming itself is not a caller)."""
+    """Each top-level definition of ``__spark_entry__.py`` and of every
+    module not in UNREACHED is used by code outside tests/ (``_test_only``
+    finds the ones that are not)."""
     sources = {
-        f: f.read_text()
+        f.relative_to(REPO): f.read_text()
         for f in REPO.rglob("*.py")
         if not any(
             p == "tests" or p.startswith(".")
             for p in f.relative_to(REPO).parts
         )
     }
-    words = Counter(w for t in sources.values() for w in re.findall(r"\w+", t))
-    modules = {REPO / "__spark_entry__.py": "__spark_entry__"}
-    for f in (REPO / "xwikire_spark").rglob("*.py"):
-        if _module_name(f) not in UNREACHED:
-            modules[f] = _module_name(f)
-    unreferenced = set()
-    for f, mod in modules.items():
-        lines = sources[f].splitlines()
-        for node in ast.parse(sources[f]).body:
-            if not isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ):
-                continue
-            body = "\n".join(lines[node.lineno - 1 : node.end_lineno])
-            own = re.findall(rf"\b{node.name}\b", body)
-            if words[node.name] == len(own):
-                unreferenced.add(f"{mod}.{node.name}")
+    unreferenced = _test_only(sources)
     assert unreferenced - set(TEST_ONLY) == set(), "new test-only name"
     assert set(TEST_ONLY) - unreferenced == set(), (
         "now referenced or gone: drop from TEST_ONLY"
     )
+
+
+def test_test_only_reads_code_not_prose():
+    """The scan on synthetic sources: a name in a docstring, a comment or
+    a string is not a use; a use from a test-only definition is not
+    either; an f-string expression is; ``entry`` is a root."""
+    sources = {
+        Path("__spark_entry__.py"): (
+            "from xwikire_spark.m import used\n"
+            "def entry(spark):\n"
+            "    return used(spark)\n"
+        ),
+        Path("xwikire_spark/m.py"): (
+            '"""prose_only is named here."""\n'
+            "# and prose_only here\n"
+            "def prose_only():\n"
+            "    return 1\n"
+            "def via_test_only():\n"
+            "    return 2\n"
+            "def test_only_caller():\n"
+            "    return via_test_only()\n"
+            "def in_fstring(x):\n"
+            "    return x\n"
+            "SCHEMA = 'a int'\n"
+            "def used(spark):\n"
+            "    return f\"{in_fstring(SCHEMA)} prose_only\"\n"
+        ),
+        Path("scripts/run.py"): "print('prose_only')\n",
+    }
+    assert _test_only(sources) == {
+        "m.prose_only", "m.via_test_only", "m.test_only_caller",
+    }

@@ -1,6 +1,5 @@
 """Operator-level behavior tests: MinHash-LSH recall on planted near-dups,
-SimHash band collisions, ANN recall vs brute force, vocab ranks,
-round-robin balancing."""
+ANN recall vs brute force, vocab ranks, round-robin balancing."""
 
 import random
 
@@ -59,32 +58,6 @@ class TestMinHashLSH:
         a = {r.doc_id: r.sig for r in minhash_signatures(docs).collect()}
         b = {r.doc_id: r.sig for r in minhash_signatures(docs).collect()}
         assert a == b
-
-
-class TestSimHash:
-    def test_near_dups_collide_on_a_band(self, spark):
-        from xwikire_spark.operators.dedup import simhash
-
-        rows, planted = _mk_docs(n_base=20)
-        docs = spark.createDataFrame(pd.DataFrame(rows))
-        sh = {r.doc_id: r for r in simhash(docs).collect()}
-        collide = 0
-        for a, b in planted:
-            bands_a = [sh[a][f"band{i}"] for i in range(4)]
-            bands_b = [sh[b][f"band{i}"] for i in range(4)]
-            if any(x == y for x, y in zip(bands_a, bands_b)):
-                collide += 1
-        assert collide / len(planted) >= 0.8
-
-    def test_hamming_distance_small_for_dups(self, spark):
-        from xwikire_spark.operators.dedup import simhash
-
-        rows, planted = _mk_docs(n_base=10)
-        docs = spark.createDataFrame(pd.DataFrame(rows))
-        sh = {r.doc_id: r.simhash for r in simhash(docs).collect()}
-        for a, b in planted[:5]:
-            dist = bin((sh[a] ^ sh[b]) & ((1 << 64) - 1)).count("1")
-            assert dist <= 16, f"hamming {dist} for planted near-dup"
 
 
 class TestANN:
@@ -397,18 +370,6 @@ class TestConnectedComponentsPaths:
 
 
 
-class TestNullTextRows:
-    def test_simhash_keeps_null_text_docs(self, spark):
-        from xwikire_spark.operators.dedup import simhash, simhash_md5
-
-        docs = spark.createDataFrame(
-            [("d1", "hello world"), ("d2", None), ("d3", "")],
-            "doc_id string, text string",
-        )
-        assert simhash(docs).count() == 3
-        assert simhash_md5(docs).count() == 3
-
-
 class TestNgramJaccardGuard:
     def test_hot_group_bounded(self, spark):
         """A stopword-like token shared by every doc of one group must not
@@ -505,31 +466,6 @@ class TestIVFBroadcastAssignment:
         }
 
 
-class TestSimHashOracleGate:
-    def test_simhash_md5_matches_duckdb_oracle(self, spark):
-        """The simhash md5-twin's value-hash gate, kept as a pytest after
-        its driver row was consolidated away (the driver report caps at 50
-        entries; VERDICT r2 next-round #2). Same generated SQL, same
-        engine-vs-engine comparison, at sf0.001 for speed."""
-        import duckdb
-        import pandas as pd
-
-        import __spark_entry__ as e
-
-        sf = "/root/testdata/sf0.001"
-        con = duckdb.connect()
-        con.execute(
-            "CREATE VIEW documents AS SELECT * FROM "
-            f"read_parquet('{sf}/documents.parquet')"
-        )
-        sdf = e.q_dedup_simhash(spark, sf).toPandas()
-        odf = con.execute(e._simhash_md5_oracle_sql()).df()
-        cols = list(sdf.columns)
-        a = sdf.sort_values(cols).reset_index(drop=True)
-        b = odf[cols].sort_values(cols).reset_index(drop=True)
-        pd.testing.assert_frame_equal(a, b, check_dtype=False)
-
-
 class TestScrubPII:
     """URL/email scrubbing (textstats.scrub_pii) — the pre-training
     hygiene pass. Counts + redaction, URL-first ordering, and
@@ -619,9 +555,11 @@ class TestScrubPII:
 
 
 class TestBenchmarkContamination:
-    """Train/test contamination screening (dedup.benchmark_contamination):
+    """Train/test contamination screening (dedup.contamination_hits):
     planted 8-gram overlap, DuckDB differential, and the corpus side must
     broadcast-join (no corpus shuffle before the aggregate)."""
+
+    COLS = ("doc_id", "n_contaminated_shingles", "example_shingle")
 
     DOCS = [
         (1, "the quick brown fox jumps over the lazy dog every single day"),
@@ -645,11 +583,12 @@ class TestBenchmarkContamination:
         return docs, probes
 
     def test_planted_overlap(self, spark):
-        from xwikire_spark.operators.dedup import benchmark_contamination
+        from xwikire_spark.operators.dedup import contamination_hits
 
         docs, probes = self._frames(spark)
         got = {r["doc_id"]: r for r in
-               benchmark_contamination(docs, probes, k=8).collect()}
+               contamination_hits(docs, probes, k=8).select(*self.COLS)
+               .collect()}
         # docs 1/3/5 share the 8-gram "the quick ... lazy dog"; 2/4 clean
         assert set(got) == {1, 3, 5}
         assert got[1]["n_contaminated_shingles"] >= 1
@@ -663,11 +602,12 @@ class TestBenchmarkContamination:
         import duckdb
         import pandas as pd
 
-        from xwikire_spark.operators.dedup import benchmark_contamination
+        from xwikire_spark.operators.dedup import contamination_hits
 
         docs, probes = self._frames(spark)
         sdf = (
-            benchmark_contamination(docs, probes, k=8)
+            contamination_hits(docs, probes, k=8)
+            .select(*self.COLS)
             .orderBy("doc_id")
             .toPandas()
         )
@@ -697,18 +637,19 @@ class TestBenchmarkContamination:
         pd.testing.assert_frame_equal(sdf, odf, check_dtype=False)
 
     def test_probe_side_broadcasts(self, spark):
-        from xwikire_spark.operators.dedup import benchmark_contamination
+        from xwikire_spark.operators.dedup import contamination_hits
 
         docs, probes = self._frames(spark)
         plan = (
-            benchmark_contamination(docs, probes)
+            contamination_hits(docs, probes)
+            .select(*self.COLS)
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "BroadcastHashJoin" in plan
 
 
 class TestDecontaminate:
-    """Decontamination — the removal side of benchmark_contamination (r3
+    """Decontamination — the removal side of contamination_hits (r3
     next-round #6): drop-doc and span-excise modes, observe() counters,
     DuckDB differential for the excise rebuild."""
 
@@ -1142,106 +1083,6 @@ class TestTriangleCounts:
         ).collect()}
         want = (k - 1) * (k - 2) // 2
         assert got == {i: want for i in range(k)}
-
-
-class TestIncrementalPacking:
-    """pack_sequences_incremental: 3 append-only drops == one full-batch
-    packing (incl. a window straddling the drop boundary), retry after a
-    crash-between-output-and-state duplicates/shifts nothing, and
-    overlapping batches are rejected."""
-
-    def _docs(self, spark, ids):
-        # token count = pure function of the id, so any chunking of the
-        # id range sees identical values
-        return spark.createDataFrame(
-            [(i, (i * 131 + 17) % 899 + 1) for i in ids],
-            "doc_id bigint, n_tokens bigint",
-        )
-
-    def test_three_drops_equal_full_batch(self, spark, tmp_path):
-        from xwikire_spark.operators.packing import (
-            pack_sequences,
-            pack_sequences_incremental,
-        )
-
-        sd = str(tmp_path / "pk")
-        all_ids = list(range(300))
-        full = {
-            (r["doc_id"], r["pack_id"], r["pack_offset"])
-            for r in pack_sequences(
-                self._docs(spark, all_ids), "doc_id", "n_tokens", 512
-            ).collect()
-        }
-        out = None
-        for b, chunk in enumerate(
-            (all_ids[:100], all_ids[100:180], all_ids[180:])
-        ):
-            out = pack_sequences_incremental(
-                self._docs(spark, chunk), sd, "doc_id", "n_tokens",
-                512, batch_id=b,
-            )
-        got = {(r["doc_id"], r["pack_id"], r["pack_offset"])
-               for r in out.collect()}
-        assert got == full
-
-    def test_crash_retry_is_idempotent(self, spark, tmp_path):
-        import json
-        import os
-
-        from xwikire_spark.operators.packing import (
-            pack_sequences,
-            pack_sequences_incremental,
-        )
-
-        sd = str(tmp_path / "pk")
-        ids = list(range(200))
-        pack_sequences_incremental(
-            self._docs(spark, ids[:120]), sd, "doc_id", "n_tokens",
-            512, batch_id=0,
-        )
-        state_p = os.path.join(sd, "pack_state.json")
-        saved = open(state_p).read()
-        pack_sequences_incremental(
-            self._docs(spark, ids[120:]), sd, "doc_id", "n_tokens",
-            512, batch_id=1,
-        )
-        # CRASH simulation: batch 1's output landed but the state write
-        # didn't — roll the state file back and retry the same batch
-        with open(state_p, "w") as f:
-            f.write(saved)
-        out = pack_sequences_incremental(
-            self._docs(spark, ids[120:]), sd, "doc_id", "n_tokens",
-            512, batch_id=1,
-        )
-        full = {
-            (r["doc_id"], r["pack_id"], r["pack_offset"])
-            for r in pack_sequences(
-                self._docs(spark, ids), "doc_id", "n_tokens", 512
-            ).collect()
-        }
-        got = {(r["doc_id"], r["pack_id"], r["pack_offset"])
-               for r in out.collect()}
-        assert got == full
-        assert out.count() == 200  # no duplicated rows from the retry
-        assert json.load(open(state_p))["max_order"] == 199
-
-    def test_overlapping_batch_rejected(self, spark, tmp_path):
-        import pytest as _pytest
-
-        from xwikire_spark.operators.packing import (
-            pack_sequences_incremental,
-        )
-
-        sd = str(tmp_path / "pk")
-        pack_sequences_incremental(
-            self._docs(spark, list(range(50))), sd, "doc_id",
-            "n_tokens", 512, batch_id=0,
-        )
-        with _pytest.raises(ValueError):
-            pack_sequences_incremental(
-                self._docs(spark, [49, 50]), sd, "doc_id",
-                "n_tokens", 512, batch_id=1,
-            )
 
 
 class TestWeightedSample:

@@ -17,8 +17,6 @@ from xwikire_spark.pipeline.canonicalize import (
 from xwikire_spark.pipeline.extraction import (
     extract_triples,
     pair_mentions_in_window,
-    detect_mentions,
-    segment_turns,
 )
 from xwikire_spark.pipeline.manifests import pending_buckets, run_with_manifests
 
@@ -251,19 +249,32 @@ class TestExtraction:
                 bad += 1
         assert bad == 0
 
-    def test_window_pairing(self, spark, corpus):
-        _, _, transcripts, alias_df, _ = corpus
-        mentions = detect_mentions(segment_turns(transcripts), alias_df)
-        pairs = pair_mentions_in_window(mentions, max_turn_distance=2)
-        rows = pairs.collect()
-        assert rows, "expected co-occurrence pairs"
-        for r in rows:
-            assert 0 <= r.turn_b - r.turn_a <= 2
-            assert r.entity_a != r.entity_b
-        # canonical ordering => no (a,b)+(b,a) duplicates at same turns
-        seen = {(r.conv_id, r.entity_a, r.entity_b, r.turn_a, r.turn_b)
-                for r in rows}
-        assert len(seen) == len(rows)
+    def test_window_pairing(self, spark):
+        # mentions with kg_mentions_df's columns: pairs within 2 turns of
+        # one conversation, across a bucket boundary (turns 1 and 3), none
+        # at distance 3, none of an entity with itself, a repeated mention
+        # counted once, and a same-turn pair ordered by entity id
+        mentions = spark.createDataFrame(
+            [("c1", 0, "one", "Q1", 1), ("c1", 0, "two", "Q2", 9),
+             ("c1", 1, "three", "Q3", 1), ("c1", 3, "one", "Q1", 1),
+             ("c1", 6, "four", "Q4", 1),
+             ("c2", 0, "one", "Q1", 1), ("c2", 0, "one", "Q1", 20),
+             ("c2", 2, "two", "Q2", 1), ("c2", 2, "one", "Q1", 9),
+             ("c3", 0, "five", "Q5", 1)],
+            "conv_id string, turn_idx int, alias string, entity_id string, "
+            "pos int",
+        )
+        rows = pair_mentions_in_window(mentions, max_turn_distance=2).select(
+            "conv_id", "entity_a", "entity_b", "turn_a", "turn_b"
+        ).collect()
+        assert sorted(tuple(r) for r in rows) == [
+            ("c1", "Q1", "Q2", 0, 0),
+            ("c1", "Q1", "Q3", 0, 1),
+            ("c1", "Q2", "Q3", 0, 1),
+            ("c1", "Q3", "Q1", 1, 3),
+            ("c2", "Q1", "Q2", 0, 2),
+            ("c2", "Q1", "Q2", 2, 2),
+        ]
 
 
 class TestCanonicalization:
@@ -727,10 +738,9 @@ class TestGraphMaterialization:
         assert got == sorted(tuple(r) for r in vertex_table(edges).collect())
 
     def test_writes_leave_session_overwrite_mode(self, spark, tmp_path):
-        """The graph, manifest and incremental-packing writes choose their
-        partition overwrite mode per write: the session's setting is the
-        same after each call as before it."""
-        from xwikire_spark.operators.packing import pack_sequences_incremental
+        """The graph and manifest writes choose their partition overwrite
+        mode per write: the session's setting is the same after each call
+        as before it."""
         from xwikire_spark.pipeline.graph import materialize_graph
 
         key = "spark.sql.sources.partitionOverwriteMode"
@@ -746,14 +756,6 @@ class TestGraphMaterialization:
             materialize_graph(
                 spark, _text_transcripts(spark, rows), _text_edges,
                 str(tmp_path / "g"), n_buckets=4,
-            )
-            assert spark.conf.get(key) == "STATIC"
-            pack_sequences_incremental(
-                spark.createDataFrame(
-                    [(i, 10) for i in range(5)],
-                    "doc_id bigint, n_tokens bigint",
-                ),
-                str(tmp_path / "pk"), "doc_id", "n_tokens", 32, batch_id=0,
             )
             assert spark.conf.get(key) == "STATIC"
         finally:
@@ -827,17 +829,15 @@ class TestGraphMaterialization:
 
 class TestMentionPathEquivalence:
     def test_randomized_dictionary_equivalence(self, spark):
-        """Randomized cross-check (fixed seed): on 60 random sentences and
-        a random dictionary with overlaps ('beta gamma' vs 'beta' vs
-        'gamma delta') and collisions, the join path's greedy fold must
-        reproduce the regex automaton's mention set exactly — surfaces,
-        ids, and char offsets."""
+        """Randomized cross-check (fixed seed): on 60 random one- or
+        two-sentence turns, an alias dictionary with overlaps ('beta gamma'
+        vs 'beta' vs 'gamma delta') and collisions, and a predicate
+        dictionary with a multi-word alias and a collision, the join
+        path's greedy fold must reproduce the broadcast automaton's triples
+        exactly — every column, evidence and surfaces included. Every
+        surface starts and ends with a word character (the join path's
+        contract)."""
         import random
-
-        from xwikire_spark.pipeline.extraction import (
-            detect_mentions,
-            detect_mentions_join,
-        )
 
         rng = random.Random(99)
         pool = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta",
@@ -848,35 +848,45 @@ class TestMentionPathEquivalence:
             # collision: one surface, two ids
             ("kappa", "E7"), ("kappa", "E8"),
         ]
+        predicates = [
+            {"pid": "P1", "label": "theta", "aliases": ["iota theta"]},
+            # collision with P1's alias word: 'iota' alone is P2 and P3
+            {"pid": "P2", "label": "iota", "aliases": []},
+            {"pid": "P3", "label": "alpha eta", "aliases": ["iota"]},
+        ]
         rows = []
         for i in range(60):
-            n = rng.randint(6, 14)
-            words = [rng.choice(pool) for _ in range(n)]
-            rows.append(dict(
-                conv_id=f"c{i % 7}", turn_idx=i // 7, role="user", ts=None,
-                sent_idx=0, sentence=" ".join(words) + ".",
-            ))
-        sentences = spark.createDataFrame(pd.DataFrame(rows))
+            text = ". ".join(
+                " ".join(rng.choice(pool) for _ in range(rng.randint(6, 14)))
+                for _ in range(rng.randint(1, 2))
+            ) + "."
+            rows.append(dict(conv_id=f"c{i % 7}", turn_idx=i // 7,
+                             text=text))
+        transcripts = spark.createDataFrame(pd.DataFrame(rows))
         alias_df = spark.createDataFrame(
             pd.DataFrame([{"alias": a, "entity_id": e} for a, e in surfaces])
         )
-        key = ["conv_id", "turn_idx", "sent_idx", "surface", "entity_id",
-               "m_start", "m_end"]
-        regex_path = {
-            tuple(r[k] for k in key)
-            for r in detect_mentions(sentences, alias_df).collect()
-        }
-        join_path = {
-            tuple(r[k] for k in key)
-            for r in detect_mentions_join(
-                sentences, alias_df.select("alias", "entity_id")
-            ).collect()
-        }
-        assert regex_path == join_path, (
-            f"regex-only={list(regex_path - join_path)[:4]} "
-            f"join-only={list(join_path - regex_path)[:4]}"
+        pred_df = spark.createDataFrame(
+            pd.DataFrame(predicates), "pid string, label string, "
+            "aliases array<string>",
         )
-        assert len(regex_path) > 100  # the corpus actually exercises it
+        out = {
+            strategy: extract_triples(
+                transcripts, alias_df, pred_df, dict_strategy=strategy
+            )
+            for strategy in ("broadcast", "join")
+        }
+        cols = out["broadcast"].columns
+        assert out["join"].columns == cols
+        broadcast, join = (
+            {tuple(r) for r in out[s].select(*cols).collect()}
+            for s in ("broadcast", "join")
+        )
+        assert broadcast == join, (
+            f"broadcast-only={list(broadcast - join)[:4]} "
+            f"join-only={list(join - broadcast)[:4]}"
+        )
+        assert len(broadcast) > 100  # the corpus actually exercises it
 
     def test_auto_strategy_is_single_kernel_pass(self, spark, corpus):
         """The default is the fused broadcast kernel: the plan must contain

@@ -3,11 +3,12 @@
 Design rules (BASELINE.json input_hint: "no per-row Python"):
 - every UDF here is Arrow-batched (`pandas_udf`) — rows cross the
   JVM<->Python boundary in columnar batches, not one at a time;
-- dictionary-dependent UDFs (mention/predicate detection) are *scalar
-  iterator* UDFs: the matcher automaton is compiled once per executor task
-  from the closure-captured dictionary, then reused across all Arrow batches
-  — the Spark analog of the reference's process-lifetime ``_prop_cache``
-  (src/builders/MergedWikis.py:28,37-41);
+- dictionary matching (mention/predicate detection) compiles its
+  automaton once per executor task from the broadcast dictionary, then
+  reuses it across all Arrow batches — the Spark analog of the reference's
+  process-lifetime ``_prop_cache`` (src/builders/MergedWikis.py:28,37-41);
+  the compiler lives here, the fused kernel that runs it in
+  ``pipeline.extraction``;
 - heavy outputs are struct/array columns so downstream stays relational
   (posexplode, joins) instead of Python.
 """
@@ -15,7 +16,6 @@ Design rules (BASELINE.json input_hint: "no per-row Python"):
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -30,18 +30,7 @@ from pyspark.sql.types import (
 from xwikire_spark.kernels.dates import format_date
 from xwikire_spark.kernels.segmenter import segment_sentences
 from xwikire_spark.kernels.templates import fill_template
-from xwikire_spark.kernels.textfix import fix_text
 from xwikire_spark.kernels.tokenizer import tokenize_with_breaks
-
-# ---------------------------------------------------------------------------
-# Sentence segmentation (X7): text -> array<string> of sentences.
-# Reference: nltk.sent_tokenize per doc (src/builders/QA.py:34).
-# ---------------------------------------------------------------------------
-
-segment_udf = F.pandas_udf(
-    lambda s: s.map(lambda t: segment_sentences(t or "")),
-    ArrayType(StringType()),
-)
 
 # ---------------------------------------------------------------------------
 # Tokenization with break levels (X8): text -> struct<tokens, breaks>.
@@ -73,22 +62,9 @@ def tokenize_udf(texts: pd.Series) -> pd.DataFrame:
 # (src/builders/QA.py:76-84); entity linking over transcripts needs the
 # full-dictionary variant. Alternation sorted by length desc gives
 # leftmost-longest: at equal start offsets the longer surface is listed
-# first, and finditer consumes the match (no overlaps).
+# first, and finditer consumes the match (no overlaps). The automaton is
+# compiled inside extraction's fused candidate generator.
 # ---------------------------------------------------------------------------
-
-# Field order is the sort order: array_sort over this struct orders by
-# (start, matched_id) — earliest-match-then-id, the reference's first-match
-# determinism (src/builders/QA.py:80-84) without a window.
-MENTIONS_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("start", IntegerType()),
-            StructField("matched_id", StringType()),
-            StructField("surface", StringType()),
-            StructField("end", IntegerType()),
-        ]
-    )
-)
 
 
 def longest_first_surfaces(pairs: list[tuple[str, str]]) -> list[str]:
@@ -123,81 +99,19 @@ def unwrap_broadcast(surfaces):
     return surfaces.value if hasattr(surfaces, "value") else surfaces
 
 
-def make_mention_udf(surfaces):
-    """Scalar-iterator pandas UDF: sentence -> array of dictionary mentions.
-
-    ``surfaces`` is the (surface, id) dimension as a
-    ``SparkContext.broadcast`` handle (preferred: the pairs ship to each
-    executor ONCE via the torrent broadcast, not re-pickled into every task
-    closure — the Spark analog of the reference's process-lifetime
-    _prop_cache, src/builders/MergedWikis.py:28) or a plain list (tests /
-    tiny dicts). The automaton compiles once per task and is reused across
-    Arrow batches. Id resolution happens here too (one struct per id on
-    collisions) so the pipeline needs no resolution join. For dictionaries
-    too large to broadcast at all, use the join-based token path
-    (pipeline.extraction.detect_mentions_join).
-    """
-
-    @F.pandas_udf(MENTIONS_SCHEMA)
-    def mention_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        pattern, ids = _compile_dictionary(unwrap_broadcast(surfaces))
-        for texts in batches:
-            out = []
-            for t in texts:
-                if not t or pattern is None:
-                    out.append([])
-                    continue
-                ms = [
-                    {
-                        "start": m.start(),
-                        "matched_id": i,
-                        "surface": m.group(),
-                        "end": m.end(),
-                    }
-                    for m in pattern.finditer(t)
-                    for i in ids[m.group()]
-                ]
-                out.append(ms)
-            yield pd.Series(out)
-
-    return mention_udf
-
-
 # ---------------------------------------------------------------------------
-# Word-run offsets: sentence -> array<struct<tok, pos>> of unicode \w+ runs
-# with 0-based char starts. Dictionary-FREE (nothing in the closure) — the
-# tokenization half of the join-based mention path for dictionaries too
-# large to broadcast; the dictionary side stays a DataFrame and meets these
-# tokens in a shuffle equi-join (extraction.detect_mentions_join).
+# Segmentation fused with word-run offsets: text -> one struct per sentence
+# carrying its unicode \w+ runs with 0-based char starts. Dictionary-FREE
+# (nothing in the closure) — the tokenization half of the join-based
+# mention path for dictionaries too large to broadcast; the dictionary side
+# stays a DataFrame and meets these tokens in a shuffle equi-join
+# (extraction.extract_triples_join). Two chained pandas UDFs would cost two
+# Arrow round-trips and re-serialize every sentence into the second UDF
+# (guide §4: you control how many columns cross and how often). One UDF,
+# one Python stage.
 # ---------------------------------------------------------------------------
 
 _WORD_RUN = re.compile(r"\w+", re.UNICODE)
-
-WORD_OFFSETS_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("tok", StringType()),
-            StructField("pos", IntegerType()),
-        ]
-    )
-)
-
-word_offsets_udf = F.pandas_udf(
-    lambda s: s.map(
-        lambda t: [
-            {"tok": m.group(), "pos": m.start()}
-            for m in _WORD_RUN.finditer(t or "")
-        ]
-    ),
-    WORD_OFFSETS_SCHEMA,
-)
-
-# Fused segmentation + word-run offsets: text -> one struct per sentence
-# carrying its token offsets. The join-based extraction path needs BOTH
-# kernels; running them as two chained pandas UDFs costs two Arrow
-# round-trips and re-serializes every sentence into the second UDF
-# (guide §4: you control how many columns cross and how often). One UDF,
-# one Python stage — same pure kernels, bit-identical output.
 
 SENT_WORDS_SCHEMA = ArrayType(
     StructType(
@@ -236,41 +150,9 @@ segment_word_offsets_udf = F.pandas_udf(
 
 
 # ---------------------------------------------------------------------------
-# Date formatting (X11), template filling (X14), article extraction (X15):
-# plain scalar pandas UDFs over the pure kernels.
+# Date formatting (X11) and template filling (X14): plain scalar pandas
+# UDFs over the pure kernels.
 # ---------------------------------------------------------------------------
-
-
-# X16: mojibake repair (reference applies ftfy.fix_text per sentence,
-# src/builders/SRL.py:111)
-fix_text_udf = F.pandas_udf(
-    lambda s: s.map(lambda t: fix_text(t or "")), StringType()
-)
-
-
-def make_pos_udf(model):
-    """tokens array<string> -> PTB tags array<string> via the averaged
-    perceptron. ``model`` is the trained weight dict or a
-    SparkContext.broadcast of it — broadcast at cluster scale so the
-    weights ship once per executor (X10: the reference's nltk.pos_tag with
-    the model made an explicit, shippable artifact)."""
-    from xwikire_spark.kernels.perceptron import tag_with_model
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def pos_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        m = unwrap_broadcast(model)
-        for toks in batches:
-            yield pd.Series(
-                [
-                    tag_with_model(
-                        [] if t is None else list(t), m
-                    )
-                    for t in toks
-                ],
-                dtype="object",
-            )
-
-    return pos_udf
 
 
 def make_format_date_udf(lang: str = "en"):

@@ -14,7 +14,7 @@ train-then-broadcast both reproduce identical weights.
 
 The trained weights are a plain picklable dict: at cluster scale train once
 on the driver (or load from a table) and ship via SparkContext.broadcast
-into the tagging pandas UDF (functions.udfs.make_pos_udf) — the model never
+into the tagging kernel (pipeline.srl's fused generator) — the model never
 re-trains per task.
 
 The rule tagger (kernels.pos) remains the default in the SRL pipeline: its

@@ -94,8 +94,8 @@ def perceptron_model() -> dict:
     grammar-generated ones (kernels/pos_corpus.py) — held-out accuracy
     0.95+ on 400 pinned sentences with disjoint content vocabulary
     (tests/test_kernels.py::TestPerceptronCorpus). Driver-side callers
-    broadcast this dict into the tagging UDF; executor-side lazy training
-    yields the identical model."""
+    broadcast this dict into the tagging kernel; executor-side lazy
+    training yields the identical model."""
     global _PERCEPTRON_MODEL
     if _PERCEPTRON_MODEL is None:
         from xwikire_spark.kernels.perceptron import train_tagger
@@ -106,15 +106,6 @@ def perceptron_model() -> dict:
             TRAIN_CORPUS + generate_corpus(2000)
         )
     return _PERCEPTRON_MODEL
-
-
-def pos_tag_perceptron(tokens: list[str]) -> list[str]:
-    """Averaged-perceptron tagging (nltk.pos_tag architecture parity) —
-    generalizes to verbs outside the rule lexicon via suffix/context
-    features. The rule tagger stays the pinned SRL-oracle contract."""
-    from xwikire_spark.kernels.perceptron import tag_with_model
-
-    return tag_with_model(tokens, perceptron_model())
 
 
 def contains_verb(tags: list[str], start: int, end: int) -> bool:

@@ -86,17 +86,17 @@ _TRAIN = [
     "The/DT crowd/NN cheered/VBD loudly/RB ./.",
 ]
 
-# held-out: content verbs unseen in training — exercises suffix features
-_HELDOUT = [
-    "The/DT historian/NN documented/VBD the/DT battle/NN ./.",
-    "Workers/NNS assembled/VBD the/DT machine/NN ./.",
-    "The/DT explorer/NN reached/VBD the/DT coast/NN ./.",
-    "The/DT curator/NN restored/VBD the/DT painting/NN ./.",
-    "She/PRP organizes/VBZ the/DT archive/NN ./.",
-    "The/DT village/NN celebrated/VBD the/DT harvest/NN ./.",
-]
-
 TRAIN_CORPUS: list[tuple[list[str], list[str]]] = [_parse(s) for s in _TRAIN]
+
+# held-out: content verbs unseen in training — exercises suffix features
 HELDOUT_CORPUS: list[tuple[list[str], list[str]]] = [
-    _parse(s) for s in _HELDOUT
+    _parse(s)
+    for s in (
+        "The/DT historian/NN documented/VBD the/DT battle/NN ./.",
+        "Workers/NNS assembled/VBD the/DT machine/NN ./.",
+        "The/DT explorer/NN reached/VBD the/DT coast/NN ./.",
+        "The/DT curator/NN restored/VBD the/DT painting/NN ./.",
+        "She/PRP organizes/VBZ the/DT archive/NN ./.",
+        "The/DT village/NN celebrated/VBD the/DT harvest/NN ./.",
+    )
 ]

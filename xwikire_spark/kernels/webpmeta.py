@@ -6,8 +6,8 @@ has no external validity; production routes through PIL/libvips).
 
 The CONTAINER layer, by contrast, is fully checkable by construction:
 
-- RIFF framing ("RIFF" + little-endian size + "WEBP", chunks padded to
-  even length) is the same walker contract as kernels/wavcodec.py;
+- RIFF framing: "RIFF" + little-endian size + "WEBP", chunks padded to
+  even length;
 - lossy "VP8 " dimensions live in the keyframe uncompressed header:
   3-byte frame tag, 3-byte start code 9D 01 2A, then 14-bit width and
   height (2 bytes LE each, top 2 bits = scaling hints) — published in

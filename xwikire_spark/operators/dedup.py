@@ -6,8 +6,6 @@ Scale design:
   higher-order functions (no UDF); banding turns candidate generation into
   an equi-join on (band, band_hash) — the shuffle is proportional to
   bucket collisions, never O(n²);
-- SimHash: 64-bit fingerprint from token hashes, bucketed by 16-bit bands —
-  same join-not-crossjoin property;
 - n-gram Jaccard verification runs only on LSH candidates (or within
   explicit small groups), never across the full corpus.
 
@@ -248,121 +246,6 @@ def near_duplicates_minhash(
     return jaccard_verify(docs, cands, text_col, threshold, shingle_k=k)
 
 
-def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """64-bit SimHash per document from token xxhash64s.
-
-    Shape: explode tokens once, then ONE groupBy with 64 +-1 vote sums
-    (map-side partial combine). The previous per-bit
-    aggregate-over-transform formulation made Catalyst re-inline the
-    split+hash expression into all 64 bit aggregates — the documented
-    O(bits x tokens) inlining trap; this shape hashes each token once per
-    bit expression over a plain column instead and shuffles only 64 longs
-    per doc per map partition.
-
-    Output: doc_id, simhash (long), band0..band3 (16-bit bands for
-    bucketing: near-dups differ in few bits, so they collide on >=1 band).
-    """
-    # coalesce NULL text to '': split(NULL) explodes to zero rows, which
-    # would silently DROP the doc from the output (the old expression
-    # formulation emitted a row per doc regardless)
-    toks = docs.select(
-        "doc_id",
-        F.explode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
-        ).alias("tok"),
-    )
-    hashed = toks.select("doc_id", F.xxhash64("tok").alias("h"))
-    votes = hashed.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                2 * F.shiftrightunsigned("h", b).bitwiseAND(F.lit(1)) - 1
-            ).alias(f"v{b}")
-            for b in range(64)
-        ]
-    )
-    bits = [
-        F.when(F.col(f"v{b}") >= 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        for b in range(64)
-    ]
-    sim = bits[0]
-    for b in range(1, 64):
-        sim = sim.bitwiseOR(F.shiftleft(bits[b], b))
-    out = votes.select("doc_id", sim.alias("simhash"))
-    for band in range(4):
-        out = out.withColumn(
-            f"band{band}",
-            F.shiftrightunsigned(F.col("simhash"), band * 16).bitwiseAND(
-                F.lit(0xFFFF)
-            ),
-        )
-    return out
-
-
-def simhash_md5(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Cross-engine-checkable SimHash flavor: 64 bits per token derived from
-    md5 hex digits (md5 is the one 128-bit hash Spark and DuckDB share), bit
-    votes as ONE explode + groupBy hash aggregate (map-side partial combine;
-    the per-bit aggregate-over-transform alternative makes Catalyst
-    re-inline the token hashing 64x — the measured O(n*k) inlining trap).
-
-    Output: doc_id, band0..band3 (16-bit ints, the LSH bucketing keys) and
-    simhash_hex (the full fingerprint as hex — hex sidesteps the signed-64
-    mismatch between Spark LONG and DuckDB HUGEINT). ``simhash`` (xxhash64)
-    stays the production default; this flavor exists so the banding logic
-    has a value-hash DuckDB oracle. Same plan shape, same scale story.
-    """
-    toks = docs.select(
-        "doc_id",
-        F.explode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
-        ).alias("tok"),
-    )
-    # hex digit i (0-based from the left) of md5(tok), as 0..15
-    digits = toks.select(
-        "doc_id",
-        *[
-            F.expr(
-                f"locate(substring(md5(tok), {i + 1}, 1),"
-                f" '0123456789abcdef') - 1"
-            ).alias(f"d{i}")
-            for i in range(16)
-        ],
-    )
-    # vote for bit b (= bit b%4 of digit b//4): +1 if set, -1 if clear
-    votes = digits.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.expr(f"2 * ((d{b // 4} div {1 << (b % 4)}) % 2) - 1")
-            ).alias(f"v{b}")
-            for b in range(64)
-        ]
-    )
-    bits = [
-        F.when(F.col(f"v{b}") >= 0, F.lit(1)).otherwise(F.lit(0))
-        for b in range(64)
-    ]
-    bands = []
-    for j in range(4):
-        band = F.lit(0)
-        for off in range(16):
-            band = band + F.shiftleft(bits[16 * j + off], off)
-        bands.append(band.cast("int").alias(f"band{j}"))
-    out = votes.select("doc_id", *bands)
-    return out.select(
-        "doc_id",
-        "band0",
-        "band1",
-        "band2",
-        "band3",
-        F.format_string(
-            "%04x%04x%04x%04x",
-            F.col("band0"), F.col("band1"), F.col("band2"), F.col("band3"),
-        ).alias("simhash_hex"),
-    )
-
-
 def ngram_jaccard_pairs_within_groups(
     docs: DataFrame,
     group_cols: list[str],
@@ -468,33 +351,6 @@ def ngram_jaccard_pairs_within_groups(
     )
 
 
-def benchmark_contamination(
-    docs: DataFrame,
-    probes: DataFrame,
-    k: int = 8,
-    text_col: str = "text",
-    probe_text_col: str = "text",
-    broadcast_probes: bool = True,
-) -> DataFrame:
-    """Train/test contamination screening: flag corpus documents sharing
-    any k-word shingle with a benchmark/probe set.
-
-    -> (doc_id, n_contaminated_shingles, example_shingle), hit docs only.
-
-    Shape at 100 TB: the corpus side explodes to (doc_id, shingle) rows —
-    linear in tokens, never pairwise — and meets the DISTINCT probe
-    shingles in an equi-join. Benchmark suites are small (10^4-10^6
-    shingles), so the probe side broadcasts by default and the corpus
-    never shuffles; set ``broadcast_probes=False`` for probe sets beyond
-    executor memory (plain shuffle join, AQE handles hot shingles). k=8
-    follows the common contamination heuristic: long enough that chance
-    collisions vanish, short enough to catch paraphrase-free copying.
-    """
-    return contamination_hits(
-        docs, probes, k, text_col, probe_text_col, broadcast_probes
-    ).select("doc_id", "n_contaminated_shingles", "example_shingle")
-
-
 def _probe_shingles(
     probes: DataFrame, probe_text_col: str, k: int, broadcast_probes: bool
 ):
@@ -531,8 +387,7 @@ def contamination_hits(
     (repetitive text must not outrank docs genuinely sharing more
     benchmark content).
 
-    Both ``benchmark_contamination`` and ``decontaminate`` derive from
-    this frame; a caller needing several hygiene outputs in one action
+    ``decontaminate`` derives from this frame; a caller needing several hygiene outputs in one action
     (e.g. a tagged union) should build them all from ONE
     ``contamination_hits`` result — the branches then share an identical
     aggregate subtree and Spark's ReuseExchange serves them from a single
@@ -635,7 +490,7 @@ def decontaminate(
     broadcast_probes: bool = True,
     hits: DataFrame | None = None,
 ) -> DataFrame:
-    """The removal side of ``benchmark_contamination`` — the operator real
+    """The removal side of ``contamination_hits`` — the operator real
     pipelines run daily: given a benchmark/probe set, produce the scrubbed
     corpus.
 
@@ -658,7 +513,7 @@ def decontaminate(
     corpus, not a second scan. Read them from a QueryExecutionListener or
     ``Observation`` object downstream.
 
-    Scale shape: identical to benchmark_contamination — corpus explodes
+    Scale shape: identical to contamination_hits — corpus explodes
     linearly, distinct probe shingles broadcast, never pairwise. Pass a
     precomputed ``hits`` (from ``contamination_hits``) to share its
     shuffle with sibling branches in the same action.

@@ -96,90 +96,3 @@ def pack_sequences(
     )
 
 
-def pack_sequences_incremental(
-    df: DataFrame,
-    state_dir: str,
-    order_col: str,
-    tokens_col: str,
-    budget: int,
-    batch_id: int,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Streaming-shaped packing: fold an append-only ordered batch into
-    a persisted packing without touching prior batches. State is two
-    scalars (total tokens packed so far, max order seen) in a JSON file;
-    the batch is packed locally with ``pack_sequences`` and shifted by
-    the carried total — pack_id/offset come out IDENTICAL to re-packing
-    the whole corpus (the equality gate in tests), at O(batch) cost.
-
-    Crash ordering is output -> state:
-    the output lands under ``state_dir/packed/`` partitioned by batch_id
-    with dynamic overwrite, so a retry after a crash-between-writes
-    recomputes from the UNCHANGED state and overwrites its own partition
-    — duplicating nothing, shifting nothing.
-
-    Batches must arrive in ``order_col`` order (append-only shards — the
-    shape training corpora actually grow in); a batch overlapping the
-    packed range raises."""
-    import json as _json
-    import os as _os
-
-    state_p = _os.path.join(state_dir, "pack_state.json")
-    if _os.path.exists(state_p):
-        with open(state_p) as f:
-            state = _json.load(f)
-    else:
-        state = {"total_tokens": 0, "max_order": None}
-
-    lo = df.agg(
-        F.min(order_col).alias("lo"), F.sum(tokens_col).alias("tok")
-    ).collect()[0]
-    if lo["lo"] is None:
-        # empty batch: a clean no-op — return the current packed view
-        # (ADVICE r6: `None <= max_order` raised a bare TypeError here)
-        packed_dir = _os.path.join(state_dir, "packed")
-        if _os.path.isdir(packed_dir):
-            return df.sparkSession.read.parquet(packed_dir)
-        raise ValueError(
-            "pack_sequences_incremental: empty batch and no previously "
-            "packed output to return"
-        )
-    if state["max_order"] is not None and lo["lo"] <= state["max_order"]:
-        raise ValueError(
-            f"batch min {order_col}={lo['lo']} overlaps packed range "
-            f"(max_order={state['max_order']}); incremental packing is "
-            "append-only"
-        )
-    base = int(state["total_tokens"])
-    packed = pack_sequences(
-        df, order_col, tokens_col, budget, num_partitions
-    )
-    # shift the batch-local prefix sum by the carried total: the local
-    # (pack_id, pack_offset) pair IS the local cumsum_before
-    out = (
-        packed.withColumn(
-            "__cum",
-            F.col("pack_id") * F.lit(budget) + F.col("pack_offset")
-            + F.lit(base),
-        )
-        .withColumn("pack_id", F.floor(F.col("__cum") / F.lit(budget)))
-        .withColumn(
-            "pack_offset", (F.col("__cum") % F.lit(budget)).cast("long")
-        )
-        .drop("__cum")
-    )
-    spark = df.sparkSession
-    out.withColumn("batch_id", F.lit(batch_id)).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "dynamic").partitionBy(
-        "batch_id"
-    ).parquet(_os.path.join(state_dir, "packed"))
-    hi = df.agg(F.max(order_col).alias("hi")).collect()[0]["hi"]
-    tmp = state_p + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump(
-            {"total_tokens": base + int(lo["tok"] or 0), "max_order": hi},
-            f,
-        )
-    _os.replace(tmp, state_p)
-    return spark.read.parquet(_os.path.join(state_dir, "packed"))

@@ -34,30 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from xwikire_spark.functions.ids import triple_id
-from xwikire_spark.functions.udfs import (
-    longest_first_surfaces,
-    make_mention_udf,
-    segment_udf,
-)
-
-
-def segment_turns(transcripts: DataFrame) -> DataFrame:
-    """transcripts -> one row per (turn, sentence), order-stable.
-
-    Output: conv_id, turn_idx, role, ts, sent_idx, sentence.
-    The empty-text filter mirrors F1 (src/builders/QA.py:30-32).
-    """
-    return (
-        transcripts.where(F.length(F.trim(F.col("text"))) > 0)
-        .withColumn("sentences", segment_udf(F.col("text")))
-        .select(
-            "conv_id",
-            "turn_idx",
-            "role",
-            "ts",
-            F.posexplode("sentences").alias("sent_idx", "sentence"),
-        )
-    )
+from xwikire_spark.functions.udfs import longest_first_surfaces
 
 
 def _alias_surface_ids(alias_dict: DataFrame) -> list[tuple[str, str]]:
@@ -85,31 +62,6 @@ def _bc(df: DataFrame, pairs: list[tuple[str, str]]):
     """Ship dictionary pairs via SparkContext.broadcast: one torrent
     transfer per executor instead of a pickle in every task closure."""
     return df.sparkSession.sparkContext.broadcast(pairs)
-
-
-def detect_mentions(sentences: DataFrame, alias_dict: DataFrame) -> DataFrame:
-    """Attach entity mentions: longest whole-word dictionary match (X4
-    generalized). Ids resolve inside the broadcast automaton (collisions
-    emit one mention per entity) — no resolution join, no extra scan.
-
-    Output adds: surface, entity_id, m_start, m_end (one row per mention).
-    """
-    udf = make_mention_udf(_bc(sentences, _alias_surface_ids(alias_dict)))
-    return (
-        sentences.withColumn("mentions", udf(F.col("sentence")))
-        .where(F.size("mentions") > 0)
-        .select(
-            "*",
-            F.explode("mentions").alias("m"),
-        )
-        .select(
-            "conv_id", "turn_idx", "role", "ts", "sent_idx", "sentence",
-            F.col("m.surface").alias("surface"),
-            F.col("m.matched_id").alias("entity_id"),
-            F.col("m.start").alias("m_start"),
-            F.col("m.end").alias("m_end"),
-        )
-    )
 
 
 CANDIDATE_SCHEMA = (
@@ -309,7 +261,7 @@ def extract_triples(
       src/builders/MergedWikis.py:28).
     - "join": dictionaries NEVER leave the cluster — sentence word-runs
       meet the dictionary's first tokens in a shuffle equi-join
-      (detect_mentions_join), candidates assemble relationally. Right for
+      (extract_triples_join), candidates assemble relationally. Right for
       transcript-scale alias dictionaries (10^8+ surfaces) where a
       broadcast would OOM the executors; only the caller knows the alias
       table is cluster-sized, so it is never chosen automatically.
@@ -385,8 +337,8 @@ def _greedy_kept(ms_col: Column) -> Column:
     """Greedy leftmost-longest fold over a SORTED match-struct array —
     the regex automaton's finditer-consumption semantics (an earlier
     longer match consumes the text under it; same-span alias collisions
-    all emit) as an aggregate fold. Shared by detect_mentions_join and
-    the fused extract_triples_join path."""
+    all emit) as an aggregate fold over each sentence's match list in
+    extract_triples_join."""
     acc0 = F.struct(
         F.lit(-1).alias("last_start"),
         F.lit(0).alias("cur_end"),
@@ -409,109 +361,6 @@ def _greedy_kept(ms_col: Column) -> Column:
     return F.aggregate(ms_col, acc0, step)["kept"]
 
 
-def detect_mentions_join(
-    sentences: DataFrame,
-    pairs: DataFrame,
-    keys: tuple[str, ...] = ("conv_id", "turn_idx", "sent_idx"),
-    tag_col: str | None = None,
-) -> DataFrame:
-    """Dictionary mention detection WITHOUT shipping the dictionary: the
-    scale path when the alias table itself is cluster-sized.
-
-    Shape (all relational after a dictionary-free tokenizer UDF):
-    1. sentences -> (word-run token, char offset) rows — no dictionary in
-       the Python closure, just unicode \\w+ runs;
-    2. shuffle equi-join token == first word-run of each alias (the only
-       contact point between corpus and dictionary — scales as a plain
-       join, AQE handles hot first-tokens);
-    3. verify the full surface by substring equality at the candidate
-       offset + a word-boundary check after it (word-run starts are
-       boundaries by construction);
-    4. greedy leftmost-longest overlap resolution per sentence — the regex
-       automaton's finditer-consumption semantics (an earlier longer match
-       consumes the text under it; same-span alias collisions all emit) as
-       a sort_array + aggregate fold over the per-sentence match list.
-
-    Contract: aliases must start and end with word characters (regex \\b
-    parity); matching is case-sensitive like the broadcast path.
-
-    Input ``pairs``: DataFrame (alias, entity_id[, tag_col]). Output
-    matches detect_mentions: keys + sentence[, tag_col], surface,
-    entity_id, m_start, m_end. When ``tag_col`` is given (several
-    dictionaries sharing ONE tokenize+join pass), the greedy overlap
-    resolution runs per (sentence, tag) — each dictionary consumes text
-    independently, exactly like separate automatons.
-    """
-    from xwikire_spark.functions.udfs import word_offsets_udf
-
-    ks = list(keys)
-    tag = [tag_col] if tag_col else []
-    toks = sentences.select(
-        *ks, "sentence", F.explode(word_offsets_udf(F.col("sentence"))).alias("w")
-    ).select(*ks, "sentence", F.col("w.tok").alias("tok"), F.col("w.pos").alias("pos"))
-
-    # The starts/ends-with-word-char contract from the docstring, ENFORCED
-    # in the plan (ADVICE r2): a violating alias (e.g. '-foo') would
-    # otherwise be keyed on its first interior word-run and then silently
-    # never pass substring verification — dropping recall with no signal.
-    # Rows failing the contract are excluded here, visibly, as dictionary
-    # hygiene rather than a quiet per-row no-op.
-    contract = F.col("alias").rlike(r"(?Us)^\w(.*\w)?$")
-    dic = (
-        pairs.select("alias", "entity_id", *tag)
-        .where(F.col("alias").isNotNull() & contract)
-        .distinct()
-        .withColumn("tok", F.regexp_extract("alias", r"(?U)\w+", 0))
-        .where(F.col("tok") != "")
-    )
-
-    # shuffled-hash with the dictionary as build side (see the r7 note in
-    # extract_triples_join: Catalyst's post-UDF size estimates otherwise
-    # pick the corpus as the broadcast build)
-    cand = toks.join(dic.hint("shuffle_hash"), "tok")
-    after = F.substring(
-        F.col("sentence"), F.col("pos") + F.length("alias") + 1, 1
-    )
-    verified = cand.where(
-        (
-            F.substring(F.col("sentence"), F.col("pos") + 1, F.length("alias"))
-            == F.col("alias")
-        )
-        & ~F.coalesce(F.regexp_like(after, F.lit(r"(?U)\w")), F.lit(False))
-    )
-
-    m = verified.select(
-        *ks,
-        "sentence",
-        *tag,
-        F.struct(
-            F.col("pos").cast("int").alias("start"),
-            (-F.length("alias")).cast("int").alias("neg_len"),
-            F.col("entity_id").alias("entity_id"),
-            F.col("alias").alias("surface"),
-            (F.col("pos") + F.length("alias")).cast("int").alias("end"),
-        ).alias("m"),
-    )
-    grouped = m.groupBy(*ks, "sentence", *tag).agg(
-        F.sort_array(F.collect_list("m")).alias("ms")
-    )
-    # greedy fold: sorted by (start asc, longest first, id); accept a match
-    # when it starts at/after the consumed frontier, or shares the exact
-    # span of the last accepted match (alias collision -> one mention per id)
-    kept = _greedy_kept(F.col("ms"))
-    return grouped.select(
-        *ks, "sentence", *tag, F.explode(kept).alias("k")
-    ).select(
-        *ks,
-        "sentence",
-        *tag,
-        F.col("k.surface").alias("surface"),
-        F.col("k.entity_id").alias("entity_id"),
-        F.col("k.start").alias("m_start"),
-        F.col("k.end").alias("m_end"),
-    )
-
-
 def _predicate_pairs_df(predicate_dict: DataFrame) -> DataFrame:
     """(alias, entity_id=pid) rows over label + aliases — the DataFrame
     twin of _predicate_surface_ids, never collected."""
@@ -532,6 +381,15 @@ def extract_triples_join(
 ) -> DataFrame:
     """extract_triples' "join" strategy: same semantics, dictionaries stay
     distributed.
+
+    Mention matching, relational after a dictionary-free tokenizer UDF:
+    sentence word-runs (unicode \\w+ with char offsets) meet each alias's
+    first word-run in a shuffle equi-join; the full surface is verified by
+    substring equality at the offset plus a word-boundary check after it
+    (word-run starts are boundaries by construction); then a sorted
+    per-sentence match list is folded greedily leftmost-longest
+    (``_greedy_kept``). Contract: aliases start and end with word
+    characters; matching is case-sensitive like the broadcast path.
 
     Plan shape (engineered — see tests/test_plans.py): BOTH dictionaries
     union into one tagged table, so tokenization + the dictionary join run
@@ -592,7 +450,11 @@ def extract_triples_join(
             "alias", "entity_id", F.lit("P").alias("tag")
         )
     )
-    # same dictionary hygiene contract as detect_mentions_join
+    # Dictionary hygiene, ENFORCED in the plan (ADVICE r2): an alias must
+    # start and end with a word character (regex \b parity). A violating
+    # alias (e.g. '-foo') would otherwise be keyed on its first interior
+    # word-run and then silently never pass substring verification —
+    # dropping recall with no signal — so it is excluded here, visibly.
     contract = F.col("alias").rlike(r"(?Us)^\w(.*\w)?$")
     dic = (
         tagged.where(F.col("alias").isNotNull() & contract)
