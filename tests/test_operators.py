@@ -59,6 +59,50 @@ class TestMinHashLSH:
         b = {r.doc_id: r.sig for r in minhash_signatures(docs).collect()}
         assert a == b
 
+    def test_pinned_signatures_and_bands(self, spark):
+        """Literal signatures (8 hashes) and band hashes (32 hashes in 8
+        bands) of three fixed documents: the hash family, its derived
+        rotations and the banding are pinned value for value. Docs 1 and
+        2 differ in their last shingle only."""
+        from xwikire_spark.operators.dedup import _banded, minhash_signatures
+
+        docs = spark.createDataFrame([
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "the quick brown fox jumps over the lazy cat"),
+            (3, "near duplicate documents share most of their shingles"),
+        ], "doc_id long, text string")
+        sigs = {r.doc_id: r.sig for r in
+                minhash_signatures(docs, n_hashes=8).collect()}
+        shared = [-6884962307884821852, -7190716267515777504,
+                  -9132097452267241473]
+        tail = [-9194547420715905643, -5688520431801304420,
+                -4020706592271022009, -8310123853791181541]
+        assert sigs == {
+            1: shared + [-7072468282479702673] + tail,
+            2: shared + [-8460658860012774640] + tail,
+            3: [-9211548128559556783, -8211999570075171638,
+                -4820731886317463885, -7009644990891907591,
+                -4753281629093205522, -8652389669515396288,
+                -1832542893807745417, -5842786347856534854],
+        }
+        bands = {}
+        for r in _banded(minhash_signatures(docs), 8).collect():
+            bands.setdefault(r.doc_id, {})[r.band] = r.band_hash
+        assert {d: [b[i] for i in range(8)] for d, b in bands.items()} == {
+            1: [-8305919243092643257, -8144661521383912812,
+                7946408915780909472, 9042395278151010444,
+                -2650573345011883930, 6297000309162402481,
+                1510213790908074850, 240336440576318514],
+            2: [-4062598748392730870, -8144661521383912812,
+                -1520256964988042090, 9042395278151010444,
+                650800962618175508, -5719624754826268834,
+                -3949440572861559045, 3430910428682159593],
+            3: [-582764273277363820, -7455163332959339709,
+                -3149515335380107610, 8610032941255418087,
+                -6212940078438693627, 3559241184111053262,
+                1300182685910629452, 8020069252273423231],
+        }
+
 
 class TestANN:
     @pytest.fixture(scope="class")
@@ -995,6 +1039,45 @@ class TestTfidfTopTerms:
         assert got[("g2", "banana")] == (1, 2, 0.0, 2)
         assert len(got) == 4
 
+    def test_group_without_token_counts(self, spark):
+        """A group whose text has no ``[a-z]{3,}`` token ranks no term but
+        still counts in n_groups, so idf is ln(3 / df)."""
+        import math
+
+        from xwikire_spark.operators.ranking import tfidf_top_terms
+
+        docs = spark.createDataFrame(
+            [("g1", "apple apple banana"), ("g2", "banana cherry"),
+             ("g3", "42 ab C3")],
+            "src string, text string",
+        )
+        got = {
+            (r["src"], r["term"]): (r["tf"], r["df"], r["score"], r["rank"])
+            for r in tfidf_top_terms(docs, "src", "text", k=2).collect()
+        }
+        ln3, ln15 = math.log(3.0), math.log(1.5)
+        assert got == {
+            ("g1", "apple"): (2, 1, round(2 * ln3, 6), 1),
+            ("g1", "banana"): (1, 2, round(ln15, 6), 2),
+            ("g2", "cherry"): (1, 1, round(ln3, 6), 1),
+            ("g2", "banana"): (1, 2, round(ln15, 6), 2),
+        }
+
+    def test_text_tokenized_once(self, spark):
+        """The planned query explodes the text in one ``Generate``: df is
+        counted from tf's rows, not from a second tokenization."""
+        import re
+
+        from xwikire_spark.operators.ranking import tfidf_top_terms
+
+        docs = spark.createDataFrame(
+            [("g1", "apple banana"), ("g2", "banana")],
+            "src string, text string",
+        )
+        plan = tfidf_top_terms(docs, "src")._jdf.queryExecution() \
+            .executedPlan().toString()
+        assert len(re.findall(r"\bGenerate\b", plan)) == 1, plan
+
 
 class TestProfileTable:
     """operators/profile.py: one-scan data-quality profile."""
@@ -1043,13 +1126,15 @@ class TestProfileTable:
 class TestTriangleCounts:
     """operators/graph_metrics.py: degree-oriented triangle enumeration
     vs an itertools brute force, plus shape cases (hub star = 0
-    triangles, clique = C(n-1,2) each, duplicate/reversed/self-loop
-    input hygiene)."""
+    triangles, clique = C(n-1,2) each, duplicate/reversed/self-loop/null
+    input hygiene). Each input runs on the driver path and, with the
+    bound monkeypatched to 0, on the Spark joins."""
 
     def _brute(self, edge_list):
         import itertools
 
-        und = {tuple(sorted(e)) for e in edge_list if e[0] != e[1]}
+        und = {tuple(sorted(e)) for e in edge_list
+               if None not in e and e[0] != e[1]}
         nodes = sorted({n for e in und for n in e})
         count = {n: 0 for n in nodes}
         for a, b, c in itertools.combinations(nodes, 3):
@@ -1058,31 +1143,96 @@ class TestTriangleCounts:
                     count[n] += 1
         return {n: c for n, c in count.items() if c}
 
-    def test_random_graph_matches_brute_force(self, spark):
+    def _both_paths(self, monkeypatch, df, bounds=None):
+        """{bound: {node: n_triangles}} at the real bound and at 0, and
+        whether the driver path gave the rows at each."""
+        from xwikire_spark.operators import graph_metrics
+        from xwikire_spark.pipeline import graph
+
+        real, calls = graph_metrics._triangles_numpy, []
+        got, on_driver = {}, {}
+        with monkeypatch.context() as m:
+            m.setattr(
+                graph_metrics, "_triangles_numpy",
+                lambda *a: calls.append(real(*a)) or calls[-1],
+            )
+            for bound in bounds or (graph.DRIVER_LOOP_MAX_ROWS, 0):
+                m.setattr(graph, "DRIVER_LOOP_MAX_ROWS", bound)
+                n_calls = len(calls)
+                got[bound] = {
+                    r["node"]: r["n_triangles"]
+                    for r in graph_metrics.triangle_counts(df).collect()
+                }
+                on_driver[bound] = (
+                    len(calls) > n_calls and calls[-1] is not None
+                )
+        return got, on_driver
+
+    def test_random_graph_matches_brute_force(self, spark, monkeypatch):
         rng = random.Random(7)
         edges = [(rng.randrange(30), rng.randrange(30)) for _ in range(120)]
         # adversarial extras: duplicates, reversed copies, self-loops
         edges += [(b, a) for a, b in edges[:20]] + [(5, 5), (9, 9)]
-        from xwikire_spark.operators.graph_metrics import triangle_counts
+        # the same graph over string ids (their order is not the ints'),
+        # plus a null endpoint on either side
+        named = [(f"n{a}", f"n{b}") for a, b in edges]
+        named += [(None, "n1"), ("n2", None), (None, None)]
+        for df, rows in (
+            (spark.createDataFrame(edges, "src bigint, dst bigint"), edges),
+            (spark.createDataFrame(named, "src string, dst string"), named),
+        ):
+            got, on_driver = self._both_paths(monkeypatch, df)
+            assert list(on_driver.values()) == [True, False]
+            for counts in got.values():
+                assert counts == self._brute(rows)
 
-        df = spark.createDataFrame(edges, "src bigint, dst bigint")
-        got = {r["node"]: r["n_triangles"]
-               for r in triangle_counts(df).collect()}
-        assert got == self._brute(edges)
-
-    def test_star_and_clique(self, spark):
-        from xwikire_spark.operators.graph_metrics import triangle_counts
-
+    def test_star_and_clique(self, spark, monkeypatch):
         star = [(0, i) for i in range(1, 50)]
         df = spark.createDataFrame(star, "src bigint, dst bigint")
-        assert triangle_counts(df).count() == 0  # hub, no closures
+        got, _ = self._both_paths(monkeypatch, df)
+        assert got == {b: {} for b in got}  # hub, no closures
         k = 8
         clique = [(i, j) for i in range(k) for j in range(i + 1, k)]
-        got = {r["node"]: r["n_triangles"] for r in triangle_counts(
-            spark.createDataFrame(clique, "src bigint, dst bigint")
-        ).collect()}
+        got, on_driver = self._both_paths(
+            monkeypatch, spark.createDataFrame(clique, "src bigint, dst bigint")
+        )
         want = (k - 1) * (k - 2) // 2
-        assert got == {i: want for i in range(k)}
+        assert got == {b: {i: want for i in range(k)} for b in got}
+        assert list(on_driver.values()) == [True, False]
+
+    def test_wedge_guard_falls_back_to_spark(self, spark, monkeypatch):
+        """A 12-clique under a bound of 100: its 66 edges fit, but the
+        oriented edges close C(12, 3) = 220 wedges, so the driver path
+        declines and the Spark joins give the same counts."""
+        k = 12
+        clique = [(i, j) for i in range(k) for j in range(i + 1, k)]
+        df = spark.createDataFrame(clique, "src bigint, dst bigint")
+        got, on_driver = self._both_paths(monkeypatch, df, (100, 220, 0))
+        want = {i: (k - 1) * (k - 2) // 2 for i in range(k)}
+        assert got == {100: want, 220: want, 0: want}
+        assert on_driver == {100: False, 220: True, 0: False}
+
+    def test_driver_path_runs_three_jobs(self, spark):
+        """On a small graph the whole operator is three Spark jobs: the
+        checkpoint of the deduplicated edges that counts them (the
+        distinct's shuffle, then its result) and their Arrow collect.
+        The answer is a local frame, so collecting it runs none."""
+        from xwikire_spark.operators.graph_metrics import triangle_counts
+
+        sc = spark.sparkContext
+        df = spark.createDataFrame(
+            [(i, (i + 1) % 6) for i in range(6)] + [(0, 2), (7, 8)],
+            "src bigint, dst bigint",
+        )
+        group = "test_triangles_driver_jobs"
+        sc.setJobGroup(group, group)
+        try:
+            rows = triangle_counts(df).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert sorted(map(tuple, rows)) == [(0, 1), (1, 1), (2, 1)]
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
 
 
 class TestWeightedSample:

@@ -1198,19 +1198,22 @@ def _codegen_compiles(spark):
         .METRIC_COMPILATION_TIME().getCount()
 
 
-def test_second_run_compiles_no_class(spark, corpus, tmp_path):
+def test_second_run_compiles_no_class(spark, corpus, tmp_path, monkeypatch):
     """A fixed sequence of plans run twice — the test-corpus pipeline
     (graph write + salience) and six operators whose plans do not
     depend on adaptive execution — compiles no generated class the
     second time. The sequence needs more than 100 distinct classes,
     Spark's default cache size, so this holds only while the session's
-    codegen cache holds them all (``session.get_spark``)."""
+    codegen cache holds them all (``session.get_spark``). The triangle
+    count runs its Spark joins (bound 0): the driver path would take
+    its plans out of the sequence."""
     from xwikire_spark.operators.asof import asof_join
     from xwikire_spark.operators.chunking import chunk_documents
     from xwikire_spark.operators.dedup import near_duplicates_minhash
     from xwikire_spark.operators.graph_metrics import triangle_counts
     from xwikire_spark.operators.quantiles import exact_group_quantiles
     from xwikire_spark.operators.textstats import scrub_pii
+    from xwikire_spark.pipeline import graph
     from xwikire_spark.pipeline.canonicalize import connected_components
     from xwikire_spark.pipeline.graph import (
         entity_salience,
@@ -1248,7 +1251,9 @@ def test_second_run_compiles_no_class(spark, corpus, tmp_path):
         entity_salience(edges).collect()
         near_duplicates_minhash(docs, threshold=0.5).collect()
         scrub_pii(docs).collect()
-        triangle_counts(links).collect()
+        with monkeypatch.context() as m:
+            m.setattr(graph, "DRIVER_LOOP_MAX_ROWS", 0)
+            triangle_counts(links).collect()
         exact_group_quantiles(
             docs.withColumn("n_chars", F.length("text")), "n_chars", "lang",
             [0.5, 1.0], tiebreak_col="doc_id",

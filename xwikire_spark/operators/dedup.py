@@ -65,6 +65,17 @@ def _shingles(text_col: str, k: int = 3):
     return F.slice(zipped, 1, n)
 
 
+def _hash_sql(i: int) -> str:
+    """SQL for the i-th hash of the MinHash family over the base hashes
+    h1, h2 (see ``minhash_signatures``)."""
+    if i < 2:
+        return f"h{i + 1}"
+    rot = (i * 13) % 63 + 1  # coprime stride -> distinct rotations
+    return (
+        f"h1 ^ (shiftleft(h2, {rot}) | shiftrightunsigned(h2, {64 - rot}))"
+    )
+
+
 def minhash_signatures(
     docs: DataFrame, text_col: str = "text", n_hashes: int = 32, k: int = 3
 ) -> DataFrame:
@@ -76,7 +87,15 @@ def minhash_signatures(
     combine map-side). This deliberately avoids array_min-over-transform
     per seed, which makes Catalyst re-inline the shingle construction into
     every seed expression (measured 30x slower). Empty docs are dropped.
+
+    The hash and min expressions here, and the band, pair and Jaccard
+    expressions after them, are SQL strings: built from Column objects,
+    they cost thousands of driver round trips to the JVM per call before
+    the first job runs.
     """
+    # explode the shingle expression itself: over a projected shingle
+    # column, Catalyst infers a size(shingles) > 0 filter that builds the
+    # shingles a second time
     exploded = docs.select(
         "doc_id", F.explode(_shingles(text_col, k)).alias("shingle")
     )
@@ -84,33 +103,14 @@ def minhash_signatures(
     # other n_hashes-2 derived by overflow-free bit mixing (h1 XOR rotl(h2,
     # i)) — ANSI mode forbids the classic h1 + i*h2 (long overflow), and 32
     # xxhash64 evaluations per shingle measured ~3x the whole stage cost.
-    base = exploded.select(
-        "doc_id",
-        F.xxhash64("shingle", F.lit(1)).alias("h1"),
-        F.xxhash64("shingle", F.lit(2)).alias("h2"),
+    base = exploded.selectExpr(
+        "doc_id", "xxhash64(shingle, 1) AS h1", "xxhash64(shingle, 2) AS h2"
     )
-
-    def g(i: int):
-        if i == 0:
-            return F.col("h1")
-        if i == 1:
-            return F.col("h2")
-        rot = (i * 13) % 63 + 1  # coprime stride -> distinct rotations
-        rotated = F.shiftleft(F.col("h2"), rot).bitwiseOR(
-            F.shiftrightunsigned(F.col("h2"), 64 - rot)
-        )
-        return F.col("h1").bitwiseXOR(rotated)
-
-    hashed = base.select(
-        "doc_id", *[g(i).alias(f"h{i}") for i in range(n_hashes)]
+    hashed = base.selectExpr(
+        "doc_id", *[f"{_hash_sql(i)} AS h{i}" for i in range(n_hashes)]
     )
-    mins = hashed.groupBy("doc_id").agg(
-        *[F.min(f"h{i}").alias(f"h{i}") for i in range(n_hashes)]
-    )
-    return mins.select(
-        "doc_id",
-        F.array(*[F.col(f"h{i}") for i in range(n_hashes)]).alias("sig"),
-    )
+    mins = ", ".join(f"min(h{i})" for i in range(n_hashes))
+    return hashed.groupBy("doc_id").agg(F.expr(f"array({mins}) AS sig"))
 
 
 def _banded(signatures: DataFrame, n_bands: int) -> DataFrame:
@@ -118,24 +118,15 @@ def _banded(signatures: DataFrame, n_bands: int) -> DataFrame:
     is the xxhash64 of its slice of the MinHash signature, so two docs
     share a (band, band_hash) bucket exactly when they agree on that
     slice. `lsh_candidate_pairs` self-joins on it."""
-    rows_per_band = F.size("sig") / n_bands
-    return signatures.select(
+    rows = f"(size(sig) / {n_bands})"
+    band_hash = (
+        f"b -> xxhash64(concat_ws(',', slice(sig, CAST(b * {rows} + 1 AS INT),"
+        f" CAST({rows} AS INT))))"
+    )
+    return signatures.selectExpr(
         "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_bands - 1)),
-                lambda b: F.xxhash64(
-                    F.concat_ws(
-                        ",",
-                        F.slice(
-                            F.col("sig"),
-                            (b * rows_per_band + 1).cast("int"),
-                            rows_per_band.cast("int"),
-                        ),
-                    )
-                ),
-            )
-        ).alias("band", "band_hash"),
+        f"posexplode(transform(sequence(0, {n_bands - 1}), {band_hash}))"
+        " AS (band, band_hash)",
     )
 
 
@@ -161,26 +152,17 @@ def lsh_candidate_pairs(
     # hot-bucket exposure is unchanged and still bounded by the
     # max_bucket stop guard dropping oversized buckets before any pair
     # is generated.
-    banded = _banded(signatures, n_bands)
     buckets = (
-        banded.groupBy("band", "band_hash")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .where(F.size("ids") <= max_bucket)
+        _banded(signatures, n_bands)
+        .groupBy("band", "band_hash")
+        .agg(F.expr("array_sort(collect_list(doc_id)) AS ids"))
+        .where(f"size(ids) <= {int(max_bucket)}")
     )
-    pairs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
-    return (
-        buckets.select(F.explode(pairs).alias("p"))
-        .select(F.col("p.doc_a"), F.col("p.doc_b"))
-        .distinct()
-    )
+    return buckets.selectExpr(
+        "inline(flatten(transform(ids, (x, i) -> transform("
+        "slice(ids, i + 2, size(ids)),"
+        " y -> named_struct('doc_a', x, 'doc_b', y)))))"
+    ).distinct()
 
 
 def jaccard_verify(
@@ -200,26 +182,21 @@ def jaccard_verify(
         if shingle_k
         else F.split(F.col(text_col), " ")
     )
-    toks = docs.select(
-        "doc_id",
-        F.array_distinct(elems).alias("toks"),
-    )
+    toks = docs.select("doc_id", F.array_distinct(elems).alias("toks"))
     j = (
-        pairs.join(toks.withColumnRenamed("doc_id", "doc_a")
-                   .withColumnRenamed("toks", "toks_a"), "doc_a")
-        .join(toks.withColumnRenamed("doc_id", "doc_b")
-              .withColumnRenamed("toks", "toks_b"), "doc_b")
-        .withColumn(
-            "inter", F.size(F.array_intersect("toks_a", "toks_b"))
+        pairs.join(toks.toDF("doc_a", "toks_a"), "doc_a")
+        .join(toks.toDF("doc_b", "toks_b"), "doc_b")
+        .selectExpr(
+            "doc_a", "doc_b", "toks_a", "toks_b",
+            "size(array_intersect(toks_a, toks_b)) AS inter",
         )
-        .withColumn(
-            "jaccard",
-            F.col("inter")
-            / (F.size("toks_a") + F.size("toks_b") - F.col("inter")),
+        .selectExpr(
+            "doc_a", "doc_b",
+            "inter / (size(toks_a) + size(toks_b) - inter) AS jaccard",
         )
     )
-    return j.where(F.col("jaccard") >= threshold).select(
-        "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
+    return j.where(F.col("jaccard") >= threshold).selectExpr(
+        "doc_a", "doc_b", "round(jaccard, 6) AS jaccard"
     )
 
 
