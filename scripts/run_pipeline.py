@@ -6,15 +6,17 @@
         --alias-dict /data/alias_dict \
         --predicate-dict /data/predicate_dict \
         --out /data/kg \
-        [--n-buckets 4096] [--n-partitions 8192] [--no-canonicalize]
+        [--n-buckets 4096] [--n-partitions 8192] [--no-canonicalize] \
+        [--compact-target-bytes 134217728]
 
-Inputs are parquet directories (Iceberg tables read the same way once the
-runtime jar is on the cluster — this container has none, so the parquet
-fallback is wired): transcripts with the BASELINE.json input_hint schema;
-alias_dict (alias, entity_id[, canonical_label, is_canonical]);
-predicate_dict (pid, label, aliases).
+Inputs are parquet directories: transcripts with the BASELINE.json
+input_hint schema; alias_dict (alias, entity_id[, canonical_label,
+is_canonical]); predicate_dict (pid, label, aliases). Any path the Hadoop
+FileSystem resolves works (local, file://, HDFS, S3A).
 
-Output: out/triples/part_bucket=*/ + out/_manifests (resume on re-run).
+Output: parquet partitioned by bucket under out/triples/part_bucket=*/,
+plus out/_manifests (per-bucket lineage rows; a re-run processes only the
+buckets whose input changed or whose batch failed) and out/_metrics.
 """
 
 from __future__ import annotations
@@ -47,24 +49,15 @@ def main(argv: list[str]) -> int:
              " alias table is too large to broadcast to executors)",
     )
     p.add_argument(
-        "--table-format",
-        choices=["parquet", "snapshot"],
-        default="parquet",
-        help="'parquet' = partitioned dirs + dynamic overwrite;"
-             " 'snapshot' = snapshot-isolated table (sources/snapshots.py):"
-             " each resume batch is one atomic versioned commit with time"
-             " travel, readers plan from manifests (never directory"
-             " listings) — the Iceberg-table shape the north rule names",
-    )
-    p.add_argument(
         "--compact-target-bytes",
         type=int,
         default=None,
         metavar="N",
-        help="after the run, binpack-rewrite small-file buckets under"
-             " out/triples toward N-byte files (sources/compaction.py)."
-             " Run it on the cadence of your resumed runs — every"
-             " resume batch leaves a few files per bucket",
+        help="after the run, binpack-rewrite the buckets under"
+             " out/triples that hold more files than their bytes need"
+             " into files of about N bytes (sources/compaction.py). Run"
+             " it on the cadence of your resumed runs: every resume"
+             " batch leaves a few files per bucket it rewrites",
     )
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
@@ -89,36 +82,24 @@ def main(argv: list[str]) -> int:
         return t
 
     out = run_with_manifests(
-        spark, transcripts, build, args.out, n_buckets=args.n_buckets,
-        table_format=args.table_format,
+        spark, transcripts, build, args.out, n_buckets=args.n_buckets
     )
     n = out.count()
     print(f"kg-pipeline: {n} triples materialized under {args.out}")
     if args.compact_target_bytes:
-        if args.table_format == "snapshot":
-            from xwikire_spark.sources.snapshots import compact_snapshot
+        from xwikire_spark.sources.compaction import compact_partitions
 
-            info = compact_snapshot(
-                spark, os.path.join(args.out, "triples")
-            )
-            print(
-                f"kg-pipeline: compaction committed as snapshot "
-                f"v{info['version']} ({info['total_files']} files)"
-            )
-        else:
-            from xwikire_spark.sources.compaction import compact_partitions
-
-            stats = compact_partitions(
-                spark,
-                os.path.join(args.out, "triples"),
-                target_bytes=args.compact_target_bytes,
-            )
-            rewritten = sum(s["files_before"] for s in stats)
-            kept = sum(s["files_after"] for s in stats)
-            print(
-                f"kg-pipeline: compacted {len(stats)} buckets "
-                f"({rewritten} -> {kept} files)"
-            )
+        stats = compact_partitions(
+            spark,
+            os.path.join(args.out, "triples"),
+            target_bytes=args.compact_target_bytes,
+        )
+        rewritten = sum(s["files_before"] for s in stats)
+        kept = sum(s["files_after"] for s in stats)
+        print(
+            f"kg-pipeline: compacted {len(stats)} buckets "
+            f"({rewritten} -> {kept} files)"
+        )
     spark.stop()
     return 0
 

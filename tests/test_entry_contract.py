@@ -74,12 +74,6 @@ TEST_ONLY = {
     "sources.io.write_conll": "S10 CoNLL sink; no stage exports CoNLL yet",
     "sources.io.read_squad_json":
         "S11 SQuAD source; no stage reads SQuAD JSON yet",
-    "sources.snapshots.commit_append":
-        "append commit; the manifest run only replaces partitions",
-    "sources.snapshots.expire_snapshots":
-        "snapshot retention, run out of band of the pipeline",
-    "sources.snapshots.snapshot_log":
-        "snapshot history for inspection, run out of band of the pipeline",
 }
 
 class TestDriverContract:

@@ -24,6 +24,8 @@ class TestCompaction:
         return root
 
     def test_compacts_bit_identically(self, spark, tmp_path):
+        """On a plain path and on a ``file://`` URI: the compaction goes
+        through the Hadoop FileSystem, like the pipeline's writes."""
         from xwikire_spark.sources.compaction import (
             compact_partitions,
             compaction_plan,
@@ -31,23 +33,28 @@ class TestCompaction:
             read_partitioned,
         )
 
-        root = self._fragmented_table(spark, str(tmp_path / "t"))
-        plan = compaction_plan(root, target_bytes=1 << 30)
-        assert plan and all(n == 1 for n in plan.values())
-        h0 = partition_hash(spark, root)
-        n0 = read_partitioned(spark, root).count()
+        for root in (str(tmp_path / "t"), (tmp_path / "u").as_uri()):
+            self._fragmented_table(spark, root)
+            plan = compaction_plan(root, target_bytes=1 << 30)
+            assert plan and all(n == 1 for n in plan.values())
+            h0 = partition_hash(spark, root)
+            n0 = read_partitioned(spark, root).count()
 
-        stats = compact_partitions(spark, root, target_bytes=1 << 30)
-        assert {s["partition"] for s in stats} == set(plan)
-        assert all(
-            s["files_after"] == 1 and s["files_before"] == 8 for s in stats
-        )
-        assert partition_hash(spark, root) == h0
-        assert read_partitioned(spark, root).count() == n0
-        # partition column survives the rewrite (derived from dir layout)
-        assert "part_bucket" in read_partitioned(spark, root).columns
-        # second run: nothing left to do
-        assert compact_partitions(spark, root, target_bytes=1 << 30) == []
+            stats = compact_partitions(spark, root, target_bytes=1 << 30)
+            assert {s["partition"] for s in stats} == set(plan)
+            assert all(
+                s["files_after"] == 1 and s["files_before"] == 8
+                for s in stats
+            )
+            assert partition_hash(spark, root) == h0
+            assert read_partitioned(spark, root).count() == n0
+            # partition column survives the rewrite (derived from dir
+            # layout)
+            assert "part_bucket" in read_partitioned(spark, root).columns
+            # second run: nothing left to do
+            assert compact_partitions(
+                spark, root, target_bytes=1 << 30
+            ) == []
 
     def test_multi_file_target_and_min_files(self, spark, tmp_path):
         from xwikire_spark.sources.compaction import (
@@ -173,340 +180,3 @@ class TestCompaction:
         assert [s["partition"] for s in stats2] == [dirty[0]["partition"]]
         assert not stats2[0]["skipped_dirty"]
         assert compaction.read_partitioned(spark, root).count() == n0 + 1
-
-
-class TestSnapshots:
-    """sources/snapshots.py: snapshot-isolated commits + time travel (the
-    Iceberg metadata-layer analog). Core contracts: readers plan from the
-    manifest (never a directory listing), the pointer swings only after
-    data+manifest are durable (crash => parent snapshot intact), old
-    versions keep their exact file sets across appends/compactions until
-    expired, and a lost commit race can never clobber the winner."""
-
-    def _df(self, spark, ids):
-        return spark.createDataFrame(
-            [(i, f"doc{i}") for i in ids], "id bigint, text string"
-        )
-
-    def _ids(self, df):
-        return sorted(r["id"] for r in df.collect())
-
-    def test_append_time_travel_and_log(self, spark, tmp_path):
-        from xwikire_spark.sources import snapshots as sn
-
-        root = str(tmp_path / "t")
-        st1 = sn.commit_append(spark, root, self._df(spark, range(5)))
-        st2 = sn.commit_append(spark, root, self._df(spark, range(5, 8)))
-        assert (st1["version"], st2["version"]) == (1, 2)
-        assert st2["parent"] == 1
-        assert self._ids(sn.read_table(spark, root)) == list(range(8))
-        # time travel: v1 unchanged by the later append
-        assert self._ids(sn.read_table(spark, root, version=1)) == list(
-            range(5)
-        )
-        log = sn.snapshot_log(root)
-        assert [m["version"] for m in log] == [1, 2]
-        assert all(not m["orphan"] for m in log)
-        assert log[1]["op"] == "append"
-
-    def test_reader_never_lists_directories(self, spark, tmp_path):
-        """A parquet file on disk that no snapshot references is
-        invisible — the atomicity property crashes rely on."""
-        import os
-
-        from xwikire_spark.sources import snapshots as sn
-
-        root = str(tmp_path / "t")
-        sn.commit_append(spark, root, self._df(spark, range(4)))
-        rogue = os.path.join(root, "snapdata", "rogue")
-        self._df(spark, range(100, 110)).write.parquet(rogue)
-        assert self._ids(sn.read_table(spark, root)) == list(range(4))
-
-    def test_overwrite_and_compact_are_snapshot_isolated(
-        self, spark, tmp_path
-    ):
-        from xwikire_spark.sources import snapshots as sn
-
-        root = str(tmp_path / "t")
-        sn.commit_append(
-            spark, root, self._df(spark, range(6)).repartition(4)
-        )
-        sn.commit_append(spark, root, self._df(spark, range(6, 9)))
-        before = self._ids(sn.read_table(spark, root))
-        st = sn.compact_snapshot(spark, root, target_files=1)
-        assert st["op"] == "compact" and st["added_files"] == 1
-        assert self._ids(sn.read_table(spark, root)) == before
-        # the pre-compaction snapshot still reads its ORIGINAL files
-        assert self._ids(sn.read_table(spark, root, version=2)) == before
-        assert self._ids(sn.read_table(spark, root, version=1)) == list(
-            range(6)
-        )
-        sn.commit_overwrite(spark, root, self._df(spark, [42]))
-        assert self._ids(sn.read_table(spark, root)) == [42]
-        assert self._ids(sn.read_table(spark, root, version=3)) == before
-
-    def test_expire_drops_unreferenced_files_only(self, spark, tmp_path):
-        import os
-
-        from xwikire_spark.sources import snapshots as sn
-
-        root = str(tmp_path / "t")
-        sn.commit_append(spark, root, self._df(spark, range(6)))
-        sn.commit_append(spark, root, self._df(spark, range(6, 9)))
-        sn.compact_snapshot(spark, root, target_files=1)
-        st = sn.expire_snapshots(spark, root, keep_last=1)
-        assert st["retained"] == [3]
-        assert st["dropped_snapshots"] == 2
-        assert st["dropped_files"] > 0
-        # current still reads; expired versions are gone
-        assert self._ids(sn.read_table(spark, root)) == list(range(9))
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError):
-            sn.read_table(spark, root, version=1)
-        # the v1/v2 file groups were physically removed (compact rewrote
-        # everything, so only v3's group remains)
-        groups = os.listdir(os.path.join(root, "snapdata"))
-        assert len(groups) == 1
-
-    def test_lost_race_cannot_clobber_winner(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """A commit that loses the pointer race raises SnapshotConflict
-        AFTER the winner's commit is fully durable — and the winner's
-        manifest at the contested version slot is untouched. The loser's
-        data + staging are orphans that expire_snapshots sweeps."""
-        import os
-
-        import pytest as _pytest
-
-        from xwikire_spark.sources import snapshots as sn
-
-        root = str(tmp_path / "t")
-        sn.commit_append(spark, root, self._df(spark, range(3)))
-
-        orig = sn._write_data
-        fired = {}
-
-        def interlope(df, r, partition_col=None):
-            out = orig(df, r, partition_col)
-            if "done" not in fired:  # the interloper wins the race once
-                fired["done"] = True
-                sn.commit_append(spark, root, self._df(spark, [77]))
-            return out
-
-        monkeypatch.setattr(sn, "_write_data", interlope)
-        with _pytest.raises(sn.SnapshotConflict):
-            sn.commit_append(spark, root, self._df(spark, [99]))
-        monkeypatch.setattr(sn, "_write_data", orig)
-        # winner's v2 is intact; the loser's row never appears
-        assert sn.current_version(root) == 2
-        assert self._ids(sn.read_table(spark, root)) == [0, 1, 2, 77]
-        # loser left orphans (data group + staging); expire sweeps them
-        n_groups = len(os.listdir(os.path.join(root, "snapdata")))
-        assert n_groups == 3  # v1 + winner + loser-orphan
-        sn.expire_snapshots(spark, root, keep_last=2)
-        assert len(os.listdir(os.path.join(root, "snapdata"))) == 2
-        assert self._ids(sn.read_table(spark, root)) == [0, 1, 2, 77]
-        staging = [
-            n for n in os.listdir(os.path.join(root, "_snapshots"))
-            if n.endswith(".tmp")
-        ]
-        assert staging == []
-
-    def test_empty_and_missing_versions(self, spark, tmp_path):
-        import pytest as _pytest
-
-        from xwikire_spark.sources import snapshots as sn
-
-        root = str(tmp_path / "t")
-        with _pytest.raises(ValueError):
-            sn.read_table(spark, root)
-        sn.commit_append(spark, root, self._df(spark, [1]))
-        with _pytest.raises(ValueError):
-            sn.read_table(spark, root, version=9)
-
-
-class TestSnapshotPartitioned:
-    """Partitioned snapshot tables: Hive-layout file groups whose
-    manifest rows carry per-file partition values (Iceberg's partition
-    tuple), commit_replace_partitions = dynamic partition overwrite as
-    ONE atomic versioned commit, metadata-level partition pruning, and
-    expire() that is per-FILE safe inside mixed-liveness groups."""
-
-    def _pdf(self, spark, pairs):
-        """(bucket, id) rows; partition col deliberately NOT last so the
-        read path must restore committed column order."""
-        return spark.createDataFrame(
-            [(b, i, f"doc{i}") for b, i in pairs],
-            "bucket bigint, id bigint, text string",
-        )
-
-    def _rows(self, df):
-        return sorted((r["bucket"], r["id"], r["text"]) for r in df.collect())
-
-    def test_replace_partitions_is_atomic_and_time_travels(
-        self, spark, tmp_path
-    ):
-        from xwikire_spark.sources import snapshots as sn
-
-        root = str(tmp_path / "t")
-        v1_rows = [(b, b * 10 + i) for b in (0, 1, 2) for i in range(3)]
-        sn.commit_replace_partitions(
-            spark, root, self._pdf(spark, v1_rows), "bucket"
-        )
-        # rewrite ONLY bucket 1
-        new1 = [(1, 99), (1, 98)]
-        st = sn.commit_replace_partitions(
-            spark, root, self._pdf(spark, new1), "bucket"
-        )
-        assert st["op"] == "replace" and st["version"] == 2
-        want = [p for p in v1_rows if p[0] != 1] + new1
-        assert self._rows(sn.read_table(spark, root)) == self._rows(
-            self._pdf(spark, want)
-        )
-        # time travel: v1 still serves the original bucket 1
-        assert self._rows(
-            sn.read_table(spark, root, version=1)
-        ) == self._rows(self._pdf(spark, v1_rows))
-        # untouched buckets were CARRIED FORWARD, not rewritten: their
-        # manifest paths are identical across versions
-        def paths(v, bucket):
-            return {
-                r["path"]
-                for r in sn._read_manifest(spark, root, v).collect()
-                if r["partition"] == f"bucket={bucket}"
-            }
-
-        for b in (0, 2):
-            assert paths(1, b) == paths(2, b)
-        assert paths(1, 1) and paths(1, 1) != paths(2, 1)
-
-    def test_partition_pruning_plans_fewer_files(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
-        from xwikire_spark.sources import snapshots as sn
-
-        root = str(tmp_path / "t")
-        rows = [(b, b * 100 + i) for b in range(4) for i in range(5)]
-        sn.commit_replace_partitions(
-            spark, root, self._pdf(spark, rows), "bucket"
-        )
-        full = sn.read_table(spark, root)
-        # partitions= plans only the wanted buckets' files (manifest-level)
-        one = sn.read_table(spark, root, partitions=[2])
-        assert self._rows(one) == self._rows(
-            full.where(F.col("bucket") == 2)
-        )
-        got_files = {
-            f for (f,) in one.select(
-                F.input_file_name()
-            ).distinct().collect()
-        }
-        assert all("bucket=2" in f for f in got_files)
-
-    def test_local_frames_are_local_relations(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """The frames built on the driver (a commit's manifest rows, the
-        empty plan of a snapshot with no matching files, a first run's
-        empty KG manifest) come from Arrow tables, so Spark holds them as
-        a LocalRelation: no Python RDD, no Python worker to write them."""
-        from xwikire_spark.pipeline.manifests import read_manifest
-        from xwikire_spark.sources import snapshots as sn
-
-        def leaf_kinds(df):
-            leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-            return {leaves.apply(i).getClass().getSimpleName()
-                    for i in range(leaves.length())}
-
-        df = self._pdf(spark, [(0, 1), (1, 2)])
-        built = []
-        create = spark.createDataFrame
-
-        def recording(*args, **kwargs):
-            built.append(create(*args, **kwargs))
-            return built[-1]
-
-        monkeypatch.setattr(spark, "createDataFrame", recording)
-        root = str(tmp_path / "t")
-        sn.commit_replace_partitions(spark, root, df, "bucket")
-        sn.commit_replace_partitions(spark, root, df, "bucket")
-        assert len(built) == 2  # one manifest frame per commit
-        none = sn.read_table(spark, root, partitions=[7])
-        assert len(built) == 3 and none.count() == 0
-        assert read_manifest(spark, str(tmp_path / "kg")).count() == 0
-        assert len(built) == 4
-        assert [leaf_kinds(f) for f in built + [none]] \
-            == [{"LocalRelation"}] * 5
-
-    def test_partition_spec_inherited_and_enforced(self, spark, tmp_path):
-        import pytest as _pytest
-        from pyspark.sql import functions as F
-
-        from xwikire_spark.sources import snapshots as sn
-
-        root = str(tmp_path / "t")
-        sn.commit_replace_partitions(
-            spark, root, self._pdf(spark, [(0, 1), (1, 2)]), "bucket"
-        )
-        # append without a spec inherits the table's partitioning
-        sn.commit_append(spark, root, self._pdf(spark, [(0, 3)]))
-        m = sn._read_manifest(spark, root, 2)
-        assert m.where(F.col("partition").isNull()).count() == 0
-        assert self._rows(sn.read_table(spark, root)) == self._rows(
-            self._pdf(spark, [(0, 1), (1, 2), (0, 3)])
-        )
-        # a conflicting spec is rejected before any metadata lands
-        with _pytest.raises(ValueError):
-            sn.commit_append(
-                spark, root, self._pdf(spark, [(2, 4)]), partition_col="id"
-            )
-
-    def test_expire_is_file_safe_in_mixed_groups(self, spark, tmp_path):
-        """The first commit's group holds files for ALL buckets; after a
-        bucket-1 replace + expire(keep_last=1), ONLY the dead bucket-1
-        files may be deleted from that shared group — the live buckets'
-        files (and the table view) must survive."""
-        import os
-
-        from xwikire_spark.sources import snapshots as sn
-
-        root = str(tmp_path / "t")
-        v1_rows = [(b, b * 10 + i) for b in (0, 1, 2) for i in range(3)]
-        sn.commit_replace_partitions(
-            spark, root, self._pdf(spark, v1_rows), "bucket"
-        )
-        sn.commit_replace_partitions(
-            spark, root, self._pdf(spark, [(1, 99)]), "bucket"
-        )
-        before = self._rows(sn.read_table(spark, root))
-        st = sn.expire_snapshots(spark, root, keep_last=1)
-        assert st["dropped_files"] > 0
-        assert self._rows(sn.read_table(spark, root)) == before
-        # every file the retained manifest references still exists
-        for r in sn._read_manifest(spark, root, 2).collect():
-            assert os.path.exists(os.path.join(root, r["path"]))
-
-    def test_compact_partitioned_keeps_spec_and_view(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
-        from xwikire_spark.sources import snapshots as sn
-
-        root = str(tmp_path / "t")
-        rows = [(b, b * 10 + i) for b in (0, 1) for i in range(4)]
-        df = self._pdf(spark, rows).repartition(4)
-        sn.commit_replace_partitions(spark, root, df, "bucket")
-        sn.commit_append(spark, root, self._pdf(spark, [(0, 77)]))
-        before = self._rows(sn.read_table(spark, root))
-        sn.compact_snapshot(spark, root)
-        meta = sn.snapshot_meta(root, sn.current_version(root))
-        assert meta["op"] == "compact"
-        assert meta["partition_col"] == "bucket"
-        after = sn.read_table(spark, root)
-        assert self._rows(after) == before
-        # still partition-prunable after compaction
-        one = sn.read_table(spark, root, partitions=[1])
-        assert self._rows(one) == self._rows(
-            after.where(F.col("bucket") == 1)
-        )

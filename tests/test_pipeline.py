@@ -408,7 +408,8 @@ class TestManifests:
             (3, 1, 2, 5, 7, 9, 1), (3, 1, 2, 5, 7, 9, 2)
         ]
 
-    @pytest.mark.parametrize("table_format", ["parquet", "snapshot"])
+    # the output's one table format, named in the test id
+    @pytest.mark.parametrize("table_format", ["parquet"])
     def test_row_count_matches_frame(self, spark, tmp_path, table_format):
         """The row count ``_run_with_manifests`` returns with its frame
         (collected values only: the written counts of the buckets
@@ -423,12 +424,12 @@ class TestManifests:
         drifted = a[:-1] + [("c7", "z y +")]
         for rows in (a, a, drifted, drifted[:2]):
             df, n = _run_with_manifests(
-                spark, _text_transcripts(spark, rows), _text_edges, out, 4,
-                table_format,
+                spark, _text_transcripts(spark, rows), _text_edges, out, 4
             )
             assert n == df.count() > 0
 
-    @pytest.mark.parametrize("table_format", ["parquet", "snapshot"])
+    # the output's one table format, named in the test id
+    @pytest.mark.parametrize("table_format", ["parquet"])
     def test_buckets_the_input_leaves_lose_their_edges(
         self, spark, tmp_path, monkeypatch, table_format
     ):
@@ -455,7 +456,7 @@ class TestManifests:
         def graph(rows, out):
             edges, vertices = materialize_graph(
                 spark, _text_transcripts(spark, rows), _text_edges,
-                str(tmp_path / out), n_buckets=4, table_format=table_format,
+                str(tmp_path / out), n_buckets=4,
             )
             return [sorted(tuple(r) for r in df.collect())
                     for df in (edges, vertices)], counts[-1]
@@ -557,67 +558,142 @@ class TestManifests:
                 .select(*cols).collect())
         )
 
-    def test_snapshot_mode_matches_parquet_and_time_travels(
-        self, spark, corpus, tmp_path
+
+    def test_local_frames_are_local_relations(
+        self, spark, tmp_path, monkeypatch
     ):
-        """table_format="snapshot": same triples as parquet mode, each
-        resume batch = one atomic versioned commit (op=replace), a
-        drifted bucket's reprocess is invisible to readers pinned to the
-        pre-drift snapshot, and resume stays a no-op when nothing is
-        pending (no empty commits)."""
-        import os
-
-        from xwikire_spark.sources import snapshots as sn
-
-        _, _, transcripts, alias_df, pred_df = corpus
-        out_p = str(tmp_path / "kg_parquet")
-        out_s = str(tmp_path / "kg_snap")
-        n_buckets = 4
-
-        def build(df):
-            return extract_triples(df, alias_df, pred_df)
-
-        def key_set(df):
-            return {tuple(r) for r in
-                    df.select("conv_id", "subj", "pred", "obj").collect()}
-
-        plain = run_with_manifests(
-            spark, transcripts, build, out_p, n_buckets
+        """The frames built on the driver (a first run's empty manifest,
+        and the ``_metrics`` row and manifest rows a batch appends) come
+        from Arrow tables, so Spark holds them as a LocalRelation: no
+        Python RDD, no Python worker to write them."""
+        from xwikire_spark.pipeline.manifests import (
+            _MANIFEST_COLS,
+            _run_with_manifests,
+            read_manifest,
         )
-        snap = run_with_manifests(
-            spark, transcripts, build, out_s, n_buckets,
-            table_format="snapshot",
-        )
-        assert key_set(snap) == key_set(plain) and snap.count() > 0
-        root = os.path.join(out_s, "triples")
-        assert sn.current_version(root) == 1
-        # no-op resume commits nothing
-        run_with_manifests(
-            spark, transcripts, build, out_s, n_buckets,
-            table_format="snapshot",
-        )
-        assert sn.current_version(root) == 1
-        # drift one conversation -> exactly one more commit; the pinned
-        # v1 reader still sees the pre-drift triples
-        v1_keys = key_set(sn.read_table(spark, root, version=1))
-        drifted = transcripts.withColumn(
-            "text",
-            F.when(
-                F.col("conv_id") == "conv-00000",
-                F.concat(F.col("text"), F.lit(" Einstein married Curie.")),
-            ).otherwise(F.col("text")),
-        )
-        merged = run_with_manifests(
-            spark, drifted, build, out_s, n_buckets,
-            table_format="snapshot",
-        )
-        assert sn.current_version(root) == 2
-        assert sn.snapshot_meta(root, 2)["op"] == "replace"
-        assert key_set(merged) == key_set(
-            extract_triples(drifted, alias_df, pred_df)
-        )
-        assert key_set(sn.read_table(spark, root, version=1)) == v1_keys
 
+        def leaf_kinds(df):
+            leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+            return {leaves.apply(i).getClass().getSimpleName()
+                    for i in range(leaves.length())}
+
+        transcripts = _text_transcripts(
+            spark, [(f"c{i}", f"a{i} b{i} +") for i in range(4)]
+        )
+        built = []
+        create = spark.createDataFrame
+
+        def recording(*args, **kwargs):
+            built.append(create(*args, **kwargs))
+            return built[-1]
+
+        monkeypatch.setattr(spark, "createDataFrame", recording)
+        out = str(tmp_path / "kg")
+        assert read_manifest(spark, out).count() == 0
+        _run_with_manifests(spark, transcripts, _text_edges, out, 4)
+        # the empty manifest read above and in the run's plan, then the
+        # batch's _metrics row and its manifest rows
+        assert [tuple(f.columns) for f in built] == [
+            _MANIFEST_COLS, _MANIFEST_COLS,
+            ("triples_out", "approx_convs", "approx_subjects",
+             "approx_objects", "wall_ms", "n_buckets_processed"),
+            _MANIFEST_COLS,
+        ]
+        assert [leaf_kinds(f) for f in built] == [{"LocalRelation"}] * 4
+
+    def test_resume_after_a_failed_write(self, spark, tmp_path, monkeypatch):
+        """Input A, then input B (c7 drifted) whose write job fails after
+        the drifted bucket's old files were removed, then A again: the
+        third run's triples and the rows ``_run_with_manifests`` counts
+        equal a fresh run's on A, and the run after it finds nothing
+        pending. The failed batch's intent marker makes the bucket
+        pending although A's manifest row matches it again.
+
+        Still open: readers are not isolated from a batch in flight.
+        With parquet directories, a read while B runs misses the
+        drifted bucket, which only the next run restores."""
+        run = _counted_runs(spark, monkeypatch)
+        out = str(tmp_path / "kg")
+
+        def failing(df):
+            return _text_edges(df).withColumn(
+                "subj",
+                F.when(
+                    F.col("subj") == "drifted",
+                    F.raise_error(F.lit("injected failure")),
+                ).otherwise(F.col("subj")),
+            )
+
+        run(_CRASH_A, out)
+        with pytest.raises(Exception, match="injected failure"):
+            run(_CRASH_B, out, failing)
+        assert run(_CRASH_A, out) == run(_CRASH_A, str(tmp_path / "fresh"))
+        assert pending_buckets(
+            spark, _text_transcripts(spark, _CRASH_A), out, 4
+        ) == []
+
+    def test_resume_after_a_failed_manifest_append(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Input A, then input B (c7 drifted) whose data commit succeeds
+        and whose manifest append fails, then A again: the third run's
+        triples and the rows ``_run_with_manifests`` counts equal a fresh
+        run's on A (no ``drifted`` triple left from B), and the run after
+        it finds nothing pending.
+
+        Still open: readers are not isolated from a batch in flight.
+        With parquet directories, a read between B's data commit and the
+        next run sees B's triples for c7 although the manifest records
+        A's input."""
+        from pyspark.sql import DataFrameWriter
+
+        run = _counted_runs(spark, monkeypatch)
+        out = str(tmp_path / "kg")
+        parquet = DataFrameWriter.parquet
+
+        def failing(self, path, *args, **kwargs):
+            if path.endswith("_manifests"):
+                raise OSError("injected failure")
+            return parquet(self, path, *args, **kwargs)
+
+        run(_CRASH_A, out)
+        with monkeypatch.context() as m:
+            m.setattr(DataFrameWriter, "parquet", failing)
+            with pytest.raises(OSError, match="injected failure"):
+                run(_CRASH_B, out)
+        assert run(_CRASH_A, out) == run(_CRASH_A, str(tmp_path / "fresh"))
+        assert pending_buckets(
+            spark, _text_transcripts(spark, _CRASH_A), out, 4
+        ) == []
+
+
+# 8 conversations in 4 buckets, then the same with c7's text drifted
+_CRASH_A = [(f"c{i}", f"a{i} b{i} +") for i in range(8)]
+_CRASH_B = _CRASH_A[:-1] + [("c7", "drifted y +")]
+
+
+def _counted_runs(spark, monkeypatch):
+    """``run(rows, out, build=_text_edges)``: ``run_with_manifests`` over
+    ``rows`` into ``out`` with 4 buckets -> (the sorted rows read back,
+    the row count ``_run_with_manifests`` returned with them)."""
+    from xwikire_spark.pipeline import manifests
+
+    counts, real = [], manifests._run_with_manifests
+
+    def counted(*a):
+        df, n = real(*a)
+        counts.append(n)
+        return df, n
+
+    monkeypatch.setattr(manifests, "_run_with_manifests", counted)
+
+    def run(rows, out, build=_text_edges):
+        df = manifests.run_with_manifests(
+            spark, _text_transcripts(spark, rows), build, out, 4
+        )
+        return sorted(tuple(r) for r in df.collect()), counts[-1]
+
+    return run
 
 class TestGraphMaterialization:
     def test_edges_vertices_and_metrics(self, spark, corpus, tmp_path):
@@ -683,39 +759,6 @@ class TestGraphMaterialization:
         # rows and the entity map ran as Spark shuffles)
         assert n_jobs <= 16 + 2, n_jobs
 
-    def test_snapshot_format_edges_and_vertices(
-        self, spark, corpus, tmp_path
-    ):
-        """table_format="snapshot": both graph tables are snapshot
-        tables (edge = replace-partitions lineage commits, vertex =
-        overwrite per refresh) and reconcile exactly."""
-        import os
-
-        from xwikire_spark.pipeline.graph import materialize_graph
-        from xwikire_spark.sources import snapshots as sn
-
-        _, _, transcripts, alias_df, pred_df = corpus
-        out = str(tmp_path / "graph_snap")
-
-        def build(df):
-            return extract_triples(df, alias_df, pred_df)
-
-        edges, vertices = materialize_graph(
-            spark, transcripts, build, out, n_buckets=4,
-            table_format="snapshot",
-        )
-        assert edges.count() > 0
-        v = {r.entity_id: r for r in vertices.collect()}
-        for r in edges.groupBy("subj").count().collect():
-            assert v[r.subj].out_degree == r["count"]
-        assert sn.snapshot_meta(
-            os.path.join(out, "vertices"), 1
-        )["op"] == "overwrite"
-        assert sn.snapshot_meta(
-            os.path.join(out, "triples"), 1
-        )["partition_col"] == "part_bucket"
-
-
     def test_rerun_replaces_vertex_table(self, spark, tmp_path):
         """A run over input B in the directory of a run over input A: the
         vertex table read back is exactly ``vertex_table`` of B's edges,
@@ -761,7 +804,8 @@ class TestGraphMaterialization:
         finally:
             spark.conf.set(key, old)
 
-    @pytest.mark.parametrize("table_format", ["parquet", "snapshot"])
+    # the output's one table format, named in the test id
+    @pytest.mark.parametrize("table_format", ["parquet"])
     def test_driver_vertices_match_vertex_table(
         self, spark, tmp_path, monkeypatch, table_format
     ):
@@ -792,10 +836,10 @@ class TestGraphMaterialization:
             n_calls = len(calls)
             edges, vertices = graph.materialize_graph(
                 spark, _text_transcripts(spark, rows), _text_edges, out,
-                n_buckets=4, table_format=table_format,
+                n_buckets=4,
             )
             assert (len(calls) > n_calls) == (bound > 0), bound
-            if bound and table_format == "parquet":
+            if bound:
                 # the driver-built frame is written by one task: one file
                 # per bucket
                 v_root = os.path.join(out, "vertices")
@@ -815,10 +859,9 @@ class TestGraphMaterialization:
                 key=repr,
             )
             assert got[bound] == want, bound
-            if table_format == "parquet":
-                for df, name in ((edges, "triples"), (vertices, "vertices")):
-                    inferred = spark.read.parquet(os.path.join(out, name))
-                    assert df.schema == inferred.schema, name
+            for df, name in ((edges, "triples"), (vertices, "vertices")):
+                inferred = spark.read.parquet(os.path.join(out, name))
+                assert df.schema == inferred.schema, name
         assert got[0] == got[graph.DRIVER_LOOP_MAX_ROWS]
         by_id = {r[0]: r[1:4] for r in got[0]}
         assert by_id == {

@@ -89,7 +89,6 @@ def materialize_graph(
     build_fn,
     out_dir: str,
     n_buckets: int = 16,
-    table_format: str = "parquet",
 ) -> tuple[DataFrame, DataFrame]:
     """Full graph materialization with lineage: edges through
     run_with_manifests (bucketed, resumable, drift-detected), vertices
@@ -105,20 +104,14 @@ def materialize_graph(
     as ``(subj, obj, conv_id)``, their vertex stats computed on the
     driver (``_vertex_stats``) and written from one local frame in one
     partition (one task, one file per bucket); above the bound
-    ``vertex_table`` aggregates them in Spark.
-
-    ``table_format="snapshot"``: both tables are ``sources.snapshots``
-    tables — edges get per-batch atomic replace-partitions commits (see
-    run_with_manifests), vertices a whole-table overwrite commit per
-    refresh (the derived table is rebuilt from the written edges, so
-    overwrite IS its natural increment); both keep time travel."""
+    ``vertex_table`` aggregates them in Spark."""
     from xwikire_spark.pipeline.manifests import (
         _run_with_manifests,
         read_bucketed,
     )
 
     edges, n_edges = _run_with_manifests(
-        spark, transcripts, build_fn, out_dir, n_buckets, table_format
+        spark, transcripts, build_fn, out_dir, n_buckets
     )
     if n_edges <= DRIVER_LOOP_MAX_ROWS:
         vertices = _vertex_frame(
@@ -132,13 +125,6 @@ def materialize_graph(
         "part_bucket", F.pmod(F.xxhash64("entity_id"), F.lit(n_buckets))
     )
     v_root = os.path.join(out_dir, "vertices")
-    if table_format == "snapshot":
-        from xwikire_spark.sources import snapshots as snapmod
-
-        snapmod.commit_overwrite(
-            spark, v_root, vertices, partition_col="part_bucket"
-        )
-        return edges, snapmod.read_table(spark, v_root)
     vertices.write.mode("overwrite").option(
         "partitionOverwriteMode", "static"
     ).partitionBy("part_bucket").parquet(v_root)

@@ -8,9 +8,9 @@ redid everything. Here:
 - a *partition* is ``pmod(xxhash64(conv_id), n_buckets)`` — deterministic,
   so re-runs see the same partition ids (the reference's id-sorted chunking,
   src/utils/utils.py:36-47, made deterministic);
-- outputs land under ``out/part_bucket=<k>/``; a manifest row
+- outputs land under ``out/triples/part_bucket=<k>/``; a manifest row
   (bucket, convs_in, rows_in, triples_out, input_hash, wall_ms, run_seq)
-  is appended after each bucket's files commit;
+  is appended to ``out/_manifests`` after each bucket's files commit;
 - resume = the input's buckets minus those whose LATEST manifest row
   matches (J8's anti-join, decided on the driver) — only the remainder is
   processed, idempotently because bucket contents are a pure function of
@@ -23,7 +23,17 @@ redid everything. Here:
   removed and its new row records it as empty. ``run_seq`` (one more
   than the manifest's largest) orders the rows, so an input that
   returns to an earlier state (A -> B -> A) does not match A's
-  superseded row.
+  superseded row;
+- a batch writes an intent marker, ``out/_manifests/_intent-<run_seq>``
+  listing its buckets, before it removes their files, and deletes it
+  after their manifest rows land. A failed batch leaves its marker, whose
+  ``run_seq`` is above every manifest row's: the next run treats its
+  buckets as pending (their old rows would vouch for files that are
+  gone or replaced) and numbers itself above it. The marker is one file
+  written on the driver through the Hadoop FileSystem; its leading ``_``
+  keeps it out of Spark's reads and ``read_manifest``'s listing. Readers
+  are not isolated from a batch in flight: a read during one may miss
+  its buckets or see part of their new files.
 
 Like the reference's stats dicts, every per-bucket answer is small — at
 most ``n_buckets`` rows — so it is collected to the driver once and used
@@ -106,12 +116,62 @@ def _manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, "_manifests")
 
 
+def hadoop_fs(spark: SparkSession, path: str) -> tuple:
+    """(the Hadoop FileSystem of ``path`` — local, HDFS, S3A, ..., the
+    Hadoop ``Path``)."""
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(
+        spark.sparkContext._jsc.hadoopConfiguration()
+    ), jpath
+
+
 def _glob(spark: SparkSession, pattern: str) -> tuple:
-    """(the Hadoop FileSystem of ``pattern`` — local, HDFS, S3A, ...,
-    the paths matching it; none when nothing matches)."""
-    path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(pattern)
-    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    """(the Hadoop FileSystem of ``pattern``, the paths matching it; none
+    when nothing matches)."""
+    fs, path = hadoop_fs(spark, pattern)
     return fs, [st.getPath() for st in fs.globStatus(path) or []]
+
+
+_INTENT = "_intent-"
+
+
+def _write_intent(
+    spark: SparkSession, out_dir: str, run_seq: int, buckets
+) -> None:
+    """Record that batch ``run_seq`` is about to rewrite ``buckets``."""
+    fs, path = hadoop_fs(
+        spark, f"{_manifest_path(out_dir)}/{_INTENT}{run_seq}"
+    )
+    stream = fs.create(path, True)
+    try:
+        stream.write(bytearray(" ".join(map(str, buckets)).encode()))
+    finally:
+        stream.close()
+
+
+def _read_intents(spark: SparkSession, out_dir: str) -> dict[int, list[int]]:
+    """{run_seq: buckets} of the intent markers left in ``_manifests``."""
+    fs, paths = _glob(spark, f"{_manifest_path(out_dir)}/{_INTENT}*")
+    intents = {}
+    for p in paths:
+        stream = fs.open(p)
+        try:
+            text = bytes(stream.readAllBytes()).decode()
+        finally:
+            stream.close()
+        intents[int(p.getName()[len(_INTENT):])] = [
+            int(b) for b in text.split()
+        ]
+    return intents
+
+
+def _drop_intents(spark: SparkSession, out_dir: str, run_seq: int) -> None:
+    """Delete the intent markers at or below ``run_seq``: the manifest
+    now records their buckets."""
+    fs, paths = _glob(spark, f"{_manifest_path(out_dir)}/{_INTENT}*")
+    for p in paths:
+        if int(p.getName()[len(_INTENT):]) <= run_seq:
+            fs.delete(p, False)
 
 
 def _drop_bucket_dirs(spark: SparkSession, root: str, buckets) -> None:
@@ -150,8 +210,9 @@ def pending_buckets(
     spark: SparkSession, transcripts: DataFrame, out_dir: str, n_buckets: int
 ) -> list[int]:
     """Buckets not yet present in the manifest, whose input changed
-    since the bucket's latest row, or that the input no longer reaches
-    while their latest row is not empty — the resume anti-join
+    since the bucket's latest row, that the input no longer reaches
+    while their latest row is not empty, or that a failed batch left an
+    intent marker for — the resume anti-join
     (J8 / src/scripts/extract_unprocessed.py:20-45)."""
     return _plan_buckets(spark, transcripts, out_dir, n_buckets)[1]
 
@@ -170,8 +231,10 @@ def _plan_buckets(
     its latest row's; a bucket with a manifest row and no input rows
     takes the empty fingerprint, so it is pending until a row records it
     as empty. Rows written before ``run_seq`` existed read it as
-    NULL and rank oldest. The next ``run_seq`` is one more than the
-    largest written."""
+    NULL and rank oldest. An intent marker whose ``run_seq`` is above
+    every manifest row's was left by a batch that failed before its
+    rows were appended: its buckets are pending. The next ``run_seq`` is
+    one more than the largest written in the manifest or in a marker."""
     fp = {
         r["part_bucket"]: (r["convs_in"], r["rows_in"], r["input_hash"])
         for r in bucket_fingerprints(transcripts, n_buckets).collect()
@@ -197,8 +260,15 @@ def _plan_buckets(
         last_seq = max(last_seq, r["run_seq"] or 0)
     for b in latest.keys() - fp.keys():
         fp[b] = _EMPTY_FP
-    pending = sorted(b for b, f in fp.items() if latest.get(b) != f[2])
-    return fp, pending, last_seq + 1, rows_out
+    pending = {b for b, f in fp.items() if latest.get(b) != f[2]}
+    intents = _read_intents(spark, out_dir)
+    for marker_seq, buckets in intents.items():
+        if marker_seq > last_seq:
+            for b in buckets:
+                fp.setdefault(b, _EMPTY_FP)
+                pending.add(b)
+    next_seq = max([last_seq, *intents]) + 1
+    return fp, sorted(pending), next_seq, rows_out
 
 
 def run_with_manifests(
@@ -207,7 +277,6 @@ def run_with_manifests(
     build_fn,
     out_dir: str,
     n_buckets: int = 16,
-    table_format: str = "parquet",
 ) -> DataFrame:
     """Run ``build_fn(transcripts_subset) -> triples`` bucket-group-wise with
     resume. Returns the full output (all buckets) read back from disk.
@@ -216,19 +285,13 @@ def run_with_manifests(
     at 10^12 rows a per-bucket job would underutilize the cluster; a group
     is one job whose tasks span many buckets).
 
-    ``table_format``: ``"parquet"`` = partitioned directory + dynamic
-    partition overwrite, set on the write (reprocessing a bucket swaps
-    its directory; the session's overwrite mode is left as it is), read
-    back with the written schema (``read_bucketed``);
-    ``"snapshot"`` = ``sources.snapshots`` table — each resume batch is
-    ONE atomic versioned commit (``commit_replace_partitions`` on
-    part_bucket), readers plan from manifests instead of directory
-    listings, get snapshot isolation against in-flight batches, and can
-    time-travel to any prior batch's view. Resume semantics (lineage
-    manifest, drift detection, idempotent reprocess) are identical.
+    The output is a directory partitioned by ``part_bucket``, written
+    with dynamic partition overwrite set on the write (reprocessing a
+    bucket swaps its directory; the session's overwrite mode is left as
+    it is) and read back with the written schema (``read_bucketed``).
     """
     return _run_with_manifests(
-        spark, transcripts, build_fn, out_dir, n_buckets, table_format
+        spark, transcripts, build_fn, out_dir, n_buckets
     )[0]
 
 
@@ -238,18 +301,12 @@ def _run_with_manifests(
     build_fn,
     out_dir: str,
     n_buckets: int,
-    table_format: str,
 ) -> tuple[DataFrame, int]:
     """``run_with_manifests`` -> (its frame, the frame's row count). The
     count comes from values collected anyway: the written count of each
     bucket processed now, and the latest manifest ``triples_out`` of
     every other bucket with a manifest row. So it costs no job, and it
     counts the rows on disk as far as the manifest records them."""
-    if table_format not in ("parquet", "snapshot"):
-        raise ValueError(f"unknown table_format {table_format!r}")
-    snap = table_format == "snapshot"
-    if snap:
-        from xwikire_spark.sources import snapshots as snapmod
     triples_root = os.path.join(out_dir, "triples")
     fp, todo, run_seq, rows_out = _plan_buckets(
         spark, transcripts, out_dir, n_buckets
@@ -283,24 +340,17 @@ def _run_with_manifests(
                 ).alias("empty_evidence")
             )
         out = out.observe(obs, *metric_exprs)
-        if snap:
-            # one atomic versioned commit per resume batch; a drifted
-            # bucket's files fall out of the new manifest (old versions
-            # keep them — time travel), so reprocess is idempotent. Every
-            # todo bucket is replaced, so one left without rows is empty.
-            snapmod.commit_replace_partitions(
-                spark, triples_root, out, "part_bucket", partitions=todo
-            )
-        else:
-            # dynamic partition overwrite: reprocessing a drifted bucket
-            # replaces its files instead of appending duplicates — resume
-            # is idempotent. Set on this write, not on the session. It
-            # replaces only the buckets the write has rows for, so the
-            # todo buckets' old files go first.
-            _drop_bucket_dirs(spark, triples_root, todo)
-            out.write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("part_bucket").parquet(triples_root)
+        # dynamic partition overwrite: reprocessing a drifted bucket
+        # replaces its files instead of appending duplicates — resume is
+        # idempotent. Set on this write, not on the session. It replaces
+        # only the buckets the write has rows for, so the todo buckets'
+        # old files go first, after the intent marker that makes a
+        # failure from here on leave them pending.
+        _write_intent(spark, out_dir, run_seq, todo)
+        _drop_bucket_dirs(spark, triples_root, todo)
+        out.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("part_bucket").parquet(triples_root)
         wall_ms = int((time.time() - t0) * 1000)
         # aggregates over a zero-row write observe NULL (e.g. the sum):
         # coalesce to 0. Local frames are built from Arrow tables, which
@@ -317,17 +367,10 @@ def _run_with_manifests(
 
         # count from the just-written files, NOT the build DataFrame —
         # re-aggregating `out` would recompute the whole extraction
-        # (including the Python kernel) a second time. Snapshot mode plans
-        # ONLY the todo buckets' files (manifest partition pruning).
-        written = (
-            snapmod.read_table(spark, triples_root, partitions=todo)
-            if snap
-            else read_bucketed(spark, triples_root, out.schema).where(
-                F.col("part_bucket").isin(todo)
-            )
-        )
+        # (including the Python kernel) a second time
         counts = dict(
-            written
+            read_bucketed(spark, triples_root, out.schema)
+            .where(F.col("part_bucket").isin(todo))
             .groupBy(F.col("part_bucket").cast("bigint").alias("part_bucket"))
             .agg(F.count(F.lit(1)).alias("triples_out"))
             .collect()
@@ -349,10 +392,9 @@ def _run_with_manifests(
             }),
             MANIFEST_SCHEMA,
         ).coalesce(1).write.mode("append").parquet(_manifest_path(out_dir))
+        _drop_intents(spark, out_dir, run_seq)
 
     n_rows = sum(rows_out.values())
-    if snap:
-        return snapmod.read_table(spark, triples_root), n_rows
     schema = out.schema if todo else None
     if schema is None and not n_rows:
         # no part file records the schema (an output without rows, e.g.

@@ -19,6 +19,10 @@ Design:
   a filesystem walk; both are driver metadata) picks partitions whose
   file count exceeds what their byte size justifies; `compact_partitions`
   rewrites them.
+- **One FileSystem for every path form**: listing, sizing, renames and
+  deletes go through the Hadoop FileSystem of the table path
+  (`manifests.hadoop_fs`), like the pipeline's own writes, so a table
+  under a plain path, a ``file://`` URI, HDFS or S3A compacts alike.
 - **One Spark job per partition, jobs run concurrently** (Spark
   schedules concurrent actions fine) — a single global
   repartition+rewrite would shuffle the WHOLE table to fix a few
@@ -29,11 +33,12 @@ Design:
   DOT-PREFIXED sibling temp dir (Spark's file index ignores paths whose
   name starts with '.' or '_', so a concurrent reader never sees the
   half-written rewrite or a bogus `part_bucket=0.tmp` partition value),
-  then two directory renames swap it in. POSIX can't exchange two
-  directories atomically, so a crash exactly between the renames leaves
-  the partition parked at its dot-prefixed backup — invisible to
-  readers (absent, not duplicated) and restored automatically by the
-  next `compact_partitions` run (recovery step below).
+  then two directory renames swap it in. No FileSystem exchanges two
+  directories atomically (S3A even renames by copying), so a crash
+  exactly between the renames leaves the partition parked at its
+  dot-prefixed backup — invisible to readers (absent, not duplicated)
+  and restored automatically by the next `compact_partitions` run
+  (recovery step below).
 - Row fidelity is the caller-checkable invariant: `partition_hash`
   computes an order-insensitive bit_xor row hash usable before/after.
 """
@@ -42,27 +47,52 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xwikire_spark.pipeline.manifests import hadoop_fs
 
-def _list_partitions(path: str, partition_col: str) -> dict[str, list[str]]:
-    """{partition_value: [data files]} from the directory layout."""
-    out: dict[str, list[str]] = {}
+
+def _fs(path: str) -> tuple:
+    """(the Hadoop FileSystem of ``path``, its Hadoop ``Path``), from the
+    active session's Hadoop configuration."""
+    return hadoop_fs(SparkSession.active(), path)
+
+
+def _ls(path: str) -> dict[str, object]:
+    """{name: Hadoop FileStatus} of the entries directly under ``path``."""
+    fs, jpath = _fs(path)
+    return {st.getPath().getName(): st for st in fs.listStatus(jpath)}
+
+
+def _delete(path: str) -> None:
+    """Delete ``path`` recursively; a missing path is no error."""
+    fs, jpath = _fs(path)
+    fs.delete(jpath, True)
+
+
+def _rename(src: str, dst: str) -> None:
+    fs, jsrc = _fs(src)
+    # a Hadoop rename reports most failures by returning false
+    if not fs.rename(jsrc, _fs(dst)[1]):
+        raise OSError(f"could not rename {src} to {dst}")
+
+
+def _list_partitions(path: str, partition_col: str) -> dict[str, dict]:
+    """{partition_value: {data file name: bytes}} from the directory
+    layout."""
+    out: dict[str, dict] = {}
     prefix = f"{partition_col}="
-    for name in sorted(os.listdir(path)):
-        full = os.path.join(path, name)
-        if not (name.startswith(prefix) and os.path.isdir(full)):
+    for name, st in sorted(_ls(path).items()):
+        if not (name.startswith(prefix) and st.isDirectory()):
             continue
-        files = [
-            os.path.join(full, f)
-            for f in os.listdir(full)
+        out[name[len(prefix):]] = {
+            f: fst.getLen()
+            for f, fst in _ls(os.path.join(path, name)).items()
             if f.endswith(".parquet")
-        ]
-        out[name[len(prefix):]] = files
+        }
     return out
 
 
@@ -77,8 +107,7 @@ def compaction_plan(
     ``ceil(partition_bytes / target_bytes)`` would need."""
     plan: dict[str, int] = {}
     for pval, files in _list_partitions(path, partition_col).items():
-        total = sum(os.path.getsize(f) for f in files)
-        n_out = max(1, math.ceil(total / target_bytes))
+        n_out = max(1, math.ceil(sum(files.values()) / target_bytes))
         if len(files) >= min_files and len(files) > n_out:
             plan[pval] = n_out
     return plan
@@ -97,10 +126,10 @@ def partition_hash(spark: SparkSession, path: str) -> int:
 
 
 def _current_files(part_dir: str) -> list[str]:
-    """Sorted .parquet basenames currently in a partition dir — the
+    """Sorted .parquet names currently in a partition dir — the
     pre-swap dirty check re-lists through this (module-level so tests can
     interpose a concurrent append at exactly the race point)."""
-    return sorted(f for f in os.listdir(part_dir) if f.endswith(".parquet"))
+    return sorted(f for f in _ls(part_dir) if f.endswith(".parquet"))
 
 
 def _recover_interrupted(path: str, partition_col: str) -> None:
@@ -108,15 +137,16 @@ def _recover_interrupted(path: str, partition_col: str) -> None:
     exactly between the two swap renames (the partition dir is absent in
     that window, never half-written)."""
     prefix = f".compact_old.{partition_col}="
-    for name in os.listdir(path):
+    names = _ls(path)
+    for name in names:
         if not name.startswith(prefix):
             continue
         old = os.path.join(path, name)
-        src = os.path.join(path, f"{partition_col}={name[len(prefix):]}")
-        if os.path.exists(src):
-            shutil.rmtree(old)  # swap completed; backup is stale
+        src = f"{partition_col}={name[len(prefix):]}"
+        if src in names:
+            _delete(old)  # swap completed; backup is stale
         else:
-            os.rename(old, src)  # crash between renames: roll back
+            _rename(old, os.path.join(path, src))  # crash between renames
 
 
 def compact_partitions(
@@ -145,18 +175,17 @@ def compact_partitions(
         # to _list_partitions, and to readers of the table root
         tmp = os.path.join(path, f".compact_tmp.{partition_col}={pval}")
         old = os.path.join(path, f".compact_old.{partition_col}={pval}")
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)  # leftover from an interrupted rewrite
-        nbytes = sum(os.path.getsize(f) for f in before[pval])
+        nbytes = sum(before[pval].values())
         # coalesce, not repartition: compaction must not shuffle — it
-        # only concatenates co-located files
+        # only concatenates co-located files. Overwrite drops a tmp dir
+        # left by an interrupted rewrite.
         spark.read.parquet(src).coalesce(n_out).write.mode(
             "overwrite"
         ).parquet(tmp)
         # drop non-data markers so the dir holds exactly the data files
-        for f in os.listdir(tmp):
+        for f in _ls(tmp):
             if not f.endswith(".parquet"):
-                os.remove(os.path.join(tmp, f))
+                _delete(os.path.join(tmp, f))
         # Concurrent-appender guard: re-list immediately before the swap
         # and SKIP (report, don't fail) a partition whose file set changed
         # since compaction_plan listed it — swapping would silently drop
@@ -166,9 +195,8 @@ def compact_partitions(
         # (Iceberg rewrite_data_files validates exactly this way and
         # retries), which the parquet-dir fallback cannot express. A
         # skipped partition is left untouched and picked up next run.
-        planned = sorted(os.path.basename(f) for f in before[pval])
-        if _current_files(src) != planned:
-            shutil.rmtree(tmp)
+        if _current_files(src) != sorted(before[pval]):
+            _delete(tmp)
             return {
                 "partition": pval,
                 "files_before": len(before[pval]),
@@ -176,11 +204,11 @@ def compact_partitions(
                 "bytes": nbytes,
                 "skipped_dirty": True,
             }
-        os.rename(src, old)      # swap: a crash between these two renames
-        os.rename(tmp, src)      # parks the partition at its dot-prefixed
+        _rename(src, old)      # swap: a crash between these two renames
+        _rename(tmp, src)      # parks the partition at its dot-prefixed
         # backup (absent to readers, never half-written) until
         # _recover_interrupted rolls it back on the next run
-        shutil.rmtree(old)
+        _delete(old)
         return {
             "partition": pval,
             "files_before": len(before[pval]),
